@@ -2,14 +2,13 @@
 
 Rule of thumb enforced across the engine (SURVEY §4): anything expressible
 with ``pyspark.sql.functions`` stays JVM-side inside whole-stage codegen
-(n-gram windows, Dice from join counts, MinHash via nested ``transform``);
+(n-gram windows, MinHash via nested ``transform``);
 Python appears only as Arrow-batched pandas UDFs for the genuinely
 string-algorithmic parts (normalization, fuzzy scoring, street extraction).
 """
 
 from address_parser_spark.functions.columns import (
     char_ngrams_col,
-    dice_col,
     minhash_signature_col,
     lsh_band_keys_col,
     sorted_token_key_col,
@@ -19,13 +18,11 @@ from address_parser_spark.functions.udfs import (
     normalize_advanced_udf,
     normalize_basic_udf,
     pair_score_udf,
-    candidate_score_udf,
     street_extract_udf,
 )
 
 __all__ = [
     "char_ngrams_col",
-    "dice_col",
     "minhash_signature_col",
     "lsh_band_keys_col",
     "sorted_token_key_col",
@@ -33,6 +30,5 @@ __all__ = [
     "normalize_advanced_udf",
     "normalize_basic_udf",
     "pair_score_udf",
-    "candidate_score_udf",
     "street_extract_udf",
 ]

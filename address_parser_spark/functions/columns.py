@@ -33,17 +33,6 @@ def char_ngrams_col(col: Column, n: int = 4, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def dice_col(intersection: Column, size_a: Column, size_b: Column) -> Column:
-    """Sørensen–Dice from precomputed counts: ``2·∩ / (|A|+|B|)``.
-
-    The blocking join's per-pair match count IS the intersection cardinality
-    (distinct grams joined against distinct postings), so the Dice gate is free
-    — no set materialization, evaluated JVM-side before any scoring UDF
-    (manual predicate staging per SURVEY §4).
-    """
-    return (F.lit(2.0) * intersection) / (size_a + size_b)
-
-
 def _hash64(col: Column) -> Column:
     """Deterministic 64-bit hash of a string, JVM-side."""
     return F.xxhash64(col)

@@ -201,17 +201,6 @@ def make_detect_udf(registries: dict[str, list[str]], spark=None):
     return detect_udf
 
 
-_CAND_SCHEMA = T.StructType(
-    [
-        T.StructField("base", T.DoubleType()),
-        T.StructField("partial", T.DoubleType()),
-        T.StructField("wratio", T.DoubleType()),
-        T.StructField("combined", T.DoubleType()),
-        T.StructField("boost", T.DoubleType()),
-    ]
-)
-
-
 def _component_boost(cand_std, detected, exact_bonus, fuzzy_bonus, missing_penalty):
     """Reference ``_component_boost`` (inexus_parser.py:2855-2876): exact
     alias agreement earns the full bonus, close fuzzy agreement a partial one,
@@ -301,43 +290,6 @@ def _combined_score(inp: str, cand: str, use_partial_flag: bool) -> tuple[float,
     return base, part, wr, combined
 
 
-@pandas_udf(_CAND_SCHEMA)
-def candidate_score_udf(
-    inp: pd.Series, inp_basic: pd.Series, cand: pd.Series, use_partial: pd.Series,
-    det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-    node_p: pd.Series, node_d: pd.Series, node_w: pd.Series,
-) -> pd.DataFrame:
-    score_memo: dict[tuple, tuple] = {}
-    boost_memo: dict[tuple, float] = {}
-    rows = []
-    for i, ib, c, f, dp, dd, dw, np_, nd, nw in zip(
-        inp, inp_basic, cand, use_partial, det_p, det_d, det_w, node_p, node_d, node_w
-    ):
-        skey = (i, c, bool(f))
-        scores = score_memo.get(skey)
-        if scores is None:
-            scores = _combined_score(
-                i if isinstance(i, str) else "", c if isinstance(c, str) else "", bool(f)
-            )
-            score_memo[skey] = scores
-        bkey = (dp, dd, dw, np_, nd, nw)
-        boost = boost_memo.get(bkey)
-        if boost is None:
-            boost = (
-                _component_boost(nw, dw, 18.0, 12.0, -12.0)
-                + _component_boost(nd, dd, 14.0, 9.0, -10.0)
-                + _component_boost(np_, dp, 6.0, 3.5, -4.0)
-            )
-            boost_memo[bkey] = boost
-        # containment runs on the BASIC string (see resolve_one)
-        pen = _unsupported_penalty(
-            ib if isinstance(ib, str) else (i if isinstance(i, str) else ""),
-            dp, dd, dw, np_, nd, nw,
-        )
-        rows.append(scores + (boost - pen,))
-    return pd.DataFrame(rows, columns=["base", "partial", "wratio", "combined", "boost"])
-
-
 _PAIR_SCHEMA = T.StructType(
     [
         T.StructField("jw", T.DoubleType()),
@@ -385,8 +337,8 @@ def street_extract_udf(
 
 def _street_and_entity(original: str, std: str, province, district, ward,
                        is_new=None) -> tuple[str, str]:
-    """Street extraction + entity_std derivation (row-local core shared by the
-    standalone UDF and the fused resolver).
+    """Street extraction + entity_std derivation (row-local core of the fused
+    resolver).
 
     ``entity_std`` is the canonical entity-bearing string the blocking keys
     and pair scoring run on. When the (repaired) components are known it is
@@ -419,55 +371,18 @@ def _street_and_entity(original: str, std: str, province, district, ward,
     return street, entity_std
 
 
-_STREET_ENTITY_SCHEMA = T.StructType(
-    [
-        T.StructField("street_address", T.StringType()),
-        T.StructField("entity_std", T.StringType()),
-    ]
-)
-
-
-@pandas_udf(_STREET_ENTITY_SCHEMA)
-def street_and_entity_udf(
-    original: pd.Series, std: pd.Series,
-    province: pd.Series, district: pd.Series, ward: pd.Series,
-    is_new: pd.Series,
-) -> pd.DataFrame:
-    """Fused street extraction + entity_std derivation (one Arrow node).
-
-    entity_std = distinct tokens of the normalized mention minus the
-    normalized street's tokens, first-occurrence order (the semantics of the
-    previous JVM ``array_except``); falls back to the full std when the
-    subtraction leaves fewer than 2 chars.
-    """
-    rows = []
-    for o, s, p, d, w, fmt in zip(original, std, province, district, ward, is_new):
-        rows.append(
-            _street_and_entity(
-                o if isinstance(o, str) else "",
-                s if isinstance(s, str) else "",
-                p if isinstance(p, str) else None,
-                d if isinstance(d, str) else None,
-                w if isinstance(w, str) else None,
-                None if pd.isna(fmt) else bool(fmt),
-            )
-        )
-    return pd.DataFrame(rows, columns=["street_address", "entity_std"])
-
-
 # ---------------------------------------------------------------------------
 # Fused broadcast resolver: probe → top-K → Dice gate → score → argmax →
-# street, one Arrow node per DISTINCT mention.
+# repair → street, one Arrow node per DISTINCT mention.
 #
-# The gazetteer is a BROADCAST DIMENSION (38.7k nodes ≈ tens of MB with its
-# inverted index). The relational formulation shuffles corpus × catalog rows
-# (measured 28M candidate rows for 36k distinct mentions — ~90% of them
-# 1-shared-gram noise the Dice gate kills); at web scale that shuffle is the
-# whole job. Probing the broadcast index map-side keeps the resolve stage
+# The gazetteer is a BROADCAST DIMENSION: its pickled resolver state is about
+# 0.19 MB per 1k nodes (~7 MB at the reference's 38.7k nodes). A relational
+# formulation would shuffle corpus × catalog candidate rows (measured 28M rows
+# for 36k distinct mentions — ~90% of them 1-shared-gram noise the Dice gate
+# kills); probing the broadcast index map-side keeps the resolve stage
 # embarrassingly parallel — exactly SURVEY §3.2's shape for the reference's
-# bulk pipeline — while remaining semantically IDENTICAL to the relational
-# operators (operators.parse block/gate/score/argmax, kept as the strategy
-# for catalogs too large to broadcast); tests assert output equality.
+# bulk pipeline. ``make_resolve_udf`` refuses a state over
+# ``MAX_RESOLVER_STATE_BYTES`` instead of shipping it.
 # ---------------------------------------------------------------------------
 
 RESOLVE_SCHEMA = T.StructType(
@@ -552,184 +467,61 @@ def build_resolver_state(nodes: list[dict]) -> dict:
             "n_primary": n_primary, "attrs": attrs, "inv": inv}
 
 
-_REPAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("province", T.StringType()),
-        T.StructField("district", T.StringType()),
-        T.StructField("ward", T.StringType()),
-        T.StructField("province_code", T.StringType()),
-        T.StructField("district_code", T.StringType()),
-        T.StructField("ward_code", T.StringType()),
-        T.StructField("is_new", T.BooleanType()),
-        T.StructField("street_address", T.StringType()),
-        T.StructField("entity_std", T.StringType()),
-    ]
-)
+# Pickled (resolve state + repair state) budget for the broadcast. A catalog
+# this large is not a gazetteer the kernel was built for; fail loudly rather
+# than ship it to every executor.
+MAX_RESOLVER_STATE_BYTES = 256 * 1024 * 1024
 
 
-def make_repair_street_udf(repair_state: dict, spark=None):
-    """Standalone repair-cascade + street UDF for the RELATIONAL strategy
-    (the broadcast kernel fuses the same logic; outputs must stay identical —
-    tests assert strategy equality). ``is_new`` in = the winner node's format
-    (None ⇔ no winner); out = the final format tag (repair-only resolutions
-    derive it from the attached codes, matching resolve_one)."""
-    bc = spark.sparkContext.broadcast(repair_state) if spark is not None else None
-    local = repair_state if bc is None else None
-
-    def _get():
-        # Broadcast values are cached per worker by Spark itself; no extra
-        # process-level cache needed here.
-        return bc.value if bc is not None else local
-
-    @pandas_udf(_REPAIR_SCHEMA)
-    def repair_udf(
-        mention: pd.Series, std: pd.Series, std_basic: pd.Series,
-        det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-        province: pd.Series, district: pd.Series, ward: pd.Series,
-        p_code: pd.Series, d_code: pd.Series, w_code: pd.Series,
-        is_new: pd.Series,
-    ) -> pd.DataFrame:
-        from address_parser_spark.textops.repair import repair_components, validate_detected
-
-        st = _get()
-        rows = []
-        for m, s, sb, dp, dd, dw, p, d, w, pc, dc, wc, fmt in zip(
-            mention, std, std_basic, det_p, det_d, det_w,
-            province, district, ward, p_code, d_code, w_code, is_new,
-        ):
-            fmt = None if pd.isna(fmt) else bool(fmt)
-            dp, dd, dw = validate_detected(st, dp, dd, dw)
-            p2, d2, w2, pc2, dc2, wc2 = repair_components(
-                st, p or "", d or "", w or "", dp, dd, dw,
-                sb if isinstance(sb, str) else "", pc, dc, wc, is_new=fmt,
-            )
-            p2, d2, w2 = p2 or None, d2 or None, w2 or None
-            if fmt is None and (p2 or d2 or w2):
-                fmt = _infer_format(st, d2, wc2, pc2)
-            street, entity_std = _street_and_entity(
-                m if isinstance(m, str) else "",
-                s if isinstance(s, str) else "", p2, d2, w2, fmt,
-            )
-            rows.append((p2, d2, w2, pc2, dc2, wc2, fmt, street, entity_std))
-        return pd.DataFrame(rows, columns=[f.name for f in _REPAIR_SCHEMA.fields])
-
-    return repair_udf
-
-
-def make_prioritized_udf(inv: dict, spark=None):
-    """(det_p, det_d, det_w, node_id) → candidate agrees with ALL detected
-    components (membership in the intersected alias posting sets — the
-    reference's ``_prefilter_by_prefix`` semantics, inexus_parser.py:2764-2794
-    applied at :2836-2850). Used by the relational strategy; the broadcast
-    kernel computes the same set inline."""
-    bc = spark.sparkContext.broadcast(inv) if spark is not None else None
-    local = inv if bc is None else None
-
-    @pandas_udf(T.BooleanType())
-    def prio_udf(det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-                 node_id: pd.Series) -> pd.Series:
-        inv_maps = bc.value if bc is not None else local
-        cache: dict[tuple, frozenset | None] = {}
-        out = []
-        for dp, dd, dw, nid in zip(det_p, det_d, det_w, node_id):
-            key = (dp, dd, dw)
-            pf = cache.get(key, -1)
-            if pf == -1:
-                pf = None
-                if dw:
-                    pf = frozenset(inv_maps["ward"].get(dw, ()))
-                if dd:
-                    s2 = frozenset(inv_maps["district"].get(dd, ()))
-                    pf = s2 if pf is None else pf & s2
-                if dp:
-                    s3 = frozenset(inv_maps["province"].get(dp, ()))
-                    pf = s3 if pf is None else pf & s3
-                cache[key] = pf
-            out.append(bool(pf) and int(nid) in pf)
-        return pd.Series(out)
-
-    return prio_udf
-
-
-def make_prioritized_arr_udf(inv: dict, spark=None):
-    """Array form of ``make_prioritized_udf`` for the aggregate-top-K
-    relational scorer: one row per MENTION with its candidate node-id array
-    → aligned boolean array. The intersected posting set is computed once
-    per row (not once per candidate), so the per-candidate work is a single
-    set-membership test."""
-    bc = spark.sparkContext.broadcast(inv) if spark is not None else None
-    local = inv if bc is None else None
-
-    @pandas_udf(T.ArrayType(T.BooleanType()))
-    def prio_arr_udf(det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-                     node_ids: pd.Series) -> pd.Series:
-        inv_maps = bc.value if bc is not None else local
-        cache: dict[tuple, frozenset | None] = {}
-        out = []
-        for dp, dd, dw, nids in zip(det_p, det_d, det_w, node_ids):
-            key = (dp, dd, dw)
-            pf = cache.get(key, -1)
-            if pf == -1:
-                pf = None
-                if dw:
-                    pf = frozenset(inv_maps["ward"].get(dw, ()))
-                if dd:
-                    s2 = frozenset(inv_maps["district"].get(dd, ()))
-                    pf = s2 if pf is None else pf & s2
-                if dp:
-                    s3 = frozenset(inv_maps["province"].get(dp, ()))
-                    pf = s3 if pf is None else pf & s3
-                cache[key] = pf
-            if nids is None or not len(nids):
-                out.append([])
-            elif not pf:
-                out.append([False] * len(nids))
-            else:
-                out.append([int(n) in pf for n in nids])
-        return pd.Series(out)
-
-    return prio_arr_udf
-
-
-def make_resolve_udf(state: dict, spark=None,
-                     dice_gate: float = 0.4, topk: int = 400,
-                     score_slice: int = 120,
-                     repair_state: dict | None = None):
+def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
     """Fused resolve kernel over the broadcast gazetteer state.
 
     Per distinct mention (reference ``process()``, minus prefix detection
     which rides in on the extract stage): counter probe of the inverted index
-    (inexus_parser.py:2670-2680), top-5 mass partial flag (:148-154), top-400
-    cap (:114, with the partial flag computed reference-style at extract
-    time — within-input gram multiplicity, :148-154), Dice ≥ 0.4 gate on
-    primary grams (:2824-2827), 120-candidate
+    (inexus_parser.py:2670-2680), top-5 mass partial flag (:148-154),
+    ``TOPK_CANDIDATES`` cap (:114, with the partial flag computed
+    reference-style at extract time — within-input gram multiplicity,
+    :148-154), ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE``
     score slice (:2878), blend + boosts (:2885-2912), lexicographic argmax
     (:2926-2940), the component-repair cascade (:186-403, textops.repair —
     when ``repair_state`` is provided), then street extraction on the
     repaired components. Scores are memoized per worker process across
     batches keyed on (std, cand_std, flag) — duplicate address strings across
-    the corpus pay once per worker."""
+    the corpus pay once per worker.
+
+    The state is pickled ONCE here; those bytes are both what the budget
+    check measures and what ships. Raises ``ValueError`` naming the size and
+    the node count when they exceed ``MAX_RESOLVER_STATE_BYTES``."""
+    import pickle
     import uuid
 
-    # Cache key is a DRIVER-GENERATED token inside the payload, not id(): a
-    # GC'd broadcast value whose address is reused must not alias a stale
-    # resolver, and two alternating resolver UDFs in one worker must not
-    # thrash a single-entry cache.
-    payload = {"token": uuid.uuid4().hex, "resolve": state, "repair": repair_state}
+    blob = pickle.dumps({"resolve": state, "repair": repair_state},
+                        protocol=pickle.HIGHEST_PROTOCOL)
+    if len(blob) > MAX_RESOLVER_STATE_BYTES:
+        raise ValueError(
+            f"resolver state for {len(state['attrs']):,} gazetteer nodes pickles "
+            f"to {len(blob):,} bytes, over the {MAX_RESOLVER_STATE_BYTES:,}-byte "
+            "broadcast budget"
+        )
+    # Cache key is a DRIVER-GENERATED token, not id(): a GC'd broadcast value
+    # whose address is reused must not alias a stale resolver, and two
+    # alternating resolver UDFs in one worker must not thrash a single-entry
+    # cache.
+    payload = (uuid.uuid4().hex, blob)
     bc = spark.sparkContext.broadcast(payload) if spark is not None else None
-    local = payload if bc is None else None
+    local = payload if bc is None else None  # never in the UDF closure when broadcast
 
     def _get_state():
-        raw = bc.value if bc is not None else local
-        key = raw["token"]
-        hit = _RESOLVER_CACHE.get(key)
+        token, raw_blob = bc.value if bc is not None else local
+        hit = _RESOLVER_CACHE.get(token)
         if hit is None:
             if len(_RESOLVER_CACHE) >= 4:
                 _RESOLVER_CACHE.clear()
+            raw = pickle.loads(raw_blob)
             r = raw["resolve"]
             hit = (r["idx_all"], r["idx_primary"], r["n_primary"], r["attrs"], r["inv"],
                    raw["repair"], {}, {})
-            _RESOLVER_CACHE[key] = hit
+            _RESOLVER_CACHE[token] = hit
         return hit
 
     @pandas_udf(RESOLVE_SCHEMA)
@@ -743,7 +535,6 @@ def make_resolve_udf(state: dict, spark=None,
                 idx_all, idx_primary, n_primary, attrs, inv, rep_st,
                 score_memo, boost_memo,
                 m, s, sb, gs, dp, dd, dw, bool(pf),
-                dice_gate=dice_gate, topk=topk, score_slice=score_slice,
             )
             for m, s, sb, gs, dp, dd, dw, pf in zip(
                 mention, std, std_basic, grams, det_p, det_d, det_w, partial
@@ -771,18 +562,23 @@ def _infer_format(rep_st: dict, district, w_code, p_code):
     return None
 
 
+# The reference's candidate-scan constants (inexus_parser.py).
+DICE_GATE = 0.4        # Dice gate on primary grams (:2824-2827)
+TOPK_CANDIDATES = 400  # most-hit candidates kept before the gate (:114, 2680)
+SCORE_SLICE = 120      # candidates scored after prioritization (:2878)
+EARLY_BREAK = 200      # scan stops at the first gate failure past here (:2829-2831)
+
+
 def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
                 score_memo, boost_memo,
-                m, s, sb, gs, dp, dd, dw, partial_input: bool = False,
-                dice_gate: float = 0.4, topk: int = 400, score_slice: int = 120,
-                early_break: int = 200) -> tuple:
+                m, s, sb, gs, dp, dd, dw, partial_input: bool = False) -> tuple:
     """One mention through probe → cap → gate → prioritize → score → argmax →
     repair → street. Pure function shared by the Arrow kernel and
     ``LocalParser`` (plans.local_parser); returns a RESOLVE_SCHEMA-shaped
     tuple. Mirrors the reference ``address_candidate_list``
     (inexus_parser.py:2796-2941): duplicate-counting candidate ranking, early
-    break at the first failing candidate past position 200, detected-component
-    prefilter reordering before the 120-candidate score slice. DELIBERATE
+    break at the first failing candidate past ``EARLY_BREAK``, detected-component
+    prefilter reordering before the ``SCORE_SLICE`` score slice. DELIBERATE
     DEVIATION: the Dice gate runs over PRIMARY-form grams (std_name) rather
     than the reference's alias-union ``ngram_list`` — digit wards/districts
     carry 4×4 typed alias cross-products whose gram unions dilute the
@@ -822,17 +618,17 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
     # Stage 1: Dice gate with the counter-order early break (:2814-2831)
     filtered: list[tuple[int, float]] = []
     index = 0
-    for nid, _cnt in ranked[:topk]:
+    for nid, _cnt in ranked[:TOPK_CANDIDATES]:
         index += 1
         dice = 2.0 * c_prim[nid] / (n_in + n_primary[nid])
-        if dice >= dice_gate:
+        if dice >= DICE_GATE:
             filtered.append((nid, dice))
-        elif index >= early_break:
+        elif index >= EARLY_BREAK:
             break
 
     # Prefilter reordering: candidates agreeing with ALL detected components
     # move to the front (stable) before the score slice (:2836-2850) — this
-    # is semantic, not cosmetic, because of the 120 cap.
+    # is semantic, not cosmetic, because of the SCORE_SLICE cap.
     pf = None
     if dw:
         pf = set(inv["ward"].get(dw, ()))
@@ -849,7 +645,7 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
 
     best = None
     best_key = None
-    for nid, dice in filtered[:score_slice]:
+    for nid, dice in filtered[:SCORE_SLICE]:
         (level, is_new, province, district, ward, p_code, d_code, w_code,
          p_std, d_std, w_std, cand_std) = attrs[nid]
         skey = (s, cand_std, partial_input)

@@ -18,7 +18,8 @@ carries
 The build is driver-side pure Python: the catalog is a broadcast-sized
 dimension (≈38.7k nodes for the full national data), so distributing its
 construction would only add a shuffle for nothing. At web scale the OUTPUT is
-what matters, and it ships to executors as a broadcast DataFrame.
+what matters, and it ships to executors as the resolve kernel's broadcast
+state (``functions.udfs.build_resolver_state``).
 """
 
 from __future__ import annotations
@@ -361,53 +362,3 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
         "new_ward_codes": frozenset(w["code"] for w in gaz.new_wards),
         "new_province_codes": frozenset(p["code"] for p in gaz.new_provinces),
     }
-
-
-INDEX_SCHEMA = "g string, node_id long, n_primary int, is_primary boolean"
-
-
-def ngram_index_df(nodes_df: DataFrame) -> DataFrame:
-    """Inverted postings derived IN SPARK from the nodes DataFrame.
-
-    Alias-union postings (recall: any typed/spoken variant retrieves the
-    node) flagged by primary-form membership: candidate RANKING counts all
-    postings, while the Dice gate runs over primary (std_name) grams — a
-    deliberate deviation from the reference's alias-union denominator (digit
-    wards' 4×4 typed alias cross-products would gate exact matches out; see
-    functions.udfs.resolve_one). Built with JVM columns — shipping a
-    driver-materialized posting list through ``createDataFrame`` costs tens
-    of seconds per job at 32 slices.
-    """
-    from pyspark.sql import functions as F
-
-    from address_parser_spark.functions.columns import char_ngrams_col
-
-    primary = char_ngrams_col(F.col("std_name"))
-    return (
-        nodes_df
-        .withColumn("primary_grams", primary)
-        .select(
-            "node_id",
-            F.size("primary_grams").alias("n_primary"),
-            "primary_grams",
-            F.explode("ngrams").alias("g"),
-        )
-        .select(
-            "g", "node_id", "n_primary",
-            F.array_contains("primary_grams", F.col("g")).alias("is_primary"),
-        )
-    )
-
-
-def ngram_index(nodes: Iterable[dict]) -> list[tuple[str, int, int, bool]]:
-    """Inverted postings ``(ngram, node_id, n_primary, is_primary)`` —
-    python twin of ``ngram_index_df`` (same semantics, see its docstring)."""
-    from address_parser_spark.textops.ngrams import char_ngram_set
-
-    postings: list[tuple[str, int, int, bool]] = []
-    for n in nodes:
-        primary = char_ngram_set(n["std_name"])
-        n_primary = len(primary)
-        for g in n["ngrams"]:
-            postings.append((g, n["node_id"], n_primary, g in primary))
-    return postings

@@ -214,7 +214,6 @@ def cluster_mentions(
     resolved: DataFrame,
     extra_edges: Optional[DataFrame] = None,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
-    timings: Optional[dict] = None,
 ) -> DataFrame:
     """Mention clustering with entity-anchor edges (+ optional pair edges).
 
@@ -245,7 +244,7 @@ def cluster_mentions(
         ).otherwise(F.xxhash64("entity_key", "entity_std")).alias("dst"),
     )
     edges = anchors if extra_edges is None else anchors.unionAll(extra_edges)
-    assignments = connected_components(edges, checkpoint_fn=checkpoint_fn, timings=timings)
+    assignments = connected_components(edges, checkpoint_fn=checkpoint_fn)
     return (
         resolved.join(assignments, resolved["mid"] == assignments["id"], "left")
         .drop("id")

@@ -1,8 +1,10 @@
-"""The five-stage entity-resolution pipeline (SURVEY §7), resumable.
+"""The entity-resolution pipeline (SURVEY §7), resumable.
 
-pages → (1) extract+normalize → (2) resolve vs gazetteer (block/gate/score/
-argmax) → (3) blocking keys + candidate pairs + scoring → (4) edges →
-(5) connected components → clusters.
+pages → (1) extract+normalize → (2) resolve each distinct mention against the
+broadcast gazetteer (one fused Arrow kernel: probe/gate/score/argmax/repair/
+street, ``operators.parse.resolve_mentions``) → (3) blocking keys →
+(4) equality edges → (5) connected components → clusters, plus the old→new
+ward-code mapping when the gazetteer carries one.
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -21,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from address_parser_spark.gazetteer.nodes import (
     alias_registries,
     build_nodes,
-    ngram_index_df,
+    build_repair_state,
     nodes_to_spark,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
@@ -89,26 +91,12 @@ def run_pipeline(
     store: Optional[StageStore] = None,
     max_block: int = 64,
     attach_ward_mapping: bool = True,
-    timings: Optional[dict] = None,
 ) -> DataFrame:
     """pages → clustered mentions (mid, url, mention, std, parsed components,
-    street_address, format, entity_key, cluster_id, new_ward_code/-name).
-
-    ``timings``: optional dict the pipeline fills with per-barrier wall times
-    (scripts/profile_run.py) — the serial-fraction attribution the scaling
-    criterion demands is measured, never guessed."""
-    import time as _time
-
-    from address_parser_spark.gazetteer.nodes import build_repair_state
-
-    _t0 = _time.monotonic()
+    street_address, format, entity_key, cluster_id, new_ward_code/-name)."""
     nodes = build_nodes(gaz)
-    nodes_df = nodes_to_spark(spark, nodes)
-    index_df = ngram_index_df(nodes_df)
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
-    if timings is not None:
-        timings["gaz_prep"] = round(_time.monotonic() - _t0, 2)
 
     def stage(name: str, build, partition_by=None, multi_consumer: bool = True) -> DataFrame:
         """Materialize each multi-consumer stage exactly once: durable
@@ -120,11 +108,6 @@ def run_pipeline(
         if store is None:
             if not multi_consumer:
                 return build()
-            if timings is not None:
-                t = _time.monotonic()
-                out = build().localCheckpoint(eager=True)
-                timings[f"stage_{name}"] = round(_time.monotonic() - t, 2)
-                return out
             # localCheckpoint rather than persist: materializes once AND
             # truncates the logical plan to an RDD scan. Persisted frames with
             # UDF-heavy plans make every subsequent query pay driver-side plan
@@ -150,8 +133,7 @@ def run_pipeline(
     resolved = stage(
         "resolved",
         lambda: resolve_mentions(
-            pages, nodes_df, index_df, registries,
-            nodes=nodes, repair_state=repair_state, timings=timings,
+            pages, nodes, registries, repair_state=repair_state
         ),
     )
     # keyed is consumed exactly once (candidate_pairs is a single-aggregation
@@ -174,11 +156,11 @@ def run_pipeline(
         checkpoint_fn = None
         if store is not None:
             checkpoint_fn = lambda df, it: store.write(df, f"cc_iter_{it + 1:03d}")
-        return cluster_mentions(
-            resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn, timings=timings
-        )
+        return cluster_mentions(resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn)
 
     clustered = stage("clustered", build_clusters, multi_consumer=False)
     if attach_ward_mapping and gaz.ward_mappings:
-        clustered = attach_new_ward_codes(spark, clustered, nodes_df, gaz)
+        clustered = attach_new_ward_codes(
+            spark, clustered, nodes_to_spark(spark, nodes), gaz
+        )
     return clustered

@@ -5,6 +5,11 @@ pages schema) → the batch pipeline's OWN extraction stage (narrow transforms
 are stream-compatible as-is — one code path for batch and streaming) →
 watermarked tumbling-window aggregation and within-watermark dedup.
 
+Streaming frames get the batch html fallback too: when a source adds an
+``html`` column, rows whose ``text`` is null or empty are extracted from the
+markup (``extract_normalize``'s html branch) rather than skipped. A frame
+without that column (``PAGES_STREAM_SCHEMA``) reads ``text`` only.
+
 The stateful pieces use the built-in operators (windowed agg, dropDuplicates
 with watermark); no custom state store is needed for the reference's
 capability surface. ``applyInPandasWithState`` remains the escape hatch for

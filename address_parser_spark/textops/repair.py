@@ -282,8 +282,9 @@ def repair_components(
 ) -> tuple[str, str, str, Optional[str], Optional[str], Optional[str]]:
     """Full cascade: (p, d, w, p_code, d_code, w_code) after repair.
 
-    ``det_*`` must already be validated against the invert maps
-    (``validate_detected``). Codes follow the reference's id semantics: kept
+    ``det_*`` must already be validated against the invert maps (reference
+    ``_validate_detected_value``, :1900-1905; ``functions.udfs.resolve_one``
+    does it before the cascade). Codes follow the reference's id semantics: kept
     while the component is untouched, re-derived through the lookup cascade
     (None when ambiguous) once the component is repaired, cleared with the
     component. New-format (2-level) phantom-district welding is prevented
@@ -506,14 +507,3 @@ def repair_components(
         ward, ward_code = "", None
 
     return province, district, ward, province_code, district_code, ward_code
-
-
-def validate_detected(st: dict, det_p, det_d, det_w):
-    """Reference ``_validate_detected_value`` (:1900-1905): a detected alias
-    must exist as an invert-map key at its level."""
-    inv = st["inv"]
-    return (
-        det_p if det_p and det_p in inv["province"] else None,
-        det_d if det_d and det_d in inv["district"] else None,
-        det_w if det_w and det_w in inv["ward"] else None,
-    )

@@ -17,9 +17,4 @@ echo "=== ner 150k campaign start $(date -u +%H:%M:%S) ==="
 python scripts/ner_scaling_bench.py 150000 4 16 2
 echo "rc=$? end $(date -u +%H:%M:%S)"
 } > bench_logs/r5_ner_150k_4v16.log 2>&1
-{
-echo "=== strategy trade 150k@16c start $(date -u +%H:%M:%S) ==="
-python scripts/resolve_strategy_bench.py 150000 16 2
-echo "rc=$? end $(date -u +%H:%M:%S)"
-} > bench_logs/r5_strategy_150k_16c.log 2>&1
 echo "ALL R5 CAMPAIGNS DONE $(date -u +%H:%M:%S)"

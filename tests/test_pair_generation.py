@@ -90,17 +90,16 @@ def test_equality_edges_match_candidate_pair_route(spark, gaz):
     )
     from address_parser_spark.plans.pipeline import run_pipeline  # noqa: F401
     from address_parser_spark.gazetteer.nodes import (
-        alias_registries, build_nodes, build_repair_state, ngram_index_df, nodes_to_spark,
+        alias_registries, build_nodes, build_repair_state,
     )
     from address_parser_spark.operators.parse import resolve_mentions
     from address_parser_spark.sources.pages import synth_pages_spark
 
     nodes = build_nodes(gaz)
-    nodes_df = nodes_to_spark(spark, nodes)
     pages = synth_pages_spark(spark, gaz, 80, partitions=4)
     resolved = resolve_mentions(
-        pages, nodes_df, ngram_index_df(nodes_df), alias_registries(gaz),
-        nodes=nodes, repair_state=build_repair_state(gaz, nodes),
+        pages, nodes, alias_registries(gaz),
+        repair_state=build_repair_state(gaz, nodes),
     )
     keyed = with_blocking_keys(resolved).localCheckpoint(eager=True)
 
