@@ -15,41 +15,14 @@ import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from address_parser_spark.textops.extract import extract_mentions
-from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
-from address_parser_spark.textops.similarity import (
-    indel_ratio,
-    jaro_winkler,
-    levenshtein,
-    partial_ratio,
-    token_overlap,
-    wratio,
-)
+from address_parser_spark.textops.normalize import normalize_basic
+from address_parser_spark.textops.similarity import indel_ratio, partial_ratio, wratio
 from address_parser_spark.textops.street import extract_street
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_mentions_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: extract_mentions(t) if isinstance(t, str) else [])
-
-
-@pandas_udf(T.StringType())
-def normalize_advanced_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: normalize_advanced(v) if isinstance(v, str) else "")
 
 
 @pandas_udf(T.StringType())
 def normalize_basic_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: normalize_basic(v) if isinstance(v, str) else "")
-
-
-_DETECT_SCHEMA = T.StructType(
-    [
-        T.StructField("det_p", T.StringType()),
-        T.StructField("det_d", T.StringType()),
-        T.StructField("det_w", T.StringType()),
-    ]
-)
 
 
 _REGISTRY_CACHE: dict[str, tuple] = {}
@@ -165,42 +138,6 @@ def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
     return extract_features_udf
 
 
-def make_detect_udf(registries: dict[str, list[str]], spark=None):
-    """Prefix-detection UDF bound to the gazetteer alias registries.
-
-    The registries are dimension-sized (≤ tens of thousands of short strings).
-    When a SparkSession is provided they ship as a BROADCAST — deserialized
-    once per executor process instead of once per task closure (task-binary
-    deserialization of a multi-MB registry dominated small-job wall time).
-    The derived ``AliasRegistry`` prefilter indexes are built lazily worker-
-    side and cached per process. Per-batch memoization collapses repeated
-    fragments; the exact-registry hit short-circuits the fuzzy scan
-    (reference ``_pick_best`` fast path, inexus_parser.py:2715-2717).
-    """
-    from address_parser_spark.textops.detect import detect_by_prefix
-
-    _get_regs = _registry_udf_payload(registries, spark)
-
-    @pandas_udf(_DETECT_SCHEMA)
-    def detect_udf(std_basic: pd.Series) -> pd.DataFrame:
-        reg_p, reg_d, reg_w = _get_regs()
-        cache: dict[str, tuple] = {}
-
-        def run(s):
-            if not isinstance(s, str) or not s:
-                return (None, None, None)
-            hit = cache.get(s)
-            if hit is None:
-                hit = detect_by_prefix(s, reg_p, reg_d, reg_w)
-                cache[s] = hit
-            return hit
-
-        rows = [run(s) for s in std_basic]
-        return pd.DataFrame(rows, columns=["det_p", "det_d", "det_w"])
-
-    return detect_udf
-
-
 def _component_boost(cand_std, detected, exact_bonus, fuzzy_bonus, missing_penalty):
     """Reference ``_component_boost`` (inexus_parser.py:2855-2876): exact
     alias agreement earns the full bonus, close fuzzy agreement a partial one,
@@ -290,58 +227,13 @@ def _combined_score(inp: str, cand: str, use_partial_flag: bool) -> tuple[float,
     return base, part, wr, combined
 
 
-_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("jw", T.DoubleType()),
-        T.StructField("lev_sim", T.DoubleType()),
-        T.StructField("tok_overlap", T.DoubleType()),
-    ]
-)
-
-
-@pandas_udf(_PAIR_SCHEMA)
-def pair_score_udf(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    """Mention↔mention similarity bundle for the pair stage (north_star:
-    batched Jaro-Winkler / Levenshtein / token-overlap)."""
-    rows = []
-    for x, y in zip(a, b):
-        x = x if isinstance(x, str) else ""
-        y = y if isinstance(y, str) else ""
-        denom = max(len(x), len(y), 1)
-        rows.append(
-            (
-                jaro_winkler(x, y),
-                1.0 - levenshtein(x, y) / denom,
-                token_overlap(x, y),
-            )
-        )
-    return pd.DataFrame(rows, columns=["jw", "lev_sim", "tok_overlap"])
-
-
-@pandas_udf(T.StringType())
-def street_extract_udf(
-    original: pd.Series, province: pd.Series, district: pd.Series, ward: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            extract_street(
-                o if isinstance(o, str) else "",
-                p if isinstance(p, str) else None,
-                d if isinstance(d, str) else None,
-                w if isinstance(w, str) else None,
-            )
-            for o, p, d, w in zip(original, province, district, ward)
-        ]
-    )
-
-
 def _street_and_entity(original: str, std: str, province, district, ward,
                        is_new=None) -> tuple[str, str]:
     """Street extraction + entity_std derivation (row-local core of the fused
     resolver).
 
     ``entity_std`` is the canonical entity-bearing string the blocking keys
-    and pair scoring run on. When the (repaired) components are known it is
+    and string edges run on. When the (repaired) components are known it is
     built FROM THEM — ward district province, normalized — so every mention
     of an entity shares one entity_std regardless of which components the
     page happened to render (partial mentions the repair cascade completed

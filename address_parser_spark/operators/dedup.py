@@ -11,9 +11,9 @@ Scale shape notes (the part that matters at 100 TB):
 - MinHash banding: signatures AND band keys are computed scan-side (no
   shuffle); the shuffles are the band-key membership collection (one hash
   exchange, window-count-bounded state — ``_grouped_docs_bounded``) and
-  the pair agg; oversized buckets get capped exactly like
-  pairs.candidate_pairs, and pairs are generated JVM-side from each
-  bucket's member list — never a bucket self-join.
+  the pair agg; oversized buckets are capped at ``max_block`` before any
+  member list exists, and pairs are generated JVM-side from each bucket's
+  member list — never a bucket self-join.
 - Jaccard pairs: shingle explode → one hash exchange on which a window
   count sizes each shingle's doc set BEFORE the list is collected →
   JVM-side pair combinations → per-pair intersection counts (union size =
@@ -192,15 +192,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", k: int = 3,
     ).select("doc_id", F.col("s.h_idx").alias("h_idx"), F.col("s.minhash").alias("minhash"))
 
 
-def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int,
-                          value: Column | None = None,
-                          out: str = "docs") -> DataFrame:
-    """(key, df=instance count, ``out``=sorted ``value`` array) for keys
+def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int) -> DataFrame:
+    """(key, df=instance count, docs=sorted ``doc_id`` array) for keys
     with df <= cap, with BOUNDED aggregation state on corpus-hot keys and
-    ONE wide shuffle of the instances. ``value`` defaults to ``doc_id``;
-    pairs.candidate_pairs reuses this exact shape with a struct value —
-    keep the implementations shared so the single-exchange plan guarantee
-    is tested once and holds for both.
+    ONE wide shuffle of the instances. minhash_band_pairs and
+    ngram_jaccard_pairs share this one implementation, so the
+    single-exchange plan guarantee is tested once and holds for both.
 
     A naive ``groupBy(key).agg(collect_list(doc_id)).filter(size <= cap)``
     materializes the FULL doc list of every key before the filter — one
@@ -233,23 +230,21 @@ def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int,
     property."""
     from pyspark.sql.window import Window
 
-    value = F.col("doc_id") if value is None else value
     inst = rows.repartition(F.col(key))
     return (
         inst.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy(key)))
         .filter(F.col("df") <= cap)
         .groupBy(key, "df")
-        .agg(F.array_sort(F.collect_list(value)).alias(out))
-        .select(key, "df", out)
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
+        .select(key, "df", "docs")
     )
 
 
 def _doc_pairs_per_bucket(grouped: DataFrame, docs_col: str = "docs") -> DataFrame:
     """All (doc_a < doc_b) pairs from each row's SORTED doc_id array,
-    generated JVM-side (``transform × slice`` combinations — the same
-    two-shuffle shape as pairs.candidate_pairs, no self-join). Duplicate
-    ids inside one array contribute multiplicity, same-doc pairs are
-    skipped."""
+    generated JVM-side (``transform × slice`` combinations, no self-join).
+    Duplicate ids inside one array contribute multiplicity, same-doc pairs
+    are skipped."""
     ds = F.col(docs_col)
     return (
         grouped.select(

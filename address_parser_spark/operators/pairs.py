@@ -1,50 +1,43 @@
-"""Mention↔mention candidate-pair generation, scoring, and edge selection.
+"""Mention↔mention string edges: blocking keys, then equality star edges.
 
-The pair stage of the north_star: blocking keys = sorted-token key + MinHash-
-LSH band keys over char-4-gram shingles (both JVM-side, functions.columns),
-candidate pairs generated by a self-join *within* keys, scored with Arrow-
-batched Jaro-Winkler / Levenshtein / token-overlap (functions.udfs), and
-thresholded into edges for connected components.
+The pair stage of the north_star. ``with_blocking_keys`` attaches ``canon``
+(the entity-canonical string), ``digit_sig`` (the must-match digit/format
+signature) and ``keys`` (sorted-token, glued, initials and MinHash-LSH band
+keys — all JVM-side, functions.columns). ``equality_edges`` links mentions
+with IDENTICAL ``(canon, digit_sig)`` that share a blocking key of at most
+``max_block`` members; ``operators.cluster`` takes the connected components
+of these edges plus the entity-key anchors.
 
-Scale levers, applied in order:
-- **block-size cap**: buckets larger than ``max_block`` are dropped before the
-  self-join (the join is quadratic in bucket size; classic ER practice and the
-  moral equivalent of the reference's TOPK cap, inexus_parser.py:114). Dropped
-  buckets are counted, not silently ignored.
-- **min-key dedup**: a pair sharing k keys would surface k times; it is kept
-  only at its lexicographically-smallest shared key — dedup without a
-  ``distinct`` over the full pair set.
-- **salting is unnecessary here by construction**: capped buckets bound the
-  per-key fan-out, so no reducer sees more than ``max_block²`` rows; AQE skew
-  handling covers the rest.
+Only exact string identity makes an edge. Looser rules were measured and
+rejected: overlap-coefficient ≥1 merges subset token sets ("tan thuan …" ⊂
+"thanh tan thuan …" = adjacent wards), and Jaro-Winkler on sorted strings
+inflates on long shared prefixes — both crater precision at the F1≥0.99 bar.
+
+Block-size cap: a key shared by more than ``max_block`` mention rows links
+nothing (classic ER practice and the moral equivalent of the reference's TOPK
+cap, inexus_parser.py:114). Dropped keys are counted by ``dropped_blocks``,
+not silently ignored.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 from address_parser_spark.functions.columns import (
     canonical_tokens_col,
     char_ngrams_col,
     gram_hash_col,
     lsh_band_keys_from_hashes,
-    sorted_token_key_col,
 )
-from address_parser_spark.functions.udfs import pair_score_udf
 
 DEFAULT_MAX_BLOCK = 64
-DEFAULT_EDGE_JW = 0.97
 
 
-def with_blocking_keys(
-    mentions: DataFrame,
-    std_col: str = "entity_std",
-    digit_col: str = "std",
-    num_hashes: int = 30,
-    bands: int = 10,
-    rows: int = 3,
-) -> DataFrame:
-    """Attach ``canon`` (entity-canonical string) and ``keys array<string>``.
+def with_blocking_keys(mentions: DataFrame) -> DataFrame:
+    """Attach ``canon`` (entity-canonical string), ``digit_sig`` and ``keys
+    array<string>``, all derived from ``entity_std`` (``digit_sig`` also from
+    the resolved components and ``std``).
 
     Four key families per mention, all JVM-side:
     - ``tok#``  sorted non-generic distinct tokens, joined — exact-ish key;
@@ -53,8 +46,9 @@ def with_blocking_keys(
     - ``init#`` token-initial skeleton — survives glue/split AND single-token
       drops; collision-prone, but oversized blocks are capped downstream;
     - ``b#``    MinHash-LSH band keys over char-4-grams of the canonical
-      string (10 bands × 3 rows: ≥98% hit probability at Jaccard 0.7, ~25%
-      at 0.3) — fuzzy recall for typos / partial token agreement.
+      string (``lsh_band_keys_from_hashes`` defaults, 10 bands × 3 rows:
+      ≥98% hit probability at Jaccard 0.7, ~25% at 0.3) — fuzzy recall for
+      typos / partial token agreement.
     """
     # KEY tokens drop generic unit words (recall: typed vs untyped renderings
     # share keys); CANON keeps the full token set (precision: generic words
@@ -73,12 +67,12 @@ def with_blocking_keys(
     # requires digit_sig equality on top of canon equality.
     staged = (
         mentions
-        .withColumn("_key_toks", canonical_tokens_col(F.col(std_col)))
+        .withColumn("_key_toks", canonical_tokens_col(F.col("entity_std")))
         .withColumn("_key_str", F.concat_ws(" ", F.col("_key_toks")))
         .withColumn("_key_ghash", gram_hash_col(char_ngrams_col(F.col("_key_str"))))
         .withColumn(
             "canon",
-            F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col(std_col), " ")))),
+            F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("entity_std"), " ")))),
         )
         .withColumn(
             "digit_sig",
@@ -108,7 +102,7 @@ def with_blocking_keys(
                     F.lit("u"),
                     F.concat_ws(
                         " ",
-                        F.filter(F.split(F.col(digit_col), " "), lambda t: t.rlike("^[0-9]+$")),
+                        F.filter(F.split(F.col("std"), " "), lambda t: t.rlike("^[0-9]+$")),
                     ),
                 ),
             ),
@@ -127,202 +121,57 @@ def with_blocking_keys(
                         F.concat_ws("", F.transform(F.col("_key_toks"), lambda t: F.substring(t, 1, 1))),
                     ),
                 ),
-                lsh_band_keys_from_hashes(F.col("_key_ghash"), bands=bands, rows=rows),
+                lsh_band_keys_from_hashes(F.col("_key_ghash")),
             ),
         )
         .drop("_key_toks", "_key_str", "_key_ghash")
     )
 
 
-def candidate_pairs(
-    keyed: DataFrame,
-    id_col: str = "mid",
-    std_col: str = "canon",
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
-    """Pairs within blocking keys → (key, mid_a, std_a, mid_b, std_b, dsigs).
+def equality_edges(keyed: DataFrame, max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
+    """String-identity edges ``(src, dst)``: one star per exact
+    ``(canon, digit_sig)`` group, every member pointing at the group's
+    smallest ``mid``.
 
-    Each unordered pair appears exactly once (kept at its smallest shared key,
-    ``mid_a < mid_b``).
+    Invariant: the blocking keys are a pure function of ``canon`` — both come
+    from the sorted distinct tokens of ``entity_std``. So every member of a
+    ``(canon, digit_sig)`` group carries the same keys, each with the same
+    member count ``df``, and the group is either linked whole (some key has
+    ``df <= max_block``) or not at all. A star therefore yields the same
+    components as a clique inside every surviving block, with one edge per
+    member instead of one per pair and per shared key.
 
-    TWO shuffles total: one hash repartition by key, on which a window
-    count sizes each block and the ``max_block`` filter drops oversized
-    blocks BEFORE any member list exists (blocking keys are Zipf-hot at
-    corpus scale — a boilerplate key shared by millions of mentions must
-    never materialize its full struct list in one aggregation buffer;
-    WindowExec buffers one key group at a time in a spillable row array,
-    so a hot key costs disk, never an OOM), then the surviving members are
-    collected on the same clustering with bounded ≤ ``max_block`` state.
-    Pair combinations are generated JVM-side from the sorted member array
-    (``transform × slice``, no self-join), and one hash-agg by
-    (mid_a, mid_b) keeps each pair at its minimal key. The previous
-    formulation (distinct → size-agg → filter-join → key self-join → dedup
-    agg) paid five shuffles and re-evaluated the exploded subtree per
-    consumer; it was the single largest serial term in the pipeline profile.
-    ``keys`` is array-distinct by construction (with_blocking_keys uses
-    array_union), so (mid, key) needs no distinct.
+    Groups are compared as strings by the ``groupBy``, never by a hash, so no
+    hash collision can merge two entities. Per-group state is bounded: every
+    surviving row sits in a block of at most ``max_block`` rows that holds the
+    whole group, so ``collect_set`` never holds more than ``max_block`` ids.
+    Hot keys are sized by a window count, which buffers one key at a time in
+    a spillable row array, and dropped before any list exists.
+
+    ``df`` counts key rows, a repeated ``mid`` included. The cap is the only
+    difference from ``plans/er_oracle.py``, which links every identical
+    ``(canon, digit_sig)`` group. A ``mid`` belongs to one group, so each
+    edge is emitted once.
     """
-    from address_parser_spark.operators.dedup import _grouped_docs_bounded
-
-    exploded = keyed.select(
-        F.col(id_col).alias("mid"),
-        F.col(std_col).alias("std"),
-        F.col("digit_sig"),
-        F.explode("keys").alias("key"),
-    )
-
-    ms = F.col("ms")  # _grouped_docs_bounded array_sorts → struct order → mid ascending
-    blocks = (
-        _grouped_docs_bounded(
-            exploded, "key", max_block,
-            value=F.struct("mid", "std", "digit_sig"), out="ms",
-        )
-        .filter(F.col("df") >= 2)
-        .select("key", "ms")
-    )
-    flat = (
-        blocks.select(
-            "key",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(x.alias("a"), y.alias("b")),
-                        ),
-                    )
-                )
-            ).alias("p"),
-        )
-        .select(
-            "key",
-            F.col("p.a.mid").alias("mid_a"),
-            F.col("p.a.std").alias("std_a"),
-            F.col("p.a.digit_sig").alias("dsig_a"),
-            F.col("p.b.mid").alias("mid_b"),
-            F.col("p.b.std").alias("std_b"),
-            F.col("p.b.digit_sig").alias("dsig_b"),
-        )
-    )
-
-    # Keep each pair only at its minimal shared key.
-    return flat.groupBy("mid_a", "mid_b").agg(
-        F.min("key").alias("key"),
-        F.first("std_a").alias("std_a"),
-        F.first("std_b").alias("std_b"),
-        F.first("dsig_a").alias("dsig_a"),
-        F.first("dsig_b").alias("dsig_b"),
-    )
-
-
-def equality_edges(
-    keyed: DataFrame,
-    id_col: str = "mid",
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
-    """String-identity edges (``match_edges``'s default rule) computed without
-    materializing non-matching pairs.
-
-    ``match_edges(candidate_pairs(keyed))`` generates EVERY within-block pair
-    — carrying both canon strings and both digit signatures through the block
-    lists, the pair explosion, and a full (mid_a, mid_b) dedup shuffle — and
-    then keeps only the pairs whose canon AND digit_sig are EQUAL. For the
-    equality rule all of that is avoidable (guide-§8 shape: decide with small
-    rows): each member is reduced to (identity-hash, mid) where the hash is
-    ``xxhash64(canon, digit_sig)``, blocks keep the exact same ``max_block``
-    cap (df counts ALL members of the key, matching candidate_pairs), and the
-    JVM pair generator emits only equal-hash combinations — the struct sort
-    puts equal-hash members adjacent, so ``src < dst`` orientation still falls
-    out of the array order. Duplicate emissions across shared keys are NOT
-    deduped here: every consumer (connected_components) canonicalizes edges
-    with a distinct already, so the per-pair min-key shuffle bought nothing
-    on this path. The edge SET is identical to the candidate_pairs route
-    (pinned by tests/test_pair_generation.py); 64-bit identity hashing is the
-    same collision posture as ``mid`` itself (xxhash64 of url+mention).
-    """
-    from address_parser_spark.operators.dedup import _grouped_docs_bounded
-
-    exploded = keyed.select(
-        F.xxhash64(F.col("canon"), F.col("digit_sig")).alias("h"),
-        F.col(id_col).alias("mid"),
-        F.explode("keys").alias("key"),
-    )
-    ms = F.col("ms")
-    blocks = (
-        _grouped_docs_bounded(
-            exploded, "key", max_block, value=F.struct("h", "mid"), out="ms"
-        )
-        .filter(F.col("df") >= 2)
-        .select("ms")
+    members = (
+        keyed.select("mid", "canon", "digit_sig", F.explode("keys").alias("key"))
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("key")))
+        .filter(F.col("df") <= max_block)
+        .groupBy("canon", "digit_sig")
+        .agg(F.collect_set("mid").alias("ms"))
     )
     return (
-        blocks.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.filter(
-                                F.slice(ms, i + 2, F.size(ms)),
-                                lambda y: y["h"] == x["h"],
-                            ),
-                            lambda y: F.struct(
-                                x["mid"].alias("src"), y["mid"].alias("dst")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .filter(F.col("p.src") != F.col("p.dst"))
-        .select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
+        members.select(F.explode("ms").alias("src"), F.array_min("ms").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
     )
 
 
-def dropped_blocks(keyed: DataFrame, id_col: str = "mid", max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
+def dropped_blocks(keyed: DataFrame, max_block: int = DEFAULT_MAX_BLOCK) -> DataFrame:
     """Oversized buckets excluded from pairing — surfaced for lineage metrics
     (no silent caps)."""
-    exploded = keyed.select(F.col(id_col).alias("mid"), F.explode("keys").alias("key")).distinct()
+    exploded = keyed.select("mid", F.explode("keys").alias("key")).distinct()
     return (
         exploded.groupBy("key")
         .agg(F.count(F.lit(1)).alias("block_n"))
         .filter(F.col("block_n") > max_block)
-    )
-
-
-def score_pairs(pairs: DataFrame) -> DataFrame:
-    """Arrow-batched similarity bundle per candidate pair."""
-    return pairs.withColumn("ps", pair_score_udf(F.col("std_a"), F.col("std_b"))).select(
-        "mid_a", "mid_b", "key", "std_a", "std_b", "dsig_a", "dsig_b",
-        F.col("ps.jw").alias("jw"),
-        F.col("ps.lev_sim").alias("lev_sim"),
-        F.col("ps.tok_overlap").alias("tok_overlap"),
-    )
-
-
-def match_edges(pairs: DataFrame, jw_threshold: float | None = None) -> DataFrame:
-    """High-confidence string-identity edges for clustering.
-
-    Conservative by design: the authoritative match signal is canonical-node
-    agreement (cluster.cluster_mentions anchors); string edges merge only
-    mentions with IDENTICAL canonical strings (sorted non-generic token sets).
-    Looser rules were tried and rejected: overlap-coefficient ≥1 merges
-    subset token sets ("tan thuan …" ⊂ "thanh tan thuan …" = adjacent wards),
-    and Jaro-Winkler on sorted strings inflates on long shared prefixes —
-    both crater precision at the F1≥0.99 bar. Pass ``jw_threshold`` to add
-    near-identity edges when recall matters more than precision.
-
-    Accepts raw ``candidate_pairs`` output or ``score_pairs`` output: the
-    default (equality-only) rule needs no similarity scores, so the pipeline
-    feeds raw pairs and never pays the scoring UDF for edge generation; with
-    ``jw_threshold`` set, the jw column is computed here if absent.
-    """
-    cond = (F.col("std_a") == F.col("std_b")) & (F.col("dsig_a") == F.col("dsig_b"))
-    if jw_threshold is not None:
-        if "jw" not in pairs.columns:
-            pairs = score_pairs(pairs)
-        cond = cond | ((F.col("jw") >= jw_threshold) & (F.col("dsig_a") == F.col("dsig_b")))
-    return pairs.filter(cond).select(
-        F.col("mid_a").alias("src"), F.col("mid_b").alias("dst")
     )

@@ -44,13 +44,15 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
 
     When the frame carries an ``html`` column, pages whose ``text`` is
     null/empty take a branch whose fused UDF FIRST extracts text from the
-    markup (``make_extract_features_udf(from_html=True)``). Same filtered-
-    union Catalyst shape as ``textops.html.ensure_text`` — texted rows never
-    ship html bytes to Python — but each branch plans exactly ONE
-    ArrowEvalPython: composing ensure_text in front of this function chained
-    the html UDF and the extract UDF in one stage, i.e. two concurrent
-    Python workers per task slot on the miss branch (and ~0.8 s of pure
-    overhead at the 1200-page bench even when the miss branch was empty)."""
+    markup (``make_extract_features_udf(from_html=True)``). A filtered union,
+    not ``when(need, udf(html))``: Catalyst hoists Python UDFs out of CASE
+    branches into an unconditional projection, which would ship every page's
+    html bytes through Arrow. Texted rows never reach Python for markup, and
+    each branch plans exactly ONE ArrowEvalPython: a separate html→text
+    pre-stage in front of this function chained the html UDF and the extract
+    UDF in one stage, i.e. two concurrent Python workers per task slot on the
+    miss branch (and ~0.8 s of pure overhead at the 1200-page bench even when
+    the miss branch was empty)."""
     regs = registries or {"province": [], "district": [], "ward": []}
     features = make_extract_features_udf(regs, spark=pages.sparkSession)
     base = pages.filter(F.col("lang") == lang)

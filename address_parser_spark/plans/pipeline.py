@@ -29,6 +29,7 @@ from address_parser_spark.gazetteer.nodes import (
 from address_parser_spark.gazetteer.synth import Gazetteer
 from address_parser_spark.operators.cluster import cluster_mentions, connected_components
 from address_parser_spark.operators.pairs import (
+    DEFAULT_MAX_BLOCK,
     equality_edges,
     with_blocking_keys,
 )
@@ -89,7 +90,7 @@ def run_pipeline(
     pages: DataFrame,
     gaz: Gazetteer,
     store: Optional[StageStore] = None,
-    max_block: int = 64,
+    max_block: int = DEFAULT_MAX_BLOCK,
     attach_ward_mapping: bool = True,
 ) -> DataFrame:
     """pages → clustered mentions (mid, url, mention, std, parsed components,
@@ -127,25 +128,18 @@ def run_pipeline(
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
     # extract_normalize: pages whose text column is null/empty take a union
     # branch whose fused UDF extracts text from markup first; texted rows
-    # never ship html bytes to Python (same Catalyst shape as
-    # textops.html.ensure_text but one ArrowEvalPython per branch instead of
-    # a chained html UDF).
+    # never ship html bytes to Python, and each branch plans one
+    # ArrowEvalPython.
     resolved = stage(
         "resolved",
         lambda: resolve_mentions(
             pages, nodes, registries, repair_state=repair_state
         ),
     )
-    # keyed is consumed exactly once (candidate_pairs is a single-aggregation
-    # chain since the collect_list rewrite), so it needs no barrier when no
-    # durable store is attached — with a store it still lands as a resumable
-    # snapshot stage.
+    # keyed is consumed exactly once (by equality_edges), so it needs no
+    # barrier when no durable store is attached — with a store it still
+    # lands as a resumable snapshot stage.
     keyed = stage("keyed", lambda: with_blocking_keys(resolved), multi_consumer=False)
-    # Equality-only edge rule → the dedicated identity-hash pair generator:
-    # no canon/digit_sig strings through the block lists, no non-matching
-    # pair rows, no per-pair dedup shuffle (connected_components
-    # canonicalizes edges anyway). Same edge set as
-    # match_edges(candidate_pairs(...)) — pinned by test_pair_generation.
     edges = stage(
         "edges",
         lambda: equality_edges(keyed, max_block=max_block),

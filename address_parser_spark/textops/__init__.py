@@ -18,13 +18,9 @@ from address_parser_spark.textops.normalize import (
 )
 from address_parser_spark.textops.ngrams import char_ngrams, char_ngram_set, word_shingles
 from address_parser_spark.textops.similarity import (
-    dice_coefficient,
     indel_ratio,
-    jaro_winkler,
     lcs_length,
-    levenshtein,
     partial_ratio,
-    token_overlap,
     wratio,
 )
 from address_parser_spark.textops.street import extract_street, component_signature
@@ -41,13 +37,9 @@ __all__ = [
     "char_ngrams",
     "char_ngram_set",
     "word_shingles",
-    "dice_coefficient",
     "indel_ratio",
-    "jaro_winkler",
     "lcs_length",
-    "levenshtein",
     "partial_ratio",
-    "token_overlap",
     "wratio",
     "extract_street",
     "component_signature",

@@ -20,20 +20,18 @@ Extraction rules (applied in order, all deterministic):
 5. whitespace is normalized: horizontal runs collapse to one space, lines
    are stripped, empty lines dropped, lines joined with ``\n``.
 
-The function is pure Python (stdlib only) and is applied Arrow-batched via
-``pandas_udf`` — entity decoding over the full HTML5 named-reference table
-is not expressible with JVM builtins, so this is a genuine UDF case; the
-batch path keeps it off the per-row interpreter.
+The function is pure Python (stdlib only) and runs Arrow-batched inside the
+fused extract UDF (``functions.udfs.make_extract_features_udf(from_html=True)``,
+the html branch of ``operators.parse.extract_normalize``) — entity decoding
+over the full HTML5 named-reference table is not expressible with JVM
+builtins, so this is a genuine UDF case; the batch path keeps it off the
+per-row interpreter.
 """
 
 from __future__ import annotations
 
 import html as _html
 import re
-
-import pandas as pd
-from pyspark.sql import Column, functions as F
-from pyspark.sql.types import StringType
 
 _COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
 # script/style/head swallow their content; non-greedy to the matching close
@@ -72,32 +70,3 @@ def html_to_text(markup: str | bytes | None) -> str:
     s = _html.unescape(s)
     lines = (_HSPACE.sub(" ", line).strip() for line in s.split("\n"))
     return "\n".join(line for line in lines if line)
-
-
-@F.pandas_udf(StringType())
-def _html_to_text_udf(markup: pd.Series) -> pd.Series:
-    return markup.map(html_to_text)
-
-
-def html_text_column(html_col: str | Column = "html") -> Column:
-    """Column expression: extracted text from an html binary/string column."""
-    col = F.col(html_col) if isinstance(html_col, str) else html_col
-    return _html_to_text_udf(col)
-
-
-def ensure_text(pages, html_col: str = "html", text_col: str = "text"):
-    """Pre-stage for the page pipeline: fill ``text`` from ``html`` where the
-    text column is null/empty.
-
-    Deliberately a filtered two-branch union, NOT ``when(need, udf(html))``:
-    Catalyst extracts Python UDFs out of CASE branches into an unconditional
-    ArrowEvalPython projection, so the ``when`` shape would ship EVERY page's
-    html bytes through Arrow even when all texts are present. With the union,
-    rows that already carry text take a pure-JVM branch (the null/empty
-    predicate pushes to the scan) and only the text-less rows pay the UDF."""
-    if html_col not in pages.columns:
-        return pages
-    need = F.col(text_col).isNull() | (F.col(text_col) == "")
-    have = pages.filter(~need)
-    miss = pages.filter(need).withColumn(text_col, html_text_column(html_col))
-    return have.unionByName(miss)

@@ -2,14 +2,14 @@
 
 The reference scores candidates with RapidFuzz (``ratio`` = normalized Indel,
 ``partial_ratio``, ``WRatio``; inexus_parser.py:7-9, 2886-2900). RapidFuzz is
-not available in this environment, so the scorers are re-implemented here with
-bit-parallel algorithms (Hyyrö's LCS bit-vector for Indel, Myers' bit-vector
-for Levenshtein) — O(ceil(m/w)·n) with Python big-int words, microseconds per
-pair for address-length strings. Properties are cross-checked against naive
-DP implementations with Hypothesis in ``tests/test_similarity.py``.
+not available in this environment, so the scorers are re-implemented here on
+a bit-parallel LCS (Hyyrö's bit-vector, the Indel core) — O(ceil(m/w)·n) with
+Python big-int words, microseconds per pair for address-length strings.
+Properties are cross-checked against naive DP implementations with Hypothesis
+in ``tests/test_similarity.py``.
 
 All ``*_ratio`` functions return floats on the 0..100 scale (RapidFuzz
-convention); ``jaro_winkler`` returns 0..1 (the conventional scale).
+convention).
 """
 
 from __future__ import annotations
@@ -53,41 +53,6 @@ def lcs_length(a: str, b: str) -> int:
         u = v & pm
         v = ((v + u) | (v - u)) & full
     return m - v.bit_count()
-
-
-def levenshtein(a: str, b: str) -> int:
-    """Unit-cost edit distance via Myers' 1999 bit-vector algorithm."""
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
-    if len(a) > len(b):
-        a, b = b, a
-    masks = _char_masks(a)
-    m = len(a)
-    full = (1 << m) - 1
-    high = 1 << (m - 1)
-    vp, vn = full, 0
-    dist = m
-    for ch in b:
-        pm = masks.get(ch, 0) | vn
-        d0 = (((pm & vp) + vp) ^ vp) | pm
-        hp = vn | (~(d0 | vp) & full)
-        hn = d0 & vp
-        if hp & high:
-            dist += 1
-        elif hn & high:
-            dist -= 1
-        hp = ((hp << 1) | 1) & full
-        hn = (hn << 1) & full
-        vp = hn | (~(d0 | hp) & full)
-        vn = d0 & hp
-    return dist
-
-
-def indel_distance(a: str, b: str) -> int:
-    """Insert/delete-only edit distance: ``m + n − 2·LCS``."""
-    return len(a) + len(b) - 2 * lcs_length(a, b)
 
 
 # --------------------------------------------------------------------------
@@ -205,80 +170,3 @@ def wratio(a: str, b: str) -> float:
     partial = partial_ratio(a, b)
     partial_token = partial_ratio(_token_sorted(a), _token_sorted(b))
     return max(base, partial * partial_scale, partial_token * 0.95 * partial_scale)
-
-
-# --------------------------------------------------------------------------
-# Set / edit scorers for the pair stage
-# --------------------------------------------------------------------------
-
-def dice_coefficient(set_a: frozenset | set, set_b: frozenset | set) -> float:
-    """Sørensen–Dice over shingle sets: ``2·|A∩B| / (|A|+|B|)``."""
-    denom = len(set_a) + len(set_b)
-    if denom == 0:
-        return 0.0
-    return (2.0 * len(set_a & set_b)) / denom
-
-
-def dice_from_counts(intersection: int, size_a: int, size_b: int) -> float:
-    """Dice from precomputed sizes — used when the blocking join already
-    produced the intersection cardinality (no set materialization)."""
-    denom = size_a + size_b
-    if denom == 0:
-        return 0.0
-    return (2.0 * intersection) / denom
-
-
-def token_overlap(a: str, b: str) -> float:
-    """Overlap coefficient over whitespace tokens: ``|A∩B| / min(|A|,|B|)``."""
-    ta, tb = set(a.split()), set(b.split())
-    if not ta or not tb:
-        return 0.0
-    return len(ta & tb) / min(len(ta), len(tb))
-
-
-def jaro(a: str, b: str) -> float:
-    la, lb = len(a), len(b)
-    if la == 0 and lb == 0:
-        return 1.0
-    if la == 0 or lb == 0:
-        return 0.0
-    window = max(la, lb) // 2 - 1
-    if window < 0:
-        window = 0
-    match_a = [False] * la
-    match_b = [False] * lb
-    matches = 0
-    for i, ch in enumerate(a):
-        lo = max(0, i - window)
-        hi = min(lb, i + window + 1)
-        for j in range(lo, hi):
-            if not match_b[j] and b[j] == ch:
-                match_a[i] = True
-                match_b[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    transpositions = 0
-    j = 0
-    for i in range(la):
-        if match_a[i]:
-            while not match_b[j]:
-                j += 1
-            if a[i] != b[j]:
-                transpositions += 1
-            j += 1
-    t = transpositions // 2
-    return (matches / la + matches / lb + (matches - t) / matches) / 3.0
-
-
-def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1, max_prefix: int = 4) -> float:
-    base = jaro(a, b)
-    if base <= 0.7:
-        return base
-    prefix = 0
-    for ca, cb in zip(a, b):
-        if ca != cb or prefix >= max_prefix:
-            break
-        prefix += 1
-    return base + prefix * prefix_weight * (1.0 - base)

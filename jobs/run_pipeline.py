@@ -34,6 +34,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from address_parser_spark.operators.pairs import DEFAULT_MAX_BLOCK
+
     p = argparse.ArgumentParser(description="Run the ER pipeline over a pages parquet table.")
     p.add_argument("--pages", required=True, help="input parquet path (pages table)")
     p.add_argument("--output", required=True, help="output parquet path (clustered mentions)")
@@ -43,7 +45,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="reference-shaped JSON gazetteer dir (fuzz/data layout, read via "
                         "sources.readers.gazetteer_from_dir); default: deterministic synthetic catalog")
     p.add_argument("--master", default=None, help="spark master override (else session default)")
-    p.add_argument("--max-block", type=int, default=64, help="pair-stage blocking-bucket cap")
+    p.add_argument("--max-block", type=int, default=DEFAULT_MAX_BLOCK, help="pair-stage blocking-bucket cap")
     p.add_argument("--no-ward-mapping", action="store_true",
                    help="skip attaching old↔new ward codes to the output")
     p.add_argument("--synth-pages", type=int, default=None,

@@ -7,10 +7,15 @@ appears n times contribute m*n pairs, and same-doc pairs are excluded even
 when the id repeats. These properties are what make the downstream
 intersection counts (and so the Jaccard/Dice values) identical to the
 DuckDB oracles; this file pins them against a naive Python reference.
+
+``pairs.equality_edges`` (one star per exact ``(canon, digit_sig)`` group) is
+pinned the same way: its connected components must equal those of per-key
+cliques computed in plain Python from the collected keyed rows.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
 from itertools import combinations
 
 import pytest
@@ -76,22 +81,60 @@ def test_doc_pairs_equal_legacy_selfjoin_on_random_buckets(spark):
     assert new == legacy and len(new) > 50
 
 
-def test_equality_edges_match_candidate_pair_route(spark, gaz):
-    """The pipeline's identity-hash edge generator must emit EXACTLY the edge
-    set of the route it replaced — match_edges(candidate_pairs(keyed)) — on a
-    real keyed frame (same blocks, same max_block cap semantics, equal canon
-    AND digit_sig required), modulo the per-pair dedup the old route paid
-    (connected_components canonicalizes either way)."""
-    from address_parser_spark.operators.pairs import (
-        candidate_pairs,
-        equality_edges,
-        match_edges,
-        with_blocking_keys,
-    )
-    from address_parser_spark.plans.pipeline import run_pipeline  # noqa: F401
+# --------------------------------------------------------------------------
+# equality_edges: star edges over exact (canon, digit_sig) groups
+# --------------------------------------------------------------------------
+
+def _partition(mids, edges) -> set[frozenset]:
+    """Connected components of ``mids`` under ``edges`` (union-find)."""
+    parent = {m: m for m in mids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    groups: dict = {}
+    for m in parent:
+        groups.setdefault(find(m), set()).add(m)
+    return {frozenset(g) for g in groups.values()}
+
+
+def _reference_edges(rows, max_block: int) -> list[tuple]:
+    """Per-key cliques, straight from the definition: every key of at most
+    ``max_block`` rows (a repeated mid counts once per row) links its members
+    with equal (canon, digit_sig). Strings are compared, never hashed."""
+    blocks: dict = defaultdict(list)
+    for r in rows:
+        for key in r["keys"]:
+            blocks[key].append(r)
+    edges = []
+    for members in blocks.values():
+        if len(members) > max_block:
+            continue
+        first: dict = {}
+        for r in members:
+            edges.append((r["mid"], first.setdefault((r["canon"], r["digit_sig"]), r["mid"])))
+    return edges
+
+
+def _edge_partition(keyed, max_block: int) -> set[frozenset]:
+    from address_parser_spark.operators.pairs import equality_edges
+
+    edges = [(r["src"], r["dst"]) for r in equality_edges(keyed, max_block=max_block).collect()]
+    assert all(a != b for a, b in edges)
+    return _partition([r["mid"] for r in keyed.select("mid").collect()], edges)
+
+
+@pytest.fixture(scope="module")
+def keyed80(spark, gaz):
     from address_parser_spark.gazetteer.nodes import (
         alias_registries, build_nodes, build_repair_state,
     )
+    from address_parser_spark.operators.pairs import with_blocking_keys
     from address_parser_spark.operators.parse import resolve_mentions
     from address_parser_spark.sources.pages import synth_pages_spark
 
@@ -101,18 +144,72 @@ def test_equality_edges_match_candidate_pair_route(spark, gaz):
         pages, nodes, alias_registries(gaz),
         repair_state=build_repair_state(gaz, nodes),
     )
-    keyed = with_blocking_keys(resolved).localCheckpoint(eager=True)
+    return with_blocking_keys(resolved).localCheckpoint(eager=True)
 
-    sizes = {}
-    for cap in (64, 3):  # default cap AND a tight cap that actually drops blocks
-        old = {
-            tuple(sorted((r["src"], r["dst"])))
-            for r in match_edges(candidate_pairs(keyed, max_block=cap)).collect()
-        }
-        new = {
-            tuple(sorted((r["src"], r["dst"])))
-            for r in equality_edges(keyed, max_block=cap).collect()
-        }
-        assert new == old, (cap, new ^ old)
-        sizes[cap] = len(new)
-    assert sizes[64] > 0  # non-vacuous: the corpus must actually produce edges
+
+# (mid, canon, digit_sig, keys); every canon carries one key list, as
+# with_blocking_keys guarantees. At cap 4: "hot" holds 6 rows (A, B, C).
+HAND_KEYED = [
+    (1, "a", "1", ["hot"]),            # A: its only key is over the cap → no edge
+    (2, "a", "1", ["hot"]),
+    (10, "b", "1", ["hot", "kb"]),     # B: kb holds 4 rows → fully linked
+    (11, "b", "1", ["hot", "kb"]),
+    (12, "b", "1", ["hot", "kb"]),
+    (13, "b", "2", ["hot", "kb"]),     # C: B's canon, another digit_sig
+    (20, "d", "1", ["kd", "shared"]),  # D/E: different canons share a key
+    (21, "e", "1", ["ke", "shared"]),
+    (30, "f", "1", ["kf"]),            # F: repeated mid, 3 rows → linked
+    (30, "f", "1", ["kf"]),
+    (31, "f", "1", ["kf"]),
+    (40, "g", "1", ["kg"]),            # G: only a repeated mid → no edge
+    (40, "g", "1", ["kg"]),
+    (50, "h", "1", ["kh"]),            # H: repeats push kh to 5 rows → no edge
+    (50, "h", "1", ["kh"]),
+    (51, "h", "1", ["kh"]),
+    (51, "h", "1", ["kh"]),
+    (52, "h", "1", ["kh"]),
+]
+
+
+@pytest.fixture(scope="module")
+def hand_keyed(spark):
+    return spark.createDataFrame(
+        HAND_KEYED, "mid long, canon string, digit_sig string, keys array<string>"
+    )
+
+
+def test_equality_edges_match_python_oracle(keyed80):
+    """Same components as per-key cliques at the default cap and at tight
+    caps that drop blocks."""
+    rows = keyed80.select("mid", "canon", "digit_sig", "keys").collect()
+    mids = [r["mid"] for r in rows]
+    for cap in (64, 3, 2):
+        want = _partition(mids, _reference_edges(rows, cap))
+        assert _edge_partition(keyed80, cap) == want, cap
+    # non-vacuous: mentions are linked even at cap 2, and cap 2 drops some
+    # block that holds an identical pair
+    assert sum(len(c) - 1 for c in want) > 0
+    links = lambda cap: sum(a != b for a, b in _reference_edges(rows, cap))  # noqa: E731
+    assert links(2) < links(64)
+
+
+def test_equality_edges_hand_built_cases(hand_keyed):
+    rows = hand_keyed.collect()
+    want = {frozenset({10, 11, 12}), frozenset({30, 31})} | {
+        frozenset({m}) for m in (1, 2, 13, 20, 21, 40, 50, 51, 52)
+    }
+    assert _partition([r["mid"] for r in rows], _reference_edges(rows, 4)) == want
+    assert _edge_partition(hand_keyed, 4) == want
+
+
+def test_equality_edges_compare_strings_not_hashes(keyed80, hand_keyed, monkeypatch):
+    """With every 64-bit hash colliding, no edge may join different canon
+    strings: group identity is the strings themselves."""
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
+    from address_parser_spark.operators.pairs import equality_edges
+
+    for keyed in (hand_keyed, keyed80):
+        sig = {r["mid"]: (r["canon"], r["digit_sig"]) for r in keyed.collect()}
+        edges = equality_edges(keyed).collect()
+        assert edges
+        assert all(sig[r["src"]] == sig[r["dst"]] for r in edges)

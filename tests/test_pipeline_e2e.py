@@ -127,9 +127,10 @@ def test_resume_from_checkpoint(spark, gaz, corpus, tmp_path_factory):
 def test_pipeline_from_html_only_pages(spark, gaz, corpus, clustered):
     """input_hint closure: pages arriving with ONLY the html:binary column
     populated (text null) must produce exactly the text-path pipeline output
-    — ensure_text() extracts the text from markup, and since html_to_text is
-    byte-identical to the text column on this corpus, every downstream row
-    (mention, std, entity_key) matches. F1 gate therefore holds verbatim."""
+    — extract_normalize's html branch extracts the text from markup, and
+    since html_to_text is byte-identical to the text column on this corpus,
+    every downstream row (mention, std, entity_key) matches. F1 gate
+    therefore holds verbatim."""
     pages, _ = corpus
     pages_df = (
         spark.createDataFrame(pages, PAGES_SCHEMA)

@@ -199,23 +199,27 @@ def test_media_decode_is_pure_map_chain(spark, queries):
     assert "lang" not in read_schema and "source" not in read_schema
 
 
-def test_ensure_text_html_branch_isolated(spark, gaz):
-    """ensure_text must plan the html→text UDF on the filtered miss-branch
-    ONLY (one ArrowEvalPython total), with the null/empty predicate pushed
-    to both branch scans — the deliberate alternative to when(udf(html)),
-    which Catalyst would hoist into an unconditional projection over every
-    page's html bytes."""
+def test_extract_normalize_html_branch_isolated(spark, gaz):
+    """extract_normalize on a frame with an html column must plan ONE fused
+    ArrowEvalPython per branch (two in total — the html→text step rides
+    inside the miss branch's extract UDF, never a chained second UDF), with
+    the null/empty text predicate on both branches, joined by a Union — the
+    deliberate alternative to when(udf(html)), which Catalyst would hoist
+    into an unconditional projection over every page's html bytes."""
+    from address_parser_spark.gazetteer.nodes import alias_registries
+    from address_parser_spark.operators.parse import extract_normalize
     from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
-    from address_parser_spark.textops.html import ensure_text
 
     pages, _ = synth_pages_local(gaz, 30)
     df = spark.createDataFrame(pages, PAGES_SCHEMA)
-    plan = plan_of(ensure_text(df))
-    # one UDF NODE (the formatted plan names each node in both the tree
-    # summary and the detail section, so count node headers)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
-    # both branches filter before the union (on a non-nullable local frame
-    # the isnull term constant-folds away, leaving the empty-string checks)
-    assert re.search(r"Condition : NOT \(text|isnotnull\(text", plan)
-    assert re.search(r"Condition : \(text|isnull\(text", plan)
+    assert "html" in df.columns
+    plan = plan_of(extract_normalize(df, alias_registries(gaz)))
+    # one UDF NODE per branch (the formatted plan names each node in both
+    # the tree summary and the detail section, so count node headers)
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2
+    # both branches filter on the text predicate before the union: the
+    # texted branch on its negation, the html branch on the predicate itself
+    conds = [l for l in plan.splitlines() if l.startswith("Condition") and "text" in l]
+    assert len(conds) == 2
+    assert sum("NOT" in c for c in conds) == 1
     assert "Union" in plan

@@ -1,19 +1,15 @@
 """Property tests for the from-scratch similarity scorers.
 
-Bit-parallel LCS (Allison–Dix/Hyyrö) and Levenshtein (Myers) are cross-checked
-against naive O(m·n) dynamic programs with Hypothesis.
+Bit-parallel LCS (Allison–Dix/Hyyrö) is cross-checked against a naive O(m·n)
+dynamic program with Hypothesis.
 """
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from address_parser_spark.textops.similarity import (
-    dice_coefficient,
     indel_ratio,
-    jaro,
-    jaro_winkler,
     lcs_length,
-    levenshtein,
     partial_ratio,
     token_set_ratio,
     token_sort_ratio,
@@ -34,26 +30,10 @@ def lcs_dp(a: str, b: str) -> int:
     return prev[-1]
 
 
-def lev_dp(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
 @settings(max_examples=300, deadline=None)
 @given(short_text, short_text)
 def test_lcs_matches_dp(a, b):
     assert lcs_length(a, b) == lcs_dp(a, b)
-
-
-@settings(max_examples=300, deadline=None)
-@given(short_text, short_text)
-def test_levenshtein_matches_dp(a, b):
-    assert levenshtein(a, b) == lev_dp(a, b)
 
 
 @settings(max_examples=200, deadline=None)
@@ -76,16 +56,10 @@ def test_partial_ratio_dominates_ratio(a, b):
 def test_composite_scorers_bounded(a, b):
     for fn in (wratio, token_sort_ratio, token_set_ratio):
         assert 0.0 <= fn(a, b) <= 100.0 + 1e-9
-    assert 0.0 <= jaro(a, b) <= 1.0
-    assert 0.0 <= jaro_winkler(a, b) <= 1.0
 
 
 def test_known_values():
-    assert levenshtein("kitten", "sitting") == 3
     assert lcs_length("abcde", "ace") == 3
     assert indel_ratio("", "") == 100.0
     assert indel_ratio("abc", "") == 0.0
     assert partial_ratio("ha noi", "thanh pho ha noi viet nam") == 100.0
-    assert dice_coefficient({"ab", "bc"}, {"ab", "cd"}) == 0.5
-    assert jaro("martha", "marhta") > 0.94
-    assert jaro_winkler("dwayne", "duane") > jaro("dwayne", "duane")
