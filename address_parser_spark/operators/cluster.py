@@ -8,19 +8,21 @@ large-star/small-star algorithm of Kiveris et al., "Connected Components in
 MapReduce and Beyond" (SOCC'14) — a public algorithm, O(log² n) rounds,
 expressed here purely as DataFrame self-joins + hash aggregations.
 
-Each round is checkpointed (``localCheckpoint`` by default, or a parquet
-round-trip via the provided ``checkpoint_fn``) to truncate lineage — without
-it the plan doubles every iteration and Catalyst analysis dominates runtime.
-Convergence is detected by comparing an order-insensitive fingerprint
-(count + sum of per-edge hashes), one cheap agg per round instead of a full
-``exceptAll``.
+Graphs of at most ``SMALL_GRAPH_EDGES`` canonical edges take a driver
+union-find instead; the path is chosen from the observed edge count alone.
+Each round of the loop is checkpointed (``localCheckpoint`` by default, or a
+parquet round-trip via the provided ``checkpoint_fn``) to truncate lineage —
+without it the plan doubles every iteration and Catalyst analysis dominates
+runtime. Convergence is detected by comparing an order-insensitive
+fingerprint (count + bit_xor of per-edge hashes), read with ``observe`` from
+the checkpoint's own job instead of a full ``exceptAll``.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 MAX_ITERATIONS = 30
 
@@ -68,30 +70,17 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return neighbors.unionAll(selfs)
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.select(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-def _checkpoint_with_fingerprint(df: DataFrame, it: int, checkpoint_fn) -> tuple[DataFrame, tuple[int, int]]:
-    """Materialize one iteration AND read its convergence fingerprint from the
-    same job via ``observe`` — halving the per-iteration job count (driver-side
-    job latency is the serial term that caps scaling efficiency)."""
-    from pyspark.sql import Observation
-
-    if checkpoint_fn is not None:
-        out = checkpoint_fn(df, it)
-        return out, _fingerprint(out)
+def _checkpoint(df: DataFrame, it: int, checkpoint_fn) -> tuple[DataFrame, tuple[int, int]]:
+    """Materialize one round with ``checkpoint_fn`` (default: an eager
+    ``localCheckpoint``) and read its convergence fingerprint, (count,
+    bit_xor of per-edge hashes), from the same job via ``observe``."""
     obs = Observation(f"cc_fp_{it}")
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
     )
-    out = observed.localCheckpoint(eager=True)
+    out = observed.localCheckpoint(eager=True) if checkpoint_fn is None else checkpoint_fn(observed, it)
     metrics = obs.get
     return out, (int(metrics["n"]), int(metrics["h"]))
 
@@ -135,8 +124,6 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
-    max_iterations: int = MAX_ITERATIONS,
-    timings: Optional[dict] = None,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """edges(src long, dst long) → assignments(id long, component long).
@@ -145,9 +132,13 @@ def connected_components(
     present as isolated nodes must be unioned in by the caller (an edge list
     cannot see them).
 
-    ``checkpoint_fn(df, iteration)`` lets the pipeline swap in durable
-    parquet/Iceberg checkpoints for resumability (sources.lineage); default is
-    ``localCheckpoint`` (truncates lineage in-memory).
+    The path depends only on the observed canonical edge count: at or below
+    ``small_graph_edges`` the driver union-find runs; above it, the
+    distributed loop. ``checkpoint_fn(df, round)`` replaces the loop's
+    per-round ``localCheckpoint`` — the pipeline passes durable
+    parquet/Iceberg writes (sources.lineage) — and is called once per round,
+    never on the driver path. It must materialize its input before returning:
+    the round's fingerprint is observed on the job that materializes it.
 
     The loop sizes its OWN shuffle partitioning from the measured edge count
     (~250k edges per partition, floor 8, never above the session setting):
@@ -157,21 +148,11 @@ def connected_components(
     overhead-bound (measured 67s → 12s on a 113k-edge graph at local[32]).
     The session conf is restored on exit.
     """
-    import time as _time
-
     spark = edges.sparkSession
     orig_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    _t0 = _time.monotonic()
-    current, prev_fp = _checkpoint_with_fingerprint(_canon(edges), -1, checkpoint_fn)
-    if timings is not None:
-        timings["cc_init"] = round(_time.monotonic() - _t0, 2)
-    if checkpoint_fn is None and prev_fp[0] <= small_graph_edges:
-        _t0 = _time.monotonic()  # cc_init is reported separately — don't double-count it
-        out = _driver_union_find(current)
-        if timings is not None:
-            timings["cc_rounds"] = 0
-            timings["cc_loop"] = round(_time.monotonic() - _t0, 2)
-        return out
+    current, prev_fp = _checkpoint(_canon(edges), -1, None)
+    if prev_fp[0] <= small_graph_edges:
+        return _driver_union_find(current)
     try:
         # Partition sizing is per-ROUND, not per-loop: the edge set shrinks
         # geometrically, so late rounds on the initial count's partitioning
@@ -186,21 +167,15 @@ def connected_components(
             waved = ((by_size + dp - 1) // dp) * dp
             return min(int(orig_parts), waved) if int(orig_parts) >= 8 else waved
 
-        rounds = 0
-        _t0 = _time.monotonic()
-        for it in range(max_iterations):
+        for it in range(MAX_ITERATIONS):
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(_size_loop_parts(prev_fp[0]))
             )
             stepped = _small_star(_large_star(current))
-            current, fp = _checkpoint_with_fingerprint(_canon(stepped), it, checkpoint_fn)
-            rounds += 1
+            current, fp = _checkpoint(_canon(stepped), it, checkpoint_fn)
             if fp == prev_fp:
                 break
             prev_fp = fp
-        if timings is not None:
-            timings["cc_rounds"] = rounds
-            timings["cc_loop"] = round(_time.monotonic() - _t0, 2)
 
         # Converged state: every edge points directly at its component minimum.
         members = current.select(F.col("src").alias("id"), F.col("dst").alias("component"))

@@ -9,13 +9,19 @@ ward-code mapping when the gazetteer carries one.
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
 
-Each stage optionally lands in a ``StageStore`` snapshot (parquet locally,
-Iceberg table on a real cluster) with lineage records; a rerun resumes from
-the last committed stage.
+With a ``StageStore`` attached, two stages land as snapshots (parquet
+locally, Iceberg table on a real cluster) with lineage records: ``resolved``,
+the Python resolve kernel's output, and ``clustered``, the result. The store
+is bound to a fingerprint of the pages and the gazetteer. A rerun on the same
+input reads committed snapshots back, so a resume re-runs only the JVM-only
+keys/edges/CC; a rerun on another input raises ``ValueError``.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import hashlib
+import json
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -27,12 +33,8 @@ from address_parser_spark.gazetteer.nodes import (
     nodes_to_spark,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
-from address_parser_spark.operators.cluster import cluster_mentions, connected_components
-from address_parser_spark.operators.pairs import (
-    DEFAULT_MAX_BLOCK,
-    equality_edges,
-    with_blocking_keys,
-)
+from address_parser_spark.operators.cluster import cluster_mentions
+from address_parser_spark.operators.pairs import equality_edges, with_blocking_keys
 from address_parser_spark.operators.parse import resolve_mentions
 from address_parser_spark.sources.lineage import StageStore
 
@@ -85,75 +87,71 @@ def attach_new_ward_codes(
     )
 
 
+def fingerprint_input(pages: DataFrame, gaz: Gazetteer) -> str:
+    """sha256 over the gazetteer's record lists (canonical JSON) and the
+    pages' row count and order-insensitive content hash (one JVM aggregate;
+    the hashes are summed as decimals, so the sum cannot overflow)."""
+    row = pages.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*pages.columns).cast("decimal(20,0)")).alias("h"),
+    ).first()
+    payload = json.dumps(dataclasses.asdict(gaz), sort_keys=True) + f"|{row['n']}|{row['h']}"
+    return hashlib.sha256(payload.encode("utf-8")).hexdigest()
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     gaz: Gazetteer,
     store: Optional[StageStore] = None,
-    max_block: int = DEFAULT_MAX_BLOCK,
-    attach_ward_mapping: bool = True,
 ) -> DataFrame:
     """pages → clustered mentions (mid, url, mention, std, parsed components,
     street_address, format, entity_key, cluster_id, new_ward_code/-name)."""
     nodes = build_nodes(gaz)
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
-
-    def stage(name: str, build, partition_by=None, multi_consumer: bool = True) -> DataFrame:
-        """Materialize each multi-consumer stage exactly once: durable
-        snapshot when a store is attached, else in-memory persist —
-        ``resolved`` feeds three downstream branches (keys, anchors, final
-        join) and must not be recomputed per branch. Single-consumer stages
-        stay lazy (every eager action is a serial job that caps scaling
-        efficiency)."""
-        if store is None:
-            if not multi_consumer:
-                return build()
-            # localCheckpoint rather than persist: materializes once AND
-            # truncates the logical plan to an RDD scan. Persisted frames with
-            # UDF-heavy plans make every subsequent query pay driver-side plan
-            # canonicalization against the cache registry (measured ~20 s per
-            # stage once a few big plans were cached).
-            #
-            # eager=True is LOAD-BEARING: AQE materializes query stages as
-            # concurrent futures, and a lazy checkpoint referenced by several
-            # in-flight futures is recomputed by EACH of them (no
-            # synchronization on the first materialization) — measured as the
-            # whole UDF/window chain re-executing up to 4× with run-to-run
-            # AQE-dependent variance. The eager barrier costs one job of
-            # straggler idle time; the duplicate compute costs minutes.
-            return build().localCheckpoint(eager=True)
-        return store.run_stage(name, build, partition_by=partition_by)
+    if store is not None:
+        store.bind_input(fingerprint_input(pages, gaz))
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
     # extract_normalize: pages whose text column is null/empty take a union
     # branch whose fused UDF extracts text from markup first; texted rows
     # never ship html bytes to Python, and each branch plans one
     # ArrowEvalPython.
-    resolved = stage(
-        "resolved",
-        lambda: resolve_mentions(
-            pages, nodes, registries, repair_state=repair_state
-        ),
-    )
-    # keyed is consumed exactly once (by equality_edges), so it needs no
-    # barrier when no durable store is attached — with a store it still
-    # lands as a resumable snapshot stage.
-    keyed = stage("keyed", lambda: with_blocking_keys(resolved), multi_consumer=False)
-    edges = stage(
-        "edges",
-        lambda: equality_edges(keyed, max_block=max_block),
-        multi_consumer=False,
+    build_resolved = lambda: resolve_mentions(pages, nodes, registries, repair_state=repair_state)
+
+    # ``resolved`` feeds three downstream branches (keys, anchors, final
+    # join) and must be materialized exactly once: a durable snapshot when a
+    # store is attached, else an eager localCheckpoint. localCheckpoint
+    # rather than persist: it materializes once AND truncates the logical
+    # plan to an RDD scan. Persisted frames with UDF-heavy plans make every
+    # subsequent query pay driver-side plan canonicalization against the
+    # cache registry (measured ~20 s per stage once a few big plans were
+    # cached).
+    #
+    # eager=True is LOAD-BEARING: AQE materializes query stages as concurrent
+    # futures, and a lazy checkpoint referenced by several in-flight futures
+    # is recomputed by EACH of them (no synchronization on the first
+    # materialization) — measured as the whole UDF/window chain re-executing
+    # up to 4× with run-to-run AQE-dependent variance. The eager barrier
+    # costs one job of straggler idle time; the duplicate compute costs
+    # minutes.
+    resolved = (
+        build_resolved().localCheckpoint(eager=True) if store is None
+        else store.run_stage("resolved", build_resolved)
     )
 
+    # Keys, edges and CC are JVM-only and cheap next to the resolve kernel,
+    # so they stay lazy single-consumer calls and a resume recomputes them.
     def build_clusters() -> DataFrame:
+        edges = equality_edges(with_blocking_keys(resolved))
         checkpoint_fn = None
         if store is not None:
             checkpoint_fn = lambda df, it: store.write(df, f"cc_iter_{it + 1:03d}")
         return cluster_mentions(resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn)
 
-    clustered = stage("clustered", build_clusters, multi_consumer=False)
-    if attach_ward_mapping and gaz.ward_mappings:
+    clustered = build_clusters() if store is None else store.run_stage("clustered", build_clusters)
+    if gaz.ward_mappings:
         clustered = attach_new_ward_codes(
             spark, clustered, nodes_to_spark(spark, nodes), gaz
         )

@@ -233,25 +233,6 @@ def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
         confs["spark.sql.shuffle.partitions"] = str(max(2 * cores, 32))
     else:
         confs["spark.sql.shuffle.partitions"] = "32"
-    # LOCAL masters only: put shuffle/spill files on the RAM-backed tmpfs.
-    # Thread dumps of cold runs showed 30+ executor threads parked in
-    # FileOutputStream.open0 creating shuffle files on the (virtualized)
-    # ext4 root — file CREATION latency, not bandwidth, serialized small
-    # shuffle-heavy chains. A cluster deployment never enters this branch:
-    # its spark.local.dir comes from the site config / spark-submit, and
-    # non-local masters are left untouched. Guarded on FREE SPACE: shuffle
-    # + spill land here exactly when memory is tight, and a tmpfs that
-    # fills mid-run fails the job where the disk default would have crawled
-    # through — so the tmpfs is only used when it has ample headroom, and a
-    # caller conf always wins (setdefault).
-    if cores and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        try:
-            st = os.statvfs("/dev/shm")
-            shm_free_gb = st.f_bavail * st.f_frsize / (1 << 30)
-        except OSError:
-            shm_free_gb = 0.0
-        if shm_free_gb >= 16:
-            confs.setdefault("spark.local.dir", "/dev/shm/spark-local")
     for key, value in _merge_confs(confs, extra_confs).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

@@ -13,7 +13,8 @@ on a real cluster the driver-side package alone is not enough):
 html BINARY, text STRING, lang STRING — BASELINE.json input_hint); the
 output is one row per resolved mention with canonical components, street
 address, old↔new ward codes, and a stable cluster id. ``--store`` turns on
-durable per-stage snapshots + lineage (resume = rerun with the same store).
+durable snapshots of the resolved and clustered stages + lineage (resume =
+rerun on the same input with the same store; another input raises).
 Without ``--gazetteer`` a deterministic synthetic catalog is used (tests /
 smoke runs; no external data).
 
@@ -34,8 +35,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def build_parser() -> argparse.ArgumentParser:
-    from address_parser_spark.operators.pairs import DEFAULT_MAX_BLOCK
-
     p = argparse.ArgumentParser(description="Run the ER pipeline over a pages parquet table.")
     p.add_argument("--pages", required=True, help="input parquet path (pages table)")
     p.add_argument("--output", required=True, help="output parquet path (clustered mentions)")
@@ -45,9 +44,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="reference-shaped JSON gazetteer dir (fuzz/data layout, read via "
                         "sources.readers.gazetteer_from_dir); default: deterministic synthetic catalog")
     p.add_argument("--master", default=None, help="spark master override (else session default)")
-    p.add_argument("--max-block", type=int, default=DEFAULT_MAX_BLOCK, help="pair-stage blocking-bucket cap")
-    p.add_argument("--no-ward-mapping", action="store_true",
-                   help="skip attaching old↔new ward codes to the output")
     p.add_argument("--synth-pages", type=int, default=None,
                    help="smoke mode: first generate N deterministic synthetic pages at --pages")
     return p
@@ -75,10 +71,7 @@ def main(argv: list[str] | None = None) -> None:
     pages = spark.read.parquet(args.pages)
     store = StageStore(spark, args.store) if args.store else None
 
-    clustered = run_pipeline(
-        spark, pages, gaz, store=store, max_block=args.max_block,
-        attach_ward_mapping=not args.no_ward_mapping,
-    )
+    clustered = run_pipeline(spark, pages, gaz, store=store)
     clustered.write.mode("overwrite").parquet(args.output)
 
     result = spark.read.parquet(args.output)

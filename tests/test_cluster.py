@@ -61,18 +61,50 @@ def test_paths_agree_on_random_graph(spark):
     assert fast == slow
 
 
-def test_rounds_bound_on_long_chain(spark):
+def _counting(calls, checkpoint):
+    """A ``checkpoint_fn`` that records each round index it is handed."""
+    def checkpoint_fn(df, it):
+        calls.append(it)
+        return checkpoint(df, it)
+    return checkpoint_fn
+
+
+def test_small_graph_never_checkpoints(spark):
+    """The CC path depends on the observed edge count alone: a small graph
+    takes the driver union-find even when a ``checkpoint_fn`` is given, so a
+    durable run of a small graph writes no per-round snapshots."""
+    rng = random.Random(7)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    calls: list[int] = []
+    ckpt = _counting(calls, lambda d, it: d.localCheckpoint(eager=True))
+    got = {r["id"]: r["component"] for r in connected_components(df, checkpoint_fn=ckpt).collect()}
+    assert calls == []
+    assert got == _cc(spark, edges, None)
+
+
+def test_rounds_bound_on_long_chain(spark, tmp_path):
     """Pins the O(log n) round-count claim (Kiveris et al. §3: alternating
     large-star/small-star at least halves path lengths per round). A path
     graph is the adversarial shape; a 1024-node chain must converge in at
     most 2·log2(n) rounds — and the measured count is asserted, not assumed
-    (cluster.py's round complexity is otherwise only cited)."""
+    (cluster.py's round complexity is otherwise only cited). Rounds are
+    counted by a ``checkpoint_fn`` that is a durable store write, so the
+    round fingerprint is observed on the parquet write job itself."""
     import math
 
+    from address_parser_spark.sources.lineage import StageStore
+
     n = 1024
-    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    timings: dict = {}
-    rows = connected_components(df, small_graph_edges=0, timings=timings).collect()
+    edges = [(i, i + 1) for i in range(n - 1)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    store = StageStore(spark, str(tmp_path))
+    calls: list[int] = []
+    ckpt = _counting(calls, lambda d, it: store.write(d, f"round_{it:03d}"))
+    rows = connected_components(df, checkpoint_fn=ckpt, small_graph_edges=0).collect()
     comp = {r["id"]: r["component"] for r in rows}
     assert all(comp[i] == 0 for i in range(n))
-    assert 1 <= timings["cc_rounds"] <= 2 * int(math.log2(n)), timings
+    assert comp == _cc(spark, edges, None)
+    assert calls == list(range(len(calls)))  # once per round, in order
+    assert 1 <= len(calls) <= 2 * int(math.log2(n)), calls
+    assert [e["stage"] for e in store.lineage()] == [f"round_{it:03d}" for it in calls]

@@ -3,10 +3,13 @@
 1. extraction invariant — byte-identical extracted mention text per url;
 2. blocking recall — every gold pair shares ≥1 blocking key;
 3. pairwise F1 ≥ 0.99 on labeled pairs at shared blocking keys;
-4. resume — stages read back from committed snapshots, identical output.
+4. resume — stages read back from committed snapshots, identical output;
+   another input through the same store raises.
 """
 
+import dataclasses
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,18 +113,45 @@ def test_resume_from_checkpoint(spark, gaz, corpus, tmp_path_factory):
     store = StageStore(spark, base)
     first = run_pipeline(spark, pages_df, gaz, store=store)
     a = first.select("mid", "cluster_id").collect()
+    # only the resolve kernel's output and the result are snapshotted: keys,
+    # edges and the (small-graph, driver-side) CC write nothing
     stages = {e["stage"] for e in store.lineage() if "rows" in e}
-    assert {"resolved", "keyed", "edges", "clustered"} <= stages
+    assert stages == {"resolved", "clustered"}
 
-    # simulate crash after 'edges': final stage lost, earlier stages resume
+    # simulate a crash after 'resolved': final stage lost, resolved resumes
     shutil.rmtree(f"{base}/clustered", ignore_errors=True)
     store2 = StageStore(spark, base)
     second = run_pipeline(spark, pages_df, gaz, store=store2)
     resumed = {e["stage"] for e in store2.lineage() if e.get("resumed")}
-    assert {"resolved", "keyed", "edges"} <= resumed
+    assert resumed == {"resolved"}
     # identical cluster structure, not just row count
     b = second.select("mid", "cluster_id").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_resume_rejects_another_input(spark, gaz, corpus, tmp_path_factory):
+    """A store holds the snapshots of one input: rerunning another corpus or
+    another gazetteer through the same directory raises instead of returning the first
+    corpus's clusters, and a fresh store on the same input still resumes."""
+    pages, _ = corpus
+    first_df = spark.createDataFrame(pages[:80], PAGES_SCHEMA)
+    other_df = spark.createDataFrame(pages[80:160], PAGES_SCHEMA)
+    base = str(tmp_path_factory.mktemp("stale"))
+
+    a = run_pipeline(spark, first_df, gaz, store=StageStore(spark, base))
+    want = sorted(map(tuple, a.select("url", "mention", "cluster_id").collect()))
+    with pytest.raises(ValueError, match="another input") as err:
+        run_pipeline(spark, other_df, gaz, store=StageStore(spark, base))
+    assert base in str(err.value)
+    assert (Path(base) / "_input.sha256").read_text() in str(err.value)
+    other_gaz = dataclasses.replace(gaz, ward_mappings=gaz.ward_mappings[:-1])
+    with pytest.raises(ValueError, match="another input"):
+        run_pipeline(spark, first_df, other_gaz, store=StageStore(spark, base))
+
+    again = StageStore(spark, base)
+    b = run_pipeline(spark, first_df, gaz, store=again)
+    assert {e["stage"] for e in again.lineage() if e.get("resumed")} == {"resolved", "clustered"}
+    assert sorted(map(tuple, b.select("url", "mention", "cluster_id").collect())) == want
 
 
 def test_pipeline_from_html_only_pages(spark, gaz, corpus, clustered):
