@@ -9,9 +9,7 @@ street extraction).
 """
 
 from address_parser_spark.functions.columns import char_ngrams_col
-from address_parser_spark.functions.udfs import normalize_basic_udf
 
 __all__ = [
     "char_ngrams_col",
-    "normalize_basic_udf",
 ]

@@ -4,6 +4,15 @@ Every UDF here is vectorized at the batch level (Arrow exchange, one Python
 call per ~10k rows) and calls the pure ``textops`` core per value. No per-row
 Spark Python UDFs anywhere in the engine (``input_hint`` requirement).
 
+Driver-built state reaches the UDFs one way: ``broadcast_state`` pickles it
+once, checks ``MAX_RESOLVER_STATE_BYTES`` on those bytes, broadcasts them
+under a driver token and decodes them once per token per worker. Two
+payloads use it: the alias registries of the extract UDF
+(``decode_registries``) and the resolve kernel's ``resolver_state``
+(``decode_resolver_state``). ``LocalParser`` runs the same decoders and the
+same per-mention functions (``mention_features``, ``resolve_one``) on the
+driver.
+
 The candidate scorer reproduces the reference's blend
 (inexus_parser.py:2885-2901): ratio / partial_ratio / WRatio composite with
 the partial-usage rule driven by the length ratio and the ngram-mass flag.
@@ -11,51 +20,67 @@ the partial-usage rule driven by the length ratio and the ngram-mass flag.
 
 from __future__ import annotations
 
+import pickle
+import uuid
+
 import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from address_parser_spark.textops.normalize import normalize_basic
+from address_parser_spark.textops.detect import AliasRegistry, detect_by_prefix
+from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
 from address_parser_spark.textops.similarity import indel_ratio, partial_ratio, wratio
 from address_parser_spark.textops.street import extract_street
 
+# Pickled budget for any driver state broadcast to the Python workers. A
+# catalog this large is not a gazetteer the kernel was built for; fail
+# loudly rather than ship it to every executor.
+MAX_RESOLVER_STATE_BYTES = 256 * 1024 * 1024
 
-@pandas_udf(T.StringType())
-def normalize_basic_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: normalize_basic(v) if isinstance(v, str) else "")
+# token → decoded state, per Python worker process. Read only through the
+# module-level ``_decoded``: a global referenced from a nested UDF closure is
+# pickled BY VALUE with the closure, so each task would get its own empty
+# copy; a module-level function is pickled by reference and sees the
+# worker's one dict.
+_WORKER_STATE: dict[str, object] = {}
 
 
-_REGISTRY_CACHE: dict[str, tuple] = {}
+def _decoded(bc, decode):
+    token, blob = bc.value
+    hit = _WORKER_STATE.get(token)
+    if hit is None:
+        if len(_WORKER_STATE) >= 4:
+            _WORKER_STATE.clear()
+        hit = _WORKER_STATE[token] = decode(pickle.loads(blob))
+    return hit
 
 
-def _registry_udf_payload(registries: dict, spark):
-    """(broadcast-or-local payload, getter) for alias-registry UDFs — token-
-    keyed worker cache, same rationale as the resolver cache."""
-    import uuid
+def broadcast_state(spark, payload, decode, what: str):
+    """Ship driver-built ``payload`` to the Python workers; return a getter
+    that yields ``decode(payload)``, decoded once per worker process.
 
-    from address_parser_spark.textops.detect import AliasRegistry
+    The payload is pickled ONCE here; those bytes are both what the budget
+    check measures and what ships. Raises ``ValueError`` naming ``what`` and
+    the size when they exceed ``MAX_RESOLVER_STATE_BYTES``. The worker cache
+    is keyed on a DRIVER-GENERATED token, not id(): a GC'd broadcast value
+    whose address is reused must not alias stale state, and two alternating
+    UDFs in one worker must not thrash a single-entry cache. ``decode`` must
+    be a module-level function (pickled by reference)."""
+    blob = pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)
+    if len(blob) > MAX_RESOLVER_STATE_BYTES:
+        raise ValueError(
+            f"{what} pickles to {len(blob):,} bytes, over the "
+            f"{MAX_RESOLVER_STATE_BYTES:,}-byte broadcast budget"
+        )
+    bc = spark.sparkContext.broadcast((uuid.uuid4().hex, blob))
+    return lambda: _decoded(bc, decode)
 
-    payload = {"token": uuid.uuid4().hex, "regs": registries}
-    bc = spark.sparkContext.broadcast(payload) if spark is not None else None
-    local = payload if bc is None else None
 
-    def _get_regs():
-        raw = bc.value if bc is not None else local
-        key = raw["token"]
-        hit = _REGISTRY_CACHE.get(key)
-        if hit is None:
-            if len(_REGISTRY_CACHE) >= 4:
-                _REGISTRY_CACHE.clear()
-            regs = raw["regs"]
-            hit = (
-                AliasRegistry(regs["province"]),
-                AliasRegistry(regs["district"]),
-                AliasRegistry(regs["ward"]),
-            )
-            _REGISTRY_CACHE[key] = hit
-        return hit
+def decode_registries(registries: dict[str, list[str]]) -> tuple:
+    """``gazetteer.nodes.alias_registries`` → the (province, district, ward)
+    prefix-detection registries."""
+    return tuple(AliasRegistry(registries[level]) for level in ("province", "district", "ward"))
 
-    return _get_regs
 
 _FEATURES_SCHEMA = T.ArrayType(
     T.StructType(
@@ -86,10 +111,23 @@ def partial_flag(std: str) -> bool:
     return bool(top5) and sum(c for _, c in top5) >= 12
 
 
-def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
-                              from_html: bool = False):
+def mention_features(mention: str, regs: tuple, det_cache: dict) -> tuple:
+    """One extracted mention → its ``_FEATURES_SCHEMA`` row: (mention, std,
+    std_basic, det_p, det_d, det_w, partial). ``regs`` is
+    ``decode_registries``' output; ``det_cache`` memoizes prefix detection
+    per basic string. Shared by the extract UDF and ``LocalParser``."""
+    std = normalize_advanced(mention)
+    basic = normalize_basic(mention)
+    det = det_cache.get(basic)
+    if det is None:
+        det = det_cache[basic] = detect_by_prefix(basic, *regs)
+    return (mention, std, basic) + det + (partial_flag(std),)
+
+
+def make_extract_features_udf(get_regs, from_html: bool = False):
     """FUSED extraction + normalization (advanced & basic) + prefix detection
-    in a single Arrow node.
+    in a single Arrow node; ``get_regs`` is the ``broadcast_state`` getter of
+    the registries.
 
     Chaining these as four separate pandas UDFs plants four ArrowEvalPython
     operators in ONE stage — every task then runs four python workers
@@ -103,16 +141,12 @@ def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
     chaining a separate html UDF in front re-created the two-workers-per-
     task-slot shape this fusion exists to avoid.
     """
-    from address_parser_spark.textops.detect import detect_by_prefix
     from address_parser_spark.textops.extract import extract_mentions
     from address_parser_spark.textops.html import html_to_text
-    from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
-
-    _get_regs = _registry_udf_payload(registries, spark)
 
     @pandas_udf(_FEATURES_SCHEMA)
     def extract_features_udf(text: pd.Series) -> pd.Series:
-        reg_p, reg_d, reg_w = _get_regs()
+        regs = get_regs()
         det_cache: dict[str, tuple] = {}
 
         def run(t):
@@ -120,18 +154,8 @@ def make_extract_features_udf(registries: dict[str, list[str]], spark=None,
                 t = html_to_text(t)
             if not isinstance(t, str) or not t:
                 return []
-            out = []
-            for mention in extract_mentions(t):
-                std = normalize_advanced(mention)
-                if len(std) < 2:
-                    continue
-                basic = normalize_basic(mention)
-                det = det_cache.get(basic)
-                if det is None:
-                    det = detect_by_prefix(basic, reg_p, reg_d, reg_w)
-                    det_cache[basic] = det
-                out.append((mention, std, basic) + det + (partial_flag(std),))
-            return out
+            rows = (mention_features(m, regs, det_cache) for m in extract_mentions(t))
+            return [row for row in rows if len(row[1]) >= 2]
 
         return text.map(run)
 
@@ -242,8 +266,6 @@ def _street_and_entity(original: str, std: str, province, district, ward,
     New-format entities (``is_new``) exclude the district from entity_std:
     it is a display-only inference from the ward's old-catalog twin and
     varies with the mention text (street extraction still uses it)."""
-    from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
-
     street = extract_street(original, province, district, ward)
     entity_district = None if is_new is True else district
     parts = [normalize_basic(x) for x in (ward, entity_district, province) if x]
@@ -273,7 +295,7 @@ def _street_and_entity(original: str, std: str, province, district, ward,
 # for 36k distinct mentions — ~90% of them 1-shared-gram noise the Dice gate
 # kills); probing the broadcast index map-side keeps the resolve stage
 # embarrassingly parallel — exactly SURVEY §3.2's shape for the reference's
-# bulk pipeline. ``make_resolve_udf`` refuses a state over
+# bulk pipeline. ``broadcast_state`` refuses a state over
 # ``MAX_RESOLVER_STATE_BYTES`` instead of shipping it.
 # ---------------------------------------------------------------------------
 
@@ -297,35 +319,23 @@ RESOLVE_SCHEMA = T.StructType(
     ]
 )
 
-_RESOLVER_CACHE: dict[str, tuple] = {}
 _SCORE_MEMO_CAP = 2_000_000
 
 
 def build_resolver_state(nodes: list[dict]) -> dict:
-    """Driver-side: nodes → compact picklable resolve state: inverted gram
-    postings over the alias-union gram set (reference ``invert_ngrams_idx``),
-    per-node gram-set sizes (the reference's Dice denominator is the FULL
-    ``ngram_list``, inexus_parser.py:2824), per-node attribute tuples, and
-    the per-level alias→node invert maps used for detected-value validation
-    and the candidate-prioritization prefilter (:2836-2850)."""
-    from address_parser_spark.gazetteer.nodes import _augment_aliases
-    from address_parser_spark.textops.normalize import normalize_basic
-
+    """Driver-side: nodes → the resolve index: inverted gram postings over
+    the alias-union gram set (reference ``invert_ngrams_idx``), per-node
+    gram-set sizes (the reference's Dice denominator is the FULL
+    ``ngram_list``, inexus_parser.py:2824), and per-node attribute tuples.
+    The alias→node invert maps used for detected-value validation and the
+    candidate-prioritization prefilter (:2836-2850) are built once, by
+    ``gazetteer.nodes.build_repair_state``."""
     from address_parser_spark.textops.ngrams import char_ngram_set
 
     idx_all: dict[str, list[int]] = {}
     idx_primary: dict[str, list[int]] = {}
     n_primary: list[int] = []
     attrs: list[tuple] = []
-    inv: dict[str, dict[str, list[int]]] = {"province": {}, "district": {}, "ward": {}}
-
-    def register(level: str, aliases: list[str], node_id: int) -> None:
-        for alias in aliases:
-            std = normalize_basic(alias)
-            if std:
-                postings = inv[level].setdefault(std, [])
-                if not postings or postings[-1] != node_id:
-                    postings.append(node_id)
 
     for n in nodes:
         nid = n["node_id"]
@@ -336,15 +346,6 @@ def build_resolver_state(nodes: list[dict]) -> dict:
             idx_all.setdefault(g, []).append(nid)
             if g in primary:
                 idx_primary.setdefault(g, []).append(nid)
-        if n["province"]:
-            register("province",
-                     n.get("p_aliases") or _augment_aliases(n["province"], "province"), nid)
-        if n["district"]:
-            register("district",
-                     n.get("d_aliases") or _augment_aliases(n["district"], "district"), nid)
-        if n["ward"]:
-            register("ward",
-                     n.get("w_aliases") or _augment_aliases(n["ward"], "ward"), nid)
         attrs.append(
             (
                 n["level"], n["is_new"], n["province"], n["district"], n["ward"],
@@ -352,21 +353,25 @@ def build_resolver_state(nodes: list[dict]) -> dict:
                 n["p_std"], n["d_std"], n["w_std"], n["std_name"],
             )
         )
-    for level in inv:
-        for postings in inv[level].values():
-            postings.sort()
     return {"idx_all": idx_all, "idx_primary": idx_primary,
-            "n_primary": n_primary, "attrs": attrs, "inv": inv}
+            "n_primary": n_primary, "attrs": attrs}
 
 
-# Pickled (resolve state + repair state) budget for the broadcast. A catalog
-# this large is not a gazetteer the kernel was built for; fail loudly rather
-# than ship it to every executor.
-MAX_RESOLVER_STATE_BYTES = 256 * 1024 * 1024
+def resolver_state(nodes: list[dict], repair_state: dict) -> dict:
+    """The resolve kernel's broadcast payload: the resolve index
+    (``build_resolver_state``) and the repair state
+    (``gazetteer.nodes.build_repair_state``), each structure once."""
+    return {**build_resolver_state(nodes), **repair_state}
 
 
-def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
-    """Fused resolve kernel over the broadcast gazetteer state.
+def decode_resolver_state(state: dict) -> dict:
+    """Executor-side view of ``resolver_state``: the state plus this
+    worker's score and boost memos. ``LocalParser`` decodes the same way."""
+    return {**state, "score_memo": {}, "boost_memo": {}}
+
+
+def make_resolve_udf(spark, state: dict):
+    """Fused resolve kernel over the broadcast ``resolver_state``.
 
     Per distinct mention (reference ``process()``, minus prefix detection
     which rides in on the extract stage): counter probe of the inverted index
@@ -375,59 +380,26 @@ def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
     reference-style at extract time — within-input gram multiplicity,
     :148-154), ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE``
     score slice (:2878), blend + boosts (:2885-2912), lexicographic argmax
-    (:2926-2940), the component-repair cascade (:186-403, textops.repair —
-    when ``repair_state`` is provided), then street extraction on the
-    repaired components. Scores are memoized per worker process across
-    batches keyed on (std, cand_std, flag) — duplicate address strings across
-    the corpus pay once per worker.
+    (:2926-2940), the component-repair cascade (:186-403, textops.repair),
+    then street extraction on the repaired components. Scores are memoized
+    per worker process across batches keyed on (std, cand_std, flag) —
+    duplicate address strings across the corpus pay once per worker.
 
-    The state is pickled ONCE here; those bytes are both what the budget
-    check measures and what ships. Raises ``ValueError`` naming the size and
-    the node count when they exceed ``MAX_RESOLVER_STATE_BYTES``."""
-    import pickle
-    import uuid
-
-    blob = pickle.dumps({"resolve": state, "repair": repair_state},
-                        protocol=pickle.HIGHEST_PROTOCOL)
-    if len(blob) > MAX_RESOLVER_STATE_BYTES:
-        raise ValueError(
-            f"resolver state for {len(state['attrs']):,} gazetteer nodes pickles "
-            f"to {len(blob):,} bytes, over the {MAX_RESOLVER_STATE_BYTES:,}-byte "
-            "broadcast budget"
-        )
-    # Cache key is a DRIVER-GENERATED token, not id(): a GC'd broadcast value
-    # whose address is reused must not alias a stale resolver, and two
-    # alternating resolver UDFs in one worker must not thrash a single-entry
-    # cache.
-    payload = (uuid.uuid4().hex, blob)
-    bc = spark.sparkContext.broadcast(payload) if spark is not None else None
-    local = payload if bc is None else None  # never in the UDF closure when broadcast
-
-    def _get_state():
-        token, raw_blob = bc.value if bc is not None else local
-        hit = _RESOLVER_CACHE.get(token)
-        if hit is None:
-            if len(_RESOLVER_CACHE) >= 4:
-                _RESOLVER_CACHE.clear()
-            raw = pickle.loads(raw_blob)
-            r = raw["resolve"]
-            hit = (r["idx_all"], r["idx_primary"], r["n_primary"], r["attrs"], r["inv"],
-                   raw["repair"], {}, {})
-            _RESOLVER_CACHE[token] = hit
-        return hit
+    Raises ``ValueError`` (from ``broadcast_state``) naming the pickled size
+    and the node count when the state exceeds ``MAX_RESOLVER_STATE_BYTES``."""
+    get_state = broadcast_state(
+        spark, state, decode_resolver_state,
+        f"resolver state for {len(state['attrs']):,} gazetteer nodes",
+    )
 
     @pandas_udf(RESOLVE_SCHEMA)
     def resolve_udf(
         mention: pd.Series, std: pd.Series, std_basic: pd.Series, grams: pd.Series,
         det_p: pd.Series, det_d: pd.Series, det_w: pd.Series, partial: pd.Series,
     ) -> pd.DataFrame:
-        idx_all, idx_primary, n_primary, attrs, inv, rep_st, score_memo, boost_memo = _get_state()
+        st = get_state()
         rows = [
-            resolve_one(
-                idx_all, idx_primary, n_primary, attrs, inv, rep_st,
-                score_memo, boost_memo,
-                m, s, sb, gs, dp, dd, dw, bool(pf),
-            )
+            resolve_one(st, m, s, sb, gs, dp, dd, dw, bool(pf))
             for m, s, sb, gs, dp, dd, dw, pf in zip(
                 mention, std, std_basic, grams, det_p, det_d, det_w, partial
             )
@@ -440,7 +412,7 @@ def make_resolve_udf(state: dict, spark=None, repair_state: dict | None = None):
 _NONE_ROW = (None,) * 15
 
 
-def _infer_format(rep_st: dict, district, w_code, p_code):
+def _infer_format(st: dict, district, w_code, p_code):
     """Format tag for a repair-only resolution (no winner node): derived from
     the code system so the entity_key matches sibling mentions that resolved a
     node. 3-level (district present) → old; ward code → catalog membership;
@@ -448,9 +420,9 @@ def _infer_format(rep_st: dict, district, w_code, p_code):
     if district:
         return False
     if w_code:
-        return w_code in rep_st.get("new_ward_codes", ())
+        return w_code in st["new_ward_codes"]
     if p_code:
-        return p_code in rep_st.get("new_province_codes", ())
+        return p_code in st["new_province_codes"]
     return None
 
 
@@ -461,14 +433,12 @@ SCORE_SLICE = 120      # candidates scored after prioritization (:2878)
 EARLY_BREAK = 200      # scan stops at the first gate failure past here (:2829-2831)
 
 
-def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
-                score_memo, boost_memo,
-                m, s, sb, gs, dp, dd, dw, partial_input: bool = False) -> tuple:
+def resolve_one(st: dict, m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tuple:
     """One mention through probe → cap → gate → prioritize → score → argmax →
-    repair → street. Pure function shared by the Arrow kernel and
-    ``LocalParser`` (plans.local_parser); returns a RESOLVE_SCHEMA-shaped
-    tuple. Mirrors the reference ``address_candidate_list``
-    (inexus_parser.py:2796-2941): duplicate-counting candidate ranking, early
+    repair → street. ``st`` is ``decode_resolver_state``'s view. Pure
+    function shared by the Arrow kernel and ``LocalParser``
+    (plans.local_parser); returns a RESOLVE_SCHEMA-shaped tuple. Mirrors the
+    reference ``address_candidate_list`` (inexus_parser.py:2796-2941): duplicate-counting candidate ranking, early
     break at the first failing candidate past ``EARLY_BREAK``, detected-component
     prefilter reordering before the ``SCORE_SLICE`` score slice. DELIBERATE
     DEVIATION: the Dice gate runs over PRIMARY-form grams (std_name) rather
@@ -483,6 +453,9 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
 
     if not isinstance(s, str) or gs is None or not len(gs):
         return _NONE_ROW
+    idx_all, idx_primary, n_primary, attrs, inv = (
+        st["idx_all"], st["idx_primary"], st["n_primary"], st["attrs"], st["inv"])
+    score_memo, boost_memo = st["score_memo"], st["boost_memo"]
     # detected values must exist as alias keys at their level (reference
     # _validate_detected_value, :1900-1905)
     dp = dp if dp and dp in inv["province"] else None
@@ -580,24 +553,18 @@ def resolve_one(idx_all, idx_primary, n_primary, attrs, inv, rep_st,
             best_key = key
             best = (nid, level, is_new, province, district, ward,
                     p_code, d_code, w_code, cand_std, final, combined, dice)
-    if best is None:
-        if rep_st is None:
-            return _NONE_ROW
-        best = (None,) * 13
-
     nid, level, is_new, province, district, ward, p_code, d_code, w_code, \
-        cand_std, final, combined, dice = best
-    if rep_st is not None:
-        province, district, ward, p_code, d_code, w_code = repair_components(
-            rep_st, province or "", district or "", ward or "",
-            dp, dd, dw, sb if isinstance(sb, str) else "",
-            p_code, d_code, w_code, is_new=is_new,
-        )
-        province, district, ward = province or None, district or None, ward or None
-        if nid is None and not (province or district or ward):
-            return _NONE_ROW
-        if nid is None:
-            is_new = _infer_format(rep_st, district, w_code, p_code)
+        cand_std, final, combined, dice = best or (None,) * 13
+    province, district, ward, p_code, d_code, w_code = repair_components(
+        st, province or "", district or "", ward or "",
+        dp, dd, dw, sb if isinstance(sb, str) else "",
+        p_code, d_code, w_code, is_new=is_new,
+    )
+    province, district, ward = province or None, district or None, ward or None
+    if nid is None and not (province or district or ward):
+        return _NONE_ROW
+    if nid is None:
+        is_new = _infer_format(st, district, w_code, p_code)
     street, entity_std = _street_and_entity(
         m if isinstance(m, str) else "", s, province, district, ward, is_new
     )

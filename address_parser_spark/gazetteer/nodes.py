@@ -18,8 +18,14 @@ carries
 The build is driver-side pure Python: the catalog is a broadcast-sized
 dimension (≈38.7k nodes for the full national data), so distributing its
 construction would only add a shuffle for nothing. At web scale the OUTPUT is
-what matters, and it ships to executors as the resolve kernel's broadcast
-state (``functions.udfs.build_resolver_state``).
+what matters, and it reaches executors in exactly two shapes:
+
+- the resolve kernel's broadcast state, built once per structure: the gram
+  index and node attributes by ``functions.udfs.build_resolver_state``, the
+  per-level alias→node invert maps and code lookups by
+  ``build_repair_state`` (``functions.udfs.resolver_state`` joins them);
+- ``nodes_to_spark``, an Arrow-backed local frame (``session.local_frame``)
+  for the relational ward mapping.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from address_parser_spark.gazetteer.synth import Gazetteer
+from address_parser_spark.session import local_frame
 from address_parser_spark.textops.ngrams import char_ngrams
 from address_parser_spark.textops.normalize import normalize_basic
 
@@ -198,22 +205,15 @@ def build_nodes(gaz: Gazetteer) -> list[dict]:
 
 
 def nodes_to_spark(spark: SparkSession, nodes: Iterable[dict]) -> DataFrame:
-    """Materialize nodes as a DataFrame with the explicit NODE_SCHEMA."""
-    rows = [
-        (
-            n["node_id"], n["level"], n["is_new"], n["province"], n["district"],
-            n["ward"], n["province_code"], n["district_code"], n["ward_code"],
-            n["p_std"], n["d_std"], n["w_std"], n["std_name"], n["ngrams"],
-        )
-        for n in nodes
-    ]
-    return spark.createDataFrame(rows, NODE_SCHEMA)
+    """Materialize nodes as an Arrow-backed local DataFrame with NODE_SCHEMA."""
+    names = NODE_SCHEMA.fieldNames()
+    return local_frame(spark, ([n[f] for f in names] for n in nodes), NODE_SCHEMA)
 
 
 def alias_registries(gaz: Gazetteer) -> dict[str, list[str]]:
     """Standardized alias registries per level for prefix detection
-    (reference ``province_names_std`` / ``district_names_std`` /
-    ``ward_names_std``, inexus_parser.py:99-102). Sorted for determinism."""
+    (the reference's per-level standardized name lists,
+    inexus_parser.py:99-102). Sorted for determinism."""
     provinces: set[str] = set()
     districts: set[str] = set()
     wards: set[str] = set()
@@ -244,17 +244,20 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
 
     - per-level alias→node-id invert maps over the AUGMENTED alias sets
       (reference ``_register_node_aliases`` + ``_augment_aliases``,
-      inexus_parser.py:1834-1898) with deterministic (sorted) posting order;
-    - per-node (province, district, ward) display names;
+      inexus_parser.py:1834-1898) with deterministic (sorted) posting order —
+      the only place they are built; the resolve kernel validates detected
+      values and prioritizes candidates against the same maps;
     - the lookup dicts behind ``_lookup_*_info`` (:2034-2116), built from the
       catalog records in list order (old format first, new-format wards under
       the empty-district sentinel, mirroring ``_normalize_address_dataset``'s
       "" bucket, :1291-1303).
+
+    Per-node display names are not shipped here: the cascade reads them
+    from the resolver state's node attributes.
     """
     from address_parser_spark.textops.normalize import normalize_basic
 
     inv: dict[str, dict[str, list[int]]] = {"province": {}, "district": {}, "ward": {}}
-    node_names: list[tuple] = []
 
     def register(level: str, aliases: list[str], node_id: int) -> None:
         for alias in aliases:
@@ -264,21 +267,16 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
                 if not postings or postings[-1] != node_id:
                     postings.append(node_id)
 
-    for n in nodes:
-        assert n["node_id"] == len(node_names)
-        node_names.append((n["province"], n["district"], n["ward"]))
+    for i, n in enumerate(nodes):
+        assert n["node_id"] == i, "node_id must be dense and ordered"
         if n["province"]:
             register("province",
-                     n.get("p_aliases") or _augment_aliases(n["province"], "province"),
-                     n["node_id"])
+                     n.get("p_aliases") or _augment_aliases(n["province"], "province"), i)
         if n["district"]:
             register("district",
-                     n.get("d_aliases") or _augment_aliases(n["district"], "district"),
-                     n["node_id"])
+                     n.get("d_aliases") or _augment_aliases(n["district"], "district"), i)
         if n["ward"]:
-            register("ward",
-                     n.get("w_aliases") or _augment_aliases(n["ward"], "ward"),
-                     n["node_id"])
+            register("ward", n.get("w_aliases") or _augment_aliases(n["ward"], "ward"), i)
     for level in inv:
         for postings in inv[level].values():
             postings.sort()
@@ -347,8 +345,6 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
 
     return {
         "inv": inv,
-        "node_names": node_names,
-        "province_names_std": sorted(inv["province"].keys()),
         "province_lookup": province_lookup,
         "district_lookup": district_lookup,
         "district_by_name": district_by_name,

@@ -9,13 +9,16 @@ MapReduce and Beyond" (SOCC'14) — a public algorithm, O(log² n) rounds,
 expressed here purely as DataFrame self-joins + hash aggregations.
 
 Graphs of at most ``SMALL_GRAPH_EDGES`` canonical edges take a driver
-union-find instead; the path is chosen from the observed edge count alone.
-Each round of the loop is checkpointed (``localCheckpoint`` by default, or a
-parquet round-trip via the provided ``checkpoint_fn``) to truncate lineage —
-without it the plan doubles every iteration and Catalyst analysis dominates
-runtime. Convergence is detected by comparing an order-insensitive
+union-find instead; the path is chosen from the observed edge count alone,
+and the union-find's assignments come back as an Arrow-backed local frame
+(``session.local_frame``). Each round of the loop is checkpointed
+(``localCheckpoint`` by default, or a parquet round-trip via the provided
+``checkpoint_fn``) to truncate lineage — without it the plan doubles every
+iteration and Catalyst analysis dominates runtime. Convergence is detected by comparing an order-insensitive
 fingerprint (count + bit_xor of per-edge hashes), read with ``observe`` from
-the checkpoint's own job instead of a full ``exceptAll``.
+the checkpoint's own job instead of a full ``exceptAll``; a loop with no
+fixpoint after ``MAX_ITERATIONS`` rounds raises. The loop sets no session
+conf: AQE's coalescing sizes its shrinking shuffles.
 """
 
 from __future__ import annotations
@@ -23,6 +26,9 @@ from __future__ import annotations
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import types as T
+
+from address_parser_spark.session import local_frame
 
 MAX_ITERATIONS = 30
 
@@ -33,6 +39,10 @@ MAX_ITERATIONS = 30
 # id), so the switch is invisible to callers; big graphs never take this
 # path.
 SMALL_GRAPH_EDGES = 100_000
+
+_ASSIGNMENT_SCHEMA = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("component", T.LongType())]
+)
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -107,18 +117,9 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     for x in list(parent):
         r = find(x)
         comp_min[r] = min(comp_min.get(r, x), x)
-    out = [(x, comp_min[find(x)]) for x in parent]
-    # Arrow-backed local frame: a plain list-of-tuples createDataFrame plans
-    # a pickled Python RDD, so every downstream action (even a noop write of
-    # a few hundred rows) pays defaultParallelism Python-worker round-trips
-    # (measured 0.4–1.4 s per action at local[32]). The pandas+Arrow path
-    # hands the JVM Arrow batches; execution stays JVM-only.
-    import pandas as pd
-
-    if not out:
-        return spark.createDataFrame([], "id long, component long")
-    pdf = pd.DataFrame(out, columns=["id", "component"]).astype("int64")
-    return spark.createDataFrame(pdf, schema="id long, component long")
+    return local_frame(
+        spark, [(x, comp_min[find(x)]) for x in parent], _ASSIGNMENT_SCHEMA
+    )
 
 
 def connected_components(
@@ -140,49 +141,31 @@ def connected_components(
     never on the driver path. It must materialize its input before returning:
     the round's fingerprint is observed on the job that materializes it.
 
-    The loop sizes its OWN shuffle partitioning from the measured edge count
-    (~250k edges per partition, floor 8, never above the session setting):
-    an iterative algorithm over a shrinking edge set re-pays per-task
-    scheduling overhead on EVERY shuffle of EVERY round, so session-level
-    partition counts tuned for the big one-pass stages make the loop
-    overhead-bound (measured 67s → 12s on a 113k-edge graph at local[32]).
-    The session conf is restored on exit.
+    The loop's shuffles take the session's partitioning and AQE's
+    coalescing; it sets no session conf. A loop that reaches
+    ``MAX_ITERATIONS`` rounds without a fingerprint fixpoint raises
+    ``RuntimeError`` rather than return a partial partition.
     """
-    spark = edges.sparkSession
-    orig_parts = spark.conf.get("spark.sql.shuffle.partitions")
     current, prev_fp = _checkpoint(_canon(edges), -1, None)
-    if prev_fp[0] <= small_graph_edges:
+    n_edges = prev_fp[0]
+    if n_edges <= small_graph_edges:
         return _driver_union_find(current)
-    try:
-        # Partition sizing is per-ROUND, not per-loop: the edge set shrinks
-        # geometrically, so late rounds on the initial count's partitioning
-        # are pure task-scheduling latency (the serial term that capped the
-        # 4→16-core campaign at 4M edges). Two rules, both measured:
-        # ~250k edges/partition for size, rounded UP to a full wave of
-        # defaultParallelism so no shuffle runs a 1.5-wave straggler tail.
-        dp = max(1, spark.sparkContext.defaultParallelism)
+    for it in range(MAX_ITERATIONS):
+        stepped = _small_star(_large_star(current))
+        current, fp = _checkpoint(_canon(stepped), it, checkpoint_fn)
+        if fp == prev_fp:
+            break
+        prev_fp = fp
+    else:
+        raise RuntimeError(
+            f"connected components did not converge: {MAX_ITERATIONS} rounds over "
+            f"{n_edges:,} canonical edges reached no fixpoint"
+        )
 
-        def _size_loop_parts(n_edges: int) -> int:
-            by_size = max(8, n_edges // 250_000 + 8)
-            waved = ((by_size + dp - 1) // dp) * dp
-            return min(int(orig_parts), waved) if int(orig_parts) >= 8 else waved
-
-        for it in range(MAX_ITERATIONS):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(_size_loop_parts(prev_fp[0]))
-            )
-            stepped = _small_star(_large_star(current))
-            current, fp = _checkpoint(_canon(stepped), it, checkpoint_fn)
-            if fp == prev_fp:
-                break
-            prev_fp = fp
-
-        # Converged state: every edge points directly at its component minimum.
-        members = current.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-        roots = current.select(F.col("dst").alias("id"), F.col("dst").alias("component"))
-        return members.unionAll(roots).groupBy("id").agg(F.min("component").alias("component"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", orig_parts)
+    # Converged state: every edge points directly at its component minimum.
+    members = current.select(F.col("src").alias("id"), F.col("dst").alias("component"))
+    roots = current.select(F.col("dst").alias("id"), F.col("dst").alias("component"))
+    return members.unionAll(roots).groupBy("id").agg(F.min("component").alias("component"))
 
 
 def cluster_mentions(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from address_parser_spark.operators.partitioning import fan_out
+from address_parser_spark.operators.similarity_search import _as_double, _dot, _norm, sign_bucket_col
 from address_parser_spark.operators.textquality import _md5_60, tokens_col
 
 MINHASH_P = 2147483647  # Mersenne 2^31-1: a·h+b < 2^63 under ANSI arithmetic
@@ -454,20 +455,19 @@ def embedding_near_dups(embeddings: DataFrame, threshold: float = 0.95,
     the first ``bucket_dims`` dimensions (deterministic axis projections).
     Exact within buckets; candidates across buckets are sacrificed — the
     recall/cost dial is ``bucket_dims`` (0 = brute force)."""
-    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    bucket = F.concat_ws(
-        "", *[F.when(vec[i] >= 0, F.lit("1")).otherwise(F.lit("0")) for i in range(bucket_dims)]
-    )
-    norm = F.sqrt(F.aggregate(F.transform(F.col("v"), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+    v = F.col("v")
     # per-vector norm computed ONCE scan-side, not once per candidate pair
-    e = fan_out(embeddings).select("vec_id", vec.alias("v"), bucket.alias("bucket")).withColumn("nrm", norm)
+    e = (
+        fan_out(embeddings).select("vec_id", _as_double(F.col("embedding")).alias("v"))
+        .withColumn("bucket", sign_bucket_col(v, bucket_dims))
+        .withColumn("nrm", _norm(v))
+    )
     a = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"), "bucket")
     b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"), "bucket")
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     return (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
+        .withColumn("cosine", F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

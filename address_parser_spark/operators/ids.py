@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from address_parser_spark.gazetteer.synth import Gazetteer
+from address_parser_spark.session import local_frame
 
 _DIM_SCHEMA = T.StructType(
     [
@@ -28,7 +29,7 @@ _DIM_SCHEMA = T.StructType(
 
 def _dim(spark: SparkSession, records: list[dict], prefix: str) -> DataFrame:
     rows = [(str(r.get("code")), r.get("name"), r.get("full_name")) for r in records]
-    df = spark.createDataFrame(rows, _DIM_SCHEMA)
+    df = local_frame(spark, rows, _DIM_SCHEMA)
     return F.broadcast(
         df.select(
             F.col("code").alias(f"{prefix}_code_key"),

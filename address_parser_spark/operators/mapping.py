@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from address_parser_spark.session import local_frame
+
 MAPPING_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
@@ -31,8 +33,9 @@ MAPPING_SCHEMA = T.StructType(
 
 
 def mappings_to_spark(spark, ward_mappings: list[dict]) -> DataFrame:
-    rows = [tuple(m.get(f.name) for f in MAPPING_SCHEMA.fields) for m in ward_mappings]
-    return spark.createDataFrame(rows, MAPPING_SCHEMA)
+    """The catalog's ward mappings as an Arrow-backed local frame."""
+    names = MAPPING_SCHEMA.fieldNames()
+    return local_frame(spark, ([m.get(f) for f in names] for m in ward_mappings), MAPPING_SCHEMA)
 
 
 def map_old_to_new(

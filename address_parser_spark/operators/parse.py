@@ -28,19 +28,22 @@ from pyspark.sql import DataFrame, Observation, functions as F
 
 from address_parser_spark.functions.columns import char_ngrams_col
 from address_parser_spark.functions.udfs import (
-    build_resolver_state,
+    broadcast_state,
+    decode_registries,
     make_extract_features_udf,
     make_resolve_udf,
+    resolver_state,
 )
 
 
-def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None = None,
-                      lang: str = "vi", carry_cols: list[str] | None = None,
-                      html_col: str = "html") -> DataFrame:
+def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
+                      carry_cols: list[str] | None = None) -> DataFrame:
     """pages → one row per extracted mention: normalized forms, shingles,
     detected components, compact key. Narrow — no shuffle; the scan reads only
-    (url, text, lang) plus any ``carry_cols`` (e.g. the event-time column for
-    the streaming path).
+    the Vietnamese pages' (url, text) plus any ``carry_cols`` (e.g. the
+    event-time column for the streaming path). ``registries``
+    (``gazetteer.nodes.alias_registries``) are broadcast once per call and
+    shared by both branches below.
 
     When the frame carries an ``html`` column, pages whose ``text`` is
     null/empty take a branch whose fused UDF FIRST extracts text from the
@@ -53,21 +56,21 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
     UDF in one stage, i.e. two concurrent Python workers per task slot on the
     miss branch (and ~0.8 s of pure overhead at the 1200-page bench even when
     the miss branch was empty)."""
-    regs = registries or {"province": [], "district": [], "ward": []}
-    features = make_extract_features_udf(regs, spark=pages.sparkSession)
-    base = pages.filter(F.col("lang") == lang)
+    get_regs = broadcast_state(
+        pages.sparkSession, registries, decode_registries, "alias registries"
+    )
+    features = make_extract_features_udf(get_regs)
+    base = pages.filter(F.col("lang") == "vi")
     carry = list(carry_cols or [])
-    if html_col in pages.columns:
-        features_html = make_extract_features_udf(
-            regs, spark=pages.sparkSession, from_html=True
-        )
+    if "html" in pages.columns:
+        features_html = make_extract_features_udf(get_regs, from_html=True)
         need = F.col("text").isNull() | (F.col("text") == "")
         exploded = (
             base.filter(~need)
             .select("url", *carry, F.explode(features(F.col("text"))).alias("f"))
             .unionByName(
                 base.filter(need)
-                .select("url", *carry, F.explode(features_html(F.col(html_col))).alias("f"))
+                .select("url", *carry, F.explode(features_html(F.col("html"))).alias("f"))
             )
         )
     else:
@@ -78,7 +81,7 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]] | None 
         exploded
         .select(
             "url",
-            *(carry_cols or []),
+            *carry,
             F.col("f.mention").alias("mention"),
             F.col("f.std").alias("std"),
             F.col("f.std_basic").alias("std_basic"),
@@ -129,8 +132,8 @@ def _with_format_and_key(winners: DataFrame) -> DataFrame:
 def resolve_mentions(
     pages: DataFrame,
     nodes: list[dict],
-    registries: dict[str, list[str]] | None = None,
-    repair_state: dict | None = None,
+    registries: dict[str, list[str]],
+    repair_state: dict,
 ) -> DataFrame:
     """Full extract → dedup → resolve (probe/gate/score/argmax/repair/street)
     pipeline; winners joined back onto the (url, mention) fact rows.
@@ -142,14 +145,15 @@ def resolve_mentions(
     (boilerplate footers, mirrored listings); the back-join keys on the raw
     string (collision-proof).
 
-    **One resolve path.** ``nodes`` (``gazetteer.nodes.build_nodes``) become
-    a BROADCAST DIMENSION: their resolver state pickles to about 0.19 MB per
-    1k nodes (~7 MB for a national catalog), and ``make_resolve_udf``
-    refuses a state over its byte budget rather than shipping it. One fused
-    Arrow kernel per distinct mention probes it map-side, so no catalog row
-    is ever shuffled — the only exchanges before the fact join move
-    distinct mentions (the dedup and the ``std`` co-location), the shape
-    SURVEY §3.2 calls "embarrassingly parallel". ``LocalParser`` runs the same
+    **One resolve path.** ``nodes`` (``gazetteer.nodes.build_nodes``) and
+    ``repair_state`` (``gazetteer.nodes.build_repair_state``) become a
+    BROADCAST DIMENSION: their ``resolver_state`` pickles to about 0.24 MB
+    per 1k nodes (261 KB for the 1,073-node synthetic gazetteer), and
+    ``broadcast_state`` refuses a state over its byte budget rather than
+    shipping it. One fused Arrow kernel per distinct mention probes it
+    map-side, so no catalog row is ever shuffled — the only exchanges before
+    the fact join move distinct mentions (the dedup and the ``std``
+    co-location), the shape SURVEY §3.2 calls "embarrassingly parallel". ``LocalParser`` runs the same
     ``resolve_one`` per string and is the reference the ER fixture pins.
 
     ``mentions`` feeds both the distinct projection and the final fact join —
@@ -174,9 +178,7 @@ def resolve_mentions(
         "mention", "std", "std_basic", "det", "grams", "partial_flag"
     )
 
-    resolve = make_resolve_udf(
-        build_resolver_state(nodes), spark=spark, repair_state=repair_state
-    )
+    resolve = make_resolve_udf(spark, resolver_state(nodes, repair_state))
     winners = (
         uniq
         # Distinct mentions sharing a normalized std (street-level

@@ -1,8 +1,9 @@
 """Single-string parser facade — the reference ``AddressParser.process``
 API surface (fuzz/inexus_parser.py:133-466), backed by the exact same pure
-functions the distributed kernel runs (functions.udfs.resolve_one):
-normalize → detect → probe → cap → Dice gate → score → argmax → repair
-cascade → street extraction.
+functions and state decoders the distributed kernel runs
+(``functions.udfs.mention_features`` → ``resolve_one`` over
+``decode_resolver_state(resolver_state(...))``): normalize → detect → probe →
+cap → Dice gate → score → argmax → repair cascade → street extraction.
 
 Useful for (a) the golden-450 parity tests against the reference's own test
 set, (b) driver-side spot checks, (c) parity-by-construction between the
@@ -13,53 +14,35 @@ from __future__ import annotations
 
 from typing import Optional
 
+from address_parser_spark.functions.udfs import (
+    decode_registries,
+    decode_resolver_state,
+    mention_features,
+    resolve_one,
+    resolver_state,
+)
 from address_parser_spark.gazetteer.nodes import (
     alias_registries,
     build_nodes,
     build_repair_state,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
+from address_parser_spark.textops.ngrams import char_ngrams
 
 
 class LocalParser:
     """process(text) → the reference's result dict shape (names + codes)."""
 
     def __init__(self, gaz: Gazetteer):
-        from address_parser_spark.functions.udfs import build_resolver_state
-        from address_parser_spark.textops.detect import AliasRegistry
-
         nodes = build_nodes(gaz)
-        state = build_resolver_state(nodes)
-        self._idx_all = state["idx_all"]
-        self._idx_primary = state["idx_primary"]
-        self._n_primary = state["n_primary"]
-        self._attrs = state["attrs"]
-        self._inv = state["inv"]
-        self._repair = build_repair_state(gaz, nodes)
-        regs = alias_registries(gaz)
-        self._reg_p = AliasRegistry(regs["province"])
-        self._reg_d = AliasRegistry(regs["district"])
-        self._reg_w = AliasRegistry(regs["ward"])
-        self._score_memo: dict = {}
-        self._boost_memo: dict = {}
+        self._st = decode_resolver_state(resolver_state(nodes, build_repair_state(gaz, nodes)))
+        self._regs = decode_registries(alias_registries(gaz))
 
     def process(self, text: str) -> dict:
-        from address_parser_spark.functions.udfs import resolve_one
-        from address_parser_spark.textops.detect import detect_by_prefix
-        from address_parser_spark.textops.ngrams import char_ngrams
-        from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
-
-        std = normalize_advanced(text)
-        basic = normalize_basic(text)
-        grams = char_ngrams(std)  # resolve_one dedups; ranking counts distinct grams
-        det_p, det_d, det_w = detect_by_prefix(basic, self._reg_p, self._reg_d, self._reg_w)
-        from address_parser_spark.functions.udfs import partial_flag
-
-        row = resolve_one(
-            self._idx_all, self._idx_primary, self._n_primary, self._attrs, self._inv,
-            self._repair, self._score_memo, self._boost_memo,
-            text, std, basic, grams, det_p, det_d, det_w, partial_flag(std),
-        )
+        mention, std, basic, det_p, det_d, det_w, partial = mention_features(text, self._regs, {})
+        # resolve_one dedups; ranking counts distinct grams
+        row = resolve_one(self._st, mention, std, basic, char_ngrams(std),
+                          det_p, det_d, det_w, partial)
         (nid, level, is_new, province, district, ward,
          p_code, d_code, w_code, cand_std, final, combined, dice,
          street, entity_std) = row

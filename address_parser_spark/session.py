@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factory with scale-appropriate defaults, and the one way
+driver-built rows become a DataFrame (``local_frame``).
 
 One place to encode the engine's execution posture: AQE on (runtime skew-join
 splitting + partition coalescing), Arrow exchange for pandas UDFs, bounded
@@ -10,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from typing import Iterable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -238,3 +242,22 @@ def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
     spark = builder.getOrCreate()
     _warm_runtime(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence],
+                schema: T.StructType) -> DataFrame:
+    """Driver rows (one sequence per row, in ``schema`` field order) → a
+    DataFrame built from one Arrow table, so it plans as ``LocalTableScan``
+    and no action on it starts a Python worker.
+
+    A list-of-tuples ``createDataFrame`` plans a pickled Python RDD
+    (``Scan ExistingRDD``) instead, and every action on it pays
+    defaultParallelism Python-worker round trips (measured 0.4–1.4 s per
+    action at local[32]). The Arrow-table path needs no session conf and has
+    no silent non-Arrow fallback; an empty ``rows`` gives an empty frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -1,26 +1,19 @@
-"""File readers/sinks mirroring the reference's scan surface (SURVEY §2.1).
+"""The gazetteer scan of the reference (SURVEY §2.1, S1 ``_read_json_file``):
+``read_gazetteer_dir`` reads a reference-shaped catalog directory with one
+schema'd ``spark.read.json`` per file, and ``gazetteer_from_dir`` collects it
+into the driver-side ``Gazetteer`` the CLI runs on.
 
-| ref | here |
-|---|---|
-| S1 JSON gazetteer scan (``_read_json_file``) | ``read_gazetteer_dir`` — schema'd ``spark.read.json`` per catalog file |
-| S2 JSON-array streaming scan (brace-depth parser) | ``read_json_auto`` — Spark's reader already splits/streams; multiLine for arrays |
-| S3 JSONL line scan | ``read_jsonl`` |
-| S4 reference-name text scan | ``read_name_list`` — one name per line + normalized column |
-| S5 JSONL sink | ``write_jsonl`` |
-
-The reference hand-rolled an incremental array parser to keep 3M rows out of
-RAM (ner/build_real_dataset.py:60-103); Spark's JSON source gets the same
-constant-memory behavior from splittable line-delimited input for free, and
-``multiLine=true`` covers whole-array files (non-splittable — documented
-trade-off, same as the reference's "memory" mode).
+The reference's other scans and sinks (JSON-array streaming, JSONL, name
+lists) have no caller in the engine; Spark's own ``spark.read.json`` /
+``DataFrame.write.json`` cover them directly. ``multiLine=true`` reads
+whole-array files (non-splittable — the same trade-off as the reference's
+"memory" mode).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from address_parser_spark.functions.udfs import normalize_basic_udf
 
 ADMIN_RECORD_SCHEMA = T.StructType(
     [
@@ -43,35 +36,6 @@ GAZETTEER_FILES = {
     "new_provinces": "provinces.json",
     "new_wards": "wards.json",
 }
-
-
-def read_json_auto(spark: SparkSession, path: str, multiline: bool = False) -> DataFrame:
-    """S2: JSON scan — line-delimited by default (splittable, constant
-    memory); ``multiline=True`` for whole-array files."""
-    return spark.read.option("multiLine", multiline).json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """S3: JSONL scan with optional explicit schema (skip inference pass)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5: JSONL sink."""
-    df.write.mode(mode).json(path)
-
-
-def read_name_list(spark: SparkSession, path: str) -> DataFrame:
-    """S4: one name per line → (name, name_std)."""
-    return (
-        spark.read.text(path)
-        .select(F.trim("value").alias("name"))
-        .filter(F.length("name") > 0)
-        .withColumn("name_std", normalize_basic_udf(F.col("name")))
-    )
 
 
 def read_gazetteer_dir(spark: SparkSession, data_dir: str) -> dict[str, DataFrame]:

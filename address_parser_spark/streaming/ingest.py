@@ -45,7 +45,7 @@ def read_pages_stream(spark: SparkSession, input_dir: str,
 
 
 def extract_mentions_stream(pages_stream: DataFrame,
-                            registries: dict[str, list[str]] | None = None) -> DataFrame:
+                            registries: dict[str, list[str]]) -> DataFrame:
     """The batch extraction stage applied to a stream — same fused UDF, same
     output columns, plus the event-time column carried through."""
     from address_parser_spark.operators.parse import extract_normalize
@@ -55,7 +55,7 @@ def extract_mentions_stream(pages_stream: DataFrame,
 
 def windowed_mention_counts(
     pages_stream: DataFrame,
-    registries: dict[str, list[str]] | None = None,
+    registries: dict[str, list[str]],
     window: str = "10 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
@@ -73,7 +73,7 @@ def windowed_mention_counts(
 
 def dedup_mentions_stream(
     pages_stream: DataFrame,
-    registries: dict[str, list[str]] | None = None,
+    registries: dict[str, list[str]],
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Exactly-once mention emission within the watermark horizon: streaming

@@ -22,11 +22,13 @@ detected in the input (fuzz/inexus_parser.py:186-403):
 9. final ward-presence check: a ward neither contained in the input nor
    detected is dropped (:433-437).
 
-Everything operates on a plain picklable state dict (see
-``gazetteer.nodes.build_repair_state``) so it can ride a Spark broadcast into
-the fused resolve kernel. Set iteration orders from the reference are made
-deterministic by sorting node indices (SURVEY §7 "non-deterministic dict-set
-iteration").
+Everything operates on the resolve kernel's decoded state
+(``functions.udfs.resolver_state``): the repair fields come from
+``gazetteer.nodes.build_repair_state`` — the alias→node invert maps and the
+code lookups — and per-node display names are read from the resolve index's
+node attributes, so no structure is shipped twice. Set iteration orders from
+the reference are made deterministic by sorting node indices (SURVEY §7
+"non-deterministic dict-set iteration").
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ from typing import Optional
 
 from address_parser_spark.textops.normalize import normalize_basic
 
-_P, _D, _W = 0, 1, 2  # node-name tuple slots
+_P, _D, _W = 2, 3, 4  # (province, district, ward) slots of st["attrs"][node_id]
 
 
 def _resolve_detected_component(
@@ -58,7 +60,7 @@ def _resolve_detected_component(
 
     exp_p = normalize_basic(expected_province) if expected_province else None
     exp_d = normalize_basic(expected_district) if expected_district else None
-    names = st["node_names"]
+    attrs = st["attrs"]
     slot = {"province": _P, "district": _D, "ward": _W}[level]
 
     fallback: Optional[str] = None
@@ -68,7 +70,7 @@ def _resolve_detected_component(
         local: list[tuple[str, str]] = []
         local_fallback: Optional[str] = None
         for idx in indices:
-            node = names[idx]
+            node = attrs[idx]
             name = node[slot]
             if not name:
                 continue
@@ -116,11 +118,11 @@ def _infer_district(st: dict, province: Optional[str], ward: Optional[str],
     indices = st["inv"]["ward"].get(ward_std, ())
     if not indices:
         return None
-    names = st["node_names"]
+    attrs = st["attrs"]
 
     entries: list[tuple[str, str, Optional[str]]] = []
     for idx in indices:
-        node = names[idx]
+        node = attrs[idx]
         district_name = node[_D]
         if not district_name:
             continue
@@ -157,13 +159,13 @@ def _infer_province(st: dict, district: Optional[str], ward: Optional[str]) -> O
     intersection of the ward-implied and district-implied province sets."""
     district_std = normalize_basic(district) if district else ""
     ward_std = normalize_basic(ward) if ward else ""
-    names = st["node_names"]
+    attrs = st["attrs"]
 
     candidate_sets: list[set[str]] = []
     if ward_std:
         ward_cands: set[str] = set()
         for idx in st["inv"]["ward"].get(ward_std, ()):
-            node = names[idx]
+            node = attrs[idx]
             if not node[_P]:
                 continue
             if district_std:
@@ -176,7 +178,7 @@ def _infer_province(st: dict, district: Optional[str], ward: Optional[str]) -> O
     if district_std:
         district_cands: set[str] = set()
         for idx in st["inv"]["district"].get(district_std, ()):
-            p = names[idx][_P]
+            p = attrs[idx][_P]
             if p:
                 district_cands.add(p)
         if district_cands:
@@ -354,7 +356,7 @@ def repair_components(
             if replacement and not appears(replacement):
                 replacement = None
         if not replacement:
-            contained = [p for p in st["province_names_std"] if p in input_basic]
+            contained = sorted(p for p in st["inv"]["province"] if p in input_basic)
             for p_std in sorted(contained, key=len, reverse=True):
                 resolved = _resolve_detected_component(st, "province", p_std, source_string=input_basic)
                 if resolved:

@@ -108,3 +108,16 @@ def test_rounds_bound_on_long_chain(spark, tmp_path):
     assert calls == list(range(len(calls)))  # once per round, in order
     assert 1 <= len(calls) <= 2 * int(math.log2(n)), calls
     assert [e["stage"] for e in store.lineage()] == [f"round_{it:03d}" for it in calls]
+
+
+def test_unconverged_loop_raises(spark, monkeypatch):
+    """A loop that runs out of rounds before its fingerprint reaches a
+    fixpoint must fail loudly, naming the rounds run and the edge count,
+    instead of returning a partial partition."""
+    from address_parser_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "MAX_ITERATIONS", 1)
+    n = 1024
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+    with pytest.raises(RuntimeError, match=r"1 rounds.*1,023 canonical edges"):
+        connected_components(df, small_graph_edges=0)

@@ -149,16 +149,3 @@ def test_embedding_near_dups_and_ann(spark):
     assert [r["neighbor_id"] for r in topk] == [1, 2]
     ann = ann_lsh_topk(emb, query_ids=[0], k=3, bucket_dims=4).collect()
     assert all(r["neighbor_id"] != 3 for r in ann)  # 3 is outside 0's bucket
-
-
-def test_readers_roundtrip(spark, tmp_path):
-    from address_parser_spark.sources.readers import read_jsonl, read_name_list, write_jsonl
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    write_jsonl(df, str(tmp_path / "out"))
-    back = read_jsonl(spark, str(tmp_path / "out"))
-    assert back.count() == 2
-
-    (tmp_path / "names.txt").write_text("Hà Nội\n\n  Đà Nẵng \n", encoding="utf-8")
-    names = read_name_list(spark, str(tmp_path / "names.txt")).collect()
-    assert {r["name_std"] for r in names} == {"ha noi", "da nang"}

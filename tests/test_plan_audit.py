@@ -223,3 +223,40 @@ def test_extract_normalize_html_branch_isolated(spark, gaz):
     assert len(conds) == 2
     assert sum("NOT" in c for c in conds) == 1
     assert "Union" in plan
+
+
+def test_driver_built_frames_are_local_table_scans(spark, gaz):
+    """Frames built from driver rows (the gazetteer nodes, the ward
+    mappings, the small-graph union-find output) must plan as Arrow-backed
+    ``LocalTableScan``s: a list-of-tuples createDataFrame plans a pickled
+    Python RDD (``Scan ExistingRDD``), and every action on it starts Python
+    workers. The nodes frame must keep NODE_SCHEMA and every value."""
+    from pyspark.sql import functions as F
+
+    from address_parser_spark.gazetteer.nodes import NODE_SCHEMA, build_nodes, nodes_to_spark
+    from address_parser_spark.operators.cluster import connected_components
+    from address_parser_spark.operators.mapping import mappings_to_spark
+
+    nodes = build_nodes(gaz)
+    assert gaz.ward_mappings
+    edges = spark.range(6).select(F.col("id").alias("src"), (F.col("id") % 3).alias("dst"))
+    frames = {
+        "nodes": nodes_to_spark(spark, nodes),
+        "mappings": mappings_to_spark(spark, gaz.ward_mappings),
+        "union_find": connected_components(edges),
+        "empty_nodes": nodes_to_spark(spark, []),
+        "empty_union_find": connected_components(edges.limit(0)),
+    }
+    for name, df in frames.items():
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, f"{name}:\n{plan}"
+
+    assert frames["nodes"].schema == NODE_SCHEMA
+    names = NODE_SCHEMA.fieldNames()
+    got = sorted(tuple(r) for r in frames["nodes"].collect())
+    assert got == sorted(tuple(n[f] for f in names) for n in nodes)
+    assert frames["empty_nodes"].count() == 0
+    assert {(r["id"], r["component"]) for r in frames["union_find"].collect()} == {
+        (0, 0), (3, 0), (1, 1), (4, 1), (2, 2), (5, 2)
+    }
+    assert frames["empty_union_find"].count() == 0
