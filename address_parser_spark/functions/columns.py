@@ -17,12 +17,14 @@ from pyspark.sql import functions as F
 MINHASH_PRIME = 2147483647
 
 
-def char_ngrams_col(col: Column, n: int = 4, distinct: bool = True) -> Column:
-    """Padded char n-gram windows of a (already normalized) string column.
+def char_ngrams_col(col: Column, n: int = 4) -> Column:
+    """Distinct padded char n-gram windows of a (already normalized) string
+    column.
 
-    Equivalent to ``char_ngrams`` in textops: pad one space each side, slide a
-    width-``n`` window. Strings whose padded form is shorter than ``n`` yield
-    an empty array (parity with the reference's ``generate_ngrams``).
+    Equivalent to ``char_ngram_set`` in textops: pad one space each side,
+    slide a width-``n`` window, drop repeats. Strings whose padded form is
+    shorter than ``n`` yield an empty array (parity with the reference's
+    ``generate_ngrams``).
     """
     padded = F.concat(F.lit(" "), col, F.lit(" "))
     n_windows = F.length(padded) - F.lit(n - 1)
@@ -30,7 +32,7 @@ def char_ngrams_col(col: Column, n: int = 4, distinct: bool = True) -> Column:
         n_windows >= 1,
         F.transform(F.sequence(F.lit(1), n_windows), lambda i: padded.substr(i, F.lit(n))),
     ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams) if distinct else grams
+    return F.array_distinct(grams)
 
 
 def gram_hash_col(grams: Column) -> Column:

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from address_parser_spark.textops.detect import AliasRegistry, detect_by_prefix
+from address_parser_spark.textops.ngrams import char_ngram_set, char_ngrams
 from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
 from address_parser_spark.textops.similarity import indel_ratio, partial_ratio, wratio
 from address_parser_spark.textops.street import extract_street
@@ -91,7 +92,6 @@ _FEATURES_SCHEMA = T.ArrayType(
             T.StructField("det_p", T.StringType()),
             T.StructField("det_d", T.StringType()),
             T.StructField("det_w", T.StringType()),
-            T.StructField("partial", T.BooleanType()),
         ]
     )
 )
@@ -104,8 +104,6 @@ def partial_flag(std: str) -> bool:
     scorer leans on partial_ratio."""
     from collections import Counter
 
-    from address_parser_spark.textops.ngrams import char_ngrams
-
     counts = Counter(char_ngrams(std))
     top5 = counts.most_common(5)
     return bool(top5) and sum(c for _, c in top5) >= 12
@@ -113,15 +111,16 @@ def partial_flag(std: str) -> bool:
 
 def mention_features(mention: str, regs: tuple, det_cache: dict) -> tuple:
     """One extracted mention → its ``_FEATURES_SCHEMA`` row: (mention, std,
-    std_basic, det_p, det_d, det_w, partial). ``regs`` is
-    ``decode_registries``' output; ``det_cache`` memoizes prefix detection
-    per basic string. Shared by the extract UDF and ``LocalParser``."""
+    std_basic, det_p, det_d, det_w), exactly ``resolve_one``'s mention
+    arguments. ``regs`` is ``decode_registries``' output; ``det_cache``
+    memoizes prefix detection per basic string. Shared by the extract UDF
+    and ``LocalParser``."""
     std = normalize_advanced(mention)
     basic = normalize_basic(mention)
     det = det_cache.get(basic)
     if det is None:
         det = det_cache[basic] = detect_by_prefix(basic, *regs)
-    return (mention, std, basic) + det + (partial_flag(std),)
+    return (mention, std, basic) + det
 
 
 def make_extract_features_udf(get_regs, from_html: bool = False):
@@ -316,6 +315,8 @@ RESOLVE_SCHEMA = T.StructType(
         T.StructField("dice", T.DoubleType()),
         T.StructField("street_address", T.StringType()),
         T.StructField("entity_std", T.StringType()),
+        T.StructField("format", T.StringType()),
+        T.StructField("entity_key", T.StringType()),
     ]
 )
 
@@ -330,8 +331,6 @@ def build_resolver_state(nodes: list[dict]) -> dict:
     The alias→node invert maps used for detected-value validation and the
     candidate-prioritization prefilter (:2836-2850) are built once, by
     ``gazetteer.nodes.build_repair_state``."""
-    from address_parser_spark.textops.ngrams import char_ngram_set
-
     idx_all: dict[str, list[int]] = {}
     idx_primary: dict[str, list[int]] = {}
     n_primary: list[int] = []
@@ -371,19 +370,22 @@ def decode_resolver_state(state: dict) -> dict:
 
 
 def make_resolve_udf(spark, state: dict):
-    """Fused resolve kernel over the broadcast ``resolver_state``.
+    """Fused resolve kernel over the broadcast ``resolver_state``: one
+    ``resolve_one`` call per distinct mention, returned as an
+    ``array<RESOLVE_SCHEMA>`` of zero (unresolved) or one row, so the
+    caller's ``explode`` drops unresolved mentions.
 
-    Per distinct mention (reference ``process()``, minus prefix detection
-    which rides in on the extract stage): counter probe of the inverted index
-    (inexus_parser.py:2670-2680), top-5 mass partial flag (:148-154),
-    ``TOPK_CANDIDATES`` cap (:114, with the partial flag computed
-    reference-style at extract time — within-input gram multiplicity,
-    :148-154), ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE``
-    score slice (:2878), blend + boosts (:2885-2912), lexicographic argmax
-    (:2926-2940), the component-repair cascade (:186-403, textops.repair),
-    then street extraction on the repaired components. Scores are memoized
-    per worker process across batches keyed on (std, cand_std, flag) —
-    duplicate address strings across the corpus pay once per worker.
+    Per mention (reference ``process()``, minus prefix detection which rides
+    in on the extract stage): gram set and top-5 mass partial flag derived
+    from ``std`` (:148-154), counter probe of the inverted index
+    (inexus_parser.py:2670-2680), ``TOPK_CANDIDATES`` cap (:114),
+    ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE`` score slice
+    (:2878), blend + boosts (:2885-2912), lexicographic argmax (:2926-2940),
+    the component-repair cascade (:186-403, textops.repair), street
+    extraction on the repaired components, then the format tag and entity
+    key. Scores are memoized per worker process across batches keyed on
+    (std, cand_std, flag) — duplicate address strings across the corpus pay
+    once per worker.
 
     Raises ``ValueError`` (from ``broadcast_state``) naming the pickled size
     and the node count when the state exceeds ``MAX_RESOLVER_STATE_BYTES``."""
@@ -392,24 +394,17 @@ def make_resolve_udf(spark, state: dict):
         f"resolver state for {len(state['attrs']):,} gazetteer nodes",
     )
 
-    @pandas_udf(RESOLVE_SCHEMA)
+    @pandas_udf(T.ArrayType(RESOLVE_SCHEMA))
     def resolve_udf(
-        mention: pd.Series, std: pd.Series, std_basic: pd.Series, grams: pd.Series,
-        det_p: pd.Series, det_d: pd.Series, det_w: pd.Series, partial: pd.Series,
-    ) -> pd.DataFrame:
+        mention: pd.Series, std: pd.Series, std_basic: pd.Series,
+        det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
+    ) -> pd.Series:
         st = get_state()
-        rows = [
-            resolve_one(st, m, s, sb, gs, dp, dd, dw, bool(pf))
-            for m, s, sb, gs, dp, dd, dw, pf in zip(
-                mention, std, std_basic, grams, det_p, det_d, det_w, partial
-            )
-        ]
-        return pd.DataFrame(rows, columns=[f.name for f in RESOLVE_SCHEMA.fields])
+        rows = (resolve_one(st, *args)
+                for args in zip(mention, std, std_basic, det_p, det_d, det_w))
+        return pd.Series([[] if row is None else [row] for row in rows])
 
     return resolve_udf
-
-
-_NONE_ROW = (None,) * 15
 
 
 def _infer_format(st: dict, district, w_code, p_code):
@@ -433,11 +428,14 @@ SCORE_SLICE = 120      # candidates scored after prioritization (:2878)
 EARLY_BREAK = 200      # scan stops at the first gate failure past here (:2829-2831)
 
 
-def resolve_one(st: dict, m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tuple:
-    """One mention through probe → cap → gate → prioritize → score → argmax →
-    repair → street. ``st`` is ``decode_resolver_state``'s view. Pure
-    function shared by the Arrow kernel and ``LocalParser``
-    (plans.local_parser); returns a RESOLVE_SCHEMA-shaped tuple. Mirrors the
+def resolve_one(st: dict, m, s, sb, dp, dd, dw) -> tuple | None:
+    """The one definition of a resolved mention: (mention, std, std_basic,
+    det_p, det_d, det_w) — ``mention_features``' row — through gram set →
+    probe → cap → gate → prioritize → score → argmax → repair → street →
+    format tag and entity key. ``st`` is ``decode_resolver_state``'s view.
+    Pure function run by the Arrow kernel and by ``LocalParser``
+    (plans.local_parser); returns the finished RESOLVE_SCHEMA tuple, or
+    ``None`` for a mention that resolves to nothing. Mirrors the
     reference ``address_candidate_list`` (inexus_parser.py:2796-2941): duplicate-counting candidate ranking, early
     break at the first failing candidate past ``EARLY_BREAK``, detected-component
     prefilter reordering before the ``SCORE_SLICE`` score slice. DELIBERATE
@@ -451,8 +449,16 @@ def resolve_one(st: dict, m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tupl
 
     from address_parser_spark.textops.repair import repair_components
 
-    if not isinstance(s, str) or gs is None or not len(gs):
-        return _NONE_ROW
+    if not isinstance(s, str):
+        return None
+    # Candidate RANKING counts each DISTINCT input gram once (reference
+    # ``ngram_address_piece_list`` iterates ``set(input_ngram_list)``,
+    # :2674-2676), and the Dice intersection is over the same distinct set
+    # (:2812-2824); the partial flag reads the within-input multiplicity.
+    gset = char_ngram_set(s)
+    if not gset:
+        return None
+    partial_input = partial_flag(s)
     idx_all, idx_primary, n_primary, attrs, inv = (
         st["idx_all"], st["idx_primary"], st["n_primary"], st["attrs"], st["inv"])
     score_memo, boost_memo = st["score_memo"], st["boost_memo"]
@@ -461,12 +467,6 @@ def resolve_one(st: dict, m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tupl
     dp = dp if dp and dp in inv["province"] else None
     dd = dd if dd and dd in inv["district"] else None
     dw = dw if dw and dw in inv["ward"] else None
-    # Candidate RANKING counts each DISTINCT input gram once (reference
-    # ``ngram_address_piece_list`` iterates ``set(input_ngram_list)``,
-    # :2674-2676), and the Dice intersection is over the same distinct set
-    # (:2812-2824) — ``gs`` may arrive raw or pre-deduplicated; both collapse
-    # to ``gset`` here.
-    gset = set(gs)
     c_rank: Counter = Counter()
     for g in gset:
         post = idx_all.get(g)
@@ -562,12 +562,21 @@ def resolve_one(st: dict, m, s, sb, gs, dp, dd, dw, partial_input: bool) -> tupl
     )
     province, district, ward = province or None, district or None, ward or None
     if nid is None and not (province or district or ward):
-        return _NONE_ROW
+        return None
     if nid is None:
         is_new = _infer_format(st, district, w_code, p_code)
     street, entity_std = _street_and_entity(
         m if isinstance(m, str) else "", s, province, district, ward, is_new
     )
+    fmt = {True: "new", False: "old"}.get(is_new, "unknown")
+    # New-format entities have NO district level; the repair cascade still
+    # infers one for display parity with the reference, but which
+    # old-catalog twin it picks varies with the mention text — keying on it
+    # would split the entity.
+    entity_key = "|".join((
+        p_code or "", "" if is_new is True else (d_code or ""), w_code or "",
+        {True: "true", False: "false"}.get(is_new, "unknown"),
+    ))
     return (nid, level, is_new, province, district, ward,
             p_code, d_code, w_code, cand_std, final, combined, dice,
-            street, entity_std)
+            street, entity_std, fmt, entity_key)

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
 from address_parser_spark.session import local_frame
@@ -173,16 +173,20 @@ def cluster_mentions(
     extra_edges: Optional[DataFrame] = None,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
 ) -> DataFrame:
-    """Mention clustering with entity-anchor edges (+ optional pair edges).
+    """Mention clustering with entity-anchor stars (+ optional pair edges).
 
-    Same-entity mentions are connected through a virtual anchor vertex
-    ``xxhash64(entity_key)`` — a star, not a clique: n-1 edges per entity
-    instead of n(n-1)/2, which is what keeps hot entities ("ha noi") from
-    exploding the edge list at web scale. ``extra_edges`` (e.g. high-confidence
-    string-similarity pairs from the pair stage) are unioned in.
+    Same-entity mentions are linked by an exact-string star: every row
+    points at the smallest ``mid`` sharing its anchor — a star, not a
+    clique: n-1 edges per entity instead of n(n-1)/2, which is what keeps
+    hot entities ("ha noi") from exploding the edge list at web scale. The
+    anchor is compared as strings inside a window partition, never hashed
+    into a vertex: the only vertices are ``mid``s, so two entities whose
+    keys share a 64-bit hash cannot merge and no key can pull in a foreign
+    mention. ``extra_edges`` (e.g. the pair stage's string edges) are
+    unioned in.
 
-    Returns (mid, url, mention, entity_key, cluster_id) where cluster_id is
-    stable (min vertex id in the component).
+    Returns ``resolved`` plus ``cluster_id``, the smallest ``mid`` of the
+    row's component.
     """
     # Resolutions whose entity_key actually pins the ward (ward name AND
     # ward_code present — entity_key encodes only codes, so a repaired ward
@@ -193,13 +197,14 @@ def cluster_mentions(
     # the district-level entity_key, and a bare key anchor would weld those
     # distinct entities into one cluster. Genuinely district-level mentions
     # of the same entity still share entity_std (it is built from the
-    # resolved components), so they keep clustering together.
+    # resolved components), so they keep clustering together. entity_std is
+    # never null, so the null salt of a pinned row is its own group
+    # (plans.er_oracle tags the two anchor kinds the same way).
+    pinned = F.col("ward").isNotNull() & F.col("ward_code").isNotNull()
+    salt = F.when(~pinned, F.col("entity_std"))
     anchors = resolved.select(
         F.col("mid").alias("src"),
-        F.when(
-            F.col("ward").isNotNull() & F.col("ward_code").isNotNull(),
-            F.xxhash64("entity_key"),
-        ).otherwise(F.xxhash64("entity_key", "entity_std")).alias("dst"),
+        F.min("mid").over(Window.partitionBy("entity_key", salt)).alias("dst"),
     )
     edges = anchors if extra_edges is None else anchors.unionAll(extra_edges)
     assignments = connected_components(edges, checkpoint_fn=checkpoint_fn)

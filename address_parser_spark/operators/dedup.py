@@ -50,23 +50,6 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 ]
 
 
-def word_shingles_col(text: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles of lowercased whitespace-split text.
-
-    NOTE: the token array is inlined in the per-position transform lambda, so
-    Catalyst re-tokenizes the text once per shingle position (no loop-invariant
-    hoisting inside higher-order functions). Fine for one-off expressions over
-    short strings; every data-path caller should use ``with_word_shingles``,
-    which stages the token array as a real column first."""
-    toks = tokens_col(F.lower(text))
-    n = F.size(toks)
-    sh = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.concat_ws(" ", F.slice(toks, i, k))),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.array_distinct(sh)
-
-
 def with_word_shingles(df: DataFrame, text_col: str, k: int = 3, out: str = "_sh") -> DataFrame:
     """``df`` + a distinct word-k-shingle array column ``out``.
 

@@ -3,21 +3,25 @@
 This is the reference's ``AddressParser.process`` (inexus_parser.py:133-466)
 re-planned for Catalyst (SURVEY §3.1). Stages and their physical shape:
 
-1. **extract+normalize** (narrow): trigger-scan extraction UDF → explode;
-   advanced + basic normalization UDFs; JVM-side distinct 4-gram shingles;
-   prefix-detection UDF (reference ``_detect_by_prefix`` :2685-2762) against
-   broadcast alias registries. Each mention gets a compact 64-bit key ``mid``
-   so downstream shuffles move longs, not strings.
+1. **extract+normalize** (narrow): one fused Arrow UDF per page —
+   trigger-scan extraction, advanced + basic normalization, prefix
+   detection (reference ``_detect_by_prefix`` :2685-2762) against broadcast
+   alias registries — exploded to one flat row per mention. Each mention
+   gets a compact 64-bit key ``mid`` so downstream shuffles move longs, not
+   strings. The frame carries no array column: the gram set and partial
+   flag are functions of ``std`` that only the kernel reads.
 2. **distinct mentions** (one partial-aggregate shuffle): resolution is a
    pure function of the mention text, so everything after this runs once
    per distinct string.
 3. **resolve kernel** (repartition on ``std``): one fused Arrow UDF
    (``functions.udfs.make_resolve_udf`` → ``resolve_one``) probes the
-   broadcast gazetteer state map-side — inverted-index probe, top-K cap,
-   Dice gate with the reference's early break, detected-component
-   prioritization, score slice, blend + boosts, lexicographic argmax,
-   repair cascade, street extraction. No corpus × catalog rows exist at
-   any point: the catalog is a broadcast dimension.
+   broadcast gazetteer state map-side — gram set and partial flag,
+   inverted-index probe, top-K cap, Dice gate with the reference's early
+   break, detected-component prioritization, score slice, blend + boosts,
+   lexicographic argmax, repair cascade, street extraction, format tag and
+   entity key — and emits the finished row, or none for an unresolved
+   mention. No corpus × catalog rows exist at any point: the catalog is a
+   broadcast dimension.
 4. **fact join**: winners (distinct-mention-sized) join back onto the
    (url, mention) rows, as a broadcast when their measured bytes allow.
 """
@@ -26,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from address_parser_spark.functions.columns import char_ngrams_col
 from address_parser_spark.functions.udfs import (
     broadcast_state,
     decode_registries,
@@ -38,10 +41,11 @@ from address_parser_spark.functions.udfs import (
 
 def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
                       carry_cols: list[str] | None = None) -> DataFrame:
-    """pages → one row per extracted mention: normalized forms, shingles,
-    detected components, compact key. Narrow — no shuffle; the scan reads only
-    the Vietnamese pages' (url, text) plus any ``carry_cols`` (e.g. the
-    event-time column for the streaming path). ``registries``
+    """pages → one row per extracted mention: (url, *carry_cols, mention,
+    std, std_basic, det_p, det_d, det_w, mid) — the normalized forms, the
+    detected components and a compact key. Narrow — no shuffle; the scan
+    reads only the Vietnamese pages' (url, text) plus any ``carry_cols``
+    (e.g. the event-time column for the streaming path). ``registries``
     (``gazetteer.nodes.alias_registries``) are broadcast once per call and
     shared by both branches below.
 
@@ -77,55 +81,46 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
         exploded = base.select(
             "url", *carry, F.explode(features(F.col("text"))).alias("f")
         )
-    return (
-        exploded
-        .select(
-            "url",
-            *carry,
-            F.col("f.mention").alias("mention"),
-            F.col("f.std").alias("std"),
-            F.col("f.std_basic").alias("std_basic"),
-            F.struct(
-                F.col("f.det_p").alias("det_p"),
-                F.col("f.det_d").alias("det_d"),
-                F.col("f.det_w").alias("det_w"),
-            ).alias("det"),
-            F.col("f.partial").alias("partial_flag"),
-        )
-        # DISTINCT gram set: both candidate ranking (reference iterates
-        # ``set(input_ngram_list)``, :2674-2676) and Dice (:2812-2824) consume
-        # distinct grams; the within-input multiplicity signal (partial flag)
-        # is already folded in by the extract UDF.
-        .withColumn("grams", char_ngrams_col(F.col("std"), distinct=True))
-        .withColumn("mid", F.xxhash64("url", "mention"))
+    return exploded.select("url", *carry, "f.*").withColumn(
+        "mid", F.xxhash64("url", "mention")
     )
 
 
-def _with_format_and_key(winners: DataFrame) -> DataFrame:
-    """Format tag + canonical entity key (pure column logic)."""
+def _resolve_distinct(mentions: DataFrame, resolve) -> DataFrame:
+    """The kernel stage: ``mentions`` (``extract_normalize``'s frame) →
+    (mention, std, *RESOLVE_SCHEMA) per DISTINCT resolved mention, lazy.
+    ``resolve`` is ``make_resolve_udf``'s kernel; it returns zero or one row
+    per mention, so the ``explode`` drops unresolved mentions."""
+    # dropDuplicates, not a pre-repartitioned groupBy: a round-6 variant
+    # fused the dedup onto the kernel's std exchange (repartition(std) →
+    # groupBy(std, mention)), which saved one distinct-mention-sized
+    # exchange but shipped EVERY occurrence through the std exchange at
+    # full width — dropDuplicates' map-side partial aggregate ships at most
+    # one copy per input partition, which is the winning shape on exactly
+    # the boilerplate-heavy corpora this dedup exists for (the same mention
+    # repeated thousands of times across pages). Measured equal at the
+    # 1200-page bench; the partial-agg shape is the scale-correct one.
+    args = ["mention", "std", "std_basic", "det_p", "det_d", "det_w"]
+    uniq = mentions.dropDuplicates(["mention"]).select(*args)
     return (
-        winners
-        .withColumn(
-            "format",
-            F.when(F.col("is_new") == True, F.lit("new"))  # noqa: E712 (tri-state)
-            .when(F.col("is_new") == False, F.lit("old"))  # noqa: E712
-            .otherwise(F.lit("unknown")),
-        )
-        .withColumn(
-            "entity_key",
-            F.concat_ws(
-                "|",
-                F.coalesce("province_code", F.lit("")),
-                # New-format entities have NO district level; the repair
-                # cascade still infers one for display parity with the
-                # reference, but which old-catalog twin it picks varies with
-                # the mention text — keying on it would split the entity.
-                F.when(F.col("is_new") == True, F.lit(""))  # noqa: E712
-                .otherwise(F.coalesce("district_code", F.lit(""))),
-                F.coalesce("ward_code", F.lit("")),
-                F.coalesce(F.col("is_new").cast("string"), F.lit("unknown")),
-            ),
-        )
+        uniq
+        # Distinct mentions sharing a normalized std (street-level
+        # variants of one entity) score against the same candidates; the
+        # kernel memoizes (std, cand_std) per worker process, so
+        # co-locating equal stds makes the memo hit rate match a global
+        # memo (measured 1.75×→~6× effective speedup at 8 workers).
+        # EXPLICIT partition count: this stage is python-CPU-bound but
+        # tiny in bytes — AQE's byte-driven coalescing would serialize it
+        # (an explicit repartition count is never AQE-coalesced).
+        .repartition(2 * mentions.sparkSession.sparkContext.defaultParallelism, F.col("std"))
+        # explode(udf) plants a GENERATOR between the kernel and the
+        # downstream projection: without it Catalyst's python-UDF
+        # extraction can materialize TWO chained ArrowEvalPython nodes (one
+        # per consumer of the result) and every row pays the kernel twice —
+        # measured 11 s → 34 s on the 40k-page profile, the single largest
+        # serial term in the scaling story.
+        .select("mention", "std", F.explode(resolve(*args)).alias("w"))
+        .select("mention", "std", "w.*")
     )
 
 
@@ -153,8 +148,10 @@ def resolve_mentions(
     shipping it. One fused Arrow kernel per distinct mention probes it
     map-side, so no catalog row is ever shuffled — the only exchanges before
     the fact join move distinct mentions (the dedup and the ``std``
-    co-location), the shape SURVEY §3.2 calls "embarrassingly parallel". ``LocalParser`` runs the same
-    ``resolve_one`` per string and is the reference the ER fixture pins.
+    co-location), the shape SURVEY §3.2 calls "embarrassingly parallel".
+    ``LocalParser`` runs the same ``resolve_one`` per string — format tag,
+    entity key and the unresolved rule included — and is the reference the
+    ER fixture pins.
 
     ``mentions`` feeds both the distinct projection and the final fact join —
     checkpointed EAGERLY: AQE runs query-stage futures concurrently, and a
@@ -163,61 +160,8 @@ def resolve_mentions(
     AQE-dependent variance).
     """
     mentions = extract_normalize(pages, registries).localCheckpoint(eager=True)
-
-    # dropDuplicates, not a pre-repartitioned groupBy: a round-6 variant
-    # fused the dedup onto the kernel's std exchange (repartition(std) →
-    # groupBy(std, mention)), which saved one distinct-mention-sized
-    # exchange but shipped EVERY occurrence through the std exchange at
-    # full width — dropDuplicates' map-side partial aggregate ships at most
-    # one copy per input partition, which is the winning shape on exactly
-    # the boilerplate-heavy corpora this dedup exists for (the same mention
-    # repeated thousands of times across pages). Measured equal at the
-    # 1200-page bench; the partial-agg shape is the scale-correct one.
-    spark = pages.sparkSession
-    uniq = mentions.dropDuplicates(["mention"]).select(
-        "mention", "std", "std_basic", "det", "grams", "partial_flag"
-    )
-
-    resolve = make_resolve_udf(spark, resolver_state(nodes, repair_state))
-    winners = (
-        uniq
-        # Distinct mentions sharing a normalized std (street-level
-        # variants of one entity) score against the same candidates; the
-        # kernel memoizes (std, cand_std) per worker process, so
-        # co-locating equal stds makes the memo hit rate match a global
-        # memo (measured 1.75×→~6× effective speedup at 8 workers).
-        # EXPLICIT partition count: this stage is python-CPU-bound but
-        # tiny in bytes — AQE's byte-driven coalescing would serialize it
-        # (an explicit repartition count is never AQE-coalesced).
-        .repartition(2 * spark.sparkContext.defaultParallelism, F.col("std"))
-        # explode(array(udf)) plants a GENERATOR between the kernel and
-        # the downstream filter/projection: without it Catalyst's python-
-        # UDF extraction materializes TWO chained ArrowEvalPython nodes
-        # (one for the filter predicate, one for the projection) and every
-        # row pays the kernel twice — measured 11 s → 34 s on the 40k-page
-        # profile, the single largest serial term in the scaling story.
-        .select(
-            "mention", "std",
-            F.explode(
-                F.array(
-                    resolve(
-                        F.col("mention"), F.col("std"), F.col("std_basic"),
-                        F.col("grams"),
-                        F.col("det.det_p"), F.col("det.det_d"), F.col("det.det_w"),
-                        F.coalesce("partial_flag", F.lit(False)),
-                    )
-                )
-            ).alias("w"),
-        )
-        .filter(
-            F.col("w.node_id").isNotNull()
-            | F.col("w.province").isNotNull()
-            | F.col("w.district").isNotNull()
-            | F.col("w.ward").isNotNull()
-        )
-        .select("mention", "std", "w.*")
-    )
-    winners = _with_format_and_key(winners)
+    resolve = make_resolve_udf(pages.sparkSession, resolver_state(nodes, repair_state))
+    winners = _resolve_distinct(mentions, resolve)
     # Isolate the python-CPU-bound kernel into its own job: embedded in the
     # fact-join plan it inherits that plan's (byte-driven) parallelism
     # decisions — measured 52s vs 11s for the identical kernel at local[32].

@@ -41,7 +41,7 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens, distinct tokens, chars, mean token
     length (SURVEY §2 'token counting' for training-data pipelines).
 
-    Tokenizes LOWERCASED text — same as detect_language / word_shingles_col
+    Tokenizes LOWERCASED text — same as detect_language / dedup.with_word_shingles
     and the DuckDB oracle — so distinct-token counts are case-insensitive on
     any input, not just all-lowercase fixtures.
 

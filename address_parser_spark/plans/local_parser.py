@@ -1,9 +1,11 @@
 """Single-string parser facade — the reference ``AddressParser.process``
 API surface (fuzz/inexus_parser.py:133-466), backed by the exact same pure
-functions and state decoders the distributed kernel runs
-(``functions.udfs.mention_features`` → ``resolve_one`` over
-``decode_resolver_state(resolver_state(...))``): normalize → detect → probe →
-cap → Dice gate → score → argmax → repair cascade → street extraction.
+functions and state decoders the distributed kernel runs:
+``process`` is ``resolve_one(state, *mention_features(text, ...))`` over
+``decode_resolver_state(resolver_state(...))`` — normalize → detect → gram
+set → probe → cap → Dice gate → score → argmax → repair cascade → street
+extraction → format tag. An unresolved mention (``resolve_one`` returns
+``None``) comes back with null components and ``format == "unknown"``.
 
 Useful for (a) the golden-450 parity tests against the reference's own test
 set, (b) driver-side spot checks, (c) parity-by-construction between the
@@ -15,6 +17,7 @@ from __future__ import annotations
 from typing import Optional
 
 from address_parser_spark.functions.udfs import (
+    RESOLVE_SCHEMA,
     decode_registries,
     decode_resolver_state,
     mention_features,
@@ -27,7 +30,6 @@ from address_parser_spark.gazetteer.nodes import (
     build_repair_state,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
-from address_parser_spark.textops.ngrams import char_ngrams
 
 
 class LocalParser:
@@ -39,24 +41,20 @@ class LocalParser:
         self._regs = decode_registries(alias_registries(gaz))
 
     def process(self, text: str) -> dict:
-        mention, std, basic, det_p, det_d, det_w, partial = mention_features(text, self._regs, {})
-        # resolve_one dedups; ranking counts distinct grams
-        row = resolve_one(self._st, mention, std, basic, char_ngrams(std),
-                          det_p, det_d, det_w, partial)
-        (nid, level, is_new, province, district, ward,
-         p_code, d_code, w_code, cand_std, final, combined, dice,
-         street, entity_std) = row
+        row = resolve_one(self._st, *mention_features(text, self._regs, {}))
+        (nid, _level, is_new, province, district, ward,
+         p_code, d_code, w_code, _cand_std, _final, _combined, _dice,
+         street, entity_std, fmt, _entity_key) = row or (None,) * len(RESOLVE_SCHEMA)
 
         def comp(name: Optional[str], code: Optional[str]) -> Optional[dict]:
             return {"name": name, "code": code} if name else None
 
-        fmt = "new" if is_new is True else ("old" if is_new is False else "unknown")
         return {
             "province": comp(province, p_code),
             "district": comp(district, d_code),
             "ward": comp(ward, w_code),
             "street_address": street or "",
-            "format": fmt,
+            "format": fmt or "unknown",
             "is_new": is_new,
             "node_id": nid,
             "entity_std": entity_std,

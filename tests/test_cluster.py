@@ -121,3 +121,29 @@ def test_unconverged_loop_raises(spark, monkeypatch):
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     with pytest.raises(RuntimeError, match=r"1 rounds.*1,023 canonical edges"):
         connected_components(df, small_graph_edges=0)
+
+
+def test_entity_anchors_compare_strings_not_hashes(spark, monkeypatch):
+    """With every 64-bit hash colliding, ``cluster_mentions`` still groups by
+    the anchor strings: rows sharing a ward-pinned entity key cluster, and
+    rows sharing a district-level key cluster only with an equal entity_std.
+    Anchors hashed into vertices would merge all five rows."""
+    from pyspark.sql import functions as F
+
+    from address_parser_spark.operators.cluster import cluster_mentions
+
+    resolved = spark.createDataFrame(
+        [
+            # (mid, ward, ward_code, entity_key, entity_std)
+            (1, "W", "001", "01|010|001|false", "w d p"),   # pinned key A
+            (2, "W", "001", "01|010|001|false", "w d p"),
+            (3, "V", "002", "01|010|002|false", "v d p"),   # pinned key B
+            (4, None, None, "01|010||false", "x d p"),      # district key, salted
+            (5, None, None, "01|010||false", "y d p"),
+        ],
+        "mid long, ward string, ward_code string, entity_key string, entity_std string",
+    ).localCheckpoint(eager=True)
+    monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
+
+    got = {r["mid"]: r["cluster_id"] for r in cluster_mentions(resolved).collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 5}

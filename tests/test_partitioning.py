@@ -3,7 +3,7 @@ dedup.with_word_shingles)."""
 
 from pyspark.sql import functions as F
 
-from address_parser_spark.operators.dedup import with_word_shingles, word_shingles_col
+from address_parser_spark.operators.dedup import with_word_shingles
 from address_parser_spark.operators.partitioning import fan_out
 
 
@@ -56,24 +56,25 @@ def test_fan_out_preserves_rows_and_values(spark):
 
 
 def test_with_word_shingles_matches_column_form(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "short text"),
-            (3, "One Two Three One Two Three One Two Three"),
-            (4, "solo"),
-        ],
-        "doc_id long, text string",
-    )
+    """The staged JVM shingles equal the pure-Python ``word_shingles`` over
+    the lowercased whitespace tokens, as a distinct set."""
+    from address_parser_spark.textops.ngrams import word_shingles
+
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "short text",
+        3: "One Two Three One Two Three One Two Three",
+        4: "solo",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     staged = {
         r["doc_id"]: sorted(r["sh"])
         for r in with_word_shingles(docs, "text", 3, out="sh").select("doc_id", "sh").collect()
     }
-    inline = {
-        r["doc_id"]: sorted(r["sh"])
-        for r in docs.select("doc_id", word_shingles_col(F.col("text"), 3).alias("sh")).collect()
+    assert staged == {
+        doc_id: sorted(set(word_shingles(text.lower().split(), 3)))
+        for doc_id, text in texts.items()
     }
-    assert staged == inline
     assert staged[2] == ["short text"]  # below k: single joined shingle
     assert len(staged[3]) == 3  # distinct shingles of a repeating text
 

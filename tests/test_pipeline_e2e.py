@@ -171,3 +171,12 @@ def test_pipeline_from_html_only_pages(spark, gaz, corpus, clustered):
     got = {tuple(r) for r in out.select(*cols).collect()}
     want = {tuple(r) for r in clustered.select(*cols).collect()}
     assert got == want
+
+
+def test_pipeline_over_no_vietnamese_pages(spark, gaz, corpus, clustered):
+    """Zero ``vi`` pages → an empty frame with the full output schema."""
+    pages, _ = corpus
+    pages_df = spark.createDataFrame(pages[:5], PAGES_SCHEMA).withColumn("lang", F.lit("en"))
+    out = run_pipeline(spark, pages_df, gaz)
+    assert out.schema == clustered.schema
+    assert out.count() == 0

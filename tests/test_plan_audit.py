@@ -225,6 +225,38 @@ def test_extract_normalize_html_branch_isolated(spark, gaz):
     assert "Union" in plan
 
 
+def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
+    """The mention frame is exactly the extract UDF's fields plus ``mid`` —
+    no array column: the gram set and partial flag are derived inside the
+    kernel from ``std``. The kernel stage over the checkpointed mentions
+    plans exactly ONE ArrowEvalPython and emits the finished row."""
+    from pyspark.sql import types as T
+
+    from address_parser_spark.functions.udfs import (
+        RESOLVE_SCHEMA, make_resolve_udf, resolver_state,
+    )
+    from address_parser_spark.gazetteer.nodes import (
+        alias_registries, build_nodes, build_repair_state,
+    )
+    from address_parser_spark.operators.parse import _resolve_distinct, extract_normalize
+    from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
+
+    pages, _ = synth_pages_local(gaz, 30)
+    df = spark.createDataFrame(pages, PAGES_SCHEMA)
+    mentions = extract_normalize(df, alias_registries(gaz), carry_cols=["warc_ts"])
+    assert mentions.columns == [
+        "url", "warc_ts", "mention", "std", "std_basic", "det_p", "det_d", "det_w", "mid",
+    ]
+    assert not any(isinstance(f.dataType, T.ArrayType) for f in mentions.schema.fields)
+
+    nodes = build_nodes(gaz)
+    resolve = make_resolve_udf(spark, resolver_state(nodes, build_repair_state(gaz, nodes)))
+    kernel = _resolve_distinct(mentions.localCheckpoint(eager=True), resolve)
+    assert kernel.columns == ["mention", "std", *RESOLVE_SCHEMA.names]
+    plan = plan_of(kernel)
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+
+
 def test_driver_built_frames_are_local_table_scans(spark, gaz):
     """Frames built from driver rows (the gazetteer nodes, the ward
     mappings, the small-graph union-find output) must plan as Arrow-backed
