@@ -250,6 +250,16 @@ def _combined_score(inp: str, cand: str, use_partial_flag: bool) -> tuple[float,
     return base, part, wr, combined
 
 
+def _final_score(combined, boost, comps, has_ward, dice, new_bonus) -> float:
+    """The argmax's first key, summed left to right in one fixed order:
+    ``resolve_one`` evaluates it at ``combined = 100.0`` as the candidate's
+    upper bound, and at the real ``combined`` as its score."""
+    final = combined + boost + comps * 1.5 + has_ward * 1.0 + dice * 10.0
+    if new_bonus:
+        final += 1.5
+    return final
+
+
 def _street_and_entity(original: str, std: str, province, district, ward,
                        is_new=None) -> tuple[str, str]:
     """Street extraction + entity_std derivation (row-local core of the fused
@@ -320,8 +330,6 @@ RESOLVE_SCHEMA = T.StructType(
     ]
 )
 
-_SCORE_MEMO_CAP = 2_000_000
-
 
 def build_resolver_state(nodes: list[dict]) -> dict:
     """Driver-side: nodes → the resolve index: inverted gram postings over
@@ -365,8 +373,8 @@ def resolver_state(nodes: list[dict], repair_state: dict) -> dict:
 
 def decode_resolver_state(state: dict) -> dict:
     """Executor-side view of ``resolver_state``: the state plus this
-    worker's score and boost memos. ``LocalParser`` decodes the same way."""
-    return {**state, "score_memo": {}, "boost_memo": {}}
+    worker's component-boost memo. ``LocalParser`` decodes the same way."""
+    return {**state, "boost_memo": {}}
 
 
 def make_resolve_udf(spark, state: dict):
@@ -380,12 +388,13 @@ def make_resolve_udf(spark, state: dict):
     from ``std`` (:148-154), counter probe of the inverted index
     (inexus_parser.py:2670-2680), ``TOPK_CANDIDATES`` cap (:114),
     ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE`` score slice
-    (:2878), blend + boosts (:2885-2912), lexicographic argmax (:2926-2940),
-    the component-repair cascade (:186-403, textops.repair), street
+    (:2878), blend + boosts (:2885-2912), lexicographic argmax (:2926-2940)
+    — exact, but scored in descending upper-bound order and stopped once no
+    bound can beat the best (``_best_candidate``), so about 5% of the slice
+    is scored — the component-repair cascade (:186-403, textops.repair), street
     extraction on the repaired components, then the format tag and entity
-    key. Scores are memoized per worker process across batches keyed on
-    (std, cand_std, flag) — duplicate address strings across the corpus pay
-    once per worker.
+    key. Scores are not memoized: with about 1.2 candidates scored per
+    mention, a (std, cand_std) memo hit 1% of lookups and saved no time.
 
     Raises ``ValueError`` (from ``broadcast_state``) naming the pickled size
     and the node count when the state exceeds ``MAX_RESOLVER_STATE_BYTES``."""
@@ -428,11 +437,78 @@ SCORE_SLICE = 120      # candidates scored after prioritization (:2878)
 EARLY_BREAK = 200      # scan stops at the first gate failure past here (:2829-2831)
 
 
+def _best_candidate(st: dict, s: str, sb, partial_input: bool, dp, dd, dw,
+                    candidates: list) -> tuple | None:
+    """The argmax over ``candidates`` ((nid, dice) pairs, the score slice):
+    (nid, level, is_new, province, district, ward, p_code, d_code, w_code,
+    cand_std, final, combined, dice) of the candidate with the largest key
+    (final, combined, comps, has_ward, len(cand_std), -nid), or ``None``.
+    Exact but pruned: only the candidates that can still win are scored."""
+    attrs, boost_memo = st["attrs"], st["boost_memo"]
+    # Bound, order, stop. Every term of ``final`` but ``combined`` is cheap,
+    # and ``combined`` ≤ 100, so ``_final_score(100.0, …)`` bounds ``final``
+    # from above (same additions in the same order; IEEE addition is
+    # monotone). Candidates are scored in descending bound order and the
+    # scan stops at the first bound STRICTLY below the best ``final``: no
+    # later candidate can reach it, and a tie on ``final`` still goes to
+    # the rest of the key. The key is a total order (``-nid``), so the scan
+    # order cannot change the winner.
+    sb_in = sb if isinstance(sb, str) else s
+    bounded = []
+    for nid, dice in candidates:
+        attr = attrs[nid]
+        p_std, d_std, w_std = attr[8:11]
+        bkey = (dp, dd, dw, p_std, d_std, w_std)
+        boost = boost_memo.get(bkey)
+        if boost is None:
+            boost = (
+                _component_boost(w_std, dw, 18.0, 12.0, -12.0)
+                + _component_boost(d_std, dd, 14.0, 9.0, -10.0)
+                + _component_boost(p_std, dp, 6.0, 3.5, -4.0)
+            )
+            boost_memo[bkey] = boost
+        # containment runs on the BASIC string: advanced normalization drops
+        # stop-tokens that are part of real names ("Nhà Bè" → "be"), which
+        # would misfire the penalty on the correct candidate
+        boost -= _unsupported_penalty(sb_in, dp, dd, dw, p_std, d_std, w_std)
+        has_ward = int(attr[4] is not None)
+        comps = int(attr[2] is not None) + int(attr[3] is not None) + has_ward
+        # District-less input ⇒ the 2-level (new-format) reading is the
+        # structurally consistent one: without this, an order-reversed
+        # "Tỉnh P, Phường W" ties its old-format twin on every score term
+        # and the -node_id tiebreak silently picks old. 1.5 exactly offsets
+        # the 3-comp twin's comps advantage (digit ward/district twins like
+        # "1 1 ho chi minh" pass every containment check on a "Phường 1"
+        # input); never outweighs a detected district's boost.
+        terms = (boost, comps, has_ward, dice, bool(attr[1] and not dd))
+        bounded.append((_final_score(100.0, *terms), nid, terms))
+    bounded.sort(key=lambda b: -b[0])
+
+    best = None
+    best_key = None
+    for ub, nid, terms in bounded:
+        if best_key is not None and ub < best_key[0]:
+            break
+        (level, is_new, province, district, ward, p_code, d_code, w_code,
+         _p, _d, _w, cand_std) = attrs[nid]
+        combined = _combined_score(s, cand_std, partial_input)[3]
+        final = _final_score(combined, *terms)
+        _boost, comps, has_ward, dice, _new = terms
+        key = (final, combined, comps, has_ward, len(cand_std), -nid)
+        if best_key is None or key > best_key:
+            best_key = key
+            best = (nid, level, is_new, province, district, ward,
+                    p_code, d_code, w_code, cand_std, final, combined, dice)
+    return best
+
+
 def resolve_one(st: dict, m, s, sb, dp, dd, dw) -> tuple | None:
     """The one definition of a resolved mention: (mention, std, std_basic,
     det_p, det_d, det_w) — ``mention_features``' row — through gram set →
-    probe → cap → gate → prioritize → score → argmax → repair → street →
+    probe → cap → gate → prioritize → bounded score → argmax → repair → street →
     format tag and entity key. ``st`` is ``decode_resolver_state``'s view.
+    The argmax equals scoring the whole slice; it scores only the
+    candidates whose upper bound can still beat the best (``_best_candidate``).
     Pure function run by the Arrow kernel and by ``LocalParser``
     (plans.local_parser); returns the finished RESOLVE_SCHEMA tuple, or
     ``None`` for a mention that resolves to nothing. Mirrors the
@@ -459,9 +535,8 @@ def resolve_one(st: dict, m, s, sb, dp, dd, dw) -> tuple | None:
     if not gset:
         return None
     partial_input = partial_flag(s)
-    idx_all, idx_primary, n_primary, attrs, inv = (
-        st["idx_all"], st["idx_primary"], st["n_primary"], st["attrs"], st["inv"])
-    score_memo, boost_memo = st["score_memo"], st["boost_memo"]
+    idx_all, idx_primary, n_primary, inv = (
+        st["idx_all"], st["idx_primary"], st["n_primary"], st["inv"])
     # detected values must exist as alias keys at their level (reference
     # _validate_detected_value, :1900-1905)
     dp = dp if dp and dp in inv["province"] else None
@@ -508,51 +583,7 @@ def resolve_one(st: dict, m, s, sb, dp, dd, dw) -> tuple | None:
         if prioritized:
             filtered = prioritized + [e for e in filtered if e[0] not in pf]
 
-    best = None
-    best_key = None
-    for nid, dice in filtered[:SCORE_SLICE]:
-        (level, is_new, province, district, ward, p_code, d_code, w_code,
-         p_std, d_std, w_std, cand_std) = attrs[nid]
-        skey = (s, cand_std, partial_input)
-        scores = score_memo.get(skey)
-        if scores is None:
-            if len(score_memo) > _SCORE_MEMO_CAP:
-                score_memo.clear()
-            scores = _combined_score(s, cand_std, partial_input)
-            score_memo[skey] = scores
-        combined = scores[3]
-        bkey = (dp, dd, dw, p_std, d_std, w_std)
-        boost = boost_memo.get(bkey)
-        if boost is None:
-            boost = (
-                _component_boost(w_std, dw, 18.0, 12.0, -12.0)
-                + _component_boost(d_std, dd, 14.0, 9.0, -10.0)
-                + _component_boost(p_std, dp, 6.0, 3.5, -4.0)
-            )
-            boost_memo[bkey] = boost
-        # containment runs on the BASIC string: advanced normalization drops
-        # stop-tokens that are part of real names ("Nhà Bè" → "be"), which
-        # would misfire the penalty on the correct candidate
-        boost -= _unsupported_penalty(
-            sb if isinstance(sb, str) else s, dp, dd, dw, p_std, d_std, w_std
-        )
-        comps = int(province is not None) + int(district is not None) + int(ward is not None)
-        has_ward = int(ward is not None)
-        final = combined + boost + comps * 1.5 + has_ward * 1.0 + dice * 10.0
-        # District-less input ⇒ the 2-level (new-format) reading is the
-        # structurally consistent one: without this, an order-reversed
-        # "Tỉnh P, Phường W" ties its old-format twin on every score term
-        # and the -node_id tiebreak silently picks old. 1.5 exactly offsets
-        # the 3-comp twin's comps advantage (digit ward/district twins like
-        # "1 1 ho chi minh" pass every containment check on a "Phường 1"
-        # input); never outweighs a detected district's boost.
-        if is_new and not dd:
-            final += 1.5
-        key = (final, combined, comps, has_ward, len(cand_std), -nid)
-        if best_key is None or key > best_key:
-            best_key = key
-            best = (nid, level, is_new, province, district, ward,
-                    p_code, d_code, w_code, cand_std, final, combined, dice)
+    best = _best_candidate(st, s, sb, partial_input, dp, dd, dw, filtered[:SCORE_SLICE])
     nid, level, is_new, province, district, ward, p_code, d_code, w_code, \
         cand_std, final, combined, dice = best or (None,) * 13
     province, district, ward, p_code, d_code, w_code = repair_components(

@@ -28,6 +28,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
+from address_parser_spark.operators.pairs import canon_col, digit_sig_col
 from address_parser_spark.session import local_frame
 
 MAX_ITERATIONS = 30
@@ -173,17 +174,20 @@ def cluster_mentions(
     extra_edges: Optional[DataFrame] = None,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
 ) -> DataFrame:
-    """Mention clustering with entity-anchor stars (+ optional pair edges).
+    """Mention clustering over two exact-string stars (+ optional edges).
 
-    Same-entity mentions are linked by an exact-string star: every row
-    points at the smallest ``mid`` sharing its anchor — a star, not a
-    clique: n-1 edges per entity instead of n(n-1)/2, which is what keeps
-    hot entities ("ha noi") from exploding the edge list at web scale. The
-    anchor is compared as strings inside a window partition, never hashed
-    into a vertex: the only vertices are ``mid``s, so two entities whose
-    keys share a 64-bit hash cannot merge and no key can pull in a foreign
-    mention. ``extra_edges`` (e.g. the pair stage's string edges) are
-    unioned in.
+    Every row points at the smallest ``mid`` sharing its entity anchor, and
+    at the smallest ``mid`` sharing its ``(canon, digit_sig)`` string
+    (``operators.pairs.canon_col``/``digit_sig_col``) — stars, not
+    cliques: n-1 edges per group instead of n(n-1)/2, which is what keeps
+    hot entities ("ha noi") from exploding the edge list at web scale. Both
+    are window ``min``s: groups are compared as strings inside a window
+    partition, never hashed into a vertex, and no group holds a list, so a
+    string repeated 10^5 times is one spillable window partition. The only
+    vertices are ``mid``s: two groups whose strings share a 64-bit hash
+    cannot merge, and no group can pull in a foreign mention. No group size
+    is capped, so the components are exactly ``plans/er_oracle.py``'s.
+    ``extra_edges`` are unioned in; the pipeline passes none.
 
     Returns ``resolved`` plus ``cluster_id``, the smallest ``mid`` of the
     row's component.
@@ -202,11 +206,14 @@ def cluster_mentions(
     # (plans.er_oracle tags the two anchor kinds the same way).
     pinned = F.col("ward").isNotNull() & F.col("ward_code").isNotNull()
     salt = F.when(~pinned, F.col("entity_std"))
-    anchors = resolved.select(
-        F.col("mid").alias("src"),
-        F.min("mid").over(Window.partitionBy("entity_key", salt)).alias("dst"),
-    )
-    edges = anchors if extra_edges is None else anchors.unionAll(extra_edges)
+    src = F.col("mid").alias("src")
+    edges = resolved.select(
+        src, F.min("mid").over(Window.partitionBy("entity_key", salt)).alias("dst")
+    ).unionAll(resolved.select(
+        src, F.min("mid").over(Window.partitionBy(canon_col(), digit_sig_col())).alias("dst")
+    ))
+    if extra_edges is not None:
+        edges = edges.unionAll(extra_edges)
     assignments = connected_components(edges, checkpoint_fn=checkpoint_fn)
     return (
         resolved.join(assignments, resolved["mid"] == assignments["id"], "left")

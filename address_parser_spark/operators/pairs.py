@@ -1,22 +1,25 @@
-"""Mention↔mention string edges: blocking keys, then equality star edges.
+"""Mention↔mention string identity: the clustering signature, and the
+blocking keys that evaluation reads.
 
-The pair stage of the north_star. ``with_blocking_keys`` attaches ``canon``
-(the entity-canonical string), ``digit_sig`` (the must-match digit/format
-signature) and ``keys`` (sorted-token, glued, initials and MinHash-LSH band
-keys — all JVM-side, functions.columns). ``equality_edges`` links mentions
-with IDENTICAL ``(canon, digit_sig)`` that share a blocking key of at most
-``max_block`` members; ``operators.cluster`` takes the connected components
-of these edges plus the entity-key anchors.
+``canon_col`` (the entity-canonical string) and ``digit_sig_col`` (the
+must-match digit/format signature) are the one definition of the string
+star: ``operators.cluster.cluster_mentions`` links every mention to the
+smallest ``mid`` of its exact ``(canon, digit_sig)`` group, which is
+``plans/er_oracle.py``'s string-edge rule.
 
 Only exact string identity makes an edge. Looser rules were measured and
 rejected: overlap-coefficient ≥1 merges subset token sets ("tan thuan …" ⊂
 "thanh tan thuan …" = adjacent wards), and Jaro-Winkler on sorted strings
 inflates on long shared prefixes — both crater precision at the F1≥0.99 bar.
 
-Block-size cap: a key shared by more than ``max_block`` mention rows links
-nothing (classic ER practice and the moral equivalent of the reference's TOPK
-cap, inexus_parser.py:114). Dropped keys are counted by ``dropped_blocks``,
-not silently ignored.
+``with_blocking_keys`` attaches ``canon``, ``digit_sig`` and ``keys``
+(sorted-token, glued, initials and MinHash-LSH band keys — all JVM-side,
+functions.columns); ``operators.eval.labeled_pairs`` builds its precision
+surface from mention pairs that share a key. ``equality_edges`` (the same
+star, restricted to groups with a blocking key of at most ``max_block``
+members), ``dropped_blocks`` and ``DEFAULT_MAX_BLOCK`` are off the pipeline
+path: the pipeline builds no keys and applies no cap. They stay only because
+the benchmark's traced path (``perfbench/workloads.py``) imports them.
 """
 
 from __future__ import annotations
@@ -32,6 +35,44 @@ from address_parser_spark.functions.columns import (
 )
 
 DEFAULT_MAX_BLOCK = 64
+
+
+def canon_col():
+    """The entity-canonical string: the sorted distinct tokens of
+    ``entity_std``. CANON keeps the full token set (precision: generic words
+    like "thanh"/"xa" are also real name syllables — "Thạnh Xá" must not
+    collapse onto a sibling ward)."""
+    return F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("entity_std"), " "))))
+
+
+def digit_sig_col():
+    """Must-match signature for string edges: the resolved FORMAT tag (a
+    post-merger new-format ward and its old-format twin share every
+    component name — only is_new separates the entities) plus ROLE-TAGGED
+    digits. Raw std digits are type-stripped, so "quận 4 phường 12" and
+    "phường 4, quận 12" carry the same digit sequence and bridge two
+    different entities; when the resolver assigned components, their
+    per-role digits disambiguate. Fully unresolved mentions fall back to the
+    std digit sequence (only comparable against other unresolved mentions —
+    the coalesced role slots make the two shapes never collide). Digit
+    tokens come from the FULL normalized mention in ORIGINAL order: "phuong 3
+    quan 10" vs "phuong 10 quan 3" share a sorted token set but are
+    different entities, and when street extraction leaves digits behind the
+    entity_std can degenerate (to just the province)."""
+    fmt = F.coalesce(F.col("format"), F.lit("?"))
+    return F.when(
+        F.col("district").isNotNull() | F.col("ward").isNotNull(),
+        F.concat_ws(
+            "|", fmt, F.lit("r"),
+            F.coalesce(F.col("district"), F.lit("")),
+            F.coalesce(F.col("ward"), F.lit("")),
+        ),
+    ).otherwise(
+        F.concat_ws(
+            "|", fmt, F.lit("u"),
+            F.concat_ws(" ", F.filter(F.split(F.col("std"), " "), lambda t: t.rlike("^[0-9]+$"))),
+        )
+    )
 
 
 def with_blocking_keys(mentions: DataFrame) -> DataFrame:
@@ -51,62 +92,21 @@ def with_blocking_keys(mentions: DataFrame) -> DataFrame:
       typos / partial token agreement.
     """
     # KEY tokens drop generic unit words (recall: typed vs untyped renderings
-    # share keys); CANON keeps the full token set (precision: generic words
-    # like "thanh"/"xa" are also real name syllables — "Thạnh Xá" must not
-    # collapse onto a sibling ward). Keys may over-group; edges must not.
+    # share keys); ``canon_col`` keeps the full token set. Keys may
+    # over-group; edges must not.
     #
     # The token pipeline is staged through real columns: a Column is an
     # expression TREE, so composing the canonical-tokens (or ngram-hash)
     # expression directly into the 30 per-band minhash lambdas pastes and
     # re-evaluates it once PER BAND PER ROW (measured 46 s vs 0.5 s on 4.7k
     # rows for the tokens; ~180 CPU-s for the ngram generation at 11k rows).
-    # Digit tokens come from the FULL normalized mention in ORIGINAL order:
-    # "phuong 3 quan 10" vs "phuong 10 quan 3" share a sorted token set but
-    # are different entities, and when street extraction leaves digits behind
-    # the entity_std can degenerate (to just the province) — the edge rule
-    # requires digit_sig equality on top of canon equality.
     staged = (
         mentions
         .withColumn("_key_toks", canonical_tokens_col(F.col("entity_std")))
         .withColumn("_key_str", F.concat_ws(" ", F.col("_key_toks")))
         .withColumn("_key_ghash", gram_hash_col(char_ngrams_col(F.col("_key_str"))))
-        .withColumn(
-            "canon",
-            F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.col("entity_std"), " ")))),
-        )
-        .withColumn(
-            "digit_sig",
-            # must-match signature for string edges: the resolved FORMAT tag
-            # (a post-merger new-format ward and its old-format twin share
-            # every component name — only is_new separates the entities) plus
-            # ROLE-TAGGED digits. Raw std digits are type-stripped, so
-            # "quận 4 phường 12" and "phường 4, quận 12" carry the same digit
-            # sequence and bridge two different entities; when the resolver
-            # assigned components, their per-role digits disambiguate. Fully
-            # unresolved mentions fall back to the std digit sequence (only
-            # comparable against other unresolved mentions — the coalesced
-            # role slots make the two shapes never collide).
-            F.when(
-                F.col("district").isNotNull() | F.col("ward").isNotNull(),
-                F.concat_ws(
-                    "|",
-                    F.coalesce(F.col("format"), F.lit("?")),
-                    F.lit("r"),
-                    F.coalesce(F.col("district"), F.lit("")),
-                    F.coalesce(F.col("ward"), F.lit("")),
-                ),
-            ).otherwise(
-                F.concat_ws(
-                    "|",
-                    F.coalesce(F.col("format"), F.lit("?")),
-                    F.lit("u"),
-                    F.concat_ws(
-                        " ",
-                        F.filter(F.split(F.col("std"), " "), lambda t: t.rlike("^[0-9]+$")),
-                    ),
-                ),
-            ),
-        )
+        .withColumn("canon", canon_col())
+        .withColumn("digit_sig", digit_sig_col())
     )
     return (
         staged

@@ -104,14 +104,11 @@ def _resolve_distinct(mentions: DataFrame, resolve) -> DataFrame:
     uniq = mentions.dropDuplicates(["mention"]).select(*args)
     return (
         uniq
-        # Distinct mentions sharing a normalized std (street-level
-        # variants of one entity) score against the same candidates; the
-        # kernel memoizes (std, cand_std) per worker process, so
-        # co-locating equal stds makes the memo hit rate match a global
-        # memo (measured 1.75×→~6× effective speedup at 8 workers).
         # EXPLICIT partition count: this stage is python-CPU-bound but
         # tiny in bytes — AQE's byte-driven coalescing would serialize it
-        # (an explicit repartition count is never AQE-coalesced).
+        # (an explicit repartition count is never AQE-coalesced). The
+        # ``std`` key only spreads rows: no kernel state depends on which
+        # mentions share a task.
         .repartition(2 * mentions.sparkSession.sparkContext.defaultParallelism, F.col("std"))
         # explode(udf) plants a GENERATOR between the kernel and the
         # downstream projection: without it Catalyst's python-UDF
@@ -147,8 +144,8 @@ def resolve_mentions(
     ``broadcast_state`` refuses a state over its byte budget rather than
     shipping it. One fused Arrow kernel per distinct mention probes it
     map-side, so no catalog row is ever shuffled — the only exchanges before
-    the fact join move distinct mentions (the dedup and the ``std``
-    co-location), the shape SURVEY §3.2 calls "embarrassingly parallel".
+    the fact join move distinct mentions (the dedup and the kernel's
+    repartition), the shape SURVEY §3.2 calls "embarrassingly parallel".
     ``LocalParser`` runs the same ``resolve_one`` per string — format tag,
     entity key and the unresolved rule included — and is the reference the
     ER fixture pins.

@@ -1,15 +1,16 @@
 """Straight-line local oracle for the flagship ER pipeline.
 
 The distributed dataflow — extraction explode, distinct-mention resolve,
-fact join, blocking keys, string edges, connected components — must
-reproduce this single-process computation exactly:
+fact join, the two string stars, connected components — must reproduce
+this single-process computation exactly:
 
 - per-(url, mention) components via ``LocalParser`` (the same pure functions
   the Arrow kernel runs — parity by construction for resolution, so any
   mismatch isolates a DISTRIBUTED-plumbing bug);
 - clustering via a plain union-find over the same edge semantics: entity-key
   anchors (entity_std-salted when the ward isn't code-pinned) plus
-  identical-(canon, dsig) string edges (operators.pairs / operators.cluster).
+  identical-(canon, dsig) string edges (operators.pairs / operators.cluster;
+  the pipeline caps no group, so the partitions agree exactly).
 
 Deterministic for a fixed (seed, n_pages); no dependence on partitioning.
 ``scripts/gen_er_expected.py`` freezes the output into
@@ -24,7 +25,7 @@ import json
 
 
 def role_dsig(fmt, district, ward, std: str) -> str:
-    """Mirror pairs.with_blocking_keys digit_sig (role-tagged)."""
+    """Mirror ``operators.pairs.digit_sig_col`` (role-tagged)."""
     if district is not None or ward is not None:
         return "|".join([fmt or "?", "r", district or "", ward or ""])
     digits = " ".join(t for t in std.split() if t.isdigit())

@@ -1,10 +1,12 @@
 """The entity-resolution pipeline (SURVEY §7), resumable.
 
 pages → (1) extract+normalize → (2) resolve each distinct mention against the
-broadcast gazetteer (one fused Arrow kernel: probe/gate/score/argmax/repair/
-street, ``operators.parse.resolve_mentions``) → (3) blocking keys →
-(4) equality edges → (5) connected components → clusters, plus the old→new
-ward-code mapping when the gazetteer carries one.
+broadcast gazetteer (one fused Arrow kernel: probe/gate/bounded score/argmax/
+repair/street, ``operators.parse.resolve_mentions``) → (3) connected
+components over two exact-string stars, the entity anchor and the identical
+``(canon, digit_sig)`` group (``operators.cluster.cluster_mentions``; no
+blocking keys, no cap) → clusters, plus the old→new ward-code mapping when
+the gazetteer carries one.
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -14,7 +16,7 @@ locally, Iceberg table on a real cluster) with lineage records: ``resolved``,
 the Python resolve kernel's output, and ``clustered``, the result. The store
 is bound to a fingerprint of the pages and the gazetteer. A rerun on the same
 input reads committed snapshots back, so a resume re-runs only the JVM-only
-keys/edges/CC; a rerun on another input raises ``ValueError``.
+string stars and CC; a rerun on another input raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -34,7 +36,6 @@ from address_parser_spark.gazetteer.nodes import (
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
 from address_parser_spark.operators.cluster import cluster_mentions
-from address_parser_spark.operators.pairs import equality_edges, with_blocking_keys
 from address_parser_spark.operators.parse import resolve_mentions
 from address_parser_spark.sources.lineage import StageStore
 
@@ -120,9 +121,9 @@ def run_pipeline(
     # ArrowEvalPython.
     build_resolved = lambda: resolve_mentions(pages, nodes, registries, repair_state=repair_state)
 
-    # ``resolved`` feeds three downstream branches (keys, anchors, final
-    # join) and must be materialized exactly once: a durable snapshot when a
-    # store is attached, else an eager localCheckpoint. localCheckpoint
+    # ``resolved`` feeds three downstream branches (the two stars and the
+    # final join) and must be materialized exactly once: a durable snapshot
+    # when a store is attached, else an eager localCheckpoint. localCheckpoint
     # rather than persist: it materializes once AND truncates the logical
     # plan to an RDD scan. Persisted frames with UDF-heavy plans make every
     # subsequent query pay driver-side plan canonicalization against the
@@ -141,14 +142,15 @@ def run_pipeline(
         else store.run_stage("resolved", build_resolved)
     )
 
-    # Keys, edges and CC are JVM-only and cheap next to the resolve kernel,
-    # so they stay lazy single-consumer calls and a resume recomputes them.
+    # The two string stars and CC are JVM-only and cheap next to the resolve
+    # kernel, so they stay a lazy single-consumer call and a resume
+    # recomputes them. No blocking keys and no cap: clustering reads the
+    # resolved strings directly.
     def build_clusters() -> DataFrame:
-        edges = equality_edges(with_blocking_keys(resolved))
         checkpoint_fn = None
         if store is not None:
             checkpoint_fn = lambda df, it: store.write(df, f"cc_iter_{it + 1:03d}")
-        return cluster_mentions(resolved, extra_edges=edges, checkpoint_fn=checkpoint_fn)
+        return cluster_mentions(resolved, checkpoint_fn=checkpoint_fn)
 
     clustered = build_clusters() if store is None else store.run_stage("clustered", build_clusters)
     if gaz.ward_mappings:

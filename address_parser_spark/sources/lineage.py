@@ -8,8 +8,8 @@ this container has no Iceberg runtime jar, so the store abstracts the sink.
 A lineage record per stage captures rows, wall time, and per-file
 (≈ per-partition) sizes; ``run_stage`` skips any stage whose snapshot is
 already committed (``_SUCCESS``), which is the resume contract: kill the job
-after ``resolved``, rerun, and only the JVM-only keys/edges/CC are recomputed
-(tested in tests/test_pipeline_e2e.py).
+after ``resolved``, rerun, and only the JVM-only string stars and CC are
+recomputed (tested in tests/test_pipeline_e2e.py).
 
 A store is tied to one input: ``bind_input`` records a fingerprint of it with
 the first snapshot, and resuming or writing under a different fingerprint

@@ -125,11 +125,8 @@ def partial_ratio(a: str, b: str) -> float:
     return best
 
 
-@lru_cache(maxsize=65536)
 def _token_sorted(s: str) -> str:
     return " ".join(sorted(s.split()))
-
-
 
 
 def token_sort_ratio(a: str, b: str) -> float:
@@ -159,9 +156,8 @@ def wratio(a: str, b: str) -> float:
     base = indel_ratio(a, b)
     la, lb = len(a), len(b)
     len_ratio = max(la, lb) / max(min(la, lb), 1)
-    token = max(token_sort_ratio(a, b), token_set_ratio(a, b))
     if len_ratio < 1.5:
-        return max(base, token * 0.95)
+        return max(base, max(token_sort_ratio(a, b), token_set_ratio(a, b)) * 0.95)
     # NOTE: a char-count upper-bound prune of the two partial scans was tried
     # and removed — blocking-derived candidate pairs share most of their
     # characters by construction, so the bound almost never fired and its

@@ -19,8 +19,8 @@ Without ``--gazetteer`` a deterministic synthetic catalog is used (tests /
 smoke runs; no external data).
 
 This is the distributed form of the reference's bulk pipeline
-(ner/build_real_dataset.py:159-247 — per-row parser.process loop) plus the
-explicit blocking/pair/cluster stages (SURVEY §3.2, §7).
+(ner/build_real_dataset.py:159-247 — per-row parser.process loop) plus an
+explicit clustering stage over exact-string stars (SURVEY §3.2, §7).
 """
 
 from __future__ import annotations

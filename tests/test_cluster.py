@@ -125,25 +125,116 @@ def test_unconverged_loop_raises(spark, monkeypatch):
 
 def test_entity_anchors_compare_strings_not_hashes(spark, monkeypatch):
     """With every 64-bit hash colliding, ``cluster_mentions`` still groups by
-    the anchor strings: rows sharing a ward-pinned entity key cluster, and
-    rows sharing a district-level key cluster only with an equal entity_std.
-    Anchors hashed into vertices would merge all five rows."""
+    the anchor and string-star strings: rows sharing a ward-pinned entity key
+    cluster, rows sharing a district-level key cluster only with an equal
+    entity_std, and rows with different keys cluster when their
+    ``(canon, digit_sig)`` strings are equal — but not when only ``canon``
+    is. Anchors or strings hashed into vertices would merge every row."""
     from pyspark.sql import functions as F
 
     from address_parser_spark.operators.cluster import cluster_mentions
 
     resolved = spark.createDataFrame(
         [
-            # (mid, ward, ward_code, entity_key, entity_std)
-            (1, "W", "001", "01|010|001|false", "w d p"),   # pinned key A
-            (2, "W", "001", "01|010|001|false", "w d p"),
-            (3, "V", "002", "01|010|002|false", "v d p"),   # pinned key B
-            (4, None, None, "01|010||false", "x d p"),      # district key, salted
-            (5, None, None, "01|010||false", "y d p"),
+            # (mid, ward, ward_code, entity_key, entity_std, std, district, format)
+            (1, "W", "001", "01|010|001|false", "w d p", "w d p", "D", "old"),  # pinned key A
+            (2, "W", "001", "01|010|001|false", "w d p", "w d p", "D", "old"),
+            (3, "V", "002", "01|010|002|false", "v d p", "v d p", "D", "old"),  # pinned key B
+            (4, None, None, "01|010||false", "x d p", "x d p", "D", "old"),     # district key, salted
+            (5, None, None, "01|010||false", "y d p", "y d p", "D", "old"),
+            # different pinned keys, equal (canon, digit_sig): one cluster
+            (6, "Z", "006", "01|010|006|false", "z d p", "z d p", "D", "old"),
+            (7, "Z", "007", "01|010|007|false", "p d z", "d z p", "D", "old"),
+            # different keys, equal canon, digits 3 vs 4 in std: two clusters
+            (8, None, None, "01|||false", "ha noi", "phuong 3 ha noi", None, "old"),
+            (9, None, None, "02|||false", "ha noi", "phuong 4 ha noi", None, "old"),
         ],
-        "mid long, ward string, ward_code string, entity_key string, entity_std string",
+        "mid long, ward string, ward_code string, entity_key string, entity_std string, "
+        "std string, district string, format string",
     ).localCheckpoint(eager=True)
     monkeypatch.setattr(F, "xxhash64", lambda *cols: F.lit(0).cast("long"))
 
     got = {r["mid"]: r["cluster_id"] for r in cluster_mentions(resolved).collect()}
-    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 5}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 5, 6: 6, 7: 6, 8: 8, 9: 9}
+
+
+def _one_string_frame(spark, n: int):
+    """``n`` ward-pinned rows with ``n`` distinct entity keys that share one
+    ``(canon, digit_sig)``: only the string star can link them."""
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.col("id").alias("mid"),
+        F.lit("https://x.vn/p").alias("url"),
+        F.concat(F.lit("Phường Tân Định "), F.col("id").cast("string")).alias("mention"),
+        F.lit("tan dinh 1 ho chi minh").alias("std"),
+        F.lit("Hồ Chí Minh").alias("province"),
+        F.lit("Quận 1").alias("district"),
+        F.lit("Tân Định").alias("ward"),
+        F.format_string("%05d", F.col("id")).alias("ward_code"),
+        F.lit(False).alias("is_new"),
+        F.lit("old").alias("format"),
+        F.format_string("79|760|%05d|false", F.col("id")).alias("entity_key"),
+        F.lit("tan dinh quan 1 ho chi minh").alias("entity_std"),
+    ).localCheckpoint(eager=True)
+
+
+def _pipeline_clusters(spark, gaz, monkeypatch, resolved, seen_edges=None):
+    """``run_pipeline`` with the resolve stage replaced by ``resolved``, so
+    the clustering it runs is exactly the pipeline's. ``seen_edges``
+    collects the CC input frames."""
+    from address_parser_spark.operators import cluster
+    from address_parser_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "resolve_mentions", lambda *a, **k: resolved)
+    if seen_edges is not None:
+        cc = cluster.connected_components
+
+        def recording(edges, **kwargs):
+            seen_edges.append(edges)
+            return cc(edges, **kwargs)
+
+        monkeypatch.setattr(cluster, "connected_components", recording)
+    pages = spark.createDataFrame([], "url string, text string")
+    return pipeline.run_pipeline(spark, pages, gaz)
+
+
+def test_pipeline_clusters_without_a_block_cap(spark, gaz, monkeypatch):
+    """70 rows with 70 distinct entity keys share one ``(canon,
+    digit_sig)``; ``plans/er_oracle`` links them into one cluster, so the
+    pipeline must too. A blocking-key cap of 64 members dropped every key
+    of this group and left 70 singletons."""
+    resolved = _one_string_frame(spark, 70)
+    out = _pipeline_clusters(spark, gaz, monkeypatch, resolved)
+    rows = out.select("mid", "cluster_id").collect()
+    assert len(rows) == 70
+    assert {r["cluster_id"] for r in rows} == {0}
+
+
+def test_pipeline_clustering_plans_no_generate_or_collect_set(spark, gaz, monkeypatch):
+    """The pipeline's CC input and its clustered output plan no
+    ``Generate`` (no exploded key array) and no ``collect_set`` (no
+    per-group list)."""
+    seen: list = []
+    out = _pipeline_clusters(spark, gaz, monkeypatch, _one_string_frame(spark, 8), seen)
+    assert len(seen) == 1
+    for df in (seen[0], out):
+        plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        assert "Generate" not in plan, plan
+        assert "collect_set" not in plan, plan
+
+
+def test_one_string_repeated_1e5_times_is_one_cluster(spark):
+    """10^5 rows of one ``(canon, digit_sig)`` with distinct entity keys:
+    the string star holds no per-group list and returns one cluster."""
+    from pyspark.sql import functions as F
+
+    from address_parser_spark.operators.cluster import cluster_mentions
+
+    n = 100_000
+    out = cluster_mentions(_one_string_frame(spark, n))
+    got = out.agg(F.count(F.lit(1)).alias("n"), F.countDistinct("cluster_id").alias("c"),
+                  F.max("cluster_id").alias("m")).first()
+    assert (got["n"], got["c"], got["m"]) == (n, 1, 0)

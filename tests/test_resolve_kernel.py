@@ -9,7 +9,12 @@ and decoder (``decode_resolver_state``). The broadcast budget is checked on
 the driver by ``broadcast_state`` before anything ships.
 """
 
+import json
+from pathlib import Path
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
 
 from address_parser_spark.functions import udfs
 from address_parser_spark.functions.udfs import (
@@ -123,3 +128,96 @@ def test_resolve_mentions_drops_unresolvable_mentions(spark, gaz):
     nodes = build_nodes(gaz)
     resolved = resolve_mentions(pages, nodes, registries, build_repair_state(gaz, nodes))
     assert resolved.count() == 0
+
+
+def _exhaustive_best(st, s, sb, partial_input, dp, dd, dw, candidates):
+    """The argmax with no pruning, the oracle for ``udfs._best_candidate``:
+    every candidate of the score slice is scored, in slice order."""
+    best = best_key = None
+    for nid, dice in candidates:
+        (level, is_new, province, district, ward, p_code, d_code, w_code,
+         p_std, d_std, w_std, cand_std) = st["attrs"][nid]
+        combined = udfs._combined_score(s, cand_std, partial_input)[3]
+        boost = (
+            udfs._component_boost(w_std, dw, 18.0, 12.0, -12.0)
+            + udfs._component_boost(d_std, dd, 14.0, 9.0, -10.0)
+            + udfs._component_boost(p_std, dp, 6.0, 3.5, -4.0)
+        )
+        boost -= udfs._unsupported_penalty(
+            sb if isinstance(sb, str) else s, dp, dd, dw, p_std, d_std, w_std
+        )
+        comps = int(province is not None) + int(district is not None) + int(ward is not None)
+        has_ward = int(ward is not None)
+        final = combined + boost + comps * 1.5 + has_ward * 1.0 + dice * 10.0
+        if is_new and not dd:
+            final += 1.5
+        key = (final, combined, comps, has_ward, len(cand_std), -nid)
+        if best_key is None or key > best_key:
+            best_key = key
+            best = (nid, level, is_new, province, district, ward,
+                    p_code, d_code, w_code, cand_std, final, combined, dice)
+    return best
+
+
+def _distinct_mention_features(gaz) -> list[tuple]:
+    """``mention_features`` rows of every distinct mention of four 400-page
+    synthetic corpora, then of the golden-450 inputs."""
+    from address_parser_spark.sources.pages import synth_pages_local
+    from address_parser_spark.textops.extract import extract_mentions
+
+    regs = decode_registries(alias_registries(gaz))
+    texts = []
+    for seed in (1001, 7, 42, 2001):
+        pages, _ = synth_pages_local(gaz, 400, seed=seed)
+        texts += [m for _u, _ts, _h, text, lang in pages if lang == "vi" and text
+                  for m in extract_mentions(text)]
+    golden = Path(__file__).parent / "fixtures" / "parse_golden.json"
+    texts += [c["text"] for c in json.loads(golden.read_text(encoding="utf-8"))["cases"]]
+    feats = (mention_features(t, regs, {}) for t in dict.fromkeys(texts))
+    return [f for f in feats if len(f[1]) >= 2]
+
+
+def test_pruned_argmax_equals_exhaustive_scan(gaz, monkeypatch):
+    """The bound-ordered, early-stopping argmax returns the same finished
+    row as scoring the whole slice, on every distinct mention of four
+    synthetic corpora and the golden-450 inputs, while scoring a small
+    fraction of the slice."""
+    nodes = build_nodes(gaz)
+    state = resolver_state(nodes, build_repair_state(gaz, nodes))
+    feats = _distinct_mention_features(gaz)
+    assert len(feats) > 2000
+
+    scored = [0]
+    combined_score = udfs._combined_score
+
+    def counting(*args):
+        scored[0] += 1
+        return combined_score(*args)
+
+    monkeypatch.setattr(udfs, "_combined_score", counting)
+    st = decode_resolver_state(state)
+    pruned = [resolve_one(st, *f) for f in feats]
+    n_scored = scored[0]
+
+    sliced = [0]
+
+    def exhaustive(st, s, sb, partial_input, dp, dd, dw, candidates):
+        sliced[0] += len(candidates)
+        return _exhaustive_best(st, s, sb, partial_input, dp, dd, dw, candidates)
+
+    monkeypatch.setattr(udfs, "_best_candidate", exhaustive)
+    st = decode_resolver_state(state)
+    for f, got in zip(feats, pruned):
+        assert got == resolve_one(st, *f), f[0]
+    assert sum(row is not None for row in pruned) > 1500
+    assert n_scored < 0.15 * sliced[0], (n_scored, sliced[0])
+
+
+_address_text = hst.text(alphabet="abhn tđàá01", max_size=40)
+
+
+@settings(max_examples=400, deadline=None)
+@given(_address_text, _address_text, hst.booleans())
+def test_combined_score_is_at_most_100(a, b, flag):
+    """The pruned argmax bounds ``final`` by taking ``combined`` = 100."""
+    assert udfs._combined_score(a, b, flag)[3] <= 100.0
