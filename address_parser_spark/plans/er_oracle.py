@@ -133,21 +133,15 @@ def local_er_expected(gaz, n_pages: int, seed: int = 42):
 
 _ROW_FIELDS = ("province", "district", "ward", "street_address", "format", "entity_key")
 
-# Full driver-oracle row shape: everything the flagship query emits. Cluster
-# labels are implementation-defined, so the comparable form replaces them
-# with ``cluster_rep`` — the lexicographically smallest "url\nmention" member
-# of the cluster (UTF-8 byte order == code-point order, so Spark's min() and
-# Python's min() agree).
-_DRIVER_FIELDS = (
-    "url", "mention", "std", "province", "district", "ward",
-    "street_address", "format", "entity_key", "cluster_rep",
-)
-
-
 def expected_to_driver_rows(rows: dict, partition) -> list[dict]:
     """Canonical per-mention records in the flagship query's exact column
     shape (sorted by (url, mention)) — the JSONL fixture the driver's DuckDB
-    oracle reads back for a rows+schema+hash comparison."""
+    oracle reads back for a rows+schema+hash comparison.
+
+    Cluster labels are implementation-defined, so each row carries
+    ``cluster_rep`` instead: the smallest ``"url\nmention"`` member of its
+    cluster. UTF-8 byte order equals code-point order, so Spark's ``min()``
+    and Python's ``min()`` pick the same member."""
     rep_of: dict = {}
     for cluster in partition:
         rep = min(f"{url}\n{mention}" for url, mention in cluster)

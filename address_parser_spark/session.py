@@ -5,6 +5,11 @@ One place to encode the engine's execution posture: AQE on (runtime skew-join
 splitting + partition coalescing), Arrow exchange for pandas UDFs, bounded
 shuffle partitions for local runs. On a real cluster these are spark-submit
 confs; the factory only fills in what is unset so cluster configs win.
+
+On a local master a new session also runs two one-time warm-ups: it spawns
+the Python worker pool, and it loads the Catalyst expression classes and
+ICU's case-mapping tables from one thread. The first real job of a process
+then pays neither.
 """
 
 from __future__ import annotations
@@ -19,12 +24,13 @@ from pyspark.sql import types as T
 DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # AQE sizes post-shuffle partitions by BYTES; stages whose per-row cost is
-    # python-UDF-bound (pair scoring) or expression-bound (30 minhash lambdas)
-    # are tiny in bytes but huge in CPU. The default 1m floor collapsed the
-    # argmax output to 2 partitions and serialized every downstream stage
-    # (measured: blocking-keys stage 10s→49s when 32-core). A 64k floor keeps
-    # CPU-heavy small-byte stages wide while still merging true slivers.
+    # AQE sizes post-shuffle partitions by BYTES; expression-bound stages are
+    # tiny in bytes but heavy in CPU — e.g. the pair combinations that
+    # operators.dedup._doc_pairs_per_bucket expands from compact doc-id
+    # lists after the shingle/band exchange. The default 1m floor can
+    # coalesce such a stage into a task or two on one core while the rest
+    # idle. A 64k floor keeps CPU-heavy small-byte stages wide while still
+    # merging true slivers.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # InferFiltersFromGenerate turns every explode(e) into a pre-filter
@@ -83,28 +89,6 @@ def _merge_confs(defaults: dict[str, str],
 _WARMED: set[str] = set()
 
 
-def _warm_icu(spark: SparkSession) -> None:
-    """Force ICU's lazy one-time init (com.ibm.icu UCharacter/case-mapping
-    data) from ONE thread before any parallel stage needs it.
-
-    Spark 4 routes ``lower()``/``upper()`` through CollationSupport's ICU
-    path. ICU loads its Unicode tables in a static initializer on first use;
-    when the first use happens inside a 32-task stage, every task thread
-    piles onto the class-init lock and the stage serializes behind the load
-    (measured: the first ``lower(text)`` query after unrelated window queries
-    took 9–18 s at local[32]; the same query warm takes 0.3 s — thread dump
-    showed 31 executor threads parked in CollationSupport$Lower.execBinaryICU
-    waiting on com.ibm.icu.lang.UCharacter's initializer). One single-row
-    evaluation at session creation moves that init off every query path.
-    The lower() input is computed (not foldable) and non-ASCII so the ICU
-    full case-mapping path actually loads."""
-    from pyspark.sql import functions as F
-
-    spark.range(1).select(
-        F.lower(F.concat(F.lit("Đà Nẵng ICU warm-up Ξ"), F.col("id").cast("string")))
-    ).collect()
-
-
 def _warm_python_workers(spark: SparkSession) -> None:
     """Spawn the Python worker pool (and its pandas/pyarrow imports) before
     the first real Python-UDF stage needs it.
@@ -137,13 +121,21 @@ def _warm_expression_classes(spark: SparkSession) -> None:
     executor threads serialized on BuiltinClassLoader.loadClass /
     class-init locks while a 32-task first stage faulted those classes in
     concurrently (measured: ~0.8 s off the cold n-gram Jaccard chain).
+
+    The literal is computed (not foldable) and non-ASCII, so its
+    ``lower()`` also loads ICU's full case-mapping tables from one thread.
+    Spark 4 routes ``lower()``/``upper()`` through CollationSupport's ICU
+    path, whose tables load in a static initializer on first use; when
+    that first use is a 32-task stage, every task thread parks on
+    UCharacter's class-init lock (measured: the first ``lower(text)`` query
+    of a session took 9-18 s at local[32], 0.3 s warm).
     Purely class loading — two literal rows, nothing data-dependent."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     df = (
         spark.range(2)
-        .select(F.concat(F.lit("a b c d "), F.col("id").cast("string")).alias("t"))
+        .select(F.concat(F.lit("Đà Nẵng a b c d "), F.col("id").cast("string")).alias("t"))
         .withColumn("toks", F.filter(F.split(F.lower("t"), r"\s+"), lambda x: x != ""))
         .withColumn(
             "sh",
@@ -173,42 +165,21 @@ def _warm_expression_classes(spark: SparkSession) -> None:
     )
 
 
-def _warm_parquet_io(spark: SparkSession) -> None:
-    """Load the parquet datasource/Hadoop-filesystem/codec machinery once at
-    session creation: the first parquet read of a session pays datasource
-    resolution, LocalFileSystem init, footer-reader and column-reader class
-    loading (measured ~1 s of the first real scan at local[32]). A two-row
-    write+read in a temp dir touches the same classes; the data content is
-    irrelevant and deleted immediately."""
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="spark_warm_")
-    try:
-        p = f"{d}/warm.parquet"
-        spark.range(2).write.mode("overwrite").parquet(p)
-        spark.read.parquet(p).groupBy().count().write.format(
-            "noop"
-        ).mode("overwrite").save()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def _warm_runtime(spark: SparkSession) -> None:
-    """Local masters only: the parquet warm-up writes/reads a DRIVER-LOCAL
-    temp dir, which on a multi-node master would leave task files on
-    executor filesystems and crash the read-back; and on a long-lived
-    cluster the one-time inits amortize over hours of work anyway — the
-    warm-ups exist because a local benchmark of 1-second queries charges
-    them to the first unlucky query."""
+    """Local masters only: on a long-lived cluster the one-time inits
+    amortize over hours of work; the warm-ups exist because a local
+    benchmark of 1-second queries charges them to the first unlucky query.
+
+    Each of the two is kept because deleting it slows the first real job
+    (measured with and without, at local[4]). While any warm-up runs, the
+    session's first-job overhead (2.5-5 s at local[4], whatever the job) is
+    paid here rather than by that first job."""
     if not spark.sparkContext.master.startswith("local"):
         return
     key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
-    _warm_icu(spark)
     _warm_python_workers(spark)
-    _warm_parquet_io(spark)
     _warm_expression_classes(spark)
     _WARMED.add(key)
 

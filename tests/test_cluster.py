@@ -2,7 +2,8 @@
 
 Every graph runs through BOTH execution paths — the driver union-find
 fallback (small graphs) and the distributed large-star/small-star loop
-(forced via ``small_graph_edges=0``) — and the paths must agree exactly.
+(forced via ``small_graph_edges=-1``, which even a graph with no edge
+exceeds) — and the paths must agree exactly.
 """
 
 import random
@@ -12,7 +13,7 @@ import pytest
 from address_parser_spark.operators.cluster import connected_components
 
 
-@pytest.fixture(params=[None, 0], ids=["driver_fallback", "distributed_loop"])
+@pytest.fixture(params=[None, -1], ids=["driver_fallback", "distributed_loop"])
 def small_graph_edges(request):
     return request.param
 
@@ -45,6 +46,36 @@ def test_two_components(spark, small_graph_edges):
 def test_self_loop_and_duplicates(spark, small_graph_edges):
     comp = _cc(spark, [(7, 7), (7, 8), (8, 7), (7, 8)], small_graph_edges)
     assert comp[7] == comp[8] == 7
+
+
+def test_self_loops_only_give_no_assignments(spark, small_graph_edges):
+    """A self-loop is no canonical edge: a graph of self-loops only assigns
+    no vertex on either path."""
+    assert _cc(spark, [(7, 7), (8, 8)], small_graph_edges) == {}
+
+
+def test_mentions_alone_in_both_stars_keep_their_own_mid(spark, small_graph_edges, monkeypatch):
+    """Rows that share neither an entity anchor nor a ``(canon, digit_sig)``
+    string only emit self-loops; each is its own cluster, ``cluster_id ==
+    mid``."""
+    import functools
+
+    from address_parser_spark.operators import cluster
+
+    if small_graph_edges is not None:
+        monkeypatch.setattr(cluster, "connected_components", functools.partial(
+            cluster.connected_components, small_graph_edges=small_graph_edges))
+    resolved = spark.createDataFrame(
+        [
+            (11, "W", "001", "01|010|001|false", "w d p", "phuong 1 ha noi", "D", "old"),
+            (12, "V", "002", "01|010|002|false", "v d p", "phuong 2 ha noi", "D", "old"),
+            (13, None, None, "01|010||false", "x d p", "xa x da nang", "D", "old"),
+        ],
+        "mid long, ward string, ward_code string, entity_key string, entity_std string, "
+        "std string, district string, format string",
+    )
+    got = {r["mid"]: r["cluster_id"] for r in cluster.cluster_mentions(resolved).collect()}
+    assert got == {11: 11, 12: 12, 13: 13}
 
 
 def test_long_path_converges_logarithmically(spark, small_graph_edges):

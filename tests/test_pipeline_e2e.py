@@ -4,7 +4,8 @@
 2. blocking recall — every gold pair shares ≥1 blocking key;
 3. pairwise F1 ≥ 0.99 on labeled pairs at shared blocking keys;
 4. resume — stages read back from committed snapshots, identical output;
-   another input through the same store raises.
+   another input through the same store raises;
+5. degenerate input — empty and undecodable pages, one mention on 10^5 pages.
 """
 
 import dataclasses
@@ -13,6 +14,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from address_parser_spark.gazetteer import synth_gazetteer
 from address_parser_spark.operators.eval import gold_entity_col, labeled_pairs, pairwise_f1
@@ -21,6 +23,7 @@ from address_parser_spark.plans.pipeline import run_pipeline
 from address_parser_spark.sources.lineage import StageStore
 from address_parser_spark.sources.pages import GOLD_SCHEMA, PAGES_SCHEMA, synth_pages_local
 from address_parser_spark.textops.extract import extract_mentions
+from address_parser_spark.textops.html import html_to_text
 
 N_PAGES = 250
 
@@ -180,3 +183,68 @@ def test_pipeline_over_no_vietnamese_pages(spark, gaz, corpus, clustered):
     out = run_pipeline(spark, pages_df, gaz)
     assert out.schema == clustered.schema
     assert out.count() == 0
+
+
+def _nullable(schema: T.StructType) -> T.StructType:
+    return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema.fields])
+
+
+def test_page_with_null_text_and_null_html_is_skipped(spark, gaz, corpus):
+    """A ``vi`` page with neither text nor html adds no row and no error:
+    the output equals the valid pages' output."""
+    pages, _ = corpus
+    valid = pages[:6]
+    empty = ("https://empty.vn/p", valid[0][1], None, None, "vi")
+    with_empty = spark.createDataFrame(valid + [empty], _nullable(PAGES_SCHEMA))
+    got = {tuple(r) for r in run_pipeline(spark, with_empty, gaz).collect()}
+    want = {tuple(r) for r in run_pipeline(
+        spark, spark.createDataFrame(valid, PAGES_SCHEMA), gaz).collect()}
+    assert want
+    assert got == want
+
+
+def test_html_with_invalid_utf8_matches_its_text(spark, gaz, corpus, clustered):
+    """Html bytes holding invalid UTF-8 (a ``\\xff\\xfe`` prefix and a lone
+    ``\\x80`` on the mention's line) resolve exactly like the same page with
+    ``html_to_text(html)`` as its text: the html branch decodes with
+    replacement instead of failing the stage. The mention still resolves to
+    the clean page's entity."""
+    pages, golds = corpus
+    url, ts, html, _text, lang = pages[0]
+    mention = next(g[1] for g in golds if g[0] == url)
+    tail = mention[-12:].encode()
+    end = html.index(b"<", html.index(tail) + len(tail))  # the line's closing tag
+    bad = b"\xff\xfe" + html[:end] + b"\x80" + html[end:]
+    with pytest.raises(UnicodeDecodeError):
+        bad.decode("utf-8")
+
+    html_only = spark.createDataFrame([(url, ts, bad, None, lang)], _nullable(PAGES_SCHEMA))
+    texted = spark.createDataFrame([(url, ts, bad, html_to_text(bad), lang)], PAGES_SCHEMA)
+    cols = ["mention", "entity_key"]
+    got = {tuple(r) for r in run_pipeline(spark, html_only, gaz).select(*cols).collect()}
+    want = {tuple(r) for r in run_pipeline(spark, texted, gaz).select(*cols).collect()}
+    clean = {r["entity_key"] for r in clustered.filter(F.col("url") == url).collect()}
+    assert {k for _, k in want} == clean
+    assert got == want
+
+
+def test_one_mention_repeated_on_1e5_pages(spark, gaz):
+    """One address on 10^5 pages, built JVM-side: extract, resolve and
+    cluster hold no per-mention list, and every row lands in one entity and
+    one cluster."""
+    n = 100_000
+    text = ("Địa chỉ liên hệ: số 432 hai bà trưng, phường nghĩa khánh, "
+            "quận nhà bè, thành phố hồ chí minh.")
+    pages_df = spark.range(n).select(
+        F.concat(F.lit("https://rep.vn/p"), F.col("id").cast("string")).alias("url"),
+        F.lit(text).alias("text"),
+        F.lit("vi").alias("lang"),
+    )
+    out = run_pipeline(spark, pages_df, gaz)
+    got = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("mention").alias("mentions"),
+        F.countDistinct("entity_key").alias("keys"),
+        F.countDistinct("cluster_id").alias("clusters"),
+    ).first()
+    assert (got["n"], got["mentions"], got["keys"], got["clusters"]) == (n, 1, 1, 1)
