@@ -51,6 +51,11 @@ def map_old_to_new(
     mapping row agreeing with the record's province AND district names beats
     province-only, beats any; within a rank the lowest mapping id wins
     (deterministic stand-in for the reference's insertion-order 'first').
+
+    This is the J4 operator for arbitrary records. The pipeline does not
+    run it: ``plans.pipeline.ward_map_frame`` applies the same preference
+    per old ward code on the driver, and the tests pin that table against
+    this operator over the whole synthetic gazetteer.
     """
     m = F.broadcast(mappings.select(
         F.col("old_ward_code"),

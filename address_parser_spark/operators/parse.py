@@ -104,12 +104,17 @@ def _resolve_distinct(mentions: DataFrame, resolve) -> DataFrame:
     uniq = mentions.dropDuplicates(["mention"]).select(*args)
     return (
         uniq
-        # EXPLICIT partition count: this stage is python-CPU-bound but
-        # tiny in bytes — AQE's byte-driven coalescing would serialize it
-        # (an explicit repartition count is never AQE-coalesced). The
-        # ``std`` key only spreads rows: no kernel state depends on which
+        # One Python task per core, one task wave. Each Python task waits
+        # about 0.25 s before its UDF sees a row (PySpark's per-task
+        # ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
+        # re-reads the zipped pyspark directory), so a second wave costs more
+        # than the pruned kernel's work at 400 pages (8 tasks 1.10 s, 4 tasks
+        # 0.77 s at local[4]). The count stays EXPLICIT: the stage is tiny in
+        # bytes, and AQE never coalesces an explicit repartition count, where
+        # its byte-driven coalescing would serialize the stage into one task.
+        # The ``std`` key only spreads rows: no kernel state depends on which
         # mentions share a task.
-        .repartition(2 * mentions.sparkSession.sparkContext.defaultParallelism, F.col("std"))
+        .repartition(mentions.sparkSession.sparkContext.defaultParallelism, F.col("std"))
         # explode(udf) plants a GENERATOR between the kernel and the
         # downstream projection: without it Catalyst's python-UDF
         # extraction can materialize TWO chained ArrowEvalPython nodes (one

@@ -6,7 +6,8 @@ repair/street, ``operators.parse.resolve_mentions``) → (3) connected
 components over two exact-string stars, the entity anchor and the identical
 ``(canon, digit_sig)`` group (``operators.cluster.cluster_mentions``; no
 blocking keys, no cap) → clusters, plus the old→new ward-code mapping when
-the gazetteer carries one.
+the gazetteer carries one: a table of one row per old ward code, built on
+the driver (``ward_map_frame``) and broadcast-joined on ``ward_code``.
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -27,52 +28,80 @@ import json
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from address_parser_spark.gazetteer.nodes import (
     alias_registries,
     build_nodes,
     build_repair_state,
-    nodes_to_spark,
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
 from address_parser_spark.operators.cluster import cluster_mentions
 from address_parser_spark.operators.parse import resolve_mentions
+from address_parser_spark.session import local_frame
 from address_parser_spark.sources.lineage import StageStore
 
 
+def ward_map_frame(spark: SparkSession, gaz: Gazetteer) -> DataFrame:
+    """One row per old ward code of the catalog: its preferred new-format
+    mapping, resolved in plain Python and shipped as one Arrow-backed local
+    frame of strings (``old_ward_code``, ``new_ward_code``, ``new_ward_name``,
+    ``new_province_name``; 243 rows on the synthetic gazetteer).
+
+    The preference is ``operators.mapping.map_old_to_new``'s, applied to the
+    ward's own district and province names (the PDW node's names): rank
+    2·[district name in ``old_district_name``] + [province name in
+    ``old_province_name``], null-guarded; the highest rank wins, then the
+    lowest mapping ``id``. A code with no mapping row maps to nulls."""
+    districts = {d["code"]: d for d in gaz.old_districts}
+    provinces = {p["code"]: p for p in gaz.old_provinces}
+    rows_by_code: dict[str, list[dict]] = {}
+    for m in gaz.ward_mappings:
+        rows_by_code.setdefault(m["old_ward_code"], []).append(m)
+
+    def within(name: Optional[str], field: Optional[str]) -> int:
+        return int(name is not None and field is not None and name in field)
+
+    table: dict[str, tuple] = {}
+    for w in gaz.old_wards:
+        d = districts.get(w["district_code"], {})
+        d_name = d.get("name") or None
+        p_name = provinces.get(d.get("province_code"), {}).get("name") or None
+        best = max(
+            rows_by_code.get(w["code"], ()),
+            key=lambda m: (2 * within(d_name, m.get("old_district_name"))
+                           + within(p_name, m.get("old_province_name")), -m["id"]),
+            default=None,
+        )
+        table[w["code"]] = (
+            (best["new_ward_code"], best.get("new_ward_name"), best.get("new_province_name"))
+            if best else (None, None, None)
+        )
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in (
+        "old_ward_code", "new_ward_code", "new_ward_name", "new_province_name")])
+    return local_frame(spark, ((code, *new) for code, new in table.items()), schema)
+
+
 def attach_new_ward_codes(
-    spark: SparkSession, clustered: DataFrame, nodes_df: DataFrame, gaz: Gazetteer
+    spark: SparkSession, clustered: DataFrame, nodes_df: Optional[DataFrame], gaz: Gazetteer
 ) -> DataFrame:
     """J4 wiring: old→new administrative-code mapping on the flagship output.
 
-    The preferred mapping row per canonical node is resolved ONCE on the
-    nodes DIMENSION (reference ``map_old_address_ids_to_new`` preference
-    semantics via ``operators.mapping.map_old_to_new``), then broadcast-joined
-    onto the clustered mentions on ``ward_code`` — no shuffle and no window
-    ever touches the fact table, so the flagship scaling profile is
-    unchanged. Keyed on the old WARD CODE rather than node_id so repair-only
-    resolutions (no winner node, but a code attached by the lookup cascade)
-    map too. New-format winners already carry their new-format ward code."""
-    from address_parser_spark.operators.mapping import map_old_to_new, mappings_to_spark
+    ``ward_map_frame`` resolves the preferred mapping row per old ward code
+    on the driver, and that table is broadcast-joined onto the clustered
+    mentions on ``ward_code``: no shuffle and no window touches the fact
+    table or the nodes dimension. Keyed on the old WARD CODE rather than
+    node_id so repair-only resolutions (no winner node, but a code attached
+    by the lookup cascade) map too. New-format winners (``is_new`` true)
+    keep their own ward code and names; a null ``is_new`` takes the lookup.
 
-    mappings = mappings_to_spark(spark, gaz.ward_mappings)
-    old_nodes = (
-        nodes_df.filter((~F.col("is_new")) & F.col("ward_code").isNotNull())
-        .select("node_id", "ward_code", "province", "district")
-    )
-    node_map = (
-        map_old_to_new(old_nodes, mappings)
-        .select(F.col("ward_code").alias("_old_wc"),
-                "new_ward_code", "new_ward_name", "new_province_name")
-        # nodes sharing a ward code carry the same (province, district) and
-        # thus the same preferred mapping row — one row per code
-        .dropDuplicates(["_old_wc"])
-    )
+    ``nodes_df`` is not read. It stays in the signature because the
+    benchmark's traced path calls this function positionally with the nodes
+    frame; ROADMAP item 2 removes it."""
+    ward_map = F.broadcast(ward_map_frame(spark, gaz))
     return (
-        clustered.join(
-            F.broadcast(node_map), clustered["ward_code"] == node_map["_old_wc"], "left"
-        )
-        .drop("_old_wc")
+        clustered.join(ward_map, clustered["ward_code"] == ward_map["old_ward_code"], "left")
+        .drop(ward_map["old_ward_code"])
         .withColumn(
             "new_ward_code",
             F.when(F.col("is_new"), F.col("ward_code")).otherwise(F.col("new_ward_code")),
@@ -107,7 +136,10 @@ def run_pipeline(
     store: Optional[StageStore] = None,
 ) -> DataFrame:
     """pages → clustered mentions (mid, url, mention, std, parsed components,
-    street_address, format, entity_key, cluster_id, new_ward_code/-name)."""
+    street_address, format, entity_key, cluster_id, then new_ward_code,
+    new_ward_name and new_province_name when the gazetteer carries ward
+    mappings). The ward mapping reads only the driver-built
+    ``ward_map_frame``, so this function builds no nodes frame."""
     nodes = build_nodes(gaz)
     registries = alias_registries(gaz)
     repair_state = build_repair_state(gaz, nodes)
@@ -154,7 +186,5 @@ def run_pipeline(
 
     clustered = build_clusters() if store is None else store.run_stage("clustered", build_clusters)
     if gaz.ward_mappings:
-        clustered = attach_new_ward_codes(
-            spark, clustered, nodes_to_spark(spark, nodes), gaz
-        )
+        clustered = attach_new_ward_codes(spark, clustered, None, gaz)
     return clustered

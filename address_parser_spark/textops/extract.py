@@ -21,9 +21,11 @@ _TRIGGER = re.compile(
 )
 
 # End of an address span: line break, ';', '!', '?', or a '.' that closes a
-# sentence (followed by whitespace/EOL) — a '.' glued to a letter or digit is
-# an abbreviation ("P.5", "TP.Hồ Chí Minh") and stays inside the span.
-_SPAN_END = re.compile(r"\.(?=\s|$)|[\n;!?]|$")
+# sentence (followed by whitespace, EOL, or any character that is neither a
+# letter nor a digit: "minh.) tiếp", "minh.\ufffd") — a '.' glued to a letter
+# or digit is an abbreviation ("P.5", "TP.Hồ Chí Minh") and stays inside the
+# span.
+_SPAN_END = re.compile(r"\.(?![^\W_])|[\n;!?]|$")
 
 # A '.' immediately preceded by a bare admin-type abbreviation token
 # ("TP. Hồ Chí Minh", "H. Thạnh Lộc", "X. Yên Đức") is part of the

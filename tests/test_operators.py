@@ -29,6 +29,93 @@ def test_map_old_to_new_prefers_matching_district(spark, gaz, mappings):
     assert not wrong
 
 
+def _ward_map(spark, g) -> dict:
+    from address_parser_spark.plans.pipeline import ward_map_frame
+
+    return {r[0]: tuple(r[1:]) for r in ward_map_frame(spark, g).collect()}
+
+
+def _ward_map_oracle(spark, g) -> dict:
+    """map_old_to_new over every old ward of ``g``, each with its own names
+    (its PDW node's province and district)."""
+    from address_parser_spark.gazetteer.nodes import build_nodes
+
+    pdw = [(n["ward_code"], n["province"], n["district"])
+           for n in build_nodes(g) if n["level"] == "PDW"]
+    assert sorted(c for c, _, _ in pdw) == sorted(w["code"] for w in g.old_wards)
+    records = spark.createDataFrame(pdw, "ward_code string, province string, district string")
+    cols = ["new_ward_code", "new_ward_name", "new_province_name"]
+    mapped = map_old_to_new(records, mappings_to_spark(spark, g.ward_mappings))
+    return {r["ward_code"]: tuple(r[c] for c in cols) for r in mapped.collect()}
+
+
+def test_ward_map_frame_matches_map_old_to_new(spark, gaz):
+    # The pipeline's driver-built ward table equals the J4 operator.
+    got = _ward_map(spark, gaz)
+    assert len(got) == len(gaz.old_wards)
+    assert got == _ward_map_oracle(spark, gaz)
+
+
+def test_attach_new_ward_codes_on_a_hand_gazetteer(spark):
+    from address_parser_spark.gazetteer.synth import Gazetteer
+    from address_parser_spark.plans.pipeline import attach_new_ward_codes
+
+    def mapping(id_, old_code, district, new_code, province="Thành phố Hà Nội"):
+        return {"id": id_, "old_ward_code": old_code, "old_ward_name": "Phường X",
+                "old_district_name": district, "old_province_name": province,
+                "new_ward_code": new_code, "new_ward_name": f"Phường {new_code}",
+                "new_province_name": "Thành phố Hà Nội"}
+
+    g = Gazetteer(
+        old_provinces=[{"code": "01", "name": "Hà Nội"}],
+        old_districts=[{"code": "001", "name": "Ba Đình", "province_code": "01"}],
+        old_wards=[{"code": c, "name": f"Phường {c}", "district_code": "001"}
+                   for c in ("S", "T", "U", "V")],
+        ward_mappings=[
+            # split ward S: only the higher id names S's district
+            mapping(1, "S", "Quận Hoàn Kiếm", "N1"),
+            mapping(2, "S", "Quận Ba Đình", "N2"),
+            # rank tie on T: the lowest id wins, whatever the list order
+            mapping(5, "T", "Quận Ba Đình", "N5"),
+            mapping(3, "T", "Quận Ba Đình", "N3"),
+            # U has no mapping row
+            # V: a district match outranks a province match with a lower id
+            mapping(6, "V", "Quận Hoàn Kiếm", "N6"),
+            mapping(7, "V", "Quận Ba Đình", "N7", province="Tỉnh Khác"),
+        ],
+    )
+    assert _ward_map(spark, g) == _ward_map_oracle(spark, g) == {
+        "S": ("N2", "Phường N2", "Thành phố Hà Nội"),
+        "T": ("N3", "Phường N3", "Thành phố Hà Nội"),
+        "U": (None, None, None),
+        "V": ("N7", "Phường N7", "Thành phố Hà Nội"),
+    }
+    clustered = spark.createDataFrame(
+        [
+            ("split", 11, "S", False, "Phường S", "Hà Nội"),
+            ("tie", 12, "T", False, "Phường T", "Hà Nội"),
+            ("unmapped", 13, "U", False, "Phường U", "Hà Nội"),
+            ("repair_only", None, "S", False, None, None),
+            ("new", 20, "S", True, "Phường Mới", "Hà Nội Mới"),
+            ("is_new_null", 14, "T", None, "Phường T", "Hà Nội"),
+        ],
+        "case string, node_id long, ward_code string, is_new boolean, "
+        "ward string, province string",
+    )
+    out = attach_new_ward_codes(spark, clustered, None, g)
+    assert out.columns == clustered.columns + [
+        "new_ward_code", "new_ward_name", "new_province_name"]
+    got = {r["case"]: tuple(r)[-3:] for r in out.collect()}
+    assert got == {
+        "split": ("N2", "Phường N2", "Thành phố Hà Nội"),
+        "tie": ("N3", "Phường N3", "Thành phố Hà Nội"),
+        "unmapped": (None, None, None),
+        "repair_only": ("N2", "Phường N2", "Thành phố Hà Nội"),
+        "new": ("S", "Phường Mới", "Hà Nội Mới"),
+        "is_new_null": ("N3", "Phường N3", "Thành phố Hà Nội"),
+    }
+
+
 def test_map_new_to_old_roundtrip(spark, gaz, mappings):
     new = spark.createDataFrame(
         [(w["code"],) for w in gaz.new_wards], "ward_code string"

@@ -64,6 +64,25 @@ def test_overlong_abbrev_extension_falls_back_to_longest_cut():
     assert extract_mentions(text) == [addr]
 
 
+_DOTTED = "12 Lê Lợi, P.5, Q.3, TP.Hồ Chí Minh"
+
+
+@pytest.mark.parametrize("tail, want", [
+    (".\ufffd Xem thêm", _DOTTED),
+    (".) tiếp", _DOTTED),
+    ('." Gọi', _DOTTED),
+    ("._x", _DOTTED),
+    ("... tiếp", _DOTTED),
+    (".", _DOTTED),
+    (".5 tiếp", _DOTTED + ".5 tiếp"),
+])
+def test_sentence_dot_before_a_non_alphanumeric_ends_the_span(tail, want):
+    # A '.' followed by whitespace, the end of the text, or any character
+    # that is neither a letter nor a digit closes the sentence; a '.' glued
+    # to a letter or digit ("P.5", "TP.Hồ") is an abbreviation inside it.
+    assert extract_mentions("Địa chỉ: " + _DOTTED + tail) == [want]
+
+
 def test_blocking_recall_on_gold_pairs(spark, corpus, clustered):
     _, golds = corpus
     gold_df = (
@@ -207,8 +226,9 @@ def test_html_with_invalid_utf8_matches_its_text(spark, gaz, corpus, clustered):
     """Html bytes holding invalid UTF-8 (a ``\\xff\\xfe`` prefix and a lone
     ``\\x80`` on the mention's line) resolve exactly like the same page with
     ``html_to_text(html)`` as its text: the html branch decodes with
-    replacement instead of failing the stage. The mention still resolves to
-    the clean page's entity."""
+    replacement instead of failing the stage. The mention text and entity
+    equal the clean page's: the replacement character glued to the closing
+    period ends the span like a space would."""
     pages, golds = corpus
     url, ts, html, _text, lang = pages[0]
     mention = next(g[1] for g in golds if g[0] == url)
@@ -223,9 +243,8 @@ def test_html_with_invalid_utf8_matches_its_text(spark, gaz, corpus, clustered):
     cols = ["mention", "entity_key"]
     got = {tuple(r) for r in run_pipeline(spark, html_only, gaz).select(*cols).collect()}
     want = {tuple(r) for r in run_pipeline(spark, texted, gaz).select(*cols).collect()}
-    clean = {r["entity_key"] for r in clustered.filter(F.col("url") == url).collect()}
-    assert {k for _, k in want} == clean
-    assert got == want
+    clean = {tuple(r) for r in clustered.filter(F.col("url") == url).select(*cols).collect()}
+    assert got == want == clean
 
 
 def test_one_mention_repeated_on_1e5_pages(spark, gaz):

@@ -229,7 +229,9 @@ def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
     """The mention frame is exactly the extract UDF's fields plus ``mid`` —
     no array column: the gram set and partial flag are derived inside the
     kernel from ``std``. The kernel stage over the checkpointed mentions
-    plans exactly ONE ArrowEvalPython and emits the finished row."""
+    plans exactly ONE ArrowEvalPython, behind an explicit
+    ``defaultParallelism``-way exchange on ``std`` (one Python task wave,
+    never AQE-coalesced), and emits the finished row."""
     from pyspark.sql import types as T
 
     from address_parser_spark.functions.udfs import (
@@ -255,19 +257,23 @@ def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
     assert kernel.columns == ["mention", "std", *RESOLVE_SCHEMA.names]
     plan = plan_of(kernel)
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    dp = spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(std#\d+, {dp}\), REPARTITION_BY_NUM", plan), plan
 
 
 def test_driver_built_frames_are_local_table_scans(spark, gaz):
     """Frames built from driver rows (the gazetteer nodes, the ward
-    mappings, the small-graph union-find output) must plan as Arrow-backed
-    ``LocalTableScan``s: a list-of-tuples createDataFrame plans a pickled
-    Python RDD (``Scan ExistingRDD``), and every action on it starts Python
-    workers. The nodes frame must keep NODE_SCHEMA and every value."""
+    mappings, the pipeline's ward table, the small-graph union-find output)
+    must plan as Arrow-backed ``LocalTableScan``s: a list-of-tuples
+    createDataFrame plans a pickled Python RDD (``Scan ExistingRDD``), and
+    every action on it starts Python workers. The nodes frame must keep
+    NODE_SCHEMA and every value."""
     from pyspark.sql import functions as F
 
     from address_parser_spark.gazetteer.nodes import NODE_SCHEMA, build_nodes, nodes_to_spark
     from address_parser_spark.operators.cluster import connected_components
     from address_parser_spark.operators.mapping import mappings_to_spark
+    from address_parser_spark.plans.pipeline import ward_map_frame
 
     nodes = build_nodes(gaz)
     assert gaz.ward_mappings
@@ -275,6 +281,7 @@ def test_driver_built_frames_are_local_table_scans(spark, gaz):
     frames = {
         "nodes": nodes_to_spark(spark, nodes),
         "mappings": mappings_to_spark(spark, gaz.ward_mappings),
+        "ward_map": ward_map_frame(spark, gaz),
         "union_find": connected_components(edges),
         "empty_nodes": nodes_to_spark(spark, []),
         "empty_union_find": connected_components(edges.limit(0)),
