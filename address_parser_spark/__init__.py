@@ -2,8 +2,8 @@
 
 A from-scratch, Spark-first reimplementation of the *capabilities* of
 ``dathuynh1108/address-parser`` (reference read-only at ``/root/reference``):
-extract → normalize → block → pairwise-score → cluster Vietnamese address
-mentions at web scale, expressed as DataFrame programs (Catalyst-optimized,
+extract → normalize → resolve → cluster Vietnamese address mentions at web
+scale, expressed as DataFrame programs (Catalyst-optimized,
 Arrow-batched pandas UDFs only where built-ins cannot express the semantics).
 
 Layout
@@ -13,7 +13,7 @@ Layout
 - ``functions``  Spark Column helpers + vectorized pandas UDFs (dice, minhash, scoring)
 - ``operators``  blocking, pair scoring, connected components, dedup, ANN, text quality
 - ``sources``    synthetic pages corpus, readers, checkpoint/lineage sinks
-- ``plans``      end-to-end pipeline assembly (extract→normalize→block→score→cluster)
+- ``plans``      end-to-end pipeline assembly (extract→normalize→resolve→cluster)
 - ``streaming``  incremental ingest (Structured Streaming) — optional capability
 """
 

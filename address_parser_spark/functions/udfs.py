@@ -123,40 +123,39 @@ def mention_features(mention: str, regs: tuple, det_cache: dict) -> tuple:
     return (mention, std, basic) + det
 
 
-def make_extract_features_udf(get_regs, from_html: bool = False):
-    """FUSED extraction + normalization (advanced & basic) + prefix detection
-    in a single Arrow node; ``get_regs`` is the ``broadcast_state`` getter of
-    the registries.
+def make_extract_features_udf(get_regs):
+    """FUSED html→text + extraction + normalization (advanced & basic) +
+    prefix detection in a single Arrow node over ``(text, html)``;
+    ``get_regs`` is the ``broadcast_state`` getter of the registries.
 
-    Chaining these as four separate pandas UDFs plants four ArrowEvalPython
-    operators in ONE stage — every task then runs four python workers
+    Chaining these as separate pandas UDFs plants several ArrowEvalPython
+    operators in ONE stage — every task then runs that many python workers
     concurrently (task slots × UDF nodes processes; measured: a 32-core ×
     64-partition run spent ~25s spawning/importing ~128 workers). One fused
     UDF keeps it at one worker per task slot and one Arrow round-trip.
 
-    ``from_html=True`` prepends the markup→text extraction
-    (``textops.html.html_to_text``) to the same fused node, so the html-only
-    branch of the page union ALSO plans exactly one ArrowEvalPython —
-    chaining a separate html UDF in front re-created the two-workers-per-
-    task-slot shape this fusion exists to avoid.
+    A page's text is ``text`` when that is a non-empty string, else
+    ``textops.html.html_to_text(html)`` (a null html gives no mentions).
+    ``extract_normalize`` nulls ``html`` on the JVM for texted pages, so
+    their markup never crosses into Python.
     """
     from address_parser_spark.textops.extract import extract_mentions
     from address_parser_spark.textops.html import html_to_text
 
     @pandas_udf(_FEATURES_SCHEMA)
-    def extract_features_udf(text: pd.Series) -> pd.Series:
+    def extract_features_udf(text: pd.Series, html: pd.Series) -> pd.Series:
         regs = get_regs()
         det_cache: dict[str, tuple] = {}
 
-        def run(t):
-            if from_html:
-                t = html_to_text(t)
+        def run(t, h):
             if not isinstance(t, str) or not t:
+                t = html_to_text(h)
+            if not t:
                 return []
             rows = (mention_features(m, regs, det_cache) for m in extract_mentions(t))
             return [row for row in rows if len(row[1]) >= 2]
 
-        return text.map(run)
+        return pd.Series([run(t, h) for t, h in zip(text, html)], index=text.index)
 
     return extract_features_udf
 

@@ -25,7 +25,8 @@ what matters, and it reaches executors in exactly two shapes:
   per-level alias→node invert maps and code lookups by
   ``build_repair_state`` (``functions.udfs.resolver_state`` joins them);
 - ``nodes_to_spark``, an Arrow-backed local frame (``session.local_frame``)
-  for the relational ward mapping.
+  of the nodes for relational callers. ``run_pipeline`` does not build it:
+  its ward mapping reads the driver-built ``plans.pipeline.ward_map_frame``.
 """
 
 from __future__ import annotations

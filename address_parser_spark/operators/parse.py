@@ -23,12 +23,13 @@ re-planned for Catalyst (SURVEY §3.1). Stages and their physical shape:
    mention. No corpus × catalog rows exist at any point: the catalog is a
    broadcast dimension.
 4. **fact join**: winners (distinct-mention-sized) join back onto the
-   (url, mention) rows, as a broadcast when their measured bytes allow.
+   (mid, url, mention) rows on the mention string; Spark's own
+   ``autoBroadcastJoinThreshold`` and AQE pick the join strategy.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from address_parser_spark.functions.udfs import (
     broadcast_state,
@@ -43,46 +44,35 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
                       carry_cols: list[str] | None = None) -> DataFrame:
     """pages → one row per extracted mention: (url, *carry_cols, mention,
     std, std_basic, det_p, det_d, det_w, mid) — the normalized forms, the
-    detected components and a compact key. Narrow — no shuffle; the scan
-    reads only the Vietnamese pages' (url, text) plus any ``carry_cols``
-    (e.g. the event-time column for the streaming path). ``registries``
-    (``gazetteer.nodes.alias_registries``) are broadcast once per call and
-    shared by both branches below.
+    detected components and a compact key. Narrow — no shuffle; ONE scan
+    reads the Vietnamese pages' (url, text, html) plus any ``carry_cols``
+    (e.g. the event-time column for the streaming path), and ONE fused
+    ``make_extract_features_udf`` node (one Python crossing per page) takes
+    ``(text, CASE WHEN text IS NULL OR text = '' THEN html END)``.
+    ``registries`` (``gazetteer.nodes.alias_registries``) are broadcast once
+    per call.
 
-    When the frame carries an ``html`` column, pages whose ``text`` is
-    null/empty take a branch whose fused UDF FIRST extracts text from the
-    markup (``make_extract_features_udf(from_html=True)``). A filtered union,
-    not ``when(need, udf(html))``: Catalyst hoists Python UDFs out of CASE
-    branches into an unconditional projection, which would ship every page's
-    html bytes through Arrow. Texted rows never reach Python for markup, and
-    each branch plans exactly ONE ArrowEvalPython: a separate html→text
-    pre-stage in front of this function chained the html UDF and the extract
-    UDF in one stage, i.e. two concurrent Python workers per task slot on the
-    miss branch (and ~0.8 s of pure overhead at the 1200-page bench even when
-    the miss branch was empty)."""
+    The CASE is the UDF's ARGUMENT, not a branch around it, so Catalyst
+    evaluates it on the JVM below the Arrow node: a page with text ships a
+    null in place of its markup, and only pages whose text is null or empty
+    send html bytes to Python, where ``html_to_text`` runs first. A frame
+    without an ``html`` column (the streaming ``PAGES_STREAM_SCHEMA``) passes
+    a null binary."""
     get_regs = broadcast_state(
         pages.sparkSession, registries, decode_registries, "alias registries"
     )
     features = make_extract_features_udf(get_regs)
-    base = pages.filter(F.col("lang") == "vi")
     carry = list(carry_cols or [])
-    if "html" in pages.columns:
-        features_html = make_extract_features_udf(get_regs, from_html=True)
-        need = F.col("text").isNull() | (F.col("text") == "")
-        exploded = (
-            base.filter(~need)
-            .select("url", *carry, F.explode(features(F.col("text"))).alias("f"))
-            .unionByName(
-                base.filter(need)
-                .select("url", *carry, F.explode(features_html(F.col("html"))).alias("f"))
-            )
-        )
-    else:
-        exploded = base.select(
-            "url", *carry, F.explode(features(F.col("text"))).alias("f")
-        )
-    return exploded.select("url", *carry, "f.*").withColumn(
-        "mid", F.xxhash64("url", "mention")
+    text = F.col("text")
+    html = (
+        F.when(text.isNull() | (text == ""), F.col("html"))
+        if "html" in pages.columns else F.lit(None).cast("binary")
+    )
+    return (
+        pages.filter(F.col("lang") == "vi")
+        .select("url", *carry, F.explode(features(text, html)).alias("f"))
+        .select("url", *carry, "f.*")
+        .withColumn("mid", F.xxhash64("url", "mention"))
     )
 
 
@@ -155,61 +145,19 @@ def resolve_mentions(
     entity key and the unresolved rule included — and is the reference the
     ER fixture pins.
 
-    ``mentions`` feeds both the distinct projection and the final fact join —
-    checkpointed EAGERLY: AQE runs query-stage futures concurrently, and a
-    lazy checkpoint referenced by several in-flight futures is recomputed by
-    each of them (measured: the extract UDF chain re-executing up to 4× with
-    AQE-dependent variance).
+    Lazy: the kernel runs once, inside whichever job materializes the
+    result (``run_pipeline``'s ``resolved`` stage). Embedded in the join plan
+    it keeps its own parallelism — ``_resolve_distinct`` pins it with an
+    explicit repartition count that AQE never coalesces.
+
+    ``mentions`` feeds both the distinct projection and the fact join —
+    checkpointed EAGERLY (the one job this function starts): AQE runs
+    query-stage futures concurrently, and a lazy checkpoint referenced by
+    several in-flight futures is recomputed by each of them (measured: the
+    extract UDF chain re-executing up to 4× with AQE-dependent variance).
     """
     mentions = extract_normalize(pages, registries).localCheckpoint(eager=True)
     resolve = make_resolve_udf(pages.sparkSession, resolver_state(nodes, repair_state))
-    winners = _resolve_distinct(mentions, resolve)
-    # Isolate the python-CPU-bound kernel into its own job: embedded in the
-    # fact-join plan it inherits that plan's (byte-driven) parallelism
-    # decisions — measured 52s vs 11s for the identical kernel at local[32].
-    # The frame is distinct-mention-sized.
-    #
-    # The broadcast-gate metrics (row count + serialized-byte estimate,
-    # consumed below) ride on THIS materialization via observe, so the gate
-    # adds no job (and no driver barrier) of its own.
-    gate_obs = Observation("winners_gate")
-    winners = winners.observe(
-        gate_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            sum(
-                # octet_length: UTF-8 BYTES, not code points — accented
-                # Vietnamese text is ~1.5-2× its character count on the wire.
-                (F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0))
-                 + F.lit(8)
-                 for c in winners.columns),
-                F.lit(0),
-            )
-        ).alias("b"),
-    ).localCheckpoint(eager=True)
-
-    # Fact join: winners is DISTINCT-MENTION-sized (the whole point of the
-    # dedup), so when small enough it ships as a broadcast and the fact table
-    # never shuffles at all. Otherwise the join keys on xxhash64(mention)
-    # FIRST — partition routing and sort comparisons on an 8-byte long, with
-    # the mention string kept as an equality conjunct (collision-proof).
-    #
-    # Gate on ESTIMATED BYTES, not rows: winners carries 15+ string columns,
-    # so a row-count cap alone could ship a multi-GB broadcast to the driver
-    # and every executor (OOM on clusters whose executors are smaller than
-    # the local driver). EXACT byte sum over the whole (checkpointed,
-    # ≤2M-row) frame, kept under ~200 MB serialized — well inside executor
-    # memory even at HashedRelation's ~2-4× in-memory expansion. A
-    # limit()-sample average would read only the first partition:
-    # heavy-tailed mention lengths concentrated elsewhere could slip a
-    # multi-hundred-MB broadcast past an average extrapolated from short
-    # rows. ZERO extra jobs: both metrics were observed on the checkpoint
-    # materialization above.
-    gate = gate_obs.get
-    n_winners = int(gate["n"] or 0)
-    total_bytes = int(gate["b"] or 0)
-    fact_k = mentions.select("mid", "url", "mention").withColumn("_mk", F.xxhash64("mention"))
-    winners_k = winners.withColumn("_mk", F.xxhash64("mention"))
-    if 0 < n_winners <= 2_000_000 and total_bytes <= 200 * 1024 * 1024:
-        winners_k = F.broadcast(winners_k)
-    return fact_k.join(winners_k, ["_mk", "mention"]).drop("_mk")
+    return mentions.select("mid", "url", "mention").join(
+        _resolve_distinct(mentions, resolve), "mention"
+    )

@@ -135,7 +135,7 @@ def run_pipeline(
     gaz: Gazetteer,
     store: Optional[StageStore] = None,
 ) -> DataFrame:
-    """pages → clustered mentions (mid, url, mention, std, parsed components,
+    """pages → clustered mentions (mention, mid, url, std, parsed components,
     street_address, format, entity_key, cluster_id, then new_ward_code,
     new_ward_name and new_province_name when the gazetteer carries ward
     mappings). The ward mapping reads only the driver-built
@@ -147,10 +147,9 @@ def run_pipeline(
         store.bind_input(fingerprint_input(pages, gaz))
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
-    # extract_normalize: pages whose text column is null/empty take a union
-    # branch whose fused UDF extracts text from markup first; texted rows
-    # never ship html bytes to Python, and each branch plans one
-    # ArrowEvalPython.
+    # extract_normalize: its one fused UDF gets a page's html only when the
+    # text column is null/empty, so texted rows never ship html bytes to
+    # Python.
     build_resolved = lambda: resolve_mentions(pages, nodes, registries, repair_state=repair_state)
 
     # ``resolved`` feeds three downstream branches (the two stars and the

@@ -7,8 +7,9 @@ watermarked tumbling-window aggregation and within-watermark dedup.
 
 Streaming frames get the batch html fallback too: when a source adds an
 ``html`` column, rows whose ``text`` is null or empty are extracted from the
-markup (``extract_normalize``'s html branch) rather than skipped. A frame
-without that column (``PAGES_STREAM_SCHEMA``) reads ``text`` only.
+markup (``extract_normalize`` hands the fused UDF their html) rather than
+skipped. A frame without that column (``PAGES_STREAM_SCHEMA``) passes a null
+html, so only ``text`` is read.
 
 The stateful pieces use the built-in operators (windowed agg, dropDuplicates
 with watermark); no custom state store is needed for the reference's

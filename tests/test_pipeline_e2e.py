@@ -179,7 +179,7 @@ def test_resume_rejects_another_input(spark, gaz, corpus, tmp_path_factory):
 def test_pipeline_from_html_only_pages(spark, gaz, corpus, clustered):
     """input_hint closure: pages arriving with ONLY the html:binary column
     populated (text null) must produce exactly the text-path pipeline output
-    — extract_normalize's html branch extracts the text from markup, and
+    — extract_normalize's fused UDF extracts the text from markup, and
     since html_to_text is byte-identical to the text column on this corpus,
     every downstream row (mention, std, entity_key) matches. F1 gate
     therefore holds verbatim."""
@@ -222,10 +222,31 @@ def test_page_with_null_text_and_null_html_is_skipped(spark, gaz, corpus):
     assert got == want
 
 
+def test_pages_mixing_text_and_html_match_the_texted_output(spark, gaz, corpus, clustered):
+    """One frame mixing four kinds of page — texted, html-only with a null
+    ``text``, ``text = ""`` plus html, and one page with both null — yields
+    exactly the all-texted frame's (url, mention, std, entity_key) rows: the
+    fused UDF reads each page's text from wherever it is present."""
+    pages, _ = corpus
+    kinds = [
+        lambda url, ts, html, text, lang: (url, ts, html, text, lang),
+        lambda url, ts, html, text, lang: (url, ts, html, None, lang),
+        lambda url, ts, html, text, lang: (url, ts, html, "", lang),
+    ]
+    mixed = [kinds[i % 3](*page) for i, page in enumerate(pages)]
+    mixed.append(("https://empty.vn/p", pages[0][1], None, None, "vi"))
+    out = run_pipeline(spark, spark.createDataFrame(mixed, _nullable(PAGES_SCHEMA)), gaz)
+    cols = ["url", "mention", "std", "entity_key"]
+    got = sorted(tuple(r) for r in out.select(*cols).collect())
+    want = sorted(tuple(r) for r in clustered.select(*cols).collect())
+    assert want
+    assert got == want
+
+
 def test_html_with_invalid_utf8_matches_its_text(spark, gaz, corpus, clustered):
     """Html bytes holding invalid UTF-8 (a ``\\xff\\xfe`` prefix and a lone
     ``\\x80`` on the mention's line) resolve exactly like the same page with
-    ``html_to_text(html)`` as its text: the html branch decodes with
+    ``html_to_text(html)`` as its text: the extract UDF decodes html with
     replacement instead of failing the stage. The mention text and entity
     equal the clean page's: the replacement character glued to the closing
     period ends the span like a space would."""

@@ -199,30 +199,32 @@ def test_media_decode_is_pure_map_chain(spark, queries):
     assert "lang" not in read_schema and "source" not in read_schema
 
 
-def test_extract_normalize_html_branch_isolated(spark, gaz):
-    """extract_normalize on a frame with an html column must plan ONE fused
-    ArrowEvalPython per branch (two in total — the html→text step rides
-    inside the miss branch's extract UDF, never a chained second UDF), with
-    the null/empty text predicate on both branches, joined by a Union — the
-    deliberate alternative to when(udf(html)), which Catalyst would hoist
-    into an unconditional projection over every page's html bytes."""
+def test_extract_normalize_one_scan_one_udf(spark, gaz, tmp_path):
+    """extract_normalize over a parquet page table with an html column plans
+    ONE page scan and ONE fused ArrowEvalPython, and no Union. The UDF's html
+    argument is the JVM-side CASE that nulls the markup of pages with text,
+    so only text-less pages ship html bytes into Python."""
     from address_parser_spark.gazetteer.nodes import alias_registries
     from address_parser_spark.operators.parse import extract_normalize
     from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
 
     pages, _ = synth_pages_local(gaz, 30)
-    df = spark.createDataFrame(pages, PAGES_SCHEMA)
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(pages, PAGES_SCHEMA).write.parquet(path)
+    df = spark.read.parquet(path)
     assert "html" in df.columns
-    plan = plan_of(extract_normalize(df, alias_registries(gaz)))
-    # one UDF NODE per branch (the formatted plan names each node in both
-    # the tree summary and the detail section, so count node headers)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2
-    # both branches filter on the text predicate before the union: the
-    # texted branch on its negation, the html branch on the predicate itself
-    conds = [l for l in plan.splitlines() if l.startswith("Condition") and "text" in l]
-    assert len(conds) == 2
-    assert sum("NOT" in c for c in conds) == 1
-    assert "Union" in plan
+    plan = re.sub(r"#\d+L?", "", plan_of(extract_normalize(df, alias_registries(gaz))))
+    # the formatted plan names each node in both the tree summary and the
+    # detail section, so count node headers
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    udfs = re.findall(r"\(\d+\) ArrowEvalPython", plan)
+    assert len(udfs) == 1, plan
+    assert "Union" not in plan
+    udf_args = re.search(r"Arguments: \[extract_features_udf\((.*)\)\]", plan)
+    assert udf_args, plan
+    assert udf_args.group(1) == (
+        "text, CASE WHEN (isnull(text) OR (text = )) THEN html END"
+    ), plan
 
 
 def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
@@ -259,6 +261,39 @@ def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
     dp = spark.sparkContext.defaultParallelism
     assert re.search(rf"hashpartitioning\(std#\d+, {dp}\), REPARTITION_BY_NUM", plan), plan
+
+
+def test_resolve_mentions_starts_one_job_and_plans_one_kernel(spark, gaz):
+    """resolve_mentions runs only the eager extract checkpoint before it
+    returns: the kernel and the fact join stay lazy, so the kernel runs once,
+    inside the job that materializes the result, and its plan holds exactly
+    one ``resolve_udf`` ArrowEvalPython."""
+    from address_parser_spark.gazetteer.nodes import (
+        alias_registries, build_nodes, build_repair_state,
+    )
+    from address_parser_spark.operators.parse import resolve_mentions
+    from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
+
+    pages, _ = synth_pages_local(gaz, 30)
+    df = spark.createDataFrame(pages, PAGES_SCHEMA)
+    nodes = build_nodes(gaz)
+    sc = spark.sparkContext
+    group = "test_resolve_mentions_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        resolved = resolve_mentions(
+            df, nodes, alias_registries(gaz), repair_state=build_repair_state(gaz, nodes)
+        )
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1, jobs
+    plan = plan_of(resolved)
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    assert re.search(r"Arguments: \[resolve_udf\(", plan), plan
 
 
 def test_driver_built_frames_are_local_table_scans(spark, gaz):
