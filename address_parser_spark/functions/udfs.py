@@ -7,8 +7,8 @@ Spark Python UDFs anywhere in the engine (``input_hint`` requirement).
 Driver-built state reaches the UDFs one way: ``broadcast_state`` pickles it
 once, checks ``MAX_RESOLVER_STATE_BYTES`` on those bytes, broadcasts them
 under a driver token and decodes them once per token per worker. Two
-payloads use it: the alias registries of the extract UDF
-(``decode_registries``) and the resolve kernel's ``resolver_state``
+payloads use it: the alias registries of the extract and resolve UDFs
+(``decode_registries``) and the resolve UDF's ``resolver_state``
 (``decode_resolver_state``). ``LocalParser`` runs the same decoders and the
 same per-mention functions (``mention_features``, ``resolve_one``) on the
 driver.
@@ -28,6 +28,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from address_parser_spark.textops.detect import AliasRegistry, detect_by_prefix
+from address_parser_spark.textops.extract import extract_mentions
+from address_parser_spark.textops.html import html_to_text
 from address_parser_spark.textops.ngrams import char_ngram_set, char_ngrams
 from address_parser_spark.textops.normalize import normalize_advanced, normalize_basic
 from address_parser_spark.textops.similarity import indel_ratio, partial_ratio, wratio
@@ -123,39 +125,33 @@ def mention_features(mention: str, regs: tuple, det_cache: dict) -> tuple:
     return (mention, std, basic) + det
 
 
+def page_features(t, h, regs: tuple, det_cache: dict) -> list[tuple]:
+    """One page → the ``_FEATURES_SCHEMA`` rows of its mentions, in page
+    order. The page's text is ``t`` when that is a non-empty string, else
+    ``textops.html.html_to_text(h)`` (a null ``h`` gives no mentions);
+    mentions whose advanced form is shorter than two characters are
+    dropped. ``regs`` and ``det_cache`` are ``mention_features``'."""
+    if not isinstance(t, str) or not t:
+        t = html_to_text(h)
+    if not t:
+        return []
+    rows = (mention_features(m, regs, det_cache) for m in extract_mentions(t))
+    return [row for row in rows if len(row[1]) >= 2]
+
+
 def make_extract_features_udf(get_regs):
-    """FUSED html→text + extraction + normalization (advanced & basic) +
-    prefix detection in a single Arrow node over ``(text, html)``;
+    """``page_features`` as one Arrow node over ``(text, html)``: html→text,
+    extraction, normalization (advanced & basic) and prefix detection;
     ``get_regs`` is the ``broadcast_state`` getter of the registries.
-
-    Chaining these as separate pandas UDFs plants several ArrowEvalPython
-    operators in ONE stage — every task then runs that many python workers
-    concurrently (task slots × UDF nodes processes; measured: a 32-core ×
-    64-partition run spent ~25s spawning/importing ~128 workers). One fused
-    UDF keeps it at one worker per task slot and one Arrow round-trip.
-
-    A page's text is ``text`` when that is a non-empty string, else
-    ``textops.html.html_to_text(html)`` (a null html gives no mentions).
     ``extract_normalize`` nulls ``html`` on the JVM for texted pages, so
-    their markup never crosses into Python.
-    """
-    from address_parser_spark.textops.extract import extract_mentions
-    from address_parser_spark.textops.html import html_to_text
+    their markup never crosses into Python."""
 
     @pandas_udf(_FEATURES_SCHEMA)
     def extract_features_udf(text: pd.Series, html: pd.Series) -> pd.Series:
         regs = get_regs()
         det_cache: dict[str, tuple] = {}
-
-        def run(t, h):
-            if not isinstance(t, str) or not t:
-                t = html_to_text(h)
-            if not t:
-                return []
-            rows = (mention_features(m, regs, det_cache) for m in extract_mentions(t))
-            return [row for row in rows if len(row[1]) >= 2]
-
-        return pd.Series([run(t, h) for t, h in zip(text, html)], index=text.index)
+        return pd.Series([page_features(t, h, regs, det_cache) for t, h in zip(text, html)],
+                         index=text.index)
 
     return extract_features_udf
 
@@ -295,7 +291,7 @@ def _street_and_entity(original: str, std: str, province, district, ward,
 
 # ---------------------------------------------------------------------------
 # Fused broadcast resolver: probe → top-K → Dice gate → score → argmax →
-# repair → street, one Arrow node per DISTINCT mention.
+# repair → street, in the same Arrow node as the page's extraction.
 #
 # The gazetteer is a BROADCAST DIMENSION: its pickled resolver state is about
 # 0.19 MB per 1k nodes (~7 MB at the reference's 38.7k nodes). A relational
@@ -376,15 +372,33 @@ def decode_resolver_state(state: dict) -> dict:
     return {**state, "boost_memo": {}}
 
 
-def make_resolve_udf(spark, state: dict):
-    """Fused resolve kernel over the broadcast ``resolver_state``: one
-    ``resolve_one`` call per distinct mention, returned as an
-    ``array<RESOLVE_SCHEMA>`` of zero (unresolved) or one row, so the
-    caller's ``explode`` drops unresolved mentions.
+_RESOLVED_SCHEMA = T.ArrayType(
+    T.StructType(_FEATURES_SCHEMA.elementType.fields[:2] + RESOLVE_SCHEMA.fields)
+)
 
-    Per mention (reference ``process()``, minus prefix detection which rides
-    in on the extract stage): gram set and top-5 mass partial flag derived
-    from ``std`` (:148-154), counter probe of the inverted index
+
+def make_resolve_udf(spark, get_regs, state: dict):
+    """The whole per-page resolve as ONE Arrow node over ``(text, html)``:
+    ``page_features`` extracts the page's mentions (``get_regs`` is the
+    ``broadcast_state`` getter of the registries), then ``resolve_one`` runs
+    on each mention against the broadcast ``resolver_state``. Returns
+    ``_RESOLVED_SCHEMA``: one (mention, std, *RESOLVE_SCHEMA) row per
+    resolved mention of the page, in page order; an unresolved mention gives
+    no row.
+
+    One node, not an extract UDF chained to a resolve UDF: chained pandas
+    UDFs plant several ArrowEvalPython operators in ONE stage, and every
+    task then runs that many Python workers concurrently (task slots × UDF
+    nodes processes; measured: a 32-core × 64-partition run spent ~25 s
+    spawning and importing ~128 workers). One node keeps it at one worker
+    per task slot and one Arrow round-trip per page.
+
+    Resolution is a pure function of the mention text, so a repeated
+    mention is resolved once per Arrow batch (``spark.sql.execution.arrow.
+    maxRecordsPerBatch`` pages) and its row reused.
+
+    Per mention (reference ``process()``): gram set and top-5 mass partial
+    flag derived from ``std`` (:148-154), counter probe of the inverted index
     (inexus_parser.py:2670-2680), ``TOPK_CANDIDATES`` cap (:114),
     ``DICE_GATE`` on primary grams (:2824-2827), ``SCORE_SLICE`` score slice
     (:2878), blend + boosts (:2885-2912), lexicographic argmax (:2926-2940)
@@ -402,15 +416,23 @@ def make_resolve_udf(spark, state: dict):
         f"resolver state for {len(state['attrs']):,} gazetteer nodes",
     )
 
-    @pandas_udf(T.ArrayType(RESOLVE_SCHEMA))
-    def resolve_udf(
-        mention: pd.Series, std: pd.Series, std_basic: pd.Series,
-        det_p: pd.Series, det_d: pd.Series, det_w: pd.Series,
-    ) -> pd.Series:
-        st = get_state()
-        rows = (resolve_one(st, *args)
-                for args in zip(mention, std, std_basic, det_p, det_d, det_w))
-        return pd.Series([[] if row is None else [row] for row in rows])
+    @pandas_udf(_RESOLVED_SCHEMA)
+    def resolve_udf(text: pd.Series, html: pd.Series) -> pd.Series:
+        regs, st = get_regs(), get_state()
+        det_cache: dict[str, tuple] = {}
+        resolved: dict[str, tuple | None] = {}
+
+        def run(t, h):
+            rows = []
+            for f in page_features(t, h, regs, det_cache):
+                if f[0] not in resolved:
+                    resolved[f[0]] = resolve_one(st, *f)
+                row = resolved[f[0]]
+                if row is not None:
+                    rows.append(f[:2] + row)
+            return rows
+
+        return pd.Series([run(t, h) for t, h in zip(text, html)], index=text.index)
 
     return resolve_udf
 

@@ -1,43 +1,66 @@
 """Mention → canonical-entity resolution as a DataFrame program.
 
 This is the reference's ``AddressParser.process`` (inexus_parser.py:133-466)
-re-planned for Catalyst (SURVEY §3.1). Stages and their physical shape:
+re-planned for Catalyst (SURVEY §3.1). The reference's bulk pipeline runs
+``process`` once per row; here each page crosses into Python once, in one
+fused Arrow UDF (``functions.udfs.make_resolve_udf``), over one page scan —
+narrow, with no shuffle beyond ``fan_out``'s scan-width round-robin:
 
-1. **extract+normalize** (narrow): one fused Arrow UDF per page —
-   trigger-scan extraction, advanced + basic normalization, prefix
-   detection (reference ``_detect_by_prefix`` :2685-2762) against broadcast
-   alias registries — exploded to one flat row per mention. Each mention
-   gets a compact 64-bit key ``mid`` so downstream shuffles move longs, not
-   strings. The frame carries no array column: the gram set and partial
-   flag are functions of ``std`` that only the kernel reads.
-2. **distinct mentions** (one partial-aggregate shuffle): resolution is a
-   pure function of the mention text, so everything after this runs once
-   per distinct string.
-3. **resolve kernel** (repartition on ``std``): one fused Arrow UDF
-   (``functions.udfs.make_resolve_udf`` → ``resolve_one``) probes the
-   broadcast gazetteer state map-side — gram set and partial flag,
-   inverted-index probe, top-K cap, Dice gate with the reference's early
-   break, detected-component prioritization, score slice, blend + boosts,
-   lexicographic argmax, repair cascade, street extraction, format tag and
-   entity key — and emits the finished row, or none for an unresolved
-   mention. No corpus × catalog rows exist at any point: the catalog is a
-   broadcast dimension.
-4. **fact join**: winners (distinct-mention-sized) join back onto the
-   (mid, url, mention) rows on the mention string; Spark's own
-   ``autoBroadcastJoinThreshold`` and AQE pick the join strategy.
+1. **extract+normalize**: trigger-scan extraction, advanced + basic
+   normalization, prefix detection (reference ``_detect_by_prefix``
+   :2685-2762) against broadcast alias registries (``page_features``).
+2. **resolve** (``resolve_one``), in the same UDF call: gram set and
+   partial flag, inverted-index probe, top-K cap, Dice gate with the
+   reference's early break, detected-component prioritization, score
+   slice, blend + boosts, lexicographic argmax, repair cascade, street
+   extraction, format tag and entity key, against the broadcast gazetteer
+   state. A mention repeated within an Arrow batch is resolved once. No
+   corpus × catalog rows exist at any point: the catalog is a broadcast
+   dimension.
+
+Each resolved mention gets a compact 64-bit key ``mid`` so downstream
+shuffles move longs, not strings. ``extract_normalize`` runs step 1 alone
+for the streaming path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from address_parser_spark.functions.udfs import (
+    RESOLVE_SCHEMA,
     broadcast_state,
     decode_registries,
     make_extract_features_udf,
     make_resolve_udf,
     resolver_state,
 )
+from address_parser_spark.operators.partitioning import fan_out
+
+
+def _page_args(pages: DataFrame) -> tuple[Column, Column]:
+    """The page UDFs' ``(text, html)`` arguments: the text, and the markup
+    only where the text is null or empty. The CASE is the UDF's ARGUMENT,
+    not a branch around it, so Catalyst evaluates it on the JVM below the
+    Arrow node: a page with text ships a null in place of its markup. A
+    frame without an ``html`` column (the streaming ``PAGES_STREAM_SCHEMA``)
+    passes a null binary."""
+    text = F.col("text")
+    html = (
+        F.when(text.isNull() | (text == ""), F.col("html"))
+        if "html" in pages.columns else F.lit(None).cast("binary")
+    )
+    return text, html
+
+
+def _mid() -> Column:
+    """A mention occurrence's compact key."""
+    return F.xxhash64("url", "mention").alias("mid")
+
+
+def _get_registries(pages: DataFrame, registries: dict[str, list[str]]):
+    """``registries`` broadcast for one page UDF; returns the getter."""
+    return broadcast_state(pages.sparkSession, registries, decode_registries, "alias registries")
 
 
 def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
@@ -46,73 +69,17 @@ def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
     std, std_basic, det_p, det_d, det_w, mid) — the normalized forms, the
     detected components and a compact key. Narrow — no shuffle; ONE scan
     reads the Vietnamese pages' (url, text, html) plus any ``carry_cols``
-    (e.g. the event-time column for the streaming path), and ONE fused
+    (e.g. the event-time column for the streaming path), and ONE
     ``make_extract_features_udf`` node (one Python crossing per page) takes
-    ``(text, CASE WHEN text IS NULL OR text = '' THEN html END)``.
-    ``registries`` (``gazetteer.nodes.alias_registries``) are broadcast once
-    per call.
-
-    The CASE is the UDF's ARGUMENT, not a branch around it, so Catalyst
-    evaluates it on the JVM below the Arrow node: a page with text ships a
-    null in place of its markup, and only pages whose text is null or empty
-    send html bytes to Python, where ``html_to_text`` runs first. A frame
-    without an ``html`` column (the streaming ``PAGES_STREAM_SCHEMA``) passes
-    a null binary."""
-    get_regs = broadcast_state(
-        pages.sparkSession, registries, decode_registries, "alias registries"
-    )
-    features = make_extract_features_udf(get_regs)
+    ``_page_args``. ``registries`` (``gazetteer.nodes.alias_registries``)
+    are broadcast once per call."""
+    features = make_extract_features_udf(_get_registries(pages, registries))
     carry = list(carry_cols or [])
-    text = F.col("text")
-    html = (
-        F.when(text.isNull() | (text == ""), F.col("html"))
-        if "html" in pages.columns else F.lit(None).cast("binary")
-    )
     return (
         pages.filter(F.col("lang") == "vi")
-        .select("url", *carry, F.explode(features(text, html)).alias("f"))
+        .select("url", *carry, F.explode(features(*_page_args(pages))).alias("f"))
         .select("url", *carry, "f.*")
-        .withColumn("mid", F.xxhash64("url", "mention"))
-    )
-
-
-def _resolve_distinct(mentions: DataFrame, resolve) -> DataFrame:
-    """The kernel stage: ``mentions`` (``extract_normalize``'s frame) →
-    (mention, std, *RESOLVE_SCHEMA) per DISTINCT resolved mention, lazy.
-    ``resolve`` is ``make_resolve_udf``'s kernel; it returns zero or one row
-    per mention, so the ``explode`` drops unresolved mentions."""
-    # dropDuplicates, not a pre-repartitioned groupBy: a round-6 variant
-    # fused the dedup onto the kernel's std exchange (repartition(std) →
-    # groupBy(std, mention)), which saved one distinct-mention-sized
-    # exchange but shipped EVERY occurrence through the std exchange at
-    # full width — dropDuplicates' map-side partial aggregate ships at most
-    # one copy per input partition, which is the winning shape on exactly
-    # the boilerplate-heavy corpora this dedup exists for (the same mention
-    # repeated thousands of times across pages). Measured equal at the
-    # 1200-page bench; the partial-agg shape is the scale-correct one.
-    args = ["mention", "std", "std_basic", "det_p", "det_d", "det_w"]
-    uniq = mentions.dropDuplicates(["mention"]).select(*args)
-    return (
-        uniq
-        # One Python task per core, one task wave. Each Python task waits
-        # about 0.25 s before its UDF sees a row (PySpark's per-task
-        # ``setup_spark_files`` → ``importlib.invalidate_caches()``, which
-        # re-reads the zipped pyspark directory), so a second wave costs more
-        # than the pruned kernel's work at 400 pages (8 tasks 1.10 s, 4 tasks
-        # 0.77 s at local[4]). The count stays EXPLICIT: the stage is tiny in
-        # bytes, and AQE never coalesces an explicit repartition count, where
-        # its byte-driven coalescing would serialize the stage into one task.
-        # The ``std`` key only spreads rows: no kernel state depends on which
-        # mentions share a task.
-        .repartition(mentions.sparkSession.sparkContext.defaultParallelism, F.col("std"))
-        # explode(udf) plants a GENERATOR between the kernel and the
-        # downstream projection: without it Catalyst's python-UDF
-        # extraction can materialize TWO chained ArrowEvalPython nodes (one
-        # per consumer of the result) and every row pays the kernel twice —
-        # measured 11 s → 34 s on the 40k-page profile, the single largest
-        # serial term in the scaling story.
-        .select("mention", "std", F.explode(resolve(*args)).alias("w"))
-        .select("mention", "std", "w.*")
+        .select("*", _mid())
     )
 
 
@@ -122,42 +89,35 @@ def resolve_mentions(
     registries: dict[str, list[str]],
     repair_state: dict,
 ) -> DataFrame:
-    """Full extract → dedup → resolve (probe/gate/score/argmax/repair/street)
-    pipeline; winners joined back onto the (url, mention) fact rows.
+    """pages → one row per resolved mention occurrence: (mention, mid, url,
+    std, *RESOLVE_SCHEMA). Unresolved mentions give no row.
 
-    **Distinct-mention resolution.** The entire resolve is a pure function of
-    the mention TEXT (the reference's ``process()`` is a per-string function,
-    inexus_parser.py:133), so the expensive stages run once per DISTINCT
-    mention. On web corpora the same address string repeats across pages
-    (boilerplate footers, mirrored listings); the back-join keys on the raw
-    string (collision-proof).
+    One lazy, narrow select: the Vietnamese pages' (url, text, html), widened
+    by ``fan_out`` when the scan exposes too few partitions, go through ONE
+    ``make_resolve_udf`` node per page that extracts the page's mentions
+    and resolves each. Starts no Spark job; the UDF runs inside whichever
+    job materializes the result (``run_pipeline``'s ``resolved`` stage).
 
-    **One resolve path.** ``nodes`` (``gazetteer.nodes.build_nodes``) and
-    ``repair_state`` (``gazetteer.nodes.build_repair_state``) become a
-    BROADCAST DIMENSION: their ``resolver_state`` pickles to about 0.24 MB
-    per 1k nodes (261 KB for the 1,073-node synthetic gazetteer), and
-    ``broadcast_state`` refuses a state over its byte budget rather than
-    shipping it. One fused Arrow kernel per distinct mention probes it
-    map-side, so no catalog row is ever shuffled — the only exchanges before
-    the fact join move distinct mentions (the dedup and the kernel's
-    repartition), the shape SURVEY §3.2 calls "embarrassingly parallel".
-    ``LocalParser`` runs the same ``resolve_one`` per string — format tag,
-    entity key and the unresolved rule included — and is the reference the
-    ER fixture pins.
-
-    Lazy: the kernel runs once, inside whichever job materializes the
-    result (``run_pipeline``'s ``resolved`` stage). Embedded in the join plan
-    it keeps its own parallelism — ``_resolve_distinct`` pins it with an
-    explicit repartition count that AQE never coalesces.
-
-    ``mentions`` feeds both the distinct projection and the fact join —
-    checkpointed EAGERLY (the one job this function starts): AQE runs
-    query-stage futures concurrently, and a lazy checkpoint referenced by
-    several in-flight futures is recomputed by each of them (measured: the
-    extract UDF chain re-executing up to 4× with AQE-dependent variance).
+    ``nodes`` (``gazetteer.nodes.build_nodes``) and ``repair_state``
+    (``gazetteer.nodes.build_repair_state``) become a BROADCAST DIMENSION:
+    their ``resolver_state`` pickles to about 0.24 MB per 1k nodes (261 KB
+    for the 1,073-node synthetic gazetteer), and ``broadcast_state`` refuses
+    a state over its byte budget rather than shipping it. ``LocalParser``
+    runs the same ``resolve_one`` per string — format tag, entity key and
+    the unresolved rule included — and is the reference the ER fixture pins.
     """
-    mentions = extract_normalize(pages, registries).localCheckpoint(eager=True)
-    resolve = make_resolve_udf(pages.sparkSession, resolver_state(nodes, repair_state))
-    return mentions.select("mid", "url", "mention").join(
-        _resolve_distinct(mentions, resolve), "mention"
+    resolve = make_resolve_udf(
+        pages.sparkSession, _get_registries(pages, registries),
+        resolver_state(nodes, repair_state),
+    )
+    page_cols = [c for c in ("url", "text", "html") if c in pages.columns]
+    vi = fan_out(pages.filter(F.col("lang") == "vi").select(*page_cols))
+    return (
+        # explode(udf) plants a GENERATOR between the UDF and the projection:
+        # without it Catalyst's python-UDF extraction can plan one
+        # ArrowEvalPython per consumer of the result, and every page pays
+        # the UDF twice (measured 11 s → 34 s on a 40k-page profile).
+        vi.select("url", F.explode(resolve(*_page_args(vi))).alias("r"))
+        .select("url", "r.*")
+        .select("mention", _mid(), "url", "std", *RESOLVE_SCHEMA.names)
     )

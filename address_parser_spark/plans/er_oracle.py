@@ -1,7 +1,7 @@
 """Straight-line local oracle for the flagship ER pipeline.
 
-The distributed dataflow — extraction explode, distinct-mention resolve,
-fact join, the two string stars, connected components — must reproduce
+The distributed dataflow — the one per-page extract-and-resolve UDF and its
+explode, the two string stars, connected components — must reproduce
 this single-process computation exactly:
 
 - per-(url, mention) components via ``LocalParser`` (the same pure functions

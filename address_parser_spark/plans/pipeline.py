@@ -1,8 +1,9 @@
 """The entity-resolution pipeline (SURVEY §7), resumable.
 
-pages → (1) extract+normalize → (2) resolve each distinct mention against the
-broadcast gazetteer (one fused Arrow kernel: probe/gate/bounded score/argmax/
-repair/street, ``operators.parse.resolve_mentions``) → (3) connected
+pages → (1) extract+normalize each page's mentions and (2) resolve each one
+against the broadcast gazetteer (probe/gate/bounded score/argmax/repair/
+street), both in one fused Arrow UDF per page over one page scan
+(``operators.parse.resolve_mentions``) → (3) connected
 components over two exact-string stars, the entity anchor and the identical
 ``(canon, digit_sig)`` group (``operators.cluster.cluster_mentions``; no
 blocking keys, no cap) → clusters, plus the old→new ward-code mapping when
@@ -14,7 +15,7 @@ Run standalone:
 
 With a ``StageStore`` attached, two stages land as snapshots (parquet
 locally, Iceberg table on a real cluster) with lineage records: ``resolved``,
-the Python resolve kernel's output, and ``clustered``, the result. The store
+the one Python page pass's output, and ``clustered``, the result. The store
 is bound to a fingerprint of the pages and the gazetteer. A rerun on the same
 input reads committed snapshots back, so a resume re-runs only the JVM-only
 string stars and CC; a rerun on another input raises ``ValueError``.
@@ -147,7 +148,7 @@ def run_pipeline(
         store.bind_input(fingerprint_input(pages, gaz))
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
-    # extract_normalize: its one fused UDF gets a page's html only when the
+    # resolve_mentions: its one fused UDF gets a page's html only when the
     # text column is null/empty, so texted rows never ship html bytes to
     # Python.
     build_resolved = lambda: resolve_mentions(pages, nodes, registries, repair_state=repair_state)

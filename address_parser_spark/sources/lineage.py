@@ -1,7 +1,8 @@
 """Checkpointed stage store with lineage records and resume.
 
 The pipeline snapshots two stages here: ``resolved`` (the output of the
-Python resolve kernel, the only expensive stage) and ``clustered`` (the
+one Python pass that extracts and resolves each page's mentions, the only
+expensive stage) and ``clustered`` (the
 result). Snapshots are parquet here; the same call-sites become
 ``df.writeTo(table).append()`` against an Iceberg catalog on a real cluster —
 this container has no Iceberg runtime jar, so the store abstracts the sink.

@@ -21,8 +21,8 @@ Extraction rules (applied in order, all deterministic):
    are stripped, empty lines dropped, lines joined with ``\n``.
 
 The function is pure Python (stdlib only) and runs Arrow-batched inside the
-fused extract UDF (``functions.udfs.make_extract_features_udf``, on the pages
-whose ``text`` is null or empty in ``operators.parse.extract_normalize``) —
+fused page UDFs (``functions.udfs.page_features``, on the pages whose
+``text`` is null or empty, see ``operators.parse._page_args``) —
 entity decoding over the full HTML5 named-reference table is not expressible
 with JVM builtins, so this is a genuine UDF case; the batch path keeps it off
 the per-row interpreter.

@@ -227,22 +227,14 @@ def test_extract_normalize_one_scan_one_udf(spark, gaz, tmp_path):
     ), plan
 
 
-def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
+def test_mention_frame_is_flat(spark, gaz):
     """The mention frame is exactly the extract UDF's fields plus ``mid`` —
-    no array column: the gram set and partial flag are derived inside the
-    kernel from ``std``. The kernel stage over the checkpointed mentions
-    plans exactly ONE ArrowEvalPython, behind an explicit
-    ``defaultParallelism``-way exchange on ``std`` (one Python task wave,
-    never AQE-coalesced), and emits the finished row."""
+    no array column: the gram set and partial flag are derived by
+    ``resolve_one`` from ``std``."""
     from pyspark.sql import types as T
 
-    from address_parser_spark.functions.udfs import (
-        RESOLVE_SCHEMA, make_resolve_udf, resolver_state,
-    )
-    from address_parser_spark.gazetteer.nodes import (
-        alias_registries, build_nodes, build_repair_state,
-    )
-    from address_parser_spark.operators.parse import _resolve_distinct, extract_normalize
+    from address_parser_spark.gazetteer.nodes import alias_registries
+    from address_parser_spark.operators.parse import extract_normalize
     from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
 
     pages, _ = synth_pages_local(gaz, 30)
@@ -253,21 +245,15 @@ def test_mention_frame_is_flat_and_kernel_plans_one_udf(spark, gaz):
     ]
     assert not any(isinstance(f.dataType, T.ArrayType) for f in mentions.schema.fields)
 
-    nodes = build_nodes(gaz)
-    resolve = make_resolve_udf(spark, resolver_state(nodes, build_repair_state(gaz, nodes)))
-    kernel = _resolve_distinct(mentions.localCheckpoint(eager=True), resolve)
-    assert kernel.columns == ["mention", "std", *RESOLVE_SCHEMA.names]
-    plan = plan_of(kernel)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
-    dp = spark.sparkContext.defaultParallelism
-    assert re.search(rf"hashpartitioning\(std#\d+, {dp}\), REPARTITION_BY_NUM", plan), plan
 
-
-def test_resolve_mentions_starts_one_job_and_plans_one_kernel(spark, gaz):
-    """resolve_mentions runs only the eager extract checkpoint before it
-    returns: the kernel and the fact join stay lazy, so the kernel runs once,
-    inside the job that materializes the result, and its plan holds exactly
-    one ``resolve_udf`` ArrowEvalPython."""
+def test_resolve_mentions_starts_no_job_and_plans_one_pass(spark, gaz, tmp_path):
+    """resolve_mentions starts no Spark job before it returns, and over a
+    single-file parquet page table it plans one page scan, ``fan_out``'s
+    round-robin exchange to ``defaultParallelism`` and ONE ArrowEvalPython
+    that takes the pages' ``(text, CASE … THEN html END)``: no join and no
+    hash exchange. Its columns are (mention, mid, url, std,
+    *RESOLVE_SCHEMA)."""
+    from address_parser_spark.functions.udfs import RESOLVE_SCHEMA
     from address_parser_spark.gazetteer.nodes import (
         alias_registries, build_nodes, build_repair_state,
     )
@@ -275,7 +261,9 @@ def test_resolve_mentions_starts_one_job_and_plans_one_kernel(spark, gaz):
     from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
 
     pages, _ = synth_pages_local(gaz, 30)
-    df = spark.createDataFrame(pages, PAGES_SCHEMA)
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(pages, PAGES_SCHEMA).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
     nodes = build_nodes(gaz)
     sc = spark.sparkContext
     group = "test_resolve_mentions_jobs"
@@ -290,10 +278,19 @@ def test_resolve_mentions_starts_one_job_and_plans_one_kernel(spark, gaz):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(jobs) == 1, jobs
-    plan = plan_of(resolved)
+    assert len(jobs) == 0, jobs
+    assert resolved.columns == ["mention", "mid", "url", "std", *RESOLVE_SCHEMA.names]
+    plan = re.sub(r"#\d+L?", "", plan_of(resolved))
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+    dp = sc.defaultParallelism
+    assert len(re.findall(rf"RoundRobinPartitioning\({dp}\)", plan)) == 1, plan
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
-    assert re.search(r"Arguments: \[resolve_udf\(", plan), plan
+    udf_args = re.search(r"Arguments: \[resolve_udf\((.*)\)\]", plan)
+    assert udf_args, plan
+    assert udf_args.group(1) == (
+        "text, CASE WHEN (isnull(text) OR (text = )) THEN html END"
+    ), plan
+    assert "Join" not in plan and "hashpartitioning" not in plan, plan
 
 
 def test_driver_built_frames_are_local_table_scans(spark, gaz):

@@ -80,10 +80,11 @@ def test_unregistered_detected_alias_resolves_as_undetected(state, detected, reg
 def test_oversized_resolver_state_fails_loudly(spark, state, monkeypatch):
     """A state over the broadcast budget raises instead of shipping, and the
     message names the pickled size and the node count."""
-    udfs.make_resolve_udf(spark, state)  # the real state fits
+    get_regs = lambda: None  # never called: the budget is checked on the driver
+    udfs.make_resolve_udf(spark, get_regs, state)  # the real state fits
     monkeypatch.setattr(udfs, "MAX_RESOLVER_STATE_BYTES", 1024)
     with pytest.raises(ValueError, match=r"for 6 gazetteer nodes pickles to [\d,]+ bytes"):
-        udfs.make_resolve_udf(spark, state)
+        udfs.make_resolve_udf(spark, get_regs, state)
     with pytest.raises(ValueError, match=r"^alias registries pickles to [\d,]+ bytes"):
         broadcast_state(spark, {"ward": ["x" * 2048]}, udfs.decode_registries,
                         "alias registries")
@@ -128,6 +129,34 @@ def test_resolve_mentions_drops_unresolvable_mentions(spark, gaz):
     nodes = build_nodes(gaz)
     resolved = resolve_mentions(pages, nodes, registries, build_repair_state(gaz, nodes))
     assert resolved.count() == 0
+
+
+def test_resolve_udf_resolves_a_repeated_mention_once(spark, gaz, monkeypatch):
+    """The page UDF resolves each distinct mention once per Arrow batch and
+    reuses its row: the same mention on a texted page and on an html-only
+    page costs one ``resolve_one`` call, and both pages get its row; a page
+    with neither text nor html, and a page whose only mention resolves to
+    nothing, give no row."""
+    import pandas as pd
+
+    nodes = build_nodes(gaz)
+    get_regs = broadcast_state(spark, alias_registries(gaz), decode_registries, "alias registries")
+    state = resolver_state(nodes, build_repair_state(gaz, nodes))
+    resolve = udfs.make_resolve_udf(spark, get_regs, state)
+    calls = []
+    real = udfs.resolve_one
+    monkeypatch.setattr(udfs, "resolve_one", lambda st, *f: calls.append(f[0]) or real(st, *f))
+
+    page = f"Địa chỉ: {MENTION}"
+    html = f"<html><body><p>{page}</p></body></html>".encode()
+    out = resolve.func(pd.Series([page, "", None]), pd.Series([None, html, None]))
+    assert calls == [MENTION]
+    assert [len(rows) for rows in out] == [1, 1, 0]
+    assert out[0] == out[1] and out[0][0][0] == MENTION
+    assert len(out[0][0]) == 2 + len(RESOLVE_SCHEMA.names)
+
+    out = resolve.func(pd.Series([f"Địa chỉ: {UNRESOLVABLE}"]), pd.Series([None]))
+    assert calls[-1] == UNRESOLVABLE and list(out) == [[]]
 
 
 def _exhaustive_best(st, s, sb, partial_input, dp, dd, dw, candidates):
