@@ -3,17 +3,23 @@
 Five families (task brief): exact (hash groupBy), MinHash+LSH banding,
 SimHash, word-n-gram Jaccard, embedding-cosine near-dup. Everything is pure
 Column logic / relational algebra — no Python on the data path — so each
-operator both stays in whole-stage codegen and has an exact DuckDB oracle.
+operator runs on the JVM and has an exact DuckDB oracle. Higher-order
+functions (``transform``/``aggregate``) are ``CodegenFallback``: the Project
+holding one runs outside whole-stage codegen, row by row.
 
 Scale shape notes (the part that matters at 100 TB):
 - exact dedup: one hash agg on a 16-byte digest — shuffle width is (digest,
   doc_id), partial-agg'd map-side.
-- MinHash banding: signatures AND band keys are computed scan-side (no
-  shuffle); the shuffles are the band-key membership collection (one hash
-  exchange, window-count-bounded state — ``_grouped_docs_bounded``) and
-  the pair agg; oversized buckets are capped at ``max_block`` before any
-  member list exists, and pairs are generated JVM-side from each bucket's
-  member list — never a bucket self-join.
+- MinHash banding: shingle positions are exploded and hashed scan-side,
+  and the 8 per-permutation minima are one ``groupBy(doc_id)`` whose
+  exchange carries a partial aggregate (one row per doc and map
+  partition, not the shingle instances); band keys are the exact
+  signature values. The other shuffles are the band-key membership
+  collection (one hash exchange, window-count-bounded state —
+  ``_grouped_docs_bounded``) and the pair agg; oversized buckets are
+  capped at ``max_block`` before any member list exists, and pairs are
+  generated JVM-side from each bucket's member list — never a bucket
+  self-join.
 - Jaccard pairs: shingle explode → one hash exchange on which a window
   count sizes each shingle's doc set BEFORE the list is collected →
   JVM-side pair combinations → per-pair intersection counts (union size =
@@ -55,7 +61,7 @@ def with_word_shingles(df: DataFrame, text_col: str, k: int = 3, out: str = "_sh
 
     Tokens are staged as a REAL column before the shingle transform: the
     lambda body then references a cheap attribute instead of re-running
-    split+filter per shingle position (CollapseProject leaves multi-referenced
+    the tokenizer per shingle position (CollapseProject leaves multi-referenced
     non-trivial aliases staged — the same trap ``fingerprints`` documents)."""
     toks = F.col("_wsh_toks")
     n = F.size(toks)
@@ -119,61 +125,57 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _minhash_sig_structs(docs: DataFrame, text_col: str, k: int,
-                         fast_hash: bool) -> DataFrame:
-    """(doc_id, _sig array<struct<h_idx,minhash>>) — the full signature
-    computed map-side in one pass over the scan; no shuffle.
+def _minhash_signature(docs: DataFrame, text_col: str, k: int,
+                       fast_hash: bool) -> DataFrame:
+    """(doc_id, m0 … m7): the 8-permutation MinHash signature, one row per
+    document. ``doc_id`` is the documents table's key — the signature is
+    grouped by it (as the DuckDB oracle's band SQL is).
 
-    The 8 permutations are computed inside ONE ``transform`` over a literal
-    (h_idx, a, b) parameter array, so the hashed-shingle expression is
-    referenced exactly once. Eight sibling per-permutation structs each
-    referencing a staged `_sh_hashed` column measured 9 inlined copies of the
-    whole shingle pipeline in the optimized plan (~37 s vs ~4 s at sf0.1):
-    with the struct array feeding a Generate, column pruning rewrites past
-    the staging projection and CollapseProject's multi-reference guard never
-    sees the alias. A single reference can be inlined at most once, so the
-    plan shape is immune to that rule interplay by construction (guarded by
-    tests/test_plan_audit.py). pmod maps signed hashes into [0, P) so
-    xxhash64 and the unsigned md5-60 ints behave identically under the
-    permutation."""
-    staged = with_hashed_shingles(fan_out(docs), text_col, k, fast_hash).withColumn(
-        "_sh_hashed",
-        F.transform(F.col("_shh_arr"), lambda h: F.pmod(h, F.lit(MINHASH_P))),
+    Every operator here is code-generated: the shingle positions are
+    exploded (``explode(sequence(1, greatest(n−k+1, 1)))``), each position
+    is hashed in a plain Project, and one ``groupBy(doc_id)`` takes the 8
+    per-permutation minima. Spark's higher-order functions
+    (``transform``/``aggregate``/``filter``) are ``CodegenFallback`` — the
+    previous ``transform`` over a parameter array evaluated eight lambdas
+    per shingle row by row and kept its whole Project out of whole-stage
+    codegen. The one exchange (``hashpartitioning(doc_id)``) carries the
+    partial aggregate — one row per doc and map partition, not the shingle
+    instances.
+
+    A doc with fewer than ``k`` tokens has one shingle, its whole token list:
+    ``slice(t, 1, k)`` is then ``t`` itself (also for an empty or null
+    list), so one slice expression covers both cases. Shingles are hashed
+    per instance rather than per distinct value; repeats do not move a
+    minimum. pmod maps signed hashes into [0, P) so xxhash64 and the
+    unsigned md5-60 ints behave identically under the permutation."""
+    toks = F.col("_mh_toks")
+    shingle = F.slice(toks, F.col("_mh_pos"), k)
+    h = F.xxhash64(shingle) if fast_hash else _md5_60(F.concat_ws(" ", shingle))
+    positions = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
+    hashed = (
+        fan_out(docs)
+        .select("doc_id", tokens_col(F.lower(F.col(text_col))).alias("_mh_toks"))
+        .select("doc_id", "_mh_toks", F.explode(positions).alias("_mh_pos"))
+        .select("doc_id", F.pmod(h, F.lit(MINHASH_P)).alias("_mh_h"))
     )
-    params = F.array(*[
-        F.struct(
-            F.lit(j).alias("h_idx"), F.lit(a).alias("a"), F.lit(b).alias("b")
-        )
+    hp = F.col("_mh_h")
+    return hashed.groupBy("doc_id").agg(*[
+        F.min(F.pmod(a * hp + b, F.lit(MINHASH_P))).alias(f"m{j}")
         for j, (a, b) in enumerate(MINHASH_PARAMS)
     ])
-    sig = F.transform(
-        params,
-        lambda p: F.struct(
-            p["h_idx"].alias("h_idx"),
-            F.coalesce(
-                F.array_min(
-                    F.transform(
-                        F.col("_sh_hashed"),
-                        lambda h: F.pmod(p["a"] * h + p["b"], F.lit(MINHASH_P)),
-                    )
-                ),
-                F.lit(MINHASH_P),
-            ).alias("minhash"),
-        ),
-    )
-    return staged.select("doc_id", sig.alias("_sig"))
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", k: int = 3,
                        fast_hash: bool = False) -> DataFrame:
     """8-permutation MinHash signature per document, exploded one row per
-    hash index: (doc_id, h_idx, minhash). Cross-engine deterministic with the
+    hash index: (doc_id, h_idx, minhash). ``doc_id`` must be the table's key
+    (see ``_minhash_signature``). Cross-engine deterministic with the
     default md5 shingle hashing; ``fast_hash=True`` switches to xxhash64 for
     the production/bench path (signatures differ but dedup semantics and the
     dataflow shape are identical)."""
-    return _minhash_sig_structs(docs, text_col, k, fast_hash).select(
-        "doc_id", F.explode("_sig").alias("s")
-    ).select("doc_id", F.col("s.h_idx").alias("h_idx"), F.col("s.minhash").alias("minhash"))
+    sig = _minhash_signature(docs, text_col, k, fast_hash)
+    mins = F.array(*[F.col(f"m{j}") for j in range(len(MINHASH_PARAMS))])
+    return sig.select("doc_id", F.posexplode(mins).alias("h_idx", "minhash"))
 
 
 def _grouped_docs_bounded(rows: DataFrame, key: str, cap: int) -> DataFrame:
@@ -252,11 +254,13 @@ def _doc_pairs_per_bucket(grouped: DataFrame, docs_col: str = "docs") -> DataFra
 def minhash_band_pairs(docs: DataFrame, text_col: str = "text", rows_per_band: int = 2,
                        max_block: int = 50, fast_hash: bool = False) -> DataFrame:
     """LSH banding → candidate near-dup pairs (doc_a < doc_b, shared bands).
+    ``doc_id`` must be the table's key (see ``_minhash_signature``).
 
-    Band keys are computed map-side from the per-doc signature array (the
-    previous formulation exploded the signature and shuffled 8 rows/doc just
-    to regroup them); bucket membership is collected with BOUNDED per-key
-    state (``_grouped_docs_bounded`` — degenerate buckets like the
+    Each band's bucket key is the exact ``struct(band, m_i, m_{i+1}, …)`` of
+    its signature values — no hash of a built string, so bucket membership
+    cannot collide. The keys are built from the per-doc signature row after
+    its ``doc_id`` aggregation; bucket membership is collected with BOUNDED
+    per-key state (``_grouped_docs_bounded`` — degenerate buckets like the
     all-short-docs band can hold millions of members before the
     ``max_block`` filter discards them), then one hash-agg by pair counts
     shared bands."""
@@ -265,29 +269,14 @@ def minhash_band_pairs(docs: DataFrame, text_col: str = "text", rows_per_band: i
             f"rows_per_band={rows_per_band} must divide the signature size "
             f"{len(MINHASH_PARAMS)} — trailing permutations would be silently dropped"
         )
-    sig = _minhash_sig_structs(docs, text_col, 3, fast_hash)
-    n_bands = len(MINHASH_PARAMS) // rows_per_band
-    # Per band: xxhash64("<band>#<sorted 'h_idx:minhash' members joined by
-    # ','>"). The key is INTERNAL — the query's output is (doc_a, doc_b,
-    # shared_bands) and the DuckDB oracle groups by its own raw member
-    # string — so any injective-enough key over the same member string
-    # yields identical buckets. An 8-byte long shuffles 4× narrower than
-    # the previous 32-char md5 hex and hashes cheaper; 64-bit collision
-    # posture is the same as ``mid``/``fast_hash`` (birthday bound ~1e-8 at
-    # a billion distinct buckets).
-    band_keys = []
-    for j in range(n_bands):
-        members = F.array(*[
-            F.concat_ws(
-                ":",
-                F.lit(str(i)),
-                F.element_at(F.col("_sig"), i + 1)["minhash"].cast("string"),
-            )
-            for i in range(j * rows_per_band, (j + 1) * rows_per_band)
-        ])
-        band_keys.append(
-            F.xxhash64(F.concat_ws("#", F.lit(str(j)), F.array_join(F.array_sort(members), ",")))
+    sig = _minhash_signature(docs, text_col, 3, fast_hash)
+    band_keys = [
+        F.struct(
+            F.lit(j).alias("band"),
+            *[F.col(f"m{j * rows_per_band + r}").alias(f"m{r}") for r in range(rows_per_band)],
         )
+        for j in range(len(MINHASH_PARAMS) // rows_per_band)
+    ]
     bands = sig.select("doc_id", F.explode(F.array(*band_keys)).alias("bkey"))
     grouped = _grouped_docs_bounded(bands, "bkey", max_block).filter(F.col("df") >= 2)
     return (
@@ -302,24 +291,23 @@ def simhash32(docs: DataFrame, text_col: str = "text") -> DataFrame:
     is the sign of the per-bit vote sum, votes weighted by term frequency).
 
     ZERO shuffle: SimHash is per-document math, so the 32 vote counters are
-    folded map-side in ONE ``F.aggregate`` pass over the token-hash array
-    (struct-of-32 accumulator). The previous explode → groupBy(doc_id)
-    formulation shuffled every token INSTANCE — at web scale that is a
-    shuffle of the whole tokenized corpus to compute a per-row value. The
-    hashed array is referenced exactly once, so the plan is immune to the
-    CollapseProject/Generate re-inlining trap by construction (the minhash
-    lesson, tests/test_plan_audit.py). Docs with no tokens are dropped,
-    matching the explode semantics (and the DuckDB oracle) — via a
-    whitespace-only-text predicate applied BEFORE fan_out, deliberately:
-    a `size(tokens) > 0` filter gets predicate-pushed below the staging
-    projection AND the repartition, re-running the whole tokenization a
-    second time serially at the scan (measured on the optimized plan);
-    ``rlike '\\S'`` is scan-cheap and prunes exactly the zero-token rows
-    (tokens_col drops whitespace-only splits — trim() would miss
-    tab/newline-only texts, which trim spaces only)."""
-    # Hash array staged as a REAL column (md5 evaluated once per token — the
-    # CollapseProject/Generate re-inlining guard, see minhash_signatures /
-    # test_plan_audit; plan-verified: one md5, one split). Per bit, the vote
+    folded map-side by ``F.aggregate`` passes over the token-hash array. The
+    previous explode → groupBy(doc_id) formulation shuffled every token
+    INSTANCE — at web scale that is a shuffle of the whole tokenized corpus
+    to compute a per-row value (``_minhash_signature`` can afford its doc_id
+    exchange because a min partially aggregates map-side to one row per doc;
+    ``test_simhash_plans_zero_shuffle`` pins the zero-shuffle form here).
+    Docs with no tokens are dropped, matching the explode semantics (and the
+    DuckDB oracle) — via a whitespace-only-text predicate applied BEFORE
+    fan_out, deliberately: a `size(tokens) > 0` filter gets predicate-pushed
+    below the staging projection AND the repartition, re-running the whole
+    tokenization a second time serially at the scan (measured on the
+    optimized plan); ``rlike '\\S'`` is scan-cheap and prunes exactly the
+    zero-token rows (tokens_col drops whitespace-only splits — trim() would
+    miss tab/newline-only texts, which trim spaces only)."""
+    # Hash array staged as a REAL column: the 32 popcount passes all read
+    # it, and an inlined Column tree would re-run md5 per pass
+    # (plan-verified: one md5, one split). Per bit, the vote
     # sign reduces to a POPCOUNT comparison: votes_b = ones_b − (n − ones_b),
     # so bit b is set iff 2·ones_b > n. 32 scalar int-add aggregates over the
     # staged array replace the previous single aggregate that allocated a

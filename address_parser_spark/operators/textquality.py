@@ -1,7 +1,10 @@
 """Text-analysis operators for training-data pipelines (documents table).
 
-All pure Column logic — no Python UDFs — so every operator stays inside
-whole-stage codegen AND has an exactly-mirroring ANSI-SQL oracle (DuckDB).
+All pure Column logic — no Python UDFs — so every operator runs on the JVM
+AND has an exactly-mirroring ANSI-SQL oracle (DuckDB). Operators that use a
+higher-order function (``transform``/``filter`` in ``detect_language`` and
+``fingerprints``) run that Project outside whole-stage codegen: those
+functions are ``CodegenFallback`` and are evaluated row by row.
 Hash-bearing operators use md5-derived 60-bit integers (not xxhash64) because
 md5 is bit-identical across engines; at production scale swap ``_md5_60`` for
 ``F.xxhash64`` (same shape, ~3× faster, Spark-only).
@@ -33,8 +36,11 @@ def _md5_60(col: Column) -> Column:
 
 
 def tokens_col(text: Column) -> Column:
-    """Whitespace tokens with empties dropped (mirrors ``\\s+`` split)."""
-    return F.filter(F.split(text, r"\s+"), lambda t: t != "")
+    """Whitespace tokens with empties dropped (mirrors ``\\s+`` split).
+    ``array_remove`` rather than a ``filter`` lambda: ``split`` never yields
+    a null element, so the result is the same, and the expression stays
+    code-generated (higher-order functions are ``CodegenFallback``)."""
+    return F.array_remove(F.split(text, r"\s+"), "")
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -141,7 +147,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text", shingle_k: int = 3,
     # Stage norm/toks/shingles as REAL columns: each is consumed by 2-3
     # downstream expressions, and a Column is an expression tree — inlining
     # re-evaluates the whole shingle generation per consumer (the same
-    # CollapseProject trap minhash_signatures stages around, dedup.py).
+    # CollapseProject trap dedup.with_word_shingles stages around).
     norm = F.col("_fp_norm")
     toks = F.col("_fp_toks")
     n = F.size(toks)

@@ -39,10 +39,15 @@ DEFAULT_CONFS: dict[str, str] = {
     # expression pipeline is re-evaluated a second time in a Filter at the
     # scan — below any repartition, i.e. at the scan's own (often single-
     # split) parallelism. Measured on minhash_signatures at sf0.1: 33 s with
-    # the inferred filter vs 3.6 s without; explode(_sig) can never prune a
-    # row there (_sig is always 8 elements). Every explode in this engine
-    # feeds on computed arrays, never on stored arrays with many empties —
-    # the rule's win case — so it is excluded engine-wide.
+    # the inferred filter vs 3.6 s without, when it exploded a staged
+    # signature column. The rule only fires when the explode's input is an
+    # attribute: the signature now explodes an inline sequence(...) and is
+    # safe either way, but ngram_jaccard_pairs and dropped_shingles explode
+    # the staged _shh_arr column, and with the rule on their optimized plans
+    # tokenize 27 and 9 times instead of 3 and 1 (sf0.001, optimizedPlan
+    # split( counts). Every explode in this engine feeds on computed
+    # arrays, never on stored arrays with many empties — the rule's win
+    # case — so it is excluded engine-wide.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
