@@ -68,7 +68,12 @@ def broadcast_state(spark, payload, decode, what: str):
     is keyed on a DRIVER-GENERATED token, not id(): a GC'd broadcast value
     whose address is reused must not alias stale state, and two alternating
     UDFs in one worker must not thrash a single-entry cache. ``decode`` must
-    be a module-level function (pickled by reference)."""
+    be a module-level function (pickled by reference).
+
+    Each call makes a new broadcast and a new token, which every worker
+    decodes again; the pipeline's two payloads are therefore broadcast once
+    per session and gazetteer (``plans.pipeline.gazetteer_state``), so
+    their tokens, and the workers' decoded state, outlive a single run."""
     blob = pickle.dumps(payload, protocol=pickle.HIGHEST_PROTOCOL)
     if len(blob) > MAX_RESOLVER_STATE_BYTES:
         raise ValueError(
@@ -410,7 +415,11 @@ def make_resolve_udf(spark, get_regs, state: dict):
     mention, a (std, cand_std) memo hit 1% of lookups and saved no time.
 
     Raises ``ValueError`` (from ``broadcast_state``) naming the pickled size
-    and the node count when the state exceeds ``MAX_RESOLVER_STATE_BYTES``."""
+    and the node count when the state exceeds ``MAX_RESOLVER_STATE_BYTES``.
+
+    The UDF holds its broadcasts; ``plans.pipeline.gazetteer_state`` builds
+    it once per session and gazetteer, so every run on that gazetteer
+    reuses the same broadcast tokens."""
     get_state = broadcast_state(
         spark, state, decode_resolver_state,
         f"resolver state for {len(state['attrs']):,} gazetteer nodes",

@@ -3,12 +3,14 @@
 pages → (1) extract+normalize each page's mentions and (2) resolve each one
 against the broadcast gazetteer (probe/gate/bounded score/argmax/repair/
 street), both in one fused Arrow UDF per page over one page scan
-(``operators.parse.resolve_mentions``) → (3) connected
+(``operators.parse.resolve_pages``) → (3) connected
 components over two exact-string stars, the entity anchor and the identical
 ``(canon, digit_sig)`` group (``operators.cluster.cluster_mentions``; no
 blocking keys, no cap) → clusters, plus the old→new ward-code mapping when
 the gazetteer carries one: a table of one row per old ward code, built on
 the driver (``ward_map_frame``) and broadcast-joined on ``ward_code``.
+The gazetteer's derived state, broadcasts included, is built once per
+session and gazetteer content (``gazetteer_state``).
 
 Run standalone:
     spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py
@@ -26,7 +28,7 @@ from __future__ import annotations
 import dataclasses
 import hashlib
 import json
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -38,7 +40,7 @@ from address_parser_spark.gazetteer.nodes import (
 )
 from address_parser_spark.gazetteer.synth import Gazetteer
 from address_parser_spark.operators.cluster import cluster_mentions
-from address_parser_spark.operators.parse import resolve_mentions
+from address_parser_spark.operators.parse import page_resolver, resolve_pages
 from address_parser_spark.session import local_frame
 from address_parser_spark.sources.lineage import StageStore
 
@@ -99,7 +101,11 @@ def attach_new_ward_codes(
     ``nodes_df`` is not read. It stays in the signature because the
     benchmark's traced path calls this function positionally with the nodes
     frame; ROADMAP item 2 removes it."""
-    ward_map = F.broadcast(ward_map_frame(spark, gaz))
+    return _join_ward_map(clustered, ward_map_frame(spark, gaz))
+
+
+def _join_ward_map(clustered: DataFrame, ward_map: DataFrame) -> DataFrame:
+    ward_map = F.broadcast(ward_map)
     return (
         clustered.join(ward_map, clustered["ward_code"] == ward_map["old_ward_code"], "left")
         .drop(ward_map["old_ward_code"])
@@ -118,15 +124,55 @@ def attach_new_ward_codes(
     )
 
 
-def fingerprint_input(pages: DataFrame, gaz: Gazetteer) -> str:
-    """sha256 over the gazetteer's record lists (canonical JSON) and the
-    pages' row count and order-insensitive content hash (one JVM aggregate;
-    the hashes are summed as decimals, so the sum cannot overflow)."""
+@dataclasses.dataclass(frozen=True)
+class GazetteerState:
+    """What the pipeline derives from one gazetteer in one session: its
+    canonical JSON (the gazetteer half of ``fingerprint_input``), the page
+    resolver (``operators.parse.page_resolver``: nodes, alias registries and
+    repair state, broadcast once) and the driver-built ``ward_map_frame``."""
+
+    json: str
+    resolve: Callable
+    ward_map: DataFrame
+
+
+# The last (applicationId, sha256 of the canonical JSON) and its state. Keyed
+# on content, never on the object, so a gazetteer mutated in place gets new
+# state and the store's input fingerprint keeps its meaning. One slot: a miss
+# replaces it, so a stopped session's broadcasts are never kept.
+_STATE: Optional[tuple[tuple[str, str], GazetteerState]] = None
+
+
+def gazetteer_state(spark: SparkSession, gaz: Gazetteer) -> GazetteerState:
+    """``gaz``'s ``GazetteerState`` for this session: built on the first call
+    per (session, gazetteer content) and reused while neither changes, so a
+    warm run derives no nodes and broadcasts nothing, and its workers keep
+    their decoded state (``functions.udfs.broadcast_state``)."""
+    global _STATE
+    doc = json.dumps({f.name: getattr(gaz, f.name) for f in dataclasses.fields(gaz)},
+                     sort_keys=True)
+    key = (spark.sparkContext.applicationId, hashlib.sha256(doc.encode("utf-8")).hexdigest())
+    if _STATE is None or _STATE[0] != key:
+        _STATE = None  # let the old broadcasts go before the new ones are made
+        nodes = build_nodes(gaz)
+        _STATE = key, GazetteerState(
+            doc,
+            page_resolver(spark, nodes, alias_registries(gaz), build_repair_state(gaz, nodes)),
+            ward_map_frame(spark, gaz),
+        )
+    return _STATE[1]
+
+
+def fingerprint_input(pages: DataFrame, gaz_json: str) -> str:
+    """sha256 over the gazetteer's record lists (``GazetteerState.json``,
+    canonical JSON) and the pages' row count and order-insensitive content
+    hash (one JVM aggregate; the hashes are summed as decimals, so the sum
+    cannot overflow)."""
     row = pages.select(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(*pages.columns).cast("decimal(20,0)")).alias("h"),
     ).first()
-    payload = json.dumps(dataclasses.asdict(gaz), sort_keys=True) + f"|{row['n']}|{row['h']}"
+    payload = gaz_json + f"|{row['n']}|{row['h']}"
     return hashlib.sha256(payload.encode("utf-8")).hexdigest()
 
 
@@ -140,18 +186,21 @@ def run_pipeline(
     street_address, format, entity_key, cluster_id, then new_ward_code,
     new_ward_name and new_province_name when the gazetteer carries ward
     mappings). The ward mapping reads only the driver-built
-    ``ward_map_frame``, so this function builds no nodes frame."""
-    nodes = build_nodes(gaz)
-    registries = alias_registries(gaz)
-    repair_state = build_repair_state(gaz, nodes)
+    ``ward_map_frame``, so this function builds no nodes frame.
+
+    Everything derived from ``gaz`` (nodes, registries, repair state, their
+    two broadcast tokens and the ward table) comes from
+    ``gazetteer_state``, once per session and gazetteer: a repeated call
+    re-derives none of it, and its workers decode nothing again."""
+    state = gazetteer_state(spark, gaz)
     if store is not None:
-        store.bind_input(fingerprint_input(pages, gaz))
+        store.bind_input(fingerprint_input(pages, state.json))
 
     # html:binary intake (BASELINE.json input_hint) is handled INSIDE
-    # resolve_mentions: its one fused UDF gets a page's html only when the
+    # resolve_pages: its one fused UDF gets a page's html only when the
     # text column is null/empty, so texted rows never ship html bytes to
     # Python.
-    build_resolved = lambda: resolve_mentions(pages, nodes, registries, repair_state=repair_state)
+    build_resolved = lambda: resolve_pages(pages, state.resolve)
 
     # ``resolved`` feeds three downstream branches (the two stars and the
     # final join) and must be materialized exactly once: a durable snapshot
@@ -186,5 +235,5 @@ def run_pipeline(
 
     clustered = build_clusters() if store is None else store.run_stage("clustered", build_clusters)
     if gaz.ward_mappings:
-        clustered = attach_new_ward_codes(spark, clustered, None, gaz)
+        clustered = _join_ward_map(clustered, state.ward_map)
     return clustered

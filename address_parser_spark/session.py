@@ -10,11 +10,20 @@ On a local master a new session also runs two one-time warm-ups: it spawns
 the Python worker pool, and it loads the Catalyst expression classes and
 ICU's case-mapping tables from one thread. The first real job of a process
 then pays neither.
+
+A local session's Python workers fork from ``address_parser_spark._daemon``
+(``spark.python.daemon.module``) rather than from ``pyspark.daemon``. PySpark
+calls ``importlib.invalidate_caches()`` before every task, and on CPython
+3.11 that re-reads every zip archive on the worker's path, ``pyspark.zip``
+included; the engine's daemon skips the re-read of an archive that has not
+changed. The daemon starts before any task ships ``--py-files``, so the
+engine's own root (its directory or zip) goes on the workers' PYTHONPATH.
 """
 
 from __future__ import annotations
 
 import os
+import zipfile
 
 from typing import Iterable, Sequence
 
@@ -105,7 +114,14 @@ def _warm_python_workers(spark: SparkSession) -> None:
     run vs 0.55 s warm at local[32]). One ``mapInPandas`` no-op over
     ``defaultParallelism`` single-row partitions forks every worker and pulls
     the imports once, at session creation. Parallelism-derived, so the same
-    code warms a 4-core test session and a 32-core bench session."""
+    code warms a 4-core test session and a 32-core bench session.
+
+    Re-measured with the engine's daemon (4 vCPU, local[4], perfbench
+    seeds 11-13 on ``er_durable``, medians): without this warm-up
+    ``setup_s`` falls 7.04 → 6.03 s but ``cold_s`` rises 2.79 → 3.81 s, so
+    it stays. Importing pandas and pyarrow in the daemon before it forks
+    instead moved neither (``setup_s`` 7.15 s, ``cold_s`` 2.80 s) and is
+    not done."""
     dp = max(1, spark.sparkContext.defaultParallelism)
 
     def _noop_batches(batches):
@@ -189,6 +205,33 @@ def _warm_runtime(spark: SparkSession) -> None:
     _WARMED.add(key)
 
 
+def _launched_conf(key: str) -> str:
+    """``key``'s value in the JVM's own launch confs (``spark-submit --conf``),
+    or "" when no JVM is up yet."""
+    from pyspark import SparkConf, SparkContext
+
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # under spark-submit the JVM is already up
+        SparkContext._ensure_initialized()
+    return SparkConf().get(key, "")
+
+
+def _daemon_confs(extra_confs: dict[str, str] | None) -> dict[str, str]:
+    """The confs that run the Python workers from ``address_parser_spark._daemon``,
+    or none when the engine is not imported from a directory or a zip the
+    daemon could put on its path. The engine's root joins the caller's
+    ``spark.executorEnv.PYTHONPATH``, whether passed here or at launch.
+    ``get_spark`` asks for them only when neither its caller nor the launch
+    names a daemon module."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not (os.path.isdir(root) or zipfile.is_zipfile(root)):
+        return {}
+    key = "spark.executorEnv.PYTHONPATH"
+    theirs = (extra_confs or {}).get(key) or _launched_conf(key)
+    paths = [p for p in theirs.split(os.pathsep) if p] + [root]
+    return {"spark.python.daemon.module": "address_parser_spark._daemon",
+            key: os.pathsep.join(dict.fromkeys(paths))}
+
+
 def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
               extra_confs: dict[str, str] | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
@@ -213,7 +256,11 @@ def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
         confs["spark.sql.shuffle.partitions"] = str(max(2 * cores, 32))
     else:
         confs["spark.sql.shuffle.partitions"] = "32"
-    for key, value in _merge_confs(confs, extra_confs).items():
+    confs = _merge_confs(confs, extra_confs)
+    daemon = "spark.python.daemon.module"
+    if resolved_master.startswith("local") and not (daemon in confs or _launched_conf(daemon)):
+        confs.update(_daemon_confs(extra_confs))
+    for key, value in confs.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _warm_runtime(spark)

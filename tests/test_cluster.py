@@ -217,7 +217,7 @@ def _pipeline_clusters(spark, gaz, monkeypatch, resolved, seen_edges=None):
     from address_parser_spark.operators import cluster
     from address_parser_spark.plans import pipeline
 
-    monkeypatch.setattr(pipeline, "resolve_mentions", lambda *a, **k: resolved)
+    monkeypatch.setattr(pipeline, "resolve_pages", lambda *a, **k: resolved)
     if seen_edges is not None:
         cc = cluster.connected_components
 

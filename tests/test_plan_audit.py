@@ -133,16 +133,17 @@ def test_cosine_topk_broadcasts_the_query_side(spark, queries):
 
 
 def test_minhash_signature_pipeline_is_evaluated_exactly_once(spark, queries):
-    # Two plan hazards have each made minhash_signatures re-run the whole
-    # tokenize→shingle→hash pipeline many times per row (measured 9 copies /
-    # ~10× wall at sf0.1):
-    #  1. eight sibling per-permutation structs each inlining the staged
-    #     shingle column (fixed: one transform over a literal params array);
-    #  2. InferFiltersFromGenerate turning explode(_sig) into a
-    #     size(_sig) > 0 pre-filter that pushdown expands to the full
-    #     expression at the scan (fixed: rule excluded in session.py).
-    # The optimized plan must contain exactly one shingle generation and no
-    # Filter node at all (nothing in this query can prune a row).
+    # minhash_signatures explodes the shingle positions once
+    # (explode(sequence(1, n - k + 1))), hashes each position in a plain
+    # Project, takes the eight per-permutation minima in one groupBy(doc_id)
+    # and posexplodes array(m0 … m7) into one row per hash index. Earlier
+    # formulations re-ran the whole tokenize→shingle→hash pipeline many
+    # times per row (measured 9 copies / ~10× wall at sf0.1) whenever the
+    # optimizer copied the staged shingle expression into several
+    # consumers. The optimized plan must contain exactly one shingle
+    # generation and no Filter node at all: nothing in this query prunes a
+    # row, so a Filter could only be one that InferFiltersFromGenerate
+    # inferred (the rule is excluded in session.py).
     df = queries["minhash_signatures"](spark, SF)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("sequence(") == 1
@@ -150,11 +151,12 @@ def test_minhash_signature_pipeline_is_evaluated_exactly_once(spark, queries):
 
 
 def test_minhash_band_pairs_evaluates_shingles_exactly_once(spark, queries):
-    # minhash_band_pairs references the staged signature column 8 times
-    # (element_at(_sig, i) per band) feeding a Generate — the exact
-    # CollapseProject/ColumnPruning re-inlining trap documented on
-    # minhash_signatures above. Pin the collapsed shape: one shingle
-    # generation, one tokenization, in the optimized plan.
+    # minhash_band_pairs builds each band key, struct(band, m_i, m_i+1, …),
+    # from the per-doc signature row after the groupBy(doc_id), and explodes
+    # the array of band keys. The keys read the aggregate's outputs, so the
+    # shingle pipeline below the aggregate is never re-inlined per band. Pin
+    # that shape: one shingle generation, one tokenization, in the
+    # optimized plan.
     df = queries["minhash_band_pairs"](spark, SF)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert optimized.count("sequence(") == 1, optimized
