@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from address_parser_spark.operators.partitioning import fan_out
 from address_parser_spark.operators.similarity_search import _as_double, _dot, _norm, sign_bucket_col
-from address_parser_spark.operators.textquality import _md5_60, tokens_col
+from address_parser_spark.operators.textquality import _md5_60, shingle_starts, tokens_col
 
 MINHASH_P = 2147483647  # Mersenne 2^31-1: a·h+b < 2^63 under ANSI arithmetic
 
@@ -64,11 +64,7 @@ def with_word_shingles(df: DataFrame, text_col: str, k: int = 3, out: str = "_sh
     the tokenizer per shingle position (CollapseProject leaves multi-referenced
     non-trivial aliases staged — the same trap ``fingerprints`` documents)."""
     toks = F.col("_wsh_toks")
-    n = F.size(toks)
-    sh = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.concat_ws(" ", F.slice(toks, i, k))),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    sh = F.transform(shingle_starts(toks, k), lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
     return (
         df.withColumn("_wsh_toks", tokens_col(F.lower(F.col(text_col))))
         .withColumn(out, F.array_distinct(sh))
@@ -97,11 +93,7 @@ def with_hashed_shingles(df: DataFrame, text_col: str, k: int, fast_hash: bool,
             out, F.transform(F.col("_hsh_str"), lambda s: _md5_60(s))
         ).drop("_hsh_str")
     toks = F.col("_hsh_toks")
-    n = F.size(toks)
-    hashed = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - (k - 1)), lambda i: F.xxhash64(F.slice(toks, i, k))),
-    ).otherwise(F.array(F.xxhash64(toks)))
+    hashed = F.transform(shingle_starts(toks, k), lambda i: F.xxhash64(F.slice(toks, i, k)))
     return (
         df.withColumn("_hsh_toks", tokens_col(F.lower(F.col(text_col))))
         .withColumn(out, F.array_distinct(hashed))
@@ -142,20 +134,18 @@ def _minhash_signature(docs: DataFrame, text_col: str, k: int,
     partial aggregate — one row per doc and map partition, not the shingle
     instances.
 
-    A doc with fewer than ``k`` tokens has one shingle, its whole token list:
-    ``slice(t, 1, k)`` is then ``t`` itself (also for an empty or null
-    list), so one slice expression covers both cases. Shingles are hashed
-    per instance rather than per distinct value; repeats do not move a
-    minimum. pmod maps signed hashes into [0, P) so xxhash64 and the
-    unsigned md5-60 ints behave identically under the permutation."""
+    A doc with fewer than ``k`` tokens is one shingle, its whole token list
+    (``textquality.shingle_starts``). Shingles are hashed per instance
+    rather than per distinct value; repeats do not move a minimum. pmod maps
+    signed hashes into [0, P) so xxhash64 and the unsigned md5-60 ints
+    behave identically under the permutation."""
     toks = F.col("_mh_toks")
     shingle = F.slice(toks, F.col("_mh_pos"), k)
     h = F.xxhash64(shingle) if fast_hash else _md5_60(F.concat_ws(" ", shingle))
-    positions = F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
     hashed = (
         fan_out(docs)
         .select("doc_id", tokens_col(F.lower(F.col(text_col))).alias("_mh_toks"))
-        .select("doc_id", "_mh_toks", F.explode(positions).alias("_mh_pos"))
+        .select("doc_id", "_mh_toks", F.explode(shingle_starts(toks, k)).alias("_mh_pos"))
         .select("doc_id", F.pmod(h, F.lit(MINHASH_P)).alias("_mh_h"))
     )
     hp = F.col("_mh_h")

@@ -43,6 +43,14 @@ def tokens_col(text: Column) -> Column:
     return F.array_remove(F.split(text, r"\s+"), "")
 
 
+def shingle_starts(toks: Column, k: int) -> Column:
+    """The 1-based start of every word k-shingle of ``toks``:
+    ``sequence(1, greatest(n−k+1, 1))``. A list shorter than ``k`` (empty
+    or null too) gets the one start 1, and ``slice(toks, 1, k)`` is then the
+    whole list: a short text is one shingle, with no branch."""
+    return F.sequence(F.lit(1), F.greatest(F.size(toks) - (k - 1), F.lit(1)))
+
+
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens, distinct tokens, chars, mean token
     length (SURVEY §2 'token counting' for training-data pipelines).
@@ -150,20 +158,16 @@ def fingerprints(docs: DataFrame, text_col: str = "text", shingle_k: int = 3,
     # CollapseProject trap dedup.with_word_shingles stages around).
     norm = F.col("_fp_norm")
     toks = F.col("_fp_toks")
-    n = F.size(toks)
     staged = (
         fan_out(docs)
         .withColumn("_fp_norm", F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
         .withColumn("_fp_toks", tokens_col(norm))
         .withColumn(
             "_fp_shingles",
-            F.when(
-                n >= shingle_k,
-                F.transform(
-                    F.sequence(F.lit(1), n - (shingle_k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_k)),
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", toks))),
+            F.transform(
+                shingle_starts(toks, shingle_k),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_k)),
+            ),
         )
     )
     shingles = F.col("_fp_shingles")

@@ -3,8 +3,15 @@ driver-built rows become a DataFrame (``local_frame``).
 
 One place to encode the engine's execution posture: AQE on (runtime skew-join
 splitting + partition coalescing), Arrow exchange for pandas UDFs, bounded
-shuffle partitions for local runs. On a real cluster these are spark-submit
-confs; the factory only fills in what is unset so cluster configs win.
+shuffle partitions for local runs. ``get_spark`` layers a session's confs, a
+later layer winning on each key: (1) the engine's values: ``DEFAULT_CONFS``,
+shuffle partitions derived from the master and, on a local master, the
+worker daemon below; (2) what ``spark-submit`` started the JVM with: its
+``--master``, ``--conf`` values and spark-defaults; (3) the caller's
+``extra_confs``. The master is the ``master`` argument, else the submitted
+one, else ``local[SPARK_GRAFT_CPUS]``. ``spark.sql.optimizer.excludedRules``
+and ``spark.executorEnv.PYTHONPATH`` keep every layer's entries, the winning
+layer's first.
 
 On a local master a new session also runs two one-time warm-ups: it spawns
 the Python worker pool, and it loads the Catalyst expression classes and
@@ -12,9 +19,10 @@ ICU's case-mapping tables from one thread. The first real job of a process
 then pays neither.
 
 A local session's Python workers fork from ``address_parser_spark._daemon``
-(``spark.python.daemon.module``) rather than from ``pyspark.daemon``. PySpark
-calls ``importlib.invalidate_caches()`` before every task, and on CPython
-3.11 that re-reads every zip archive on the worker's path, ``pyspark.zip``
+(``spark.python.daemon.module``) rather than from ``pyspark.daemon``, unless
+a daemon module is named at launch or by the caller. PySpark calls
+``importlib.invalidate_caches()`` before every task, and on CPython 3.11
+that re-reads every zip archive on the worker's path, ``pyspark.zip``
 included; the engine's daemon skips the re-read of an archive that has not
 changed. The daemon starts before any task ships ``--py-files``, so the
 engine's own root (its directory or zip) goes on the workers' PYTHONPATH.
@@ -79,23 +87,6 @@ def _master_cores(master: str) -> int | None:
         except ValueError:
             return None
     return None
-
-
-def _merge_confs(defaults: dict[str, str],
-                 extra: dict[str, str] | None) -> dict[str, str]:
-    """Caller confs win key-by-key, EXCEPT excludedRules, which unions.
-
-    The InferFiltersFromGenerate exclusion in DEFAULT_CONFS is load-bearing
-    (explode-of-computed-array stages regress ~10× without it); a caller
-    adding their own excluded rules must not silently drop it.
-    """
-    merged = {**defaults, **(extra or {})}
-    excl_key = "spark.sql.optimizer.excludedRules"
-    if extra and excl_key in extra and excl_key in defaults:
-        ours = [r.strip() for r in defaults[excl_key].split(",") if r.strip()]
-        theirs = [r.strip() for r in extra[excl_key].split(",") if r.strip()]
-        merged[excl_key] = ",".join(dict.fromkeys(ours + theirs))
-    return merged
 
 
 # Sessions (by application id) already taken through the one-time runtime
@@ -205,40 +196,30 @@ def _warm_runtime(spark: SparkSession) -> None:
     _WARMED.add(key)
 
 
-def _launched_conf(key: str) -> str:
-    """``key``'s value in the JVM's own launch confs (``spark-submit --conf``),
-    or "" when no JVM is up yet."""
+_DAEMON = "spark.python.daemon.module"
+# List-valued keys keep every layer's entries, the winning layer's first: a
+# submitted or caller rule list must not drop the load-bearing
+# InferFiltersFromGenerate exclusion, nor a PYTHONPATH the daemon's root.
+_LIST_KEYS = {"spark.sql.optimizer.excludedRules": ",",
+              "spark.executorEnv.PYTHONPATH": os.pathsep}
+
+
+def _launch_confs() -> dict[str, str]:
+    """What ``spark-submit`` started the JVM with. Nothing outside it: there the
+    JVM's properties hold the builder confs of this process's first session."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
     from pyspark import SparkConf, SparkContext
 
-    if "PYSPARK_GATEWAY_PORT" in os.environ:  # under spark-submit the JVM is already up
-        SparkContext._ensure_initialized()
-    return SparkConf().get(key, "")
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
 
 
-def _daemon_confs(extra_confs: dict[str, str] | None) -> dict[str, str]:
-    """The confs that run the Python workers from ``address_parser_spark._daemon``,
-    or none when the engine is not imported from a directory or a zip the
-    daemon could put on its path. The engine's root joins the caller's
-    ``spark.executorEnv.PYTHONPATH``, whether passed here or at launch.
-    ``get_spark`` asks for them only when neither its caller nor the launch
-    names a daemon module."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if not (os.path.isdir(root) or zipfile.is_zipfile(root)):
-        return {}
-    key = "spark.executorEnv.PYTHONPATH"
-    theirs = (extra_confs or {}).get(key) or _launched_conf(key)
-    paths = [p for p in theirs.split(os.pathsep) if p] + [root]
-    return {"spark.python.daemon.module": "address_parser_spark._daemon",
-            key: os.pathsep.join(dict.fromkeys(paths))}
-
-
-def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
-              extra_confs: dict[str, str] | None = None) -> SparkSession:
+def _layer_confs(master: str | None, launch: dict[str, str],
+                 caller: dict[str, str]) -> dict[str, str]:
+    """The session's confs, ``spark.master`` included (module docstring)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    resolved_master = master or f"local[{cpus}]"
-    builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(resolved_master)
-    confs = dict(DEFAULT_CONFS)
+    master = master or caller.get("spark.master") or launch.get("spark.master") or f"local[{cpus}]"
     # Shuffle partitions = TWO task waves per core set (2×cores, floor 32).
     # Measured on the 150k-page pipeline (round-4 campaign, pinned cores,
     # quiet box — BASELINE.md "Measured scaling"):
@@ -251,17 +232,34 @@ def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
     # collapse"); four waves re-pay per-task overhead on every small-byte
     # CPU-heavy shuffle. On a real cluster the spark-submit conf wins; the
     # same rule applies there: two waves per total executor-core count.
-    cores = _master_cores(resolved_master)
-    if cores:
-        confs["spark.sql.shuffle.partitions"] = str(max(2 * cores, 32))
-    else:
-        confs["spark.sql.shuffle.partitions"] = "32"
-    confs = _merge_confs(confs, extra_confs)
-    daemon = "spark.python.daemon.module"
-    if resolved_master.startswith("local") and not (daemon in confs or _launched_conf(daemon)):
-        confs.update(_daemon_confs(extra_confs))
-    for key, value in confs.items():
-        builder = builder.config(key, value)
+    partitions = max(2 * (_master_cores(master) or 0), 32)
+    engine = {**DEFAULT_CONFS, "spark.sql.shuffle.partitions": str(partitions)}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))  # checkout dir or zip
+    if (master.startswith("local") and _DAEMON not in launch and _DAEMON not in caller
+            and (os.path.isdir(root) or zipfile.is_zipfile(root))):
+        engine[_DAEMON] = "address_parser_spark._daemon"
+        engine["spark.executorEnv.PYTHONPATH"] = root
+    layers = (engine, launch, caller)
+    confs = {key: value for layer in layers for key, value in layer.items()}
+    confs["spark.master"] = master
+    for key, sep in _LIST_KEYS.items():
+        entries = [e.strip() for layer in reversed(layers) for e in layer.get(key, "").split(sep)]
+        if any(entries):
+            confs[key] = sep.join(dict.fromkeys(filter(None, entries)))
+    return confs
+
+
+def get_spark(app_name: str = "address_parser_spark", master: str | None = None,
+              extra_confs: dict[str, str] | None = None) -> SparkSession:
+    """A session whose confs are layered as the module docstring says;
+    ``master`` (or ``extra_confs["spark.master"]``) defaults to the submitted
+    one, else ``local[SPARK_GRAFT_CPUS]``. The builder gets only the confs
+    that differ from their submitted value."""
+    launch = _launch_confs()
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in _layer_confs(master, launch, extra_confs or {}).items():
+        if launch.get(key) != value:
+            builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _warm_runtime(spark)
     return spark

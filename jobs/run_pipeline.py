@@ -5,9 +5,15 @@ on a real cluster the driver-side package alone is not enough):
 
     cd <repo>
     zip -qr address_parser_spark.zip address_parser_spark
-    spark-submit --py-files address_parser_spark.zip jobs/run_pipeline.py \
+    spark-submit --master yarn --conf spark.sql.shuffle.partitions=400 \
+        --py-files address_parser_spark.zip jobs/run_pipeline.py \
         --pages /data/pages.parquet --output /data/clusters.parquet \
         --store /data/er_store --gazetteer /data/fuzz_data
+
+The session runs on the submitted master and keeps every submitted
+``--conf``: they beat the engine's defaults (``session.DEFAULT_CONFS``);
+this script's own ``--master`` overrides the submitted master. The
+summary JSON (the last stdout line) names the master the run used.
 
 ``--pages`` is a parquet table of web pages (url STRING, warc_ts TIMESTAMP,
 html BINARY, text STRING, lang STRING — BASELINE.json input_hint); the
@@ -43,7 +49,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--gazetteer", default=None,
                    help="reference-shaped JSON gazetteer dir (fuzz/data layout, read via "
                         "sources.readers.gazetteer_from_dir); default: deterministic synthetic catalog")
-    p.add_argument("--master", default=None, help="spark master override (else session default)")
+    p.add_argument("--master", default=None,
+                   help="spark master override (default: the master spark-submit was given, "
+                        "else local[SPARK_GRAFT_CPUS])")
     p.add_argument("--synth-pages", type=int, default=None,
                    help="smoke mode: first generate N deterministic synthetic pages at --pages")
     return p
@@ -80,6 +88,7 @@ def main(argv: list[str] | None = None) -> None:
         "mentions": result.count(),
         "clusters": result.select("cluster_id").distinct().count(),
         "output": args.output,
+        "master": spark.sparkContext.master,
     }
     if store is not None:
         summary["lineage_rows"] = len(store.lineage())

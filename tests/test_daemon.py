@@ -133,10 +133,27 @@ spark.stop()
 """
 
 
-def _submit(tmp_path, *confs: str) -> tuple[dict, Path]:
-    """``get_spark`` under ``spark-submit --py-files <engine zip>`` with
-    ``confs`` given as ``--conf``; returns what the session and its workers
-    saw, and the zip's path."""
+_SUBMITTED_DEFAULTS = """
+import json
+
+from address_parser_spark.session import get_spark
+
+spark = get_spark("defaults-submit")
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "shuffle": spark.conf.get("spark.sql.shuffle.partitions"),
+    "tz": spark.conf.get("spark.sql.session.timeZone"),
+    "rules": spark.conf.get("spark.sql.optimizer.excludedRules").split(","),
+}))
+spark.stop()
+"""
+
+
+def _submit(tmp_path, *confs: str, script: str = _SUBMITTED) -> tuple[dict, Path]:
+    """``script`` (by default ``get_spark`` and a worker probe) under
+    ``spark-submit --master local[2] --py-files <engine zip>`` with ``confs``
+    given as ``--conf``; returns the JSON of its last stdout line, and the
+    zip's path."""
     spark_submit = shutil.which("spark-submit")
     if spark_submit is None:
         import pyspark
@@ -146,12 +163,12 @@ def _submit(tmp_path, *confs: str) -> tuple[dict, Path]:
     with zipfile.ZipFile(engine, "w") as zf:
         for py in (REPO / "address_parser_spark").rglob("*.py"):
             zf.write(py, py.relative_to(REPO))
-    script = tmp_path / "submitted.py"
-    script.write_text(_SUBMITTED)
+    submitted = tmp_path / "submitted.py"
+    submitted.write_text(script)
     args = [spark_submit, "--master", "local[2]", "--py-files", str(engine)]
     for conf in confs:
         args += ["--conf", conf]
-    proc = subprocess.run(args + [str(script)], capture_output=True, text=True,
+    proc = subprocess.run(args + [str(submitted)], capture_output=True, text=True,
                           timeout=600, cwd=str(tmp_path))
     assert proc.returncode == 0, proc.stderr[-4000:]
     return json.loads(proc.stdout.strip().splitlines()[-1]), engine
@@ -174,3 +191,16 @@ def test_spark_submit_keeps_a_submitted_daemon_module(tmp_path):
     assert seen["daemon"] == "pyspark.daemon"
     assert seen["path"] is None
     assert seen["workers"] == [["pyspark.daemon", None]]
+
+
+@pytest.mark.slow
+def test_spark_submit_confs_beat_the_engine_defaults(tmp_path):
+    rules = "org.apache.spark.sql.catalyst.optimizer."
+    seen, _ = _submit(tmp_path, "spark.sql.shuffle.partitions=7",
+                      "spark.sql.session.timeZone=Asia/Ho_Chi_Minh",
+                      f"spark.sql.optimizer.excludedRules={rules}ConstantFolding",
+                      script=_SUBMITTED_DEFAULTS)
+    assert seen["master"] == "local[2]"
+    assert seen["shuffle"] == "7"
+    assert seen["tz"] == "Asia/Ho_Chi_Minh"
+    assert set(seen["rules"]) == {rules + "ConstantFolding", rules + "InferFiltersFromGenerate"}

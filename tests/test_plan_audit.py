@@ -164,20 +164,51 @@ def test_minhash_band_pairs_evaluates_shingles_exactly_once(spark, queries):
 
 
 def test_get_spark_merges_caller_excluded_rules():
-    # A caller passing their own excludedRules must not silently drop the
-    # load-bearing InferFiltersFromGenerate exclusion — the factory unions.
-    from address_parser_spark.session import DEFAULT_CONFS, _merge_confs
+    # A caller or a launch passing their own excludedRules must not silently
+    # drop the load-bearing InferFiltersFromGenerate exclusion — the factory
+    # unions the engine's defaults, the spark-submit launch and the caller.
+    import os
 
-    merged = _merge_confs(DEFAULT_CONFS, {
-        "spark.sql.optimizer.excludedRules":
-            "org.apache.spark.sql.catalyst.optimizer.ConstantFolding",
+    from address_parser_spark import session
+    from address_parser_spark.session import _layer_confs
+
+    rules, path, daemon = ("org.apache.spark.sql.catalyst.optimizer.",
+                           "spark.executorEnv.PYTHONPATH", "spark.python.daemon.module")
+    launch = {
+        "spark.master": "local[24]",
+        "spark.sql.optimizer.excludedRules": rules + "PushDownPredicates",
+        "spark.sql.session.timeZone": "Asia/Ho_Chi_Minh",
+        "spark.sql.autoBroadcastJoinThreshold": "1m",
+        path: "/submitted",
+    }
+    merged = _layer_confs(None, launch, {
+        "spark.sql.optimizer.excludedRules": rules + "ConstantFolding",
         "spark.sql.session.timeZone": "UTC+7",
+        path: "/caller",
     })
     excl = merged["spark.sql.optimizer.excludedRules"]
     assert "InferFiltersFromGenerate" in excl
     assert "ConstantFolding" in excl
-    # ordinary keys: caller wins outright
+    assert "PushDownPredicates" in excl
+    # ordinary keys: caller wins outright, and the launch beats a default
     assert merged["spark.sql.session.timeZone"] == "UTC+7"
+    assert merged["spark.sql.autoBroadcastJoinThreshold"] == "1m"
+    assert merged["spark.sql.adaptive.enabled"] == "true"
+    # the submitted master, and the shuffle-partition default derived from it
+    assert merged["spark.master"] == "local[24]"
+    assert merged["spark.sql.shuffle.partitions"] == "48"
+    assert _layer_confs("local[3]", launch, {})["spark.master"] == "local[3]"
+    # PYTHONPATH unions too, the winning layer first, the engine's root last
+    root = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    assert merged[path].split(os.pathsep) == ["/caller", "/submitted", root]
+    assert merged[daemon] == "address_parser_spark._daemon"
+    # a daemon module named at launch or by the caller: no daemon pair
+    for named_at_launch, named_by_caller in (({daemon: "pyspark.daemon"}, {}),
+                                             ({}, {daemon: "pyspark.daemon"})):
+        confs = _layer_confs("local[2]", named_at_launch, named_by_caller)
+        assert confs[daemon] == "pyspark.daemon"
+        assert path not in confs
+    assert daemon not in _layer_confs("spark://host:7077", {}, {})
 
 
 def test_excluded_optimizer_rules_survive_session_config(spark):
