@@ -132,8 +132,8 @@ def q_top_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming-shaped event-time operators (batch equivalents of the Structured
-# Streaming ops; the streaming module reuses the same column logic)
+# Event-time operators: tumbling windows, sessionization and dedup over the
+# events table, as batch queries
 # ---------------------------------------------------------------------------
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,8 +171,8 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-by-signature with deterministic representative (A6 / streaming
-    dropDuplicates-within-watermark batch analog)."""
+    """Dedup-by-signature with deterministic representative (A6): one row
+    per (user, event type, minute), the lowest event id kept."""
     return (
         _t(spark, sf_dir, "events")
         .groupBy("user_id", "event_type", F.date_trunc("minute", "ts").alias("minute"))

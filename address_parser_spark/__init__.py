@@ -14,7 +14,6 @@ Layout
 - ``operators``  blocking, pair scoring, connected components, dedup, ANN, text quality
 - ``sources``    synthetic pages corpus, readers, checkpoint/lineage sinks
 - ``plans``      end-to-end pipeline assembly (extract→normalize→resolve→cluster)
-- ``streaming``  incremental ingest (Structured Streaming) — optional capability
 """
 
 __version__ = "0.1.0"

@@ -1,11 +1,13 @@
-"""Old↔new administrative-code mapping (reference J4 capability).
+"""Old→new ward-code mapping as a relational reference (reference J4).
 
-The reference exposes per-row dict lookups (``map_old_ward_to_new`` /
-``map_new_ward_to_old`` / ``map_old_address_ids_to_new`` / reverse;
-fuzz/inexus_parser.py:1355-1443). Re-expressed relationally: the mapping
-table is a broadcast dimension; "preferred row" semantics (strict
-province/district agreement, else first) become a ``row_number`` over a
-match-rank ordering — one broadcast join, no per-row Python.
+The reference picks a ward's preferred mapping row per record
+(``map_old_ward_to_new`` / ``map_old_address_ids_to_new``;
+fuzz/inexus_parser.py:1355-1423). ``map_old_to_new`` re-expresses that
+relationally: the mapping table is a broadcast dimension, and "preferred
+row" semantics (strict province/district agreement, else first) become a
+``row_number`` over a match-rank ordering. The pipeline does not run it:
+``plans.pipeline.ward_map_frame`` builds the same table on the driver, and
+the tests pin it against ``map_old_to_new`` over ``mappings_to_spark``.
 """
 
 from __future__ import annotations
@@ -33,7 +35,9 @@ MAPPING_SCHEMA = T.StructType(
 
 
 def mappings_to_spark(spark, ward_mappings: list[dict]) -> DataFrame:
-    """The catalog's ward mappings as an Arrow-backed local frame."""
+    """The catalog's ward mappings as an Arrow-backed local frame:
+    ``map_old_to_new``'s mapping table in the tests that pin
+    ``plans.pipeline.ward_map_frame``."""
     names = MAPPING_SCHEMA.fieldNames()
     return local_frame(spark, ([m.get(f) for f in names] for m in ward_mappings), MAPPING_SCHEMA)
 
@@ -52,10 +56,11 @@ def map_old_to_new(
     province-only, beats any; within a rank the lowest mapping id wins
     (deterministic stand-in for the reference's insertion-order 'first').
 
-    This is the J4 operator for arbitrary records. The pipeline does not
-    run it: ``plans.pipeline.ward_map_frame`` applies the same preference
-    per old ward code on the driver, and the tests pin that table against
-    this operator over the whole synthetic gazetteer.
+    This is the reference that ``plans.pipeline.ward_map_frame`` is pinned
+    against (``test_ward_map_frame_matches_map_old_to_new``,
+    ``test_attach_new_ward_codes_on_a_hand_gazetteer``). The pipeline does
+    not run it: ``ward_map_frame`` applies the same preference per old ward
+    code on the driver.
     """
     m = F.broadcast(mappings.select(
         F.col("old_ward_code"),
@@ -91,38 +96,4 @@ def map_old_to_new(
         .filter(F.col("rn") == 1)
         .drop("rn", "match_rank", "__row_id",
               "old_ward_code", "old_district_name", "old_province_name")
-    )
-
-
-def map_new_to_old(
-    records: DataFrame,
-    mappings: DataFrame,
-    ward_code_col: str = "ward_code",
-    province_name_col: str | None = "province",
-) -> DataFrame:
-    """Reverse direction (reference ``map_new_address_ids_to_old``
-    :1425-1443): first mapping row agreeing with the record's new province,
-    else the first row."""
-    m = F.broadcast(mappings.select(
-        F.col("new_ward_code"), F.col("new_province_name"),
-        F.col("old_ward_code"), F.col("old_ward_name"),
-        F.col("old_district_name"), F.col("old_province_name"),
-        F.col("id").alias("mapping_id"),
-    ))
-    tagged = records.withColumn("__row_id", F.monotonically_increasing_id())
-    joined = tagged.join(m, tagged[ward_code_col] == m["new_ward_code"], "left")
-    # Null-guarded like map_old_to_new's _name_match: when the record's
-    # province value is NULL the rank must be 0, not NULL (a NULL rank would
-    # depend on nulls-last ordering instead of being deterministic).
-    match = (
-        F.col("new_province_name").isNotNull()
-        & F.col(province_name_col).isNotNull()
-        & F.col("new_province_name").contains(F.col(province_name_col))
-    ).cast("int") if province_name_col else F.lit(0)
-    w = Window.partitionBy("__row_id").orderBy(F.desc("match_rank"), F.asc("mapping_id"))
-    return (
-        joined.withColumn("match_rank", match)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn", "match_rank", "__row_id", "new_ward_code", "new_province_name")
     )

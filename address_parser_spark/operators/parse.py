@@ -20,7 +20,7 @@ narrow, with no shuffle beyond ``fan_out``'s scan-width round-robin:
 
 Each resolved mention gets a compact 64-bit key ``mid`` so downstream
 shuffles move longs, not strings. ``extract_normalize`` runs step 1 alone
-for the streaming path.
+and returns the mention frame; the pipeline does not call it.
 """
 
 from __future__ import annotations
@@ -43,8 +43,7 @@ def _page_args(pages: DataFrame) -> tuple[Column, Column]:
     only where the text is null or empty. The CASE is the UDF's ARGUMENT,
     not a branch around it, so Catalyst evaluates it on the JVM below the
     Arrow node: a page with text ships a null in place of its markup. A
-    frame without an ``html`` column (the streaming ``PAGES_STREAM_SCHEMA``)
-    passes a null binary."""
+    frame without an ``html`` column passes a null binary."""
     text = F.col("text")
     html = (
         F.when(text.isNull() | (text == ""), F.col("html"))
@@ -63,22 +62,19 @@ def _get_registries(spark, registries: dict[str, list[str]]):
     return broadcast_state(spark, registries, decode_registries, "alias registries")
 
 
-def extract_normalize(pages: DataFrame, registries: dict[str, list[str]],
-                      carry_cols: list[str] | None = None) -> DataFrame:
-    """pages → one row per extracted mention: (url, *carry_cols, mention,
-    std, std_basic, det_p, det_d, det_w, mid) — the normalized forms, the
-    detected components and a compact key. Narrow — no shuffle; ONE scan
-    reads the Vietnamese pages' (url, text, html) plus any ``carry_cols``
-    (e.g. the event-time column for the streaming path), and ONE
+def extract_normalize(pages: DataFrame, registries: dict[str, list[str]]) -> DataFrame:
+    """pages → one row per extracted mention: (url, mention, std, std_basic,
+    det_p, det_d, det_w, mid) — the normalized forms, the detected
+    components and a compact key. Narrow — no shuffle; ONE scan reads the
+    Vietnamese pages' (url, text, html), and ONE
     ``make_extract_features_udf`` node (one Python crossing per page) takes
     ``_page_args``. ``registries`` (``gazetteer.nodes.alias_registries``)
     are broadcast once per call."""
     features = make_extract_features_udf(_get_registries(pages.sparkSession, registries))
-    carry = list(carry_cols or [])
     return (
         pages.filter(F.col("lang") == "vi")
-        .select("url", *carry, F.explode(features(*_page_args(pages))).alias("f"))
-        .select("url", *carry, "f.*")
+        .select("url", F.explode(features(*_page_args(pages))).alias("f"))
+        .select("url", "f.*")
         .select("*", _mid())
     )
 

@@ -14,7 +14,7 @@ collection over (name, full_name, code_name) with includes-type inference
 from the published spec semantics, not copied. Specs whose component order
 cannot recover the gold entity (ward_only, province_only, …) are excluded
 from the ER corpus (the F1 gate needs recoverable mentions) but remain in
-the table for the NER-dataset surface and the style-coverage test.
+the table, which the style-coverage test checks whole.
 
 Generation is keyed purely on ``(seed, page_id)``, so the distributed
 generator (``synth_pages_spark``: ``spark.range`` → ``mapInPandas``) produces
@@ -308,8 +308,8 @@ def _render_with_spec(
 # Specs whose rendered mention still determines the gold entity: full
 # 3-level orders for old-format records, ward+province orders for new-format.
 # The *_only / district_province partial specs stay out of the ER corpus
-# (their mentions are genuinely ambiguous) but remain available to the
-# NER-dataset surface and the style-coverage test.
+# (their mentions are genuinely ambiguous) but stay in RENDER_SPECS, which
+# the style-coverage test checks whole.
 _OLD_FULL_SPECS = tuple(
     s for s in RENDER_SPECS if {"WARD", "DISTRICT", "PROVINCE"} <= set(s.component_order)
 )

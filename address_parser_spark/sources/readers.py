@@ -12,6 +12,7 @@ whole-array files (non-splittable — the same trade-off as the reference's
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -55,9 +56,10 @@ def gazetteer_from_dir(spark: SparkSession, data_dir: str):
     """S1 end-to-end: reference-shaped gazetteer directory → in-memory
     ``Gazetteer`` catalog (the dimension is ≤ tens of thousands of rows —
     collected once on the driver, then broadcast by the pipeline's node/index
-    builders). ``ward_mappings.json`` is optional."""
-    import os
-
+    builders). ``ward_mappings.json`` is optional. Every file goes through
+    ``spark.read``, so ``data_dir`` may be any path or URI Spark reads
+    (``file://``, ``hdfs://``, ``s3a://``); only Spark's ``PATH_NOT_FOUND``
+    means "no mappings"."""
     from address_parser_spark.gazetteer.synth import Gazetteer
 
     dfs = read_gazetteer_dir(spark, data_dir)
@@ -69,7 +71,11 @@ def gazetteer_from_dir(spark: SparkSession, data_dir: str):
         new_wards=[r.asDict() for r in dfs["new_wards"].collect()],
     )
     mapping_path = f"{data_dir}/ward_mappings.json"
-    if os.path.exists(mapping_path):
+    try:
         rows = spark.read.option("multiLine", True).json(mapping_path).collect()
-        gaz.ward_mappings = [r.asDict() for r in rows]
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        rows = []
+    gaz.ward_mappings = [r.asDict() for r in rows]
     return gaz

@@ -1,11 +1,11 @@
-"""Operator-level tests: ward mapping (J4), NER pipeline, dedup family,
-similarity search, readers."""
+"""Operator-level tests: ward mapping (J4), dedup family, similarity
+search, readers."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from address_parser_spark.gazetteer import synth_gazetteer
-from address_parser_spark.operators.mapping import map_new_to_old, map_old_to_new, mappings_to_spark
+from address_parser_spark.operators.mapping import map_old_to_new, mappings_to_spark
 
 
 @pytest.fixture(scope="module")
@@ -114,39 +114,6 @@ def test_attach_new_ward_codes_on_a_hand_gazetteer(spark):
         "new": ("S", "Phường Mới", "Hà Nội Mới"),
         "is_new_null": ("N3", "Phường N3", "Thành phố Hà Nội"),
     }
-
-
-def test_map_new_to_old_roundtrip(spark, gaz, mappings):
-    new = spark.createDataFrame(
-        [(w["code"],) for w in gaz.new_wards], "ward_code string"
-    )
-    mapped = map_new_to_old(new, mappings, province_name_col=None)
-    assert mapped.count() == len(gaz.new_wards)
-    # each new ward's preferred old row must be one of its true members
-    members: dict[str, set] = {}
-    for m in gaz.ward_mappings:
-        members.setdefault(m["new_ward_code"], set()).add(m["old_ward_code"])
-    for r in mapped.collect():
-        assert r["old_ward_code"] in members[r["ward_code"]]
-
-
-def test_ner_pipeline(spark, gaz):
-    from address_parser_spark.plans.ner_pipeline import build_ner_dataset
-    from address_parser_spark.plans.pipeline import run_pipeline
-    from address_parser_spark.sources.pages import PAGES_SCHEMA, synth_pages_local
-
-    pages, _ = synth_pages_local(gaz, 120)
-    resolved = run_pipeline(spark, spark.createDataFrame(pages, PAGES_SCHEMA), gaz)
-    train, test = build_ner_dataset(resolved)
-    n_train, n_test = train.count(), test.count()
-    assert n_train > 0
-    assert n_train + n_test <= resolved.count()
-    row = train.first()
-    assert len(row["tokens"]) == len(row["ner_tags"])
-    assert any(t.startswith("B-") for t in row["ner_tags"])
-    # split determinism
-    train2, _ = build_ner_dataset(resolved)
-    assert train2.count() == n_train
 
 
 def test_dedup_exact_finds_planted_duplicates(spark):

@@ -272,9 +272,9 @@ def test_mention_frame_is_flat(spark, gaz):
 
     pages, _ = synth_pages_local(gaz, 30)
     df = spark.createDataFrame(pages, PAGES_SCHEMA)
-    mentions = extract_normalize(df, alias_registries(gaz), carry_cols=["warc_ts"])
+    mentions = extract_normalize(df, alias_registries(gaz))
     assert mentions.columns == [
-        "url", "warc_ts", "mention", "std", "std_basic", "det_p", "det_d", "det_w", "mid",
+        "url", "mention", "std", "std_basic", "det_p", "det_d", "det_w", "mid",
     ]
     assert not any(isinstance(f.dataType, T.ArrayType) for f in mentions.schema.fields)
 

@@ -68,3 +68,32 @@ def test_schemas(spark, gaz):
     # html→text invariant holds on the distributed generator too
     from address_parser_spark.textops.html import html_to_text
     assert html_to_text(bytes(row["html"])) == row["text"]
+
+
+def test_gazetteer_dir_reads_mappings_from_a_uri(spark, gaz, tmp_path):
+    """A catalog directory given as a ``file://`` URI reads the same ward
+    mappings as its plain path; a directory without ``ward_mappings.json``
+    reads none and raises nothing."""
+    import json
+    from pathlib import Path
+
+    from address_parser_spark.sources.readers import GAZETTEER_FILES, gazetteer_from_dir
+
+    def write(d: Path, mappings: bool) -> Path:
+        d.mkdir()
+        files = {name: getattr(gaz, table) for table, name in GAZETTEER_FILES.items()}
+        if mappings:
+            files["ward_mappings.json"] = gaz.ward_mappings
+        for name, rows in files.items():
+            (d / name).write_text(json.dumps(rows, ensure_ascii=False), encoding="utf-8")
+        return d
+
+    d = write(tmp_path / "gaz", mappings=True)
+    plain = gazetteer_from_dir(spark, str(d))
+    uri = gazetteer_from_dir(spark, d.as_uri())
+    assert len(plain.ward_mappings) == len(gaz.ward_mappings) == 243
+    assert uri.ward_mappings == plain.ward_mappings
+    assert uri.counts() == plain.counts()
+
+    bare = write(tmp_path / "bare", mappings=False)
+    assert gazetteer_from_dir(spark, bare.as_uri()).ward_mappings == []

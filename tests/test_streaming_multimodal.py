@@ -1,70 +1,4 @@
-"""Structured Streaming ingest + multimodal operator tests."""
-
-import datetime as dt
-import json
-
-import pytest
-from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def stream_input(spark, gaz, tmp_path_factory):
-    """JSONL page dump split across two files (two micro-batch units)."""
-    from address_parser_spark.sources.pages import synth_pages_local
-
-    pages, golds = synth_pages_local(gaz, 60)
-    d = tmp_path_factory.mktemp("stream_in")
-    for i, chunk in enumerate((pages[:30], pages[30:])):
-        with open(d / f"part{i}.jsonl", "w", encoding="utf-8") as fh:
-            for url, ts, _html, text, lang in chunk:
-                fh.write(json.dumps({
-                    "url": url, "warc_ts": ts.isoformat(sep=" "),
-                    "text": text, "lang": lang,
-                }, ensure_ascii=False) + "\n")
-    return str(d), pages, golds
-
-
-def test_stream_extraction_matches_batch(spark, gaz, stream_input, tmp_path):
-    from address_parser_spark.gazetteer.nodes import alias_registries
-    from address_parser_spark.streaming.ingest import dedup_mentions_stream, read_pages_stream
-
-    input_dir, pages, golds = stream_input
-    regs = alias_registries(gaz)
-    stream = read_pages_stream(spark, input_dir, max_files_per_trigger=1)
-    assert stream.isStreaming
-    q = (
-        dedup_mentions_stream(stream, regs)
-        .select("url", "mention", "std", "warc_ts")
-        .writeStream.format("memory").queryName("mentions_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["url"], r["mention"]) for r in spark.sql("select * from mentions_sink").collect()}
-    want = {(g[0], g[1]) for g in golds}
-    assert want <= got  # every gold mention extracted through the stream path
-
-
-def test_stream_windowed_counts(spark, gaz, stream_input, tmp_path):
-    from address_parser_spark.gazetteer.nodes import alias_registries
-    from address_parser_spark.streaming.ingest import read_pages_stream, windowed_mention_counts
-
-    input_dir, _pages, golds = stream_input
-    stream = read_pages_stream(spark, input_dir)
-    q = (
-        windowed_mention_counts(stream, alias_registries(gaz), window="1 hour")
-        .writeStream.format("memory").queryName("win_sink").outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from win_sink").collect()
-    # append mode only emits windows past the watermark; with availableNow the
-    # final watermark closes all but the max-event-time window.
-    assert sum(r["n_mentions"] for r in rows) <= len(golds)
-    assert all(r["n_mentions"] >= 1 for r in rows)
+"""Multimodal operator tests: media decode, frame sampling and features."""
 
 
 def test_multimodal_decode_and_features(spark, gaz):
