@@ -270,14 +270,9 @@ def build_repair_state(gaz: Gazetteer, nodes: list[dict]) -> dict:
 
     for i, n in enumerate(nodes):
         assert n["node_id"] == i, "node_id must be dense and ordered"
-        if n["province"]:
-            register("province",
-                     n.get("p_aliases") or _augment_aliases(n["province"], "province"), i)
-        if n["district"]:
-            register("district",
-                     n.get("d_aliases") or _augment_aliases(n["district"], "district"), i)
-        if n["ward"]:
-            register("ward", n.get("w_aliases") or _augment_aliases(n["ward"], "ward"), i)
+        register("province", n["p_aliases"], i)
+        register("district", n["d_aliases"], i)
+        register("ward", n["w_aliases"], i)
     for level in inv:
         for postings in inv[level].values():
             postings.sort()

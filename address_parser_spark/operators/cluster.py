@@ -9,7 +9,8 @@ MapReduce and Beyond" (SOCC'14) — a public algorithm, O(log² n) rounds,
 expressed here purely as DataFrame self-joins + hash aggregations.
 
 Graphs of at most ``SMALL_GRAPH_EDGES`` canonical edges take a driver
-union-find instead; the path is chosen from the observed edge count alone,
+union-find instead; the path is chosen from the observed edge count alone
+(the constant is read on each call, so patching it forces either path),
 and the union-find's assignments come back as an Arrow-backed local frame
 (``session.local_frame``). Each round of the loop is checkpointed
 (``localCheckpoint`` by default, or a parquet round-trip via the provided
@@ -126,7 +127,6 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     checkpoint_fn: Optional[Callable[[DataFrame, int], DataFrame]] = None,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """edges(src long, dst long) → assignments(id long, component long).
 
@@ -135,11 +135,12 @@ def connected_components(
     cannot see them).
 
     The path depends only on the observed canonical edge count: at or below
-    ``small_graph_edges`` the driver union-find runs; above it, the
-    distributed loop. ``checkpoint_fn(df, round)`` replaces the loop's
-    per-round ``localCheckpoint`` — the pipeline passes durable
-    parquet/Iceberg writes (sources.lineage) — and is called once per round,
-    never on the driver path. It must materialize its input before returning:
+    the module's ``SMALL_GRAPH_EDGES`` (read at call time) the driver
+    union-find runs; above it, the distributed loop.
+    ``checkpoint_fn(df, round)`` replaces the loop's per-round
+    ``localCheckpoint`` — the pipeline passes durable parquet/Iceberg writes
+    (sources.lineage) — and is called once per round, never on the driver
+    path. It must materialize its input before returning:
     the round's fingerprint is observed on the job that materializes it.
 
     The loop's shuffles take the session's partitioning and AQE's
@@ -149,7 +150,7 @@ def connected_components(
     """
     current, prev_fp = _checkpoint(_canon(edges), -1, None)
     n_edges = prev_fp[0]
-    if n_edges <= small_graph_edges:
+    if n_edges <= SMALL_GRAPH_EDGES:
         return _driver_union_find(current)
     for it in range(MAX_ITERATIONS):
         stepped = _small_star(_large_star(current))

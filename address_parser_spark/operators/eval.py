@@ -41,8 +41,8 @@ def labeled_pairs(
       mentions are REPRESENTED BY a deterministic per-entity sample (smallest
       ``max_gold_entity`` mids): at web scale one hot entity ("ha noi") has
       10^7 mentions, and its sampled pairs estimate the same recall the full
-      10^14-pair surface would. The drop is deterministic, not silent — count
-      oversampled entities via ``oversized_gold_entities``.
+      10^14-pair surface would. The sample is deterministic: each entity
+      keeps its ``max_gold_entity`` smallest mids.
 
     Input columns: mid, keys (array), gold_entity, cluster_id.
     Output: mid_a, mid_b, is_match (gold), same_cluster (predicted).
@@ -95,19 +95,6 @@ def labeled_pairs(
             F.max("is_match").alias("is_match"),
             F.first("same_cluster").alias("same_cluster"),
         )
-    )
-
-
-def oversized_gold_entities(
-    keyed_with_labels: DataFrame, max_gold_entity: int = 256
-) -> DataFrame:
-    """Gold entities whose pair surface was sampled by ``labeled_pairs`` —
-    the no-silent-caps diagnostic (entity, mention count)."""
-    return (
-        keyed_with_labels.select("mid", "gold_entity").distinct()
-        .groupBy("gold_entity")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .filter(F.col("n_mentions") > max_gold_entity)
     )
 
 

@@ -1,8 +1,8 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Training-data pipelines carry image/audio/video as ``binary`` columns with a
-metadata struct; compute-heavy decode/feature steps run as Arrow-batched
-``mapInPandas`` so each executor processes whole record batches.
+metadata struct; the decode step runs as an Arrow-batched ``mapInPandas`` so
+each executor processes whole record batches.
 
 One decode path, a stdlib-only codec layer: container header parsing for
 PNG / GIF / JPEG / BMP (dimensions) and RIFF-WAVE (sample rate, frame
@@ -22,7 +22,7 @@ import zlib
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 MEDIA_META_SCHEMA = T.StructType(
@@ -39,8 +39,6 @@ MEDIA_META_SCHEMA = T.StructType(
 )
 
 _META_KEYS = [f.name for f in MEDIA_META_SCHEMA.fields]
-
-FEATURE_DIM = 16
 
 
 # --------------------------------------------------------------------------
@@ -196,44 +194,6 @@ def decode_media(df: DataFrame, binary_col: str = "html") -> DataFrame:
     return df.mapInPandas(_decode_batch, schema=out_schema)
 
 
-def _real_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Content-based featurizer feasible with the stdlib: an L1-normalized
-    ``dim``-bin byte histogram. Crude but real — near-identical payloads get
-    near-identical vectors, which is the property the downstream near-dup /
-    ANN operators consume. A learned embedding model plugs in here."""
-    b = payload or b""
-    if not b:
-        return [0.0] * dim
-    counts = [0] * dim
-    span = 256 // dim
-    for byte in b:
-        counts[byte // span] += 1
-    n = float(len(b))
-    return [round(c / n, 6) for c in counts]
-
-
-def extract_media_features(df: DataFrame, binary_col: str = "html",
-                           key_cols: list[str] | None = None) -> DataFrame:
-    """binary → fixed-dim float feature vector (the embedding-extraction
-    shape: batched kernel, narrow output, key columns carried through)."""
-    keys = key_cols or ["url"]
-    out_schema = T.StructType(
-        [df.schema[k] for k in keys]
-        + [T.StructField("features", T.ArrayType(T.FloatType()))]
-    )
-
-    def _features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = batch[keys].copy()
-            out["features"] = [
-                _real_features(bytes(p) if p is not None else b"")
-                for p in batch[binary_col]
-            ]
-            yield out
-
-    return df.mapInPandas(_features_batch, schema=out_schema)
-
-
 # --------------------------------------------------------------------------
 # Deterministic payload encoders — test fixtures + driver-query synthesis.
 # Each emits a spec-valid container so the REAL decoders above are exercised
@@ -286,27 +246,3 @@ def encode_text(text: str, codec: str = "zlib") -> bytes:
     if codec == "gzip":
         return gzip.compress(raw, mtime=0)
     return raw
-
-
-def sample_frames(df: DataFrame, binary_col: str = "html", n_frames: int = 4,
-                  key_cols: list[str] | None = None) -> DataFrame:
-    """Deterministic frame sampling for "video" payloads: one output row per
-    sampled frame, frame bytes = evenly spaced slices of the payload.
-
-    Pure JVM dataflow — ``explode(sequence)`` fan-out + binary ``substring``
-    slices, zero Python on the data path (whole-stage codegen end to end).
-    A real codec's frame decode would replace the substring with a
-    ``mapInPandas`` kernel on the same (keys, frame_idx, frame) shape."""
-    keys = key_cols or ["url"]
-    payload = F.coalesce(F.col(binary_col), F.lit(b""))
-    # step = max(len // n_frames, 1); slice idx covers [idx*step, idx*step+step)
-    step = F.greatest(F.floor(F.length(payload) / n_frames).cast("int"), F.lit(1))
-    return (
-        df.select(*keys, payload.alias("_payload"), step.alias("_step"))
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), F.lit(n_frames - 1))))
-        .withColumn(
-            "frame",
-            F.substring(F.col("_payload"), F.col("frame_idx") * F.col("_step") + 1, F.col("_step")),
-        )
-        .select(*keys, F.col("frame_idx").cast("int").alias("frame_idx"), "frame")
-    )

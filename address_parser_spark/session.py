@@ -79,7 +79,7 @@ DEFAULT_CONFS: dict[str, str] = {
 
 def _master_cores(master: str) -> int | None:
     if master.startswith("local["):
-        spec = master[len("local["):-1]
+        spec = master[len("local["):-1].split(",")[0]  # local[N,F]: N cores, F retries
         if spec == "*":
             return os.cpu_count() or 8
         try:

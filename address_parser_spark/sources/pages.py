@@ -2,9 +2,10 @@
 
 Schema per ``BASELINE.json`` ``input_hint``:
 ``pages(url string, warc_ts timestamp, html binary, text string, lang string)``
-plus a ground-truth sidecar ``gold_mentions(url, mention, province_code,
-district_code, ward_code, is_new)`` — which gazetteer entity each embedded
-mention denotes, enabling gold pair labels for the F1 gate (FIXTURES.md §1/§6).
+plus ground-truth rows ``GOLD_SCHEMA(url, mention, province_code,
+district_code, ward_code, is_new)`` from ``synth_pages_local`` — which
+gazetteer entity each embedded mention denotes, enabling gold pair labels for
+the F1 gate (FIXTURES.md §1/§6).
 
 Rendering implements the reference's full variant-spec scheme
 (``ner/build_standard_dataset.py``): the 34-spec table (:223-372), name-pool
@@ -493,25 +494,3 @@ def synth_pages_spark(
 
     rng_df = spark.range(n_pages, numPartitions=partitions)
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def gold_mentions_spark(
-    spark: SparkSession, gaz: Gazetteer, n_pages: int, seed: int = 42,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed gold sidecar (same determinism contract as the pages)."""
-    import pandas as pd
-
-    gidx = _GazIndex(gaz)
-    bc = spark.sparkContext.broadcast(gidx)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        g = bc.value
-        cols = ["url", "mention", "province_code", "district_code", "ward_code", "is_new"]
-        for batch in batches:
-            rows = []
-            for pid in batch["id"]:
-                rows.extend(render_page(int(pid), g, seed)[1])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return spark.range(n_pages, numPartitions=partitions).mapInPandas(gen, schema=GOLD_SCHEMA)

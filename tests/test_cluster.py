@@ -2,69 +2,66 @@
 
 Every graph runs through BOTH execution paths — the driver union-find
 fallback (small graphs) and the distributed large-star/small-star loop
-(forced via ``small_graph_edges=-1``, which even a graph with no edge
-exceeds) — and the paths must agree exactly.
+(forced by patching ``cluster.SMALL_GRAPH_EDGES`` to -1, which even a graph
+with no edge exceeds) — and the paths must agree exactly.
 """
 
 import random
 
 import pytest
 
+from address_parser_spark.operators import cluster
 from address_parser_spark.operators.cluster import connected_components
 
 
 @pytest.fixture(params=[None, -1], ids=["driver_fallback", "distributed_loop"])
-def small_graph_edges(request):
+def cc_path(request, monkeypatch):
+    """The path under test: ``None`` keeps the default threshold, -1 forces
+    the distributed loop for the whole test."""
+    if request.param is not None:
+        monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", request.param)
     return request.param
 
 
-def _cc(spark, edges, small_graph_edges):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    kwargs = {} if small_graph_edges is None else {"small_graph_edges": small_graph_edges}
-    rows = connected_components(df, **kwargs).collect()
+    rows = connected_components(df).collect()
     comp: dict[int, int] = {r["id"]: r["component"] for r in rows}
     return comp
 
 
-def test_chain(spark, small_graph_edges):
-    comp = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)], small_graph_edges)
+def test_chain(spark, cc_path):
+    comp = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
     assert all(comp[i] == 1 for i in (1, 2, 3, 4, 5))
 
 
-def test_star(spark, small_graph_edges):
-    comp = _cc(spark, [(10, 1), (10, 2), (10, 3), (10, 4)], small_graph_edges)
+def test_star(spark, cc_path):
+    comp = _cc(spark, [(10, 1), (10, 2), (10, 3), (10, 4)])
     assert all(comp[i] == 1 for i in (1, 2, 3, 4, 10))
 
 
-def test_two_components(spark, small_graph_edges):
-    comp = _cc(spark, [(1, 2), (2, 3), (10, 11), (11, 12)], small_graph_edges)
+def test_two_components(spark, cc_path):
+    comp = _cc(spark, [(1, 2), (2, 3), (10, 11), (11, 12)])
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == comp[12] == 10
     assert comp[1] != comp[10]
 
 
-def test_self_loop_and_duplicates(spark, small_graph_edges):
-    comp = _cc(spark, [(7, 7), (7, 8), (8, 7), (7, 8)], small_graph_edges)
+def test_self_loop_and_duplicates(spark, cc_path):
+    comp = _cc(spark, [(7, 7), (7, 8), (8, 7), (7, 8)])
     assert comp[7] == comp[8] == 7
 
 
-def test_self_loops_only_give_no_assignments(spark, small_graph_edges):
+def test_self_loops_only_give_no_assignments(spark, cc_path):
     """A self-loop is no canonical edge: a graph of self-loops only assigns
     no vertex on either path."""
-    assert _cc(spark, [(7, 7), (8, 8)], small_graph_edges) == {}
+    assert _cc(spark, [(7, 7), (8, 8)]) == {}
 
 
-def test_mentions_alone_in_both_stars_keep_their_own_mid(spark, small_graph_edges, monkeypatch):
+def test_mentions_alone_in_both_stars_keep_their_own_mid(spark, cc_path):
     """Rows that share neither an entity anchor nor a ``(canon, digit_sig)``
     string only emit self-loops; each is its own cluster, ``cluster_id ==
     mid``."""
-    import functools
-
-    from address_parser_spark.operators import cluster
-
-    if small_graph_edges is not None:
-        monkeypatch.setattr(cluster, "connected_components", functools.partial(
-            cluster.connected_components, small_graph_edges=small_graph_edges))
     resolved = spark.createDataFrame(
         [
             (11, "W", "001", "01|010|001|false", "w d p", "phuong 1 ha noi", "D", "old"),
@@ -78,17 +75,18 @@ def test_mentions_alone_in_both_stars_keep_their_own_mid(spark, small_graph_edge
     assert got == {11: 11, 12: 12, 13: 13}
 
 
-def test_long_path_converges_logarithmically(spark, small_graph_edges):
+def test_long_path_converges_logarithmically(spark, cc_path):
     n = 64
-    comp = _cc(spark, [(i, i + 1) for i in range(n)], small_graph_edges)
+    comp = _cc(spark, [(i, i + 1) for i in range(n)])
     assert all(comp[i] == 0 for i in range(n + 1))
 
 
-def test_paths_agree_on_random_graph(spark):
+def test_paths_agree_on_random_graph(spark, monkeypatch):
     rng = random.Random(42)
     edges = [(rng.randrange(500), rng.randrange(500)) for _ in range(400)]
-    fast = _cc(spark, edges, None)
-    slow = _cc(spark, edges, 0)
+    fast = _cc(spark, edges)
+    monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", 0)
+    slow = _cc(spark, edges)
     assert fast == slow
 
 
@@ -111,10 +109,10 @@ def test_small_graph_never_checkpoints(spark):
     ckpt = _counting(calls, lambda d, it: d.localCheckpoint(eager=True))
     got = {r["id"]: r["component"] for r in connected_components(df, checkpoint_fn=ckpt).collect()}
     assert calls == []
-    assert got == _cc(spark, edges, None)
+    assert got == _cc(spark, edges)
 
 
-def test_rounds_bound_on_long_chain(spark, tmp_path):
+def test_rounds_bound_on_long_chain(spark, tmp_path, monkeypatch):
     """Pins the O(log n) round-count claim (Kiveris et al. §3: alternating
     large-star/small-star at least halves path lengths per round). A path
     graph is the adversarial shape; a 1024-node chain must converge in at
@@ -132,10 +130,12 @@ def test_rounds_bound_on_long_chain(spark, tmp_path):
     store = StageStore(spark, str(tmp_path))
     calls: list[int] = []
     ckpt = _counting(calls, lambda d, it: store.write(d, f"round_{it:03d}"))
-    rows = connected_components(df, checkpoint_fn=ckpt, small_graph_edges=0).collect()
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "SMALL_GRAPH_EDGES", 0)
+        rows = connected_components(df, checkpoint_fn=ckpt).collect()
     comp = {r["id"]: r["component"] for r in rows}
     assert all(comp[i] == 0 for i in range(n))
-    assert comp == _cc(spark, edges, None)
+    assert comp == _cc(spark, edges)
     assert calls == list(range(len(calls)))  # once per round, in order
     assert 1 <= len(calls) <= 2 * int(math.log2(n)), calls
     assert [e["stage"] for e in store.lineage()] == [f"round_{it:03d}" for it in calls]
@@ -145,13 +145,12 @@ def test_unconverged_loop_raises(spark, monkeypatch):
     """A loop that runs out of rounds before its fingerprint reaches a
     fixpoint must fail loudly, naming the rounds run and the edge count,
     instead of returning a partial partition."""
-    from address_parser_spark.operators import cluster
-
     monkeypatch.setattr(cluster, "MAX_ITERATIONS", 1)
+    monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", 0)
     n = 1024
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     with pytest.raises(RuntimeError, match=r"1 rounds.*1,023 canonical edges"):
-        connected_components(df, small_graph_edges=0)
+        connected_components(df)
 
 
 def test_entity_anchors_compare_strings_not_hashes(spark, monkeypatch):
@@ -214,7 +213,6 @@ def _pipeline_clusters(spark, gaz, monkeypatch, resolved, seen_edges=None):
     """``run_pipeline`` with the resolve stage replaced by ``resolved``, so
     the clustering it runs is exactly the pipeline's. ``seen_edges``
     collects the CC input frames."""
-    from address_parser_spark.operators import cluster
     from address_parser_spark.plans import pipeline
 
     monkeypatch.setattr(pipeline, "resolve_pages", lambda *a, **k: resolved)

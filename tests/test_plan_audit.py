@@ -211,6 +211,20 @@ def test_get_spark_merges_caller_excluded_rules():
     assert daemon not in _layer_confs("spark://host:7077", {}, {})
 
 
+def test_shuffle_partitions_read_the_cores_of_a_master_with_retries(monkeypatch):
+    """``local[N,F]`` and ``local[*,F]`` (F task retries) size shuffle
+    partitions from their core count, like ``local[N]`` and ``local[*]``.
+    64 reported cores keep ``local[*]`` above the 32-partition floor."""
+    import os
+
+    from address_parser_spark.session import _layer_confs
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    key = "spark.sql.shuffle.partitions"
+    assert _layer_confs("local[32,2]", {}, {})[key] == "64"
+    assert _layer_confs("local[*,3]", {}, {})[key] == _layer_confs("local[*]", {}, {})[key]
+
+
 def test_excluded_optimizer_rules_survive_session_config(spark):
     # The engine-wide exclusion is part of the execution posture (see
     # session.py DEFAULT_CONFS); losing it silently doubles every

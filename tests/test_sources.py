@@ -4,9 +4,7 @@ from pyspark.sql import functions as F
 
 from address_parser_spark.gazetteer import build_nodes, synth_gazetteer
 from address_parser_spark.sources.pages import (
-    GOLD_SCHEMA,
     PAGES_SCHEMA,
-    gold_mentions_spark,
     synth_pages_local,
     synth_pages_spark,
 )
@@ -45,7 +43,7 @@ def test_nodes_have_unique_ids_and_nonempty_profiles(gaz):
 
 def test_spark_generator_matches_local(spark, gaz):
     """Distributed generation is partition-invariant and equals driver-side."""
-    local_pages, local_golds = synth_pages_local(gaz, 60)
+    local_pages, _ = synth_pages_local(gaz, 60)
     df4 = synth_pages_spark(spark, gaz, 60, partitions=4).orderBy("url").collect()
     df1 = synth_pages_spark(spark, gaz, 60, partitions=1).orderBy("url").collect()
     assert [tuple(r) for r in df4] == [tuple(r) for r in df1]
@@ -54,15 +52,10 @@ def test_spark_generator_matches_local(spark, gaz):
     assert [p[0] for p in local_sorted] == [p[0] for p in spark_sorted]
     assert [p[3] for p in local_sorted] == [p[3] for p in spark_sorted]  # text byte-equal
 
-    golds = gold_mentions_spark(spark, gaz, 60, partitions=4).collect()
-    assert sorted(tuple(r) for r in golds) == sorted(local_golds)
-
 
 def test_schemas(spark, gaz):
     pages = synth_pages_spark(spark, gaz, 5)
     assert pages.schema == PAGES_SCHEMA
-    golds = gold_mentions_spark(spark, gaz, 5)
-    assert golds.schema == GOLD_SCHEMA
     row = pages.filter(F.col("lang") == "vi").first()
     assert row["html"].startswith(b"<!DOCTYPE html>")
     # html→text invariant holds on the distributed generator too
